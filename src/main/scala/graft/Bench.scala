@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every declared query against
   * `SPARK_GRAFT_SF_DIR`, forcing full execution through a noop sink
@@ -23,12 +22,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Engine.tuned(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.local()
     // Untimed warmup (BASELINE.md methodology: warm session): first
     // executions pay codegen/JIT and datasource init, which otherwise
     // land on whatever query sorts first. One cheap query per table

@@ -60,9 +60,12 @@ object Engine {
       graft.io.Sources.table(spark, dir, n).createOrReplaceTempView(n)
     }
 
-  /** Local session for tests/tools. One JVM, `cores` executor threads. */
-  def local(cores: Int = math.min(Runtime.getRuntime.availableProcessors, 32),
-            appName: String = "graft"): SparkSession = {
+  /** Local session for the mains (Bench, Verify, RunOne, Plans, Scratch,
+    * ScaleCheck). One JVM with `SPARK_GRAFT_CPUS` executor threads —
+    * the host's cores, capped at 32, when unset. */
+  def local(appName: String = "graft"): SparkSession = {
+    val cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(math.min(Runtime.getRuntime.availableProcessors, 32))
     val s = tuned(
       SparkSession.builder().master(s"local[$cores]").appName(appName),
       shufflePartitions = math.max(cores, 4)

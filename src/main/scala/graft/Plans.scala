@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan-evidence dump: `runMain graft.Plans <sfDir> <outDir>` writes the
@@ -37,12 +36,7 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Engine.tuned(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot(kv => StreamingGates(kv._1))

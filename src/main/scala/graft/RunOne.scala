@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Focused single-query dump: `runMain graft.RunOne <name> <sfDir> <outDir>`
   * writes one SparkEntry query's result to `outDir/<name>` parquet — the
@@ -9,12 +8,7 @@ import org.apache.spark.sql.SparkSession
 object RunOne {
   def main(args: Array[String]): Unit = {
     val Array(name, sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Engine.tuned(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.local()
     SparkEntry.queries(name)(spark, sfDir)
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     // a one-entry oracle_sql.json makes check_oracle.py check just this

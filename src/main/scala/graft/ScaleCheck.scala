@@ -216,10 +216,7 @@ object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val base = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val scaled = if (args.length > 1) args(1) else "/tmp/graft_sf1"
-    val spark = Engine.local(
-      sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-        .getOrElse(math.min(Runtime.getRuntime.availableProcessors, 32)),
-      "graft-scale")
+    val spark = Engine.local("graft-scale")
     if (!new java.io.File(s"$scaled/documents.parquet").exists())
       generate(spark, base, scaled)
     // SPARK_GRAFT_SCALE_ONLY=name,... narrows the run (tuning loops);

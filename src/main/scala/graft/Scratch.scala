@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement harness for the optimization rounds (not part of the
@@ -19,12 +18,7 @@ object Scratch {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Engine.tuned(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.local()
     // warmup (same as Bench)
     Seq("q12_pricing_summary", "q03_class_share", "t3_token_count", "s2_ann_bucket")
       .foreach { q =>

@@ -22,8 +22,9 @@ import org.apache.spark.sql.types._
   *
   * Semantics match the HOF fold bit-for-bit on the engine's frames:
   * left-to-right `acc + table[m][code_m]` in doubles. An out-of-range
-  * code raises (as ANSI `element_at` does); a null table cell poisons
-  * the result to null (the fold's `acc + null` behaviour). */
+  * code raises (as ANSI `element_at` does), and so do more codes than
+  * table rows (checked once per row, before the fold); a null table
+  * cell poisons the result to null (the fold's `acc + null` behaviour). */
 case class AdcSum(left: Expression, right: Expression)
   extends BinaryExpression {
 
@@ -62,6 +63,7 @@ case class AdcSum(left: Expression, right: Expression)
     val lut = a.asInstanceOf[ArrayData]
     val codes = b.asInstanceOf[ArrayData]
     val n = codes.numElements()
+    if (n > lut.numElements()) throw tooManyCodes(n, lut.numElements())
     var acc = 0.0
     var m = 0
     while (m < n) {
@@ -78,6 +80,9 @@ case class AdcSum(left: Expression, right: Expression)
     acc
   }
 
+  private def tooManyCodes(n: Int, rows: Int) = new IllegalArgumentException(
+    s"graft_adc: $n codes exceed a table of $rows rows")
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val n = ctx.freshName("n")
@@ -85,13 +90,20 @@ case class AdcSum(left: Expression, right: Expression)
       val m = ctx.freshName("m")
       val row = ctx.freshName("row")
       val cd = ctx.freshName("cd")
+      // nullSafeCodeGen declares the isNull flag only for a nullable
+      // result; non-nullable inputs never poison, so read a constant
+      val isNull = if (nullable) ev.isNull.toString else "false"
       val nullCheck = if (anyInnerNullable)
-        s"""if ($b.isNullAt($m) || $a.isNullAt($m)) { ${ev.isNull} = true; break; }"""
+        s"""if ($b.isNullAt($m) || $a.isNullAt($m)) { $isNull = true; break; }"""
       else ""
       val cellNullCheck = if (anyInnerNullable)
-        s"if ($row.isNullAt($cd)) { ${ev.isNull} = true; break; }" else ""
+        s"if ($row.isNullAt($cd)) { $isNull = true; break; }" else ""
       s"""
          |final int $n = $b.numElements();
+         |if ($n > $a.numElements()) {
+         |  throw new IllegalArgumentException(
+         |    "graft_adc: " + $n + " codes exceed a table of " + $a.numElements() + " rows");
+         |}
          |double $acc = 0.0;
          |for (int $m = 0; $m < $n; $m++) {
          |  $nullCheck
@@ -104,7 +116,7 @@ case class AdcSum(left: Expression, right: Expression)
          |  $cellNullCheck
          |  $acc += $row.getDouble($cd);
          |}
-         |if (!${ev.isNull}) { ${ev.value} = $acc; }
+         |if (!$isNull) { ${ev.value} = $acc; }
        """.stripMargin
     })
 

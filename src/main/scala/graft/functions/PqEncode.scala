@@ -27,8 +27,10 @@ import org.apache.spark.sql.types._
   * strict improvement). The subvector width is taken from the codebook
   * (`d = len(cbs[0][0])`, uniform by construction — the [[graft.ops]]
   * PQ geometry); `v` shorter than M·d raises, like graft_dot's length
-  * mismatch. A null element anywhere in the inputs poisons the result
-  * to null (the engine's codebooks and vectors are non-null by
+  * mismatch, and so does an empty codebook row (cbs[0] or any cbs[m]
+  * with no entries — there is no code to emit, and emitting 0 would
+  * mask a corrupt codebook). A null element anywhere in the inputs
+  * poisons the result to null (the engine's codebooks and vectors are non-null by
   * construction; poisoning beats the HOF's silent null-skip, which
   * would mask a corrupt codebook as code 0). */
 case class PqEncode(left: Expression, right: Expression)
@@ -72,7 +74,8 @@ case class PqEncode(left: Expression, right: Expression)
     if (m0 == 0) return new GenericArrayData(Array.emptyIntArray)
     if (cbs.isNullAt(0)) return null
     val first = cbs.getArray(0)
-    if (first.numElements() == 0 || first.isNullAt(0)) return null
+    if (first.numElements() == 0) throw emptyCodebook(0)
+    if (first.isNullAt(0)) return null
     val d = first.getArray(0).numElements()
     if (v.numElements() < m0 * d)
       throw new IllegalArgumentException(
@@ -84,6 +87,7 @@ case class PqEncode(left: Expression, right: Expression)
       if (cbs.isNullAt(m)) return null
       val cbm = cbs.getArray(m)
       val k0 = cbm.numElements()
+      if (k0 == 0) throw emptyCodebook(m)
       var best = 0.0
       var bestK = 0
       var k = 0
@@ -107,6 +111,9 @@ case class PqEncode(left: Expression, right: Expression)
     new GenericArrayData(codes)
   }
 
+  private def emptyCodebook(m: Int) = new IllegalArgumentException(
+    s"graft_pq_encode: codebook for subspace $m has no entries")
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val m0 = ctx.freshName("m0")
@@ -123,19 +130,22 @@ case class PqEncode(left: Expression, right: Expression)
       val i = ctx.freshName("i")
       val diff = ctx.freshName("diff")
       val done = ctx.freshName("done")
+      // nullSafeCodeGen declares the isNull flag only for a nullable
+      // result; non-nullable inputs never poison, so read a constant
+      val isNull = if (nullable) ev.isNull.toString else "false"
       // null-element poisoning branches are only generated when the
       // input types allow null elements — the hot path stays branch-free
       val nc1 = if (anyInnerNullable)
-        s"if ($a.isNullAt($m)) { ${ev.isNull} = true; break; }" else ""
+        s"if ($a.isNullAt($m)) { $isNull = true; break; }" else ""
       val nc2 = if (anyInnerNullable)
-        s"if ($cbm.isNullAt($k)) { ${ev.isNull} = true; break; }" else ""
+        s"if ($cbm.isNullAt($k)) { $isNull = true; break; }" else ""
       val nc3 = if (anyInnerNullable)
-        s"if ($b.isNullAt($m * $d + $i) || $c.isNullAt($i)) { ${ev.isNull} = true; break; }"
+        s"if ($b.isNullAt($m * $d + $i) || $c.isNullAt($i)) { $isNull = true; break; }"
       else ""
       val nc0 = if (anyInnerNullable)
         s"""if ($a.numElements() > 0 && ($a.isNullAt(0) ||
            |    $a.getArray(0).numElements() > 0 && $a.getArray(0).isNullAt(0))) {
-           |  ${ev.isNull} = true; $done = true;
+           |  $isNull = true; $done = true;
            |}""".stripMargin
       else ""
       s"""
@@ -143,7 +153,11 @@ case class PqEncode(left: Expression, right: Expression)
          |boolean $done = false;
          |int $d = 0;
          |$nc0
-         |if (!$done && !${ev.isNull} && $m0 > 0) {
+         |if (!$done && !$isNull && $m0 > 0) {
+         |  if ($a.getArray(0).numElements() == 0) {
+         |    throw new IllegalArgumentException(
+         |      "graft_pq_encode: codebook for subspace 0 has no entries");
+         |  }
          |  $d = $a.getArray(0).getArray(0).numElements();
          |  if ($b.numElements() < $m0 * $d) {
          |    throw new IllegalArgumentException(
@@ -151,27 +165,31 @@ case class PqEncode(left: Expression, right: Expression)
          |      " dims cannot hold " + $m0 + " subspaces of width " + $d);
          |  }
          |}
-         |final int[] $codes = new int[(${ev.isNull} || $done) ? 0 : $m0];
-         |for (int $m = 0; $m < $m0 && !${ev.isNull} && !$done; $m++) {
+         |final int[] $codes = new int[($isNull || $done) ? 0 : $m0];
+         |for (int $m = 0; $m < $m0 && !$isNull && !$done; $m++) {
          |  $nc1
          |  org.apache.spark.sql.catalyst.util.ArrayData $cbm = $a.getArray($m);
          |  final int $k0 = $cbm.numElements();
+         |  if ($k0 == 0) {
+         |    throw new IllegalArgumentException(
+         |      "graft_pq_encode: codebook for subspace " + $m + " has no entries");
+         |  }
          |  double $best = 0.0;
          |  int $bestK = 0;
-         |  for (int $k = 0; $k < $k0 && !${ev.isNull}; $k++) {
+         |  for (int $k = 0; $k < $k0 && !$isNull; $k++) {
          |    $nc2
          |    org.apache.spark.sql.catalyst.util.ArrayData $c = $cbm.getArray($k);
          |    double $acc = 0.0;
-         |    for (int $i = 0; $i < $d && !${ev.isNull}; $i++) {
+         |    for (int $i = 0; $i < $d && !$isNull; $i++) {
          |      $nc3
          |      final double $diff = $b.getDouble($m * $d + $i) - $c.getDouble($i);
          |      $acc += $diff * $diff;
          |    }
-         |    if (!${ev.isNull} && ($k == 0 || $acc < $best)) { $best = $acc; $bestK = $k; }
+         |    if (!$isNull && ($k == 0 || $acc < $best)) { $best = $acc; $bestK = $k; }
          |  }
-         |  if (!${ev.isNull}) { $codes[$m] = $bestK; }
+         |  if (!$isNull) { $codes[$m] = $bestK; }
          |}
-         |if (!${ev.isNull}) {
+         |if (!$isNull) {
          |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($codes);
          |}
        """.stripMargin

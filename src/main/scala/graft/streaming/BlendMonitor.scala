@@ -125,16 +125,16 @@ object BlendMonitor {
       work, ledger, StreamSketch.SplitFiles / 2) {
       (batch, batchId) => blendBatch(batch, batchId, stats, ledger)
     } { () =>
-      partsBefore = StreamSketch.countBatchDirs(stats)
+      partsBefore = Replay.countBatchDirs(stats)
       compactBlendStats(spark, stats)
-      partsAfter = StreamSketch.countBatchDirs(stats)
+      partsAfter = Replay.countBatchDirs(stats)
     }
     val result = spark.read.parquet(ledger)
       .select(col("batch_id").cast("long").as("batch_id"), col("source"),
         col("w"), col("tot"), col("budget"))
       .orderBy("batch_id", "source")
     (result, nBatches, partsBefore, partsAfter,
-      StreamSketch.countBatchDirs(stats))
+      Replay.countBatchDirs(stats))
   }
 
   /** Fold the shipped stats partitions into ONE consolidated

@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
@@ -94,8 +93,7 @@ object FullFunnel {
     writeReplayFiles(docs, s"$work/in", orderExpr)
     val stores = prepArtifacts(docs, work)
     runPhase(spark, s"$work/in", s"$work/ckpt", 0L, stores)
-    val nBatches = Option(new java.io.File(stores.labels).listFiles())
-      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
+    val nBatches = Replay.countBatchDirs(stores.labels)
     (ledger(spark.read.parquet(stores.labels)), nBatches)
   }
 
@@ -104,8 +102,10 @@ object FullFunnel {
     * modification time; stamp range files with ascending mtimes —
     * replay order IS the first-arrival semantics, so fail loudly on a
     * filesystem that can't stamp mtimes rather than as a puzzling
-    * oracle mismatch downstream. Returns the files in arrival order. */
-  private def writeReplayFiles(docs: DataFrame, splitDir: String,
+    * oracle mismatch downstream. Returns the files in arrival order.
+    * Shared with p2 ([[StreamFunnel]]), whose first-arrival rule is the
+    * same. */
+  private[streaming] def writeReplayFiles(docs: DataFrame, splitDir: String,
       orderExpr: org.apache.spark.sql.Column): Array[java.io.File] = {
     docs
       .select("doc_id", "text", "lang", "source")
@@ -113,10 +113,7 @@ object FullFunnel {
       .write.parquet(splitDir)
     val parts = new java.io.File(splitDir).listFiles()
       .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
-    parts.zipWithIndex.foreach { case (f, i) =>
-      require(f.setLastModified(1000000000000L + i * 60000L),
-        s"cannot set mtime on $f; file-replay order would be undefined")
-    }
+    parts.zipWithIndex.foreach { case (f, i) => Replay.stampArrival(f, i) }
     parts
   }
 
@@ -145,20 +142,9 @@ object FullFunnel {
     * half's ids, or the `batch_id < current` prunes would re-admit
     * phase-A partitions as "future" state). */
   private def runPhase(spark: SparkSession, inDir: String, ckpt: String,
-      offset: Long, stores: Stores): Unit = {
-    val session = spark.newSession()
-    val q = session.readStream
-      .schema(session.read.parquet(inDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) =>
-        processBatch(batch, offset + batchId, stores))
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      offset: Long, stores: Stores): Unit =
+    Replay.drain(spark, inDir, ckpt, offset)((batch, batchId) =>
+      processBatch(batch, batchId, stores))
 
   private[graft] def p3CompactInfo(spark: SparkSession, dir: String)
       : (DataFrame, Seq[Int], Seq[Int], Seq[Int]) =
@@ -200,7 +186,7 @@ object FullFunnel {
     }
     val stores = prepArtifacts(docs, work)
     val tracked = Seq(stores.keys, stores.bands, stores.shingles)
-    def counts(): Seq[Int] = tracked.map(StreamSketch.countBatchDirs)
+    def counts(): Seq[Int] = tracked.map(Replay.countBatchDirs)
     runPhase(spark, aDir, s"$work/ckptA", 0L, stores)
     val before = counts()
     IncrementalDedup.compactStore(spark, stores.keys, "norm_key")
@@ -290,30 +276,25 @@ object FullFunnel {
       // safety is unchanged: every write is an idempotent batch_id=N
       // overwrite and reads prune to `< batchId`, so ANY crash-subset
       // of completed writes is overwritten by the redone batch — the
-      // sequential order never carried semantics.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
+      // sequential order never carried semantics. Ready-all before
+      // result-all ([[Replay.fence]]): a failed write must not leave a
+      // sibling job running into the batch retry (the m20 fence rule).
       // NO eager primer here (unlike d12/d20): A/B'd in r19 — priming
       // flagged+sh cost +7 jobs, priming sh alone +1 job and +9 % wall
       // (min-of-3, same host). p3's four writes stagger naturally: the
       // keys write materializes `flagged` and the bands write `sh`
       // while the labels write is still deep in its candidate subplans,
       // so the cache race d12 measured never bites here.
-      val writes = Seq(
-        Future { labeled.write.mode("overwrite")
-          .parquet(s"${st.labels}/batch_id=$batchId") },
-        Future { elig.select("norm_key").distinct()
+      Replay.fence(
+        () => labeled.write.mode("overwrite")
+          .parquet(s"${st.labels}/batch_id=$batchId"),
+        () => elig.select("norm_key").distinct()
           .join(priorKeys, Seq("norm_key"), "left_anti")
-          .write.mode("overwrite").parquet(s"${st.keys}/batch_id=$batchId") },
-        Future { bands.write.mode("overwrite")
-          .parquet(s"${st.bands}/batch_id=$batchId") },
-        Future { sh.write.mode("overwrite")
-          .parquet(s"${st.shingles}/batch_id=$batchId") })
-      // ready-all before result-all: a failed write must not leave a
-      // sibling job running into the batch retry (the m20 fence rule)
-      writes.foreach(w => Await.ready(w, Duration.Inf))
-      writes.foreach(w => Await.result(w, Duration.Inf))
+          .write.mode("overwrite").parquet(s"${st.keys}/batch_id=$batchId"),
+        () => bands.write.mode("overwrite")
+          .parquet(s"${st.bands}/batch_id=$batchId"),
+        () => sh.write.mode("overwrite")
+          .parquet(s"${st.shingles}/batch_id=$batchId"))
     } finally { flagged.unpersist(); sh.unpersist(); () }
   }
 

@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.io.Sources
@@ -81,20 +80,9 @@ object IncrementalDedup {
     val bandStore = s"$work/bands"
     val shingleStore = s"$work/shingles"
     val pairStore = s"$work/pairs"
-    val session = spark.newSession()
-    val q = session.readStream
-      .schema(session.read.parquet(splitDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(splitDir)
-      .writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, bandStore, shingleStore, pairStore))
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val nBatches = Option(new java.io.File(pairStore).listFiles())
-      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
+    Replay.drain(spark, splitDir, s"$work/ckpt", 0L)((batch, batchId) =>
+      processBatch(batch, batchId, bandStore, shingleStore, pairStore))
+    val nBatches = Replay.countBatchDirs(pairStore)
     val result = spark.read.parquet(pairStore)
       .select(col("a_id"), col("b_id"), col("jaccard"))
       .orderBy("a_id", "b_id")
@@ -118,24 +106,8 @@ object IncrementalDedup {
     val bandStore = s"$work/bands"
     val shingleStore = s"$work/shingles"
     val pairStore = s"$work/pairs"
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val session = spark.newSession()
-    val q = session.readStream
-      .schema(session.read.parquet(splitDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(splitDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val t0 = System.nanoTime()
-        processBatch(batch, batchId, bandStore, shingleStore, pairStore)
-        buf += (System.nanoTime() - t0) / 1e9
-        ()
-      }
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    buf.toSeq
+    Replay.drainTimed(spark, splitDir, s"$work/ckpt")((batch, batchId) =>
+      processBatch(batch, batchId, bandStore, shingleStore, pairStore))
   }
 
   private def processBatch(batch: DataFrame, batchId: Long,
@@ -165,25 +137,18 @@ object IncrementalDedup {
       // state) overlap per guide §2.6 — the FullFunnel rule; retry
       // safety unchanged (idempotent batch_id=N overwrites, reads prune
       // to < batchId, so any crash-subset is rewritten by the redo)
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        // materialize the shared persisted frame BEFORE forking: the
-        // three writes all read `sh`, and racing its first
-        // materialization duplicates partition computes under the cache
-        // lock (r18 measured d12 jobs 95→99 from exactly this)
-        sh.count(): Unit
-        val writes = Seq(
-          Future { verified.write.mode("overwrite")
-            .parquet(s"$pairStore/batch_id=$batchId") },
-          Future { bands.write.mode("overwrite")
-            .parquet(s"$bandStore/batch_id=$batchId") },
-          Future { sh.write.mode("overwrite")
-            .parquet(s"$shingleStore/batch_id=$batchId") })
-        writes.foreach(w => Await.ready(w, Duration.Inf))
-        writes.foreach(w => Await.result(w, Duration.Inf))
-      }
+      // materialize the shared persisted frame BEFORE forking: the
+      // three writes all read `sh`, and racing its first
+      // materialization duplicates partition computes under the cache
+      // lock (r18 measured d12 jobs 95→99 from exactly this)
+      sh.count(): Unit
+      Replay.fence(
+        () => verified.write.mode("overwrite")
+          .parquet(s"$pairStore/batch_id=$batchId"),
+        () => bands.write.mode("overwrite")
+          .parquet(s"$bandStore/batch_id=$batchId"),
+        () => sh.write.mode("overwrite")
+          .parquet(s"$shingleStore/batch_id=$batchId"))
     } finally { sh.unpersist(); () }
   }
 
@@ -263,29 +228,17 @@ object IncrementalDedup {
     val bandStore = s"$work/bands"
     val shingleStore = s"$work/shingles"
     val pairStore = s"$work/pairs"
-    def run(inDir: String, ckpt: String, offset: Long): Unit = {
-      val session = spark.newSession()
-      val q = session.readStream
-        .schema(session.read.parquet(inDir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(inDir)
-        .writeStream
-        .foreachBatch((batch: DataFrame, batchId: Long) =>
-          processBatch(batch, offset + batchId, bandStore, shingleStore, pairStore))
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    def run(inDir: String, ckpt: String, offset: Long): Unit =
+      Replay.drain(spark, inDir, ckpt, offset)((batch, batchId) =>
+        processBatch(batch, batchId, bandStore, shingleStore, pairStore))
     run(aDir, s"$work/ckptA", 0L)
-    val partsBefore = countBatchDirs(bandStore)
+    val partsBefore = Replay.countBatchDirs(bandStore)
     compactStore(spark, bandStore, "bv")
     compactStore(spark, shingleStore, "doc_id")
-    val partsAfter = countBatchDirs(bandStore)
+    val partsAfter = Replay.countBatchDirs(bandStore)
     run(bDir, s"$work/ckptB", (SplitFiles / 2).toLong)
-    val partsEnd = countBatchDirs(bandStore)
-    val emitted = Option(new java.io.File(pairStore).listFiles())
-      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0).toLong
+    val partsEnd = Replay.countBatchDirs(bandStore)
+    val emitted = Replay.countBatchDirs(pairStore).toLong
     val result = spark.read.parquet(pairStore)
       .select(col("a_id"), col("b_id"), col("jaccard"))
       .orderBy("a_id", "b_id")
@@ -316,8 +269,4 @@ object IncrementalDedup {
       .write.parquet(s"$tmp/batch_id=-1")
     StreamSketch.swapStore(spark, tmp, store)
   }
-
-  private[streaming] def countBatchDirs(store: String): Int =
-    Option(new java.io.File(store).listFiles())
-      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
 }

@@ -166,12 +166,12 @@ object IncrementalExport {
       StreamSketch.SplitFiles / 2) {
       (batch, batchId) => processBatch(batch, batchId, keys, manifest, None)
     } { () =>
-      partsBefore = StreamSketch.countBatchDirs(keys)
+      partsBefore = Replay.countBatchDirs(keys)
       IncrementalDedup.compactStore(spark, keys, "norm_key")
-      partsAfter = StreamSketch.countBatchDirs(keys)
+      partsAfter = Replay.countBatchDirs(keys)
     }
     (readManifest(spark, manifest), partsBefore, partsAfter,
-      StreamSketch.countBatchDirs(keys))
+      Replay.countBatchDirs(keys))
   }
 
   /** The shared pack stage — p4's curate-then-pack move scoped to a kept

@@ -78,13 +78,8 @@ object JoinOps {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally deleteRecursively(checkpoint.toFile)
+    } finally Replay.deleteRecursively(checkpoint.toFile)
     spark.read.parquet(outDir).orderBy("purchase_id", "click_id")
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
   }
 
   /** Q38 stream-static enrichment (the reference's core consumer shape,

@@ -178,12 +178,12 @@ object LateLedger {
       StreamSketch.SplitFiles / 2) {
       (batch, batchId) => ledgerBatch(batch, batchId, ledger, stats, None)
     } { () =>
-      partsBefore = StreamSketch.countBatchDirs(stats)
+      partsBefore = Replay.countBatchDirs(stats)
       compactStats(spark, stats)
-      partsAfter = StreamSketch.countBatchDirs(stats)
+      partsAfter = Replay.countBatchDirs(stats)
     }
     (readLedger(spark, ledger), partsBefore, partsAfter,
-      StreamSketch.countBatchDirs(stats))
+      Replay.countBatchDirs(stats))
   }
 
   /** Fold the shipped stats partitions into one consolidated

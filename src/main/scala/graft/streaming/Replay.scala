@@ -2,6 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,6 +35,11 @@ import graft.io.{Sinks, Sources}
   * watermark passes; [[updateMaterialized]] is the production shape for
   * non-windowed aggregations — per-batch upserts materialized to a keyed
   * store (the ES-index pattern), last write per key wins.
+  *
+  * The foreachBatch store gates (d12, s11–s30, p2/p3, x8–x20, …) share
+  * one file-replay runner, [[drain]], plus its two companions:
+  * [[countBatchDirs]] (how many `batch_id=N` partitions a store holds)
+  * and [[fence]] (overlapped independent writes).
   */
 object Replay {
 
@@ -204,8 +212,80 @@ object Replay {
     session.table(name)
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  /** Recursive delete; an absent path is fine. */
+  private[streaming] def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete(): Unit
+  }
+
+  /** The AvailableNow file replay behind every foreachBatch store gate
+    * (the reference consumer's per-batch score-and-index loop,
+    * ConsumerESFinal.scala:86-94). In a child session, the parquet
+    * files under `inDir` replay ONE FILE PER MICRO-BATCH in
+    * modification-time order (stamp them with [[stampArrival]] when
+    * arrival order carries meaning), checkpointed at `ckpt`; `body`
+    * receives each batch with its id shifted by `offset`, so a phased
+    * run's later phase continues the stream-lifetime numbering and
+    * every `batch_id < current` store prune stays valid. Returns once
+    * the query has drained; a `body` failure fails the query and is
+    * rethrown here, and a re-run over the same checkpoint redoes only
+    * the uncommitted batches — bodies write idempotent `batch_id=N`
+    * overwrites, so a torn write is replaced, never merged. */
+  private[graft] def drain(spark: SparkSession, inDir: String, ckpt: String,
+                           offset: Long)(body: (DataFrame, Long) => Unit): Unit = {
+    val session = spark.newSession()
+    session.readStream
+      .schema(session.read.parquet(inDir).schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(inDir)
+      .writeStream
+      .foreachBatch((batch: DataFrame, batchId: Long) => body(batch, offset + batchId))
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+  }
+
+  /** [[drain]] from batch id 0 with each batch's `body` wall seconds
+    * returned in batch order — the batches-axis instrument (ScaleCheck's
+    * `*_batches_axis` rows: per-batch cost against batch INDEX at fixed
+    * data). */
+  private[graft] def drainTimed(spark: SparkSession, inDir: String, ckpt: String)
+                               (body: (DataFrame, Long) => Unit): Seq[Double] = {
+    val secs = scala.collection.mutable.ArrayBuffer.empty[Double]
+    drain(spark, inDir, ckpt, 0L) { (batch, batchId) =>
+      val t0 = System.nanoTime()
+      body(batch, batchId)
+      secs += (System.nanoTime() - t0) / 1e9
+      ()
+    }
+    secs.toSeq
+  }
+
+  /** Stamp replay file `f` as the `i`-th arrival: the file source orders
+    * by modification time, so ascending stamps fix the replay order.
+    * Fails loudly on a filesystem that cannot stamp mtimes, rather than
+    * as a puzzling oracle mismatch downstream. */
+  private[graft] def stampArrival(f: java.io.File, i: Int): Unit =
+    require(f.setLastModified(1000000000000L + i * 60000L),
+      s"cannot set mtime on $f; file-replay order would be undefined")
+
+  /** How many `batch_id=N` partitions a store currently holds (0 when
+    * the store does not exist yet). */
+  private[graft] def countBatchDirs(store: String): Int =
+    Option(new java.io.File(store).listFiles())
+      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
+
+  /** Run mutually independent writes (disjoint target paths) concurrently
+    * — each is a short stage wave that leaves executors idle at its
+    * tail, so overlapping them costs about the slowest one. Waits for
+    * ALL writes before surfacing any failure (ready-all, then
+    * result-all, first failure in argument order wins): a failed write
+    * must never leave a sibling job running into the batch's retry. */
+  private[graft] def fence(writes: (() => Unit)*): Unit = {
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val running = writes.map(w => Future(w()))
+    running.foreach(Await.ready(_, Duration.Inf))
+    running.foreach(Await.result(_, Duration.Inf))
   }
 }

@@ -2,9 +2,8 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.SimilarityOps
 
@@ -48,6 +47,56 @@ object StreamAnnIngest {
     * one batch would vacuously reduce ingest to a batch build. */
   val SplitFiles = 4
 
+  /** The offline coarse quantizer as ONE value — the seam every stream
+    * below is written against. `write(all, path)` builds the artifact
+    * once before the stream starts (production IVF: train ahead of
+    * time, ingest only assigns); `assign(frame, artifact)` gives each
+    * row of `frame` (vec_id, v, nrm, label) its `cell`, and runs at
+    * EVERY assignment site (per-batch arrivals, s20/s30's one-time
+    * watchlist), so no two sites can assign under different quantizers.
+    * Everything downstream of the cell column — store layout, probe,
+    * tombstones, compaction — is quantizer-agnostic. */
+  private[graft] final case class Quantizer(
+      write: (DataFrame, String) => Unit,
+      assign: (DataFrame, DataFrame) => DataFrame)
+
+  /** s3's flat quantizer: the deterministic seed centroids, argmax over
+    * all k per vector. Assigned rows: (vec_id, v, nrm, label, cell). */
+  private[graft] val Flat = Quantizer(
+    (all, path) => SimilarityOps.ivfSeedCentroids(all).coalesce(1).write.parquet(path),
+    (frame, art) => SimilarityOps.assignCells(frame, art))
+
+  /** s22's two-level quantizer over the first `k` corpus vectors as
+    * seeds, `sub` cells per group: the artifact is one nested
+    * [[SimilarityOps.hierCentArr]] row, and assignment is the
+    * G + sub ≈ 2√k fold. Assigned rows also carry `ccos` (the winning
+    * centroid cosine — d20's victim signal). */
+  private[graft] def hier(k: Int, sub: Int): Quantizer = Quantizer(
+    (all, path) => SimilarityOps.hierCentArr(
+      all.filter(col("vec_id") < k)
+        .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn")),
+      sub).coalesce(1).write.parquet(path),
+    (frame, art) => SimilarityOps.hierAssignWithCodebook(frame, art))
+
+  /** The two-level quantizer at the gate configuration. */
+  private[graft] val Hier = hier(SimilarityOps.IvfCells, SimilarityOps.HierSub)
+
+  /** Split the corpus into `files` replay files, range-ordered by
+    * `orderExpr` (which rows share a micro-batch). */
+  private[streaming] def splitCorpus(all: DataFrame, splitDir: String,
+                                     files: Int, orderExpr: Column): Unit =
+    all.select("vec_id", "v", "nrm", "label")
+      .repartitionByRange(files, orderExpr)
+      .write.parquet(splitDir)
+
+  /** The per-batch index append every stream shares: assign the batch
+    * against the artifact at `art`, write it as an idempotent
+    * `batch_id=N` overwrite. */
+  private def appendAssigned(q: Quantizer, batch: DataFrame, batchId: Long,
+                             art: String, store: String): Unit =
+    q.assign(batch, batch.sparkSession.read.parquet(art))
+      .write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
+
   def s11StreamAnnIngest(spark: SparkSession, dir: String): DataFrame =
     s11WithBatchCount(spark, dir)._1
 
@@ -58,94 +107,52 @@ object StreamAnnIngest {
     * quantizer artifact) — and StreamEquivSpec proves it by replaying
     * the REVERSED assignment to the same batch-s3 answer. */
   private[graft] def s11WithBatchCount(spark: SparkSession, dir: String,
-      orderExpr: org.apache.spark.sql.Column = col("vec_id")): (DataFrame, Int) = {
-    val (store, _, nBatches) = runIngestStream(spark, dir, orderExpr)
+      orderExpr: Column = col("vec_id")): (DataFrame, Int) = {
+    val (store, _, nBatches) = runIngestStream(spark, dir, Flat, orderExpr)
     val result = SimilarityOps.probeAssigned(
       spark.read.parquet(store).drop("batch_id"))
     (result, nBatches)
   }
 
-  /** s11's ingest stream run, shared by s15: returns (index store path,
-    * quantizer artifact path, batch count). */
-  private def runIngestStream(spark: SparkSession, dir: String,
-      orderExpr: org.apache.spark.sql.Column = col("vec_id")): (String, String, Int) = {
+  /** The ingest stream under quantizer `q`, shared by s11/s15 (flat)
+    * and s23/s24 (hier): returns (index store path, quantizer artifact
+    * path, batch count). Any artifact `q` writes plugs in — the batches
+    * only ever read the written file (StreamEquivSpec's s23 × s26 case
+    * streams over [[SimilarityOps.s26RetrainedCodebook]] and matches
+    * batch s26: ingest → retrain → re-ingest). */
+  private[graft] def runIngestStream(spark: SparkSession, dir: String,
+      q: Quantizer, orderExpr: Column): (String, String, Int) = {
     val work = Files.createTempDirectory("graft_annstream_").toString
-    val splitDir = s"$work/in"
     val all = SimilarityOps.normed(spark, dir)
+    val art = s"$work/quantizer"
     // the two setup writes are independent (disjoint paths, both read
     // only the source table) — overlap them (§2.6) so the quantizer
-    // build back-fills the split write's task tail; ready-all-before-
-    // result-all so a failed write can't leak a sibling into a retry
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val writes = Seq(
-        Future { all.select("vec_id", "v", "nrm", "label")
-          .repartitionByRange(SplitFiles, orderExpr)
-          .write.parquet(splitDir) },
-        // the offline quantizer artifact: written once, read by every batch
-        Future { SimilarityOps.ivfSeedCentroids(all).coalesce(1)
-          .write.parquet(s"$work/quantizer") })
-      writes.foreach(Await.ready(_, Duration.Inf))
-      writes.foreach(Await.result(_, Duration.Inf))
-    }
-    val seedsPath = s"$work/quantizer"
+    // build back-fills the split write's task tail
+    Replay.fence(
+      () => splitCorpus(all, s"$work/in", SplitFiles, orderExpr),
+      () => q.write(all, art))
     val store = s"$work/index"
-    val session = spark.newSession()
-    val q = session.readStream
-      .schema(session.read.parquet(splitDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(splitDir)
-      .writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, seedsPath, store))
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val nBatches = Option(new java.io.File(store).listFiles())
-      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
-    (store, seedsPath, nBatches)
+    Replay.drain(spark, s"$work/in", s"$work/ckpt", 0L)((batch, batchId) =>
+      appendAssigned(q, batch, batchId, art, store))
+    (store, art, Replay.countBatchDirs(store))
   }
 
   /** Batches-axis instrument seam (ScaleCheck `s11_batches_axis`):
-    * replay the ingest [[processBatch]] over `waves` micro-batches at
-    * FIXED data, returning each batch's body wall seconds in batch
-    * order — ingest's per-batch work is a batch-sized assignment
-    * against the static broadcast quantizer plus one append (the store
-    * is never read back during ingest), so last ≈ first is the design
-    * claim; the only index-growing term is the checkpoint/listing
-    * machinery, which m19-class compaction bounds in production. */
+    * replay the ingest append over `waves` micro-batches at FIXED data,
+    * returning each batch's body wall seconds in batch order — ingest's
+    * per-batch work is a batch-sized assignment against the static
+    * broadcast quantizer plus one append (the store is never read back
+    * during ingest), so last ≈ first is the design claim; the only
+    * index-growing term is the checkpoint/listing machinery, which
+    * m19-class compaction bounds in production. */
   private[graft] def s11BatchTimes(spark: SparkSession, dir: String,
       waves: Int): Seq[Double] = {
     val work = Files.createTempDirectory("graft_annstream_ax_").toString
-    val splitDir = s"$work/in"
     val all = SimilarityOps.normed(spark, dir)
-    all.select("vec_id", "v", "nrm", "label")
-      .repartitionByRange(waves, col("vec_id"))
-      .write.parquet(splitDir)
-    val seedsPath = s"$work/quantizer"
-    SimilarityOps.ivfSeedCentroids(all).coalesce(1).write.parquet(seedsPath)
-    val store = s"$work/index"
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val session = spark.newSession()
-    val q = session.readStream
-      .schema(session.read.parquet(splitDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(splitDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val t0 = System.nanoTime()
-        processBatch(batch, batchId, seedsPath, store)
-        buf += (System.nanoTime() - t0) / 1e9
-        ()
-      }
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    buf.toSeq
+    splitCorpus(all, s"$work/in", waves, col("vec_id"))
+    Flat.write(all, s"$work/quantizer")
+    Replay.drainTimed(spark, s"$work/in", s"$work/ckpt")((batch, batchId) =>
+      appendAssigned(Flat, batch, batchId, s"$work/quantizer", s"$work/index"))
   }
 
   // ---- s15: multi-probe against the streamed store ------------------
@@ -171,19 +178,11 @@ object StreamAnnIngest {
     * Scale: fan-out adds queries × nprobe broadcast rows, constant in
     * corpus size; the store is never exchanged (LayoutSpec s15). */
   private[graft] def s15WithBatchCount(spark: SparkSession, dir: String): (DataFrame, Int) = {
-    val (store, seedsPath, nBatches) = runIngestStream(spark, dir)
+    val (store, seedsPath, nBatches) = runIngestStream(spark, dir, Flat, col("vec_id"))
     val result = SimilarityOps.probeAssignedMulti(
       spark.read.parquet(store).drop("batch_id"),
       spark.read.parquet(seedsPath), MultiNprobe)
     (result, nBatches)
-  }
-
-  private def processBatch(batch: DataFrame, batchId: Long,
-                           seedsPath: String, store: String): Unit = {
-    val spark = batch.sparkSession
-    val seeds = spark.read.parquet(seedsPath)
-    SimilarityOps.assignCells(batch, seeds)
-      .write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
   }
 
   // ---- s23: ingest under the hierarchical coarse quantizer ----------
@@ -221,10 +220,8 @@ object StreamAnnIngest {
     * retrain (s26), and the stored-assignment bulk serve
     * (StreamEquivSpec's s21 × s23 case). */
   private[graft] def s23WithBatchCount(spark: SparkSession, dir: String,
-      orderExpr: org.apache.spark.sql.Column = col("vec_id")): (DataFrame, Int) = {
-    val (store, _, nBatches) =
-      runHierIngestStream(spark, dir, SimilarityOps.IvfCells,
-        SimilarityOps.HierSub, orderExpr)
+      orderExpr: Column = col("vec_id")): (DataFrame, Int) = {
+    val (store, _, nBatches) = runIngestStream(spark, dir, Hier, orderExpr)
     val result = SimilarityOps.probeAssigned(
       spark.read.parquet(store).drop("batch_id"))
     (result, nBatches)
@@ -236,8 +233,7 @@ object StreamAnnIngest {
     * production state). */
   private[graft] def s23StoreAndCodebook(spark: SparkSession, dir: String)
       : (String, String) = {
-    val (store, cb, _) = runHierIngestStream(spark, dir,
-      SimilarityOps.IvfCells, SimilarityOps.HierSub, col("vec_id"))
+    val (store, cb, _) = runIngestStream(spark, dir, Hier, col("vec_id"))
     (store, cb)
   }
 
@@ -246,71 +242,8 @@ object StreamAnnIngest {
     * the store-served probe so the timed unit is the full gate. */
   private[graft] def s23IngestK(spark: SparkSession, dir: String,
                                 k: Int, sub: Int): DataFrame = {
-    val (store, _, _) = runHierIngestStream(spark, dir, k, sub, col("vec_id"))
+    val (store, _, _) = runIngestStream(spark, dir, hier(k, sub), col("vec_id"))
     SimilarityOps.probeAssigned(spark.read.parquet(store).drop("batch_id"))
-  }
-
-  private def runHierIngestStream(spark: SparkSession, dir: String,
-      k: Int, sub: Int,
-      orderExpr: org.apache.spark.sql.Column): (String, String, Int) =
-    runHierIngestStreamWith(spark, dir, orderExpr,
-      (all, path) => {
-        val seeds = all.filter(col("vec_id") < k)
-          .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-        SimilarityOps.hierCentArr(seeds, sub).coalesce(1).write.parquet(path)
-      })
-
-  /** The hier ingest with the codebook ARTIFACT as a seam — the batches
-    * only ever read the written file, so ANY two-level codebook plugs
-    * in: the seed build (s23's default) or a RETRAINED generation
-    * (StreamEquivSpec's s23 × s26 case proves the full production cycle
-    * ingest → retrain → re-ingest by streaming over
-    * [[SimilarityOps.s26RetrainedCodebook]] and matching batch s26). */
-  private[graft] def runHierIngestStreamWith(spark: SparkSession, dir: String,
-      orderExpr: org.apache.spark.sql.Column,
-      writeCodebook: (DataFrame, String) => Unit): (String, String, Int) = {
-    val work = Files.createTempDirectory("graft_hierannstream_").toString
-    val splitDir = s"$work/in"
-    val all = SimilarityOps.normed(spark, dir)
-    val cbPath = s"$work/codebook"
-    // independent setup writes (disjoint paths, source-table reads
-    // only): overlap them (§2.6), ready-all fence before result-all
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val writes = Seq(
-        Future { all.select("vec_id", "v", "nrm", "label")
-          .repartitionByRange(SplitFiles, orderExpr)
-          .write.parquet(splitDir) },
-        // the offline artifact: the TWO-LEVEL codebook, one nested row
-        Future { writeCodebook(all, cbPath) })
-      writes.foreach(Await.ready(_, Duration.Inf))
-      writes.foreach(Await.result(_, Duration.Inf))
-    }
-    val store = s"$work/index"
-    val session = spark.newSession()
-    val q = session.readStream
-      .schema(session.read.parquet(splitDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(splitDir)
-      .writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) =>
-        processHierBatch(batch, batchId, cbPath, store))
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val nBatches = Option(new java.io.File(store).listFiles())
-      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
-    (store, cbPath, nBatches)
-  }
-
-  private def processHierBatch(batch: DataFrame, batchId: Long,
-                               cbPath: String, store: String): Unit = {
-    val spark = batch.sparkSession
-    SimilarityOps.hierAssignWithCodebook(batch, spark.read.parquet(cbPath))
-      .write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
   }
 
   // ---- s24: hier multiprobe over the stream-built store --------------
@@ -343,9 +276,7 @@ object StreamAnnIngest {
     * corpus size; per-batch ingest cost and store layout are s23's
     * unchanged; the store is never exchanged. */
   private[graft] def s24WithBatchCount(spark: SparkSession, dir: String): (DataFrame, Int) = {
-    val (store, cbPath, nBatches) =
-      runHierIngestStream(spark, dir, SimilarityOps.IvfCells,
-        SimilarityOps.HierSub, col("vec_id"))
+    val (store, cbPath, nBatches) = runIngestStream(spark, dir, Hier, col("vec_id"))
     val result = SimilarityOps.probeAssignedHierMulti(
       spark.read.parquet(store).drop("batch_id"),
       spark.read.parquet(cbPath), HierGprobe)
@@ -391,7 +322,7 @@ object StreamAnnIngest {
     * and at 100 TB rides the same cell-bucketed layout as the index
     * with zero exchanges (LayoutSpec's s12 case). */
   private[graft] def s12WithBatchCount(spark: SparkSession, dir: String): (DataFrame, Int, () => Array[Long]) = {
-    val (_, store, tombs, nBatches) = runDeleteStream(spark, dir)
+    val (_, store, tombs, nBatches) = runDeleteStream(spark, dir, Flat)
     val live = liveRows(spark, store, tombs)
     // test seam, LAZY (guide §1.2 — the gate's declared output is the
     // probe; this diagnostic ran one extra job inside every timed gate
@@ -404,48 +335,32 @@ object StreamAnnIngest {
     (SimilarityOps.probeAssigned(live), nBatches, drainCounts)
   }
 
-  /** s12's ingest-with-deletes stream run, shared by s13: returns
-    * (work root, index store path, tombstone store path, batch count). */
-  private def runDeleteStream(spark: SparkSession, dir: String): (String, String, String, Int) = {
+  /** The ingest-with-deletes stream under quantizer `q` — s12/s13/s14
+    * (flat) and s25 (hier): the standing request ledger drains per
+    * batch after the batch's index append ([[drainDeleteLedger]], which
+    * reads only the store's cell column — why the quantizer swap is
+    * invisible to it). Returns (work root, index store path, tombstone
+    * store path, batch count). */
+  private def runDeleteStream(spark: SparkSession, dir: String, q: Quantizer)
+      : (String, String, String, Int) = {
     val work = Files.createTempDirectory("graft_annstream_del_").toString
-    val splitDir = s"$work/in"
     val all = SimilarityOps.normed(spark, dir)
-    val seedsPath = s"$work/quantizer"
+    val art = s"$work/quantizer"
     val reqPath = s"$work/delete_requests"
     // three independent setup writes (disjoint paths, source-table
-    // reads only): overlap them (§2.6), ready-all fence first
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val writes = Seq(
-        Future { all.select("vec_id", "v", "nrm", "label")
-          .repartitionByRange(SplitFiles, col("vec_id"))
-          .write.parquet(splitDir) },
-        Future { SimilarityOps.ivfSeedCentroids(all).coalesce(1)
-          .write.parquet(seedsPath) },
-        // the standing request ledger, written once like a queue snapshot
-        Future { deleteRequests(all).coalesce(1).write.parquet(reqPath) })
-      writes.foreach(Await.ready(_, Duration.Inf))
-      writes.foreach(Await.result(_, Duration.Inf))
-    }
+    // reads only): overlap them (§2.6)
+    Replay.fence(
+      () => splitCorpus(all, s"$work/in", SplitFiles, col("vec_id")),
+      () => q.write(all, art),
+      // the standing request ledger, written once like a queue snapshot
+      () => deleteRequests(all).coalesce(1).write.parquet(reqPath))
     val store = s"$work/index"
     val tombs = s"$work/tombstones"
-    val session = spark.newSession()
-    val q = session.readStream
-      .schema(session.read.parquet(splitDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(splitDir)
-      .writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) =>
-        processDeleteBatch(batch, batchId, seedsPath, reqPath, store, tombs))
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val nBatches = Option(new java.io.File(store).listFiles())
-      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
-    (work, store, tombs, nBatches)
+    Replay.drain(spark, s"$work/in", s"$work/ckpt", 0L) { (batch, batchId) =>
+      appendAssigned(q, batch, batchId, art, store)
+      drainDeleteLedger(batch.sparkSession, batchId, reqPath, store, tombs)
+    }
+    (work, store, tombs, Replay.countBatchDirs(store))
   }
 
   /** The query-time tombstone merge: index rows minus deleted vectors.
@@ -490,7 +405,7 @@ object StreamAnnIngest {
     * layout that the post-compaction probe is exchange-free AND
     * anti-join-free. */
   private[graft] def s13WithStoreInfo(spark: SparkSession, dir: String): (DataFrame, () => Long, () => Long) = {
-    val (work, store, tombs, _) = runDeleteStream(spark, dir)
+    val (work, store, tombs, _) = runDeleteStream(spark, dir, Flat)
     val compacted = s"$work/compacted"
     liveRows(spark, store, tombs)
       .repartition(col("cell"))
@@ -564,7 +479,7 @@ object StreamAnnIngest {
     * exchange structure). */
   private[graft] def s16WithInfo(spark: SparkSession, dir: String)
       : (DataFrame, Int, () => Long, () => Long, () => Long) = {
-    val (store, tombs, nBatches) = runUpsertStream(spark, dir)
+    val (store, tombs, nBatches) = runUpsertStream(spark, dir, Flat)
     upsertProbeInfo(spark, store, tombs, nBatches)
   }
 
@@ -596,8 +511,8 @@ object StreamAnnIngest {
 
   /** s27: the LAST lifecycle verb proven on the hier store — s25 proved
     * delete + compact, s24 multiprobe, s26 retrain; upsert completes
-    * the matrix. The stream is s16's machinery with ONLY the per-batch
-    * assignment swapped ([[runUpsertStreamWith]]'s seam): the 3-key
+    * the matrix. The stream is s16's machinery with ONLY the quantizer
+    * swapped ([[runUpsertStream]]'s seam): the 3-key
     * victim tombstone (cell, vec_id, batch_id) never looks at how a row
     * got its cell, so the quantizer swap is invisible to it — including
     * the load-bearing same-cell precision: the 1.25-scale update class
@@ -616,21 +531,9 @@ object StreamAnnIngest {
     * cell-bucketed layout — with per-batch assignment at 2√k dots. */
   private[graft] def s27WithInfo(spark: SparkSession, dir: String)
       : (DataFrame, Int, () => Long, () => Long, () => Long) = {
-    val (store, tombs, nBatches) = runHierUpsertStream(spark, dir)
+    val (store, tombs, nBatches) = runUpsertStream(spark, dir, Hier)
     upsertProbeInfo(spark, store, tombs, nBatches)
   }
-
-  /** The hier upsert stream run shared by the s27 gate and the
-    * s27 × s26 composition seam. */
-  private def runHierUpsertStream(spark: SparkSession, dir: String)
-      : (String, String, Int) =
-    runUpsertStreamWith(spark, dir,
-      (all, path) => SimilarityOps.hierCentArr(
-        all.filter(col("vec_id") < SimilarityOps.IvfCells)
-          .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn")),
-        SimilarityOps.HierSub).coalesce(1).write.parquet(path),
-      (batch, path) =>
-        SimilarityOps.hierAssignWithCodebook(batch, batch.sparkSession.read.parquet(path)))
 
   /** s27's upsert run with the MERGED store exposed — the s27 × s26
     * composition seam: the live (latest-version) rows of the hier store
@@ -641,7 +544,7 @@ object StreamAnnIngest {
     * updated corpus. */
   private[graft] def s27LiveRows(spark: SparkSession, dir: String)
       : (DataFrame, Int) = {
-    val (store, tombs, nBatches) = runHierUpsertStream(spark, dir)
+    val (store, tombs, nBatches) = runUpsertStream(spark, dir, Hier)
     (s16LiveRows(spark, store, tombs).drop("batch_id"), nBatches)
   }
 
@@ -662,7 +565,7 @@ object StreamAnnIngest {
     * compacted store holds exactly one row per vec_id. */
   private[graft] def s16CompactedInfo(spark: SparkSession, dir: String)
       : (DataFrame, Long, Long) = {
-    val (store, tombs, _) = runUpsertStream(spark, dir)
+    val (store, tombs, _) = runUpsertStream(spark, dir, Flat)
     val work = new java.io.File(store).getParent
     val compacted = s"$work/compacted"
     s16LiveRows(spark, store, tombs).drop("batch_id")
@@ -673,91 +576,55 @@ object StreamAnnIngest {
     (SimilarityOps.probeAssigned(comp), comp.count(), nDupIds)
   }
 
-  /** The upsert stream run shared by the gate and the compaction seam:
-    * returns (index store path, tombstone store path, batch count). */
-  private def runUpsertStream(spark: SparkSession, dir: String): (String, String, Int) =
-    runUpsertStreamWith(spark, dir,
-      (all, path) => SimilarityOps.ivfSeedCentroids(all)
-        .coalesce(1).write.parquet(path),
-      (batch, path) =>
-        SimilarityOps.assignCells(batch, batch.sparkSession.read.parquet(path)))
-
-  /** s16's upsert stream with the offline artifact and per-batch
-    * assignment as seams (`writeArtifact(all, path)` trains the
-    * quantizer once before the stream; `assign(batch, path)` maps a
-    * batch to its cell-assigned rows) — everything else, including the
-    * 3-key victim tombstone drain, is quantizer-agnostic and shared
-    * verbatim between the flat (s16) and hier (s27) gates. */
-  private def runUpsertStreamWith(spark: SparkSession, dir: String,
-      writeArtifact: (DataFrame, String) => Unit,
-      assign: (DataFrame, String) => DataFrame): (String, String, Int) = {
+  /** s16's upsert stream under quantizer `q`, shared by the flat (s16,
+    * its compaction seam) and hier (s27) gates — everything but the
+    * quantizer, including the 3-key victim tombstone drain, is
+    * quantizer-agnostic. Returns (index store path, tombstone store
+    * path, batch count). */
+  private def runUpsertStream(spark: SparkSession, dir: String, q: Quantizer)
+      : (String, String, Int) = {
     val work = Files.createTempDirectory("graft_annstream_ups_").toString
     val splitDir = s"$work/in"
     val all = SimilarityOps.normed(spark, dir)
-    val seedsPath = s"$work/quantizer"
+    val art = s"$work/quantizer"
     // the quantizer build is independent of the whole split-dir
     // sequence (disjoint paths, source-table reads only): overlap it
-    // with the split write + update-wave append + mtime stamping
-    // (§2.6); ready-all fence before result-all
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val writes = Seq(
-        Future {
-          all.select("vec_id", "v", "nrm", "label")
-            .repartitionByRange(SplitFiles, col("vec_id"))
-            .write.parquet(splitDir)
-          val origFiles = new java.io.File(splitDir).listFiles()
-            .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-          // the update wave: new versions of already-streamed vectors,
-          // landing as the LAST arrival (mtime-stamped — see the
-          // ordering precondition)
-          updatedVersions(all).coalesce(1)
-            .write.mode("append").parquet(splitDir)
-          val updFiles = new java.io.File(splitDir).listFiles()
-            .filter(f => f.getName.startsWith("part-") && !origFiles.contains(f))
-          (origFiles ++ updFiles).zipWithIndex.foreach { case (f, i) =>
-            require(f.setLastModified(1000000000000L + i * 60000L),
-              s"cannot set mtime on $f; file-replay order would be undefined")
-          }
-        },
-        Future { writeArtifact(all, seedsPath) })
-      writes.foreach(Await.ready(_, Duration.Inf))
-      writes.foreach(Await.result(_, Duration.Inf))
-    }
+    // with the split write + update-wave append + mtime stamping (§2.6)
+    Replay.fence(
+      () => {
+        splitCorpus(all, splitDir, SplitFiles, col("vec_id"))
+        val origFiles = new java.io.File(splitDir).listFiles()
+          .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+        // the update wave: new versions of already-streamed vectors,
+        // landing as the LAST arrival (mtime-stamped — see the
+        // ordering precondition)
+        updatedVersions(all).coalesce(1)
+          .write.mode("append").parquet(splitDir)
+        val updFiles = new java.io.File(splitDir).listFiles()
+          .filter(f => f.getName.startsWith("part-") && !origFiles.contains(f))
+        (origFiles ++ updFiles).zipWithIndex.foreach { case (f, i) =>
+          Replay.stampArrival(f, i)
+        }
+      },
+      () => q.write(all, art))
     val store = s"$work/index"
     val tombs = s"$work/tombstones"
-    val session = spark.newSession()
-    val q = session.readStream
-      .schema(session.read.parquet(splitDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(splitDir)
-      .writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) =>
-        processUpsertBatch(batch, batchId, seedsPath, store, tombs, assign))
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val nBatches = Option(new java.io.File(store).listFiles())
-      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
-    (store, tombs, nBatches)
+    Replay.drain(spark, splitDir, s"$work/ckpt", 0L) { (batch, batchId) =>
+      appendAssigned(q, batch, batchId, art, store)
+      tombstonePriorVersions(batch, batchId, store, tombs)
+    }
+    (store, tombs, Replay.countBatchDirs(store))
   }
 
-  private def processUpsertBatch(batch: DataFrame, batchId: Long,
-                                 seedsPath: String, store: String,
-                                 tombs: String,
-                                 assign: (DataFrame, String) => DataFrame): Unit = {
+  /** Tombstone every PRIOR physical entry of an incoming vec_id — the
+    * victim's (cell, vec_id, batch_id), so a same-cell replacement
+    * never shadows its own new version. Incoming batch is the small
+    * side; the store read is key-pruned (batch_id < current — the
+    * batch's own append is excluded, and a retried batch cannot see its
+    * own partial tombstone write either). */
+  private def tombstonePriorVersions(batch: DataFrame, batchId: Long,
+                                     store: String, tombs: String): Unit = {
     val spark = batch.sparkSession
-    assign(batch, seedsPath)
-      .write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
-    // tombstone every PRIOR physical entry of an incoming vec_id — the
-    // victim's (cell, vec_id, batch_id), so a same-cell replacement
-    // never shadows its own new version. Incoming batch is the small
-    // side; the store read is key-pruned (batch_id < current — the
-    // batch's own append above is excluded, and a retried batch cannot
-    // see its own partial tombstone write either).
     val prior =
       if (new java.io.File(tombs).exists())
         spark.read.parquet(tombs).filter(col("batch_id") < batchId)
@@ -827,7 +694,7 @@ object StreamAnnIngest {
     * uncompacted-merged branch, tombstones retired, tombstones pending). */
   private def partialCompactState(spark: SparkSession, dir: String)
       : (String, DataFrame, DataFrame, () => Long, () => Long) = {
-    val (work, store, tombs, _) = runDeleteStream(spark, dir)
+    val (work, store, tombs, _) = runDeleteStream(spark, dir, Flat)
     partialCompactStateFrom(spark, work, store, tombs)
   }
 
@@ -885,16 +752,6 @@ object StreamAnnIngest {
     (served, nRetired, nPending)
   }
 
-  private def processDeleteBatch(batch: DataFrame, batchId: Long,
-                                 seedsPath: String, reqPath: String,
-                                 store: String, tombs: String): Unit = {
-    val spark = batch.sparkSession
-    val seeds = spark.read.parquet(seedsPath)
-    SimilarityOps.assignCells(batch, seeds)
-      .write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
-    drainDeleteLedger(spark, batchId, reqPath, store, tombs)
-  }
-
   /** Drain the standing request ledger after a batch's index append:
     * tombstone requests whose vector is now indexed (any batch ≤
     * current) and not already tombstoned. The inner join attaches the
@@ -950,7 +807,7 @@ object StreamAnnIngest {
     * vector, s23's saving, now carried through the whole lifecycle). */
   private[graft] def s25WithInfo(spark: SparkSession, dir: String)
       : (DataFrame, Int, () => Array[Long], () => Long, () => Long) = {
-    val (work, store, tombs, nBatches) = runHierDeleteStream(spark, dir)
+    val (work, store, tombs, nBatches) = runDeleteStream(spark, dir, Hier)
     val compacted = s"$work/compacted"
     liveRows(spark, store, tombs)
       .repartition(col("cell"))
@@ -976,70 +833,8 @@ object StreamAnnIngest {
     * s24, upsert s27, retrain s26). */
   private[graft] def hierPartialCompactState(spark: SparkSession, dir: String)
       : (String, DataFrame, DataFrame, () => Long, () => Long) = {
-    val (work, store, tombs, _) = runHierDeleteStream(spark, dir)
+    val (work, store, tombs, _) = runDeleteStream(spark, dir, Hier)
     partialCompactStateFrom(spark, work, store, tombs)
-  }
-
-  /** s25's stream run: s12's delete stream with the hier codebook as
-    * the offline artifact ([[runHierIngestStream]]'s build) and the
-    * two-level assignment per batch; the ledger drain is
-    * [[drainDeleteLedger]] verbatim — it reads only the store's cell
-    * column, which is exactly why the quantizer swap is invisible to
-    * it. Returns (work root, index store, tombstone store, batches). */
-  private def runHierDeleteStream(spark: SparkSession, dir: String)
-      : (String, String, String, Int) = {
-    val work = Files.createTempDirectory("graft_hierannstream_del_").toString
-    val splitDir = s"$work/in"
-    val all = SimilarityOps.normed(spark, dir)
-    val cbPath = s"$work/codebook"
-    val reqPath = s"$work/delete_requests"
-    // three independent setup writes (disjoint paths, source-table
-    // reads only): overlap them (§2.6), ready-all fence first
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val seeds = all.filter(col("vec_id") < SimilarityOps.IvfCells)
-        .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-      val writes = Seq(
-        Future { all.select("vec_id", "v", "nrm", "label")
-          .repartitionByRange(SplitFiles, col("vec_id"))
-          .write.parquet(splitDir) },
-        Future { SimilarityOps.hierCentArr(seeds, SimilarityOps.HierSub)
-          .coalesce(1).write.parquet(cbPath) },
-        Future { deleteRequests(all).coalesce(1).write.parquet(reqPath) })
-      writes.foreach(Await.ready(_, Duration.Inf))
-      writes.foreach(Await.result(_, Duration.Inf))
-    }
-    val store = s"$work/index"
-    val tombs = s"$work/tombstones"
-    val session = spark.newSession()
-    val q = session.readStream
-      .schema(session.read.parquet(splitDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(splitDir)
-      .writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) =>
-        processHierDeleteBatch(batch, batchId, cbPath, reqPath, store, tombs))
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val nBatches = Option(new java.io.File(store).listFiles())
-      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
-    (work, store, tombs, nBatches)
-  }
-
-  /** s25's per-batch work: s23's two-level assignment append + the
-    * shared ledger drain — processDeleteBatch with the quantizer
-    * swapped, nothing else. */
-  private def processHierDeleteBatch(batch: DataFrame, batchId: Long,
-                                     cbPath: String, reqPath: String,
-                                     store: String, tombs: String): Unit = {
-    val spark = batch.sparkSession
-    SimilarityOps.hierAssignWithCodebook(batch, spark.read.parquet(cbPath))
-      .write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
-    drainDeleteLedger(spark, batchId, reqPath, store, tombs)
   }
 
   // ---- s20: streaming radius alerts (the watchlist match-on-ingest) --
@@ -1071,10 +866,7 @@ object StreamAnnIngest {
     * against the static watchlist, so the alert SET is replay-order
     * invariant (same class as s11's set-union index). */
   private[graft] def s20WithBatchCount(spark: SparkSession, dir: String): (DataFrame, Int, () => Array[Long]) =
-    runRadiusAlertStream(spark, dir,
-      (all, path) =>
-        SimilarityOps.ivfSeedCentroids(all).coalesce(1).write.parquet(path),
-      (frame, art) => SimilarityOps.assignCells(frame, art))
+    runRadiusAlertStream(spark, dir, Flat)
 
   // ---- s30: the alert stream under the hier quantizer -----------------
 
@@ -1093,67 +885,35 @@ object StreamAnnIngest {
     * oracle is s29's SQL string verbatim (the shared-string move s20
     * makes with s19, lifted to the hier chain). */
   private[graft] def s30WithBatchCount(spark: SparkSession, dir: String): (DataFrame, Int, () => Array[Long]) =
-    runRadiusAlertStream(spark, dir,
-      (all, path) => {
-        val seeds = all.filter(col("vec_id") < SimilarityOps.IvfCells)
-          .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-        SimilarityOps.hierCentArr(seeds, SimilarityOps.HierSub)
-          .coalesce(1).write.parquet(path)
-      },
-      (frame, art) => SimilarityOps.hierAssignWithCodebook(frame, art)
-        .select("vec_id", "v", "nrm", "label", "cell"))
+    runRadiusAlertStream(spark, dir, Hier)
 
-  /** The alert-on-ingest scaffold with the quantizer as a SEAM: s20
-    * plugs the flat seed argmax, s30 the two-level fold. `writeQuantizer`
-    * writes the offline artifact; `assign` maps (frame, artifact) to
-    * assigned rows (vec_id, v, nrm, label, cell) — used for BOTH the
-    * one-time watchlist build and every per-batch arrival, so the two
-    * sides can never assign under different quantizers. */
+  /** The alert-on-ingest scaffold under quantizer `q`: s20 plugs the
+    * flat seed argmax, s30 the two-level fold. `q.assign` runs for BOTH
+    * the one-time watchlist build and every per-batch arrival, so the
+    * two sides can never assign under different quantizers. */
   private def runRadiusAlertStream(spark: SparkSession, dir: String,
-      writeQuantizer: (DataFrame, String) => Unit,
-      assign: (DataFrame, DataFrame) => DataFrame): (DataFrame, Int, () => Array[Long]) = {
+      q: Quantizer): (DataFrame, Int, () => Array[Long]) = {
     val work = Files.createTempDirectory("graft_annstream_radius_").toString
-    val splitDir = s"$work/in"
     val all = SimilarityOps.normed(spark, dir)
-    val artPath = s"$work/quantizer"
+    val art = s"$work/quantizer"
     val watchPath = s"$work/watchlist"
     // two independent setup CHAINS (the watchlist must follow the
     // quantizer it assigns under; the split write needs neither):
-    // overlap them (§2.6), ready-all fence first
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val writes = Seq(
-        Future { all.select("vec_id", "v", "nrm", "label")
-          .repartitionByRange(SplitFiles, col("vec_id"))
-          .write.parquet(splitDir) },
-        Future {
-          writeQuantizer(all, artPath)
-          // the offline watchlist artifact: queries with their cells, once
-          assign(all.filter(col("label") === 1), spark.read.parquet(artPath))
-            .select(col("vec_id").as("q_id"), col("v").as("qv"),
-              col("nrm").as("qn"), col("cell"))
-            .coalesce(1).write.parquet(watchPath)
-        })
-      writes.foreach(Await.ready(_, Duration.Inf))
-      writes.foreach(Await.result(_, Duration.Inf))
-    }
+    // overlap them (§2.6)
+    Replay.fence(
+      () => splitCorpus(all, s"$work/in", SplitFiles, col("vec_id")),
+      () => {
+        q.write(all, art)
+        // the offline watchlist artifact: queries with their cells, once
+        q.assign(all.filter(col("label") === 1), spark.read.parquet(art))
+          .select(col("vec_id").as("q_id"), col("v").as("qv"),
+            col("nrm").as("qn"), col("cell"))
+          .coalesce(1).write.parquet(watchPath)
+      })
     val alerts = s"$work/alerts"
-    val session = spark.newSession()
-    val q = session.readStream
-      .schema(session.read.parquet(splitDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(splitDir)
-      .writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) =>
-        processAlertBatch(batch, batchId, artPath, watchPath, alerts, assign))
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val nBatches = Option(new java.io.File(alerts).listFiles())
-      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
+    Replay.drain(spark, s"$work/in", s"$work/ckpt", 0L)((batch, batchId) =>
+      processAlertBatch(q, batch, batchId, art, watchPath, alerts))
+    val nBatches = Replay.countBatchDirs(alerts)
     val ledger = spark.read.parquet(alerts)
     // test seam, LAZY: alerts raised per arrival batch, in batch order
     val perBatch = () => ledger.groupBy("batch_id").count().orderBy("batch_id")
@@ -1164,14 +924,12 @@ object StreamAnnIngest {
     (result, nBatches, perBatch)
   }
 
-  private def processAlertBatch(batch: DataFrame, batchId: Long,
-                                artPath: String, watchPath: String,
-                                alerts: String,
-                                assign: (DataFrame, DataFrame) => DataFrame): Unit = {
+  private def processAlertBatch(q: Quantizer, batch: DataFrame, batchId: Long,
+                                art: String, watchPath: String,
+                                alerts: String): Unit = {
     val spark = batch.sparkSession
-    val art = spark.read.parquet(artPath)
     val watch = spark.read.parquet(watchPath)
-    assign(batch, art)
+    q.assign(batch, spark.read.parquet(art))
       .join(broadcast(watch), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("c",

@@ -5,7 +5,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.io.Sources
@@ -70,38 +69,14 @@ object StreamFunnel {
     val spark = docs.sparkSession
     val work = Files.createTempDirectory("graft_funnel_").toString
     val splitDir = s"$work/in"
-    docs
-      .select("doc_id", "text", "lang", "source")
-      .repartitionByRange(SplitFiles, orderExpr)
-      .write.parquet(splitDir)
-    // first-arrival must mean min-doc_id: the file source orders by
-    // modification time, so stamp the range files with ascending mtimes
-    // in path order (range part files are named in range order)
-    val parts = new java.io.File(splitDir).listFiles()
-      .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
-    parts.zipWithIndex.foreach { case (f, i) =>
-      // replay order IS the first-arrival semantics — fail loudly on a
-      // filesystem that can't stamp mtimes rather than as a puzzling
-      // oracle mismatch downstream
-      require(f.setLastModified(1000000000000L + i * 60000L),
-        s"cannot set mtime on $f; file-replay order would be undefined")
-    }
+    // first-arrival must mean min-doc_id: the range files replay in
+    // range order (FullFunnel's stamped split, shared)
+    FullFunnel.writeReplayFiles(docs, splitDir, orderExpr): Unit
     val keyStore = s"$work/keys"
     val labelStore = s"$work/labels"
-    val session = spark.newSession()
-    val q = session.readStream
-      .schema(session.read.parquet(splitDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(splitDir)
-      .writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, keyStore, labelStore))
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val nBatches = Option(new java.io.File(labelStore).listFiles())
-      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
+    Replay.drain(spark, splitDir, s"$work/ckpt", 0L)((batch, batchId) =>
+      processBatch(batch, batchId, keyStore, labelStore))
+    val nBatches = Replay.countBatchDirs(labelStore)
     val result = spark.read.parquet(labelStore)
       .groupBy("lang", "source")
       .agg(
@@ -144,22 +119,15 @@ object StreamFunnel {
       // shared persisted frame + committed < batchId state) and overlap
       // per guide §2.6 (the FullFunnel rule); retry safety unchanged —
       // idempotent batch_id=N overwrites, reads prune to < batchId.
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        // no eager primer (the d12 rule doesn't bite here — A/B'd in
-        // r19: jobs and wall both unchanged with one; the keys write
-        // materializes `flagged` before the labels write needs it)
-        val writes = Seq(
-          Future { labeled.write.mode("overwrite")
-            .parquet(s"$labelStore/batch_id=$batchId") },
-          Future { elig.select("norm_key").distinct()
-            .join(prior, Seq("norm_key"), "left_anti")
-            .write.mode("overwrite").parquet(s"$keyStore/batch_id=$batchId") })
-        writes.foreach(w => Await.ready(w, Duration.Inf))
-        writes.foreach(w => Await.result(w, Duration.Inf))
-      }
+      // no eager primer (the d12 rule doesn't bite here — A/B'd in
+      // r19: jobs and wall both unchanged with one; the keys write
+      // materializes `flagged` before the labels write needs it)
+      Replay.fence(
+        () => labeled.write.mode("overwrite")
+          .parquet(s"$labelStore/batch_id=$batchId"),
+        () => elig.select("norm_key").distinct()
+          .join(prior, Seq("norm_key"), "left_anti")
+          .write.mode("overwrite").parquet(s"$keyStore/batch_id=$batchId"))
     } finally { flagged.unpersist(); () }
   }
 

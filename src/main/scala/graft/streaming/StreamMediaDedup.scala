@@ -368,11 +368,11 @@ object StreamMediaDedup {
       processBatch(batch, batchId, fpStore, curStore, ledgerStore, ImageFp,
         writeLedger = false)
     } { () =>
-      partsBefore = StreamSketch.countBatchDirs(fpStore)
+      partsBefore = Replay.countBatchDirs(fpStore)
       IncrementalDedup.compactStore(spark, fpStore, "media_id")
-      partsAfter = StreamSketch.countBatchDirs(fpStore)
+      partsAfter = Replay.countBatchDirs(fpStore)
     }
-    val partsEnd = StreamSketch.countBatchDirs(fpStore)
+    val partsEnd = Replay.countBatchDirs(fpStore)
     // cross-phase proof rows: final pairs with EXACTLY ONE side whose
     // fingerprint lives only in the consolidated batch_id=-1 partition
     // — that side could only have met the candidate join through the
@@ -557,14 +557,13 @@ object StreamMediaDedup {
     * (driven directly) the torn-write redo spec.
     *
     * The two chains touch DISJOINT stores and only read the shared
-    * batch, so they run CONCURRENTLY (the audio chain on a future, the
-    * image chain on the calling thread): both are stage-wave
+    * batch, so they run CONCURRENTLY through [[Replay.fence]]: both are stage-wave
     * latency-bound at micro-batch sizes, so overlapping them puts the
     * per-batch cost near max(image, audio) instead of their sum — and
     * on a real cluster the two job DAGs interleave across executors
     * the same way. The consensus join waits on both commits.
     *
-    * Failure fencing: if the image chain throws, the audio future is
+    * Failure fencing: if the image chain throws, the audio chain is
     * AWAITED (ready, not result — a secondary audio failure must not
     * mask the primary exception) before the exception propagates, so
     * no write ever outlives the batch attempt — otherwise an orphaned
@@ -573,33 +572,29 @@ object StreamMediaDedup {
     * directories, racing the documented retried-batch idempotence. */
   private[graft] def consensusStep(batch: DataFrame, batchId: Long, work: String,
       onTimes: ConsensusTimes => Unit = _ => ()): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
+    @volatile var imgSec = 0.0
     @volatile var audSec = 0.0
     // writeLedger=false on both chains: the per-codec change-feed
     // ledgers were never part of m20/m21's declared outputs (the
     // consensus ledger is consensusBatch's own committed-set diff), so
     // each chain sheds one full-outer + digest fold + store write per
     // batch (§4.2b measured the chains themselves as the step's
-    // dominant term, ~8.5 s of wall each at sf0.1 vs ~3 s consensus)
-    val aud = Future {
-      val t0 = System.nanoTime()
-      processBatch(batch, batchId, s"$work/aud_fp",
-        s"$work/aud_cur", s"$work/aud_ledger",
-        d => MultimodalOps.whashBandsFrom(d), writeLedger = false)
-      audSec = (System.nanoTime() - t0) / 1e9
-    }(scala.concurrent.ExecutionContext.global)
-    val tI0 = System.nanoTime()
-    var imgSec = 0.0
-    try {
-      processBatch(batch, batchId, s"$work/img_fp", s"$work/img_cur",
-        s"$work/img_ledger", ImageFp, writeLedger = false)
-      imgSec = (System.nanoTime() - tI0) / 1e9
-    } finally {
-      Await.ready(aud, Duration.Inf)
-      ()
-    }
-    Await.result(aud, Duration.Inf) // propagate an audio-chain failure
+    // dominant term, ~8.5 s of wall each at sf0.1 vs ~3 s consensus).
+    // Image first: its failure is the one surfaced when both fail.
+    Replay.fence(
+      () => {
+        val t0 = System.nanoTime()
+        processBatch(batch, batchId, s"$work/img_fp", s"$work/img_cur",
+          s"$work/img_ledger", ImageFp, writeLedger = false)
+        imgSec = (System.nanoTime() - t0) / 1e9
+      },
+      () => {
+        val t0 = System.nanoTime()
+        processBatch(batch, batchId, s"$work/aud_fp",
+          s"$work/aud_cur", s"$work/aud_ledger",
+          d => MultimodalOps.whashBandsFrom(d), writeLedger = false)
+        audSec = (System.nanoTime() - t0) / 1e9
+      })
     val tC0 = System.nanoTime()
     consensusBatch(batch.sparkSession, batchId, s"$work/img_cur",
       s"$work/aud_cur", s"$work/consensus", s"$work/cons_ledger")

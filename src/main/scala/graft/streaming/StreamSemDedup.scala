@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.SimilarityOps
 import graft.out.Canonical._
@@ -58,7 +57,7 @@ object StreamSemDedup {
     val store = s"$work/assigned"
     val pairStore = s"$work/pairs"
     runStream(spark, splitDir, s"$work/ckpt", cbPath, store, pairStore, 0L)
-    val nBatches = IncrementalDedup.countBatchDirs(pairStore)
+    val nBatches = Replay.countBatchDirs(pairStore)
     (readPairs(spark, pairStore), nBatches)
   }
 
@@ -108,11 +107,11 @@ object StreamSemDedup {
     val store = s"$work/assigned"
     val pairStore = s"$work/pairs"
     runStream(spark, aDir, s"$work/ckptA", cbPath, store, pairStore, 0L)
-    val partsBefore = IncrementalDedup.countBatchDirs(store)
+    val partsBefore = Replay.countBatchDirs(store)
     IncrementalDedup.compactStore(spark, store, "cell")
-    val partsAfter = IncrementalDedup.countBatchDirs(store)
+    val partsAfter = Replay.countBatchDirs(store)
     runStream(spark, bDir, s"$work/ckptB", cbPath, store, pairStore, half.toLong)
-    val partsEnd = IncrementalDedup.countBatchDirs(store)
+    val partsEnd = Replay.countBatchDirs(store)
     // CROSS-PHASE pairs — emitted in a phase-B batch with the earlier
     // side living ONLY in the consolidated `batch_id=-1` partition:
     // the rows that prove the swapped store feeds the candidate join
@@ -133,8 +132,9 @@ object StreamSemDedup {
   }
 
   /** Split the normed corpus into replay waves and write the offline
-    * two-level codebook (s23's quantizer-file motion) — shared by the
-    * single-replay gate (d20) and the phased compaction gate (d21). */
+    * two-level codebook (s23's quantizer-file motion,
+    * [[StreamAnnIngest.Hier]]) — shared by the single-replay gate
+    * (d20) and the phased compaction gate (d21). */
   private def prepare(spark: SparkSession, dir: String, work: String,
                       orderExpr: org.apache.spark.sql.Column,
                       waves: Int = StreamAnnIngest.SplitFiles): (String, String) = {
@@ -142,22 +142,10 @@ object StreamSemDedup {
     val all = SimilarityOps.normed(spark, dir)
     val cbPath = s"$work/codebook"
     // two independent setup writes (disjoint paths, source-table reads
-    // only): overlap them (§2.6), ready-all fence first
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val seeds = all.filter(col("vec_id") < SimilarityOps.IvfCells)
-        .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-      val writes = Seq(
-        Future { all.select("vec_id", "v", "nrm", "label")
-          .repartitionByRange(waves, orderExpr)
-          .write.parquet(splitDir) },
-        Future { SimilarityOps.hierCentArr(seeds, SimilarityOps.HierSub)
-          .coalesce(1).write.parquet(cbPath) })
-      writes.foreach(Await.ready(_, Duration.Inf))
-      writes.foreach(Await.result(_, Duration.Inf))
-    }
+    // only): overlap them (§2.6)
+    Replay.fence(
+      () => StreamAnnIngest.splitCorpus(all, splitDir, waves, orderExpr),
+      () => StreamAnnIngest.Hier.write(all, cbPath))
     (splitDir, cbPath)
   }
 
@@ -170,42 +158,15 @@ object StreamSemDedup {
     val (splitDir, cbPath) = prepare(spark, dir, work, col("vec_id"), waves)
     val store = s"$work/assigned"
     val pairStore = s"$work/pairs"
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val session = spark.newSession()
-    val q = session.readStream
-      .schema(session.read.parquet(splitDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(splitDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val t0 = System.nanoTime()
-        processBatch(batch, batchId, cbPath, store, pairStore)
-        buf += (System.nanoTime() - t0) / 1e9
-        ()
-      }
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    buf.toSeq
+    Replay.drainTimed(spark, splitDir, s"$work/ckpt")((batch, batchId) =>
+      processBatch(batch, batchId, cbPath, store, pairStore))
   }
 
   private def runStream(spark: SparkSession, inDir: String, ckpt: String,
                         cbPath: String, store: String, pairStore: String,
-                        offset: Long): Unit = {
-    val session = spark.newSession()
-    val q = session.readStream
-      .schema(session.read.parquet(inDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) =>
-        processBatch(batch, offset + batchId, cbPath, store, pairStore))
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                        offset: Long): Unit =
+    Replay.drain(spark, inDir, ckpt, offset)((batch, batchId) =>
+      processBatch(batch, batchId, cbPath, store, pairStore))
 
   private def readPairs(spark: SparkSession, pairStore: String): DataFrame =
     spark.read.parquet(pairStore)
@@ -218,8 +179,7 @@ object StreamSemDedup {
     val spark = batch.sparkSession
     // batch-size × 2√k assignment against the static codebook; ccos
     // (the centroid cosine) rides along — it IS the victim signal
-    val asn = SimilarityOps
-      .hierAssignWithCodebook(batch, spark.read.parquet(cbPath))
+    val asn = StreamAnnIngest.Hier.assign(batch, spark.read.parquet(cbPath))
       .select("vec_id", "v", "nrm", "cell", "ccos")
       .persist()
     try {
@@ -256,22 +216,15 @@ object StreamSemDedup {
       // writes are idempotent batch_id overwrites; any "skip if the
       // pair dir exists" retry shortcut would break that contract (the
       // torn pair set would be trusted)
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        // materialize the shared persisted frame BEFORE forking (the
-        // d12 rule: racing its first materialization duplicates
-        // partition computes under the cache lock)
-        asn.count(): Unit
-        val writes = Seq(
-          Future { pairsOut.write.mode("overwrite")
-            .parquet(s"$pairStore/batch_id=$batchId") },
-          Future { asn.write.mode("overwrite")
-            .parquet(s"$store/batch_id=$batchId") })
-        writes.foreach(w => Await.ready(w, Duration.Inf))
-        writes.foreach(w => Await.result(w, Duration.Inf))
-      }
+      // materialize the shared persisted frame BEFORE forking (the
+      // d12 rule: racing its first materialization duplicates
+      // partition computes under the cache lock)
+      asn.count(): Unit
+      Replay.fence(
+        () => pairsOut.write.mode("overwrite")
+          .parquet(s"$pairStore/batch_id=$batchId"),
+        () => asn.write.mode("overwrite")
+          .parquet(s"$store/batch_id=$batchId"))
     } finally { asn.unpersist(); () }
   }
 }

@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.io.Sources
 
@@ -73,20 +72,9 @@ object StreamSketch {
       .repartitionByRange(SplitFiles, orderExpr)
       .write.parquet(splitDir)
     val store = s"$work/sketches"
-    val session = spark.newSession()
-    val q = session.readStream
-      .schema(session.read.parquet(splitDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(splitDir)
-      .writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, store))
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val nBatches = Option(new java.io.File(store).listFiles())
-      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
+    Replay.drain(spark, splitDir, s"$work/ckpt", 0L)((batch, batchId) =>
+      processBatch(batch, batchId, store))
+    val nBatches = Replay.countBatchDirs(store)
     val result = spark.read.parquet(store).drop("batch_id")
       .groupBy("event_type")
       .agg(
@@ -112,24 +100,8 @@ object StreamSketch {
       .repartitionByRange(waves, col("event_id"))
       .write.parquet(splitDir)
     val store = s"$work/sketches"
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val session = spark.newSession()
-    val q = session.readStream
-      .schema(session.read.parquet(splitDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(splitDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val t0 = System.nanoTime()
-        processBatch(batch, batchId, store)
-        buf += (System.nanoTime() - t0) / 1e9
-        ()
-      }
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    buf.toSeq
+    Replay.drainTimed(spark, splitDir, s"$work/ckpt")((batch, batchId) =>
+      processBatch(batch, batchId, store))
   }
 
   /** The batch twin: one sketch built over the whole table in a single
@@ -205,22 +177,11 @@ object StreamSketch {
       .repartitionByRange(SplitFiles, orderExpr)
       .write.parquet(splitDir)
     val store = s"$work/hist"
-    val session = spark.newSession()
-    val q = session.readStream
-      .schema(session.read.parquet(splitDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(splitDir)
-      .writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) =>
-        batch.groupBy(col("event_type"), bucket(col("value")).as("b"))
-          .agg(count(lit(1)).as("cnt"))
-          .write.mode("overwrite").parquet(s"$store/batch_id=$batchId"))
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val nBatches = Option(new java.io.File(store).listFiles())
-      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
+    Replay.drain(spark, splitDir, s"$work/ckpt", 0L)((batch, batchId) =>
+      batch.groupBy(col("event_type"), bucket(col("value")).as("b"))
+        .agg(count(lit(1)).as("cnt"))
+        .write.mode("overwrite").parquet(s"$store/batch_id=$batchId"))
+    val nBatches = Replay.countBatchDirs(store)
     (quantilesFromHistogram(
       spark.read.parquet(store).drop("batch_id")), nBatches)
   }
@@ -283,21 +244,10 @@ object StreamSketch {
       .orderBy(col("cnt").desc, col("token")).limit(WatchK)
       .select("token").coalesce(1).write.parquet(watchPath)
     val store = s"$work/counters"
-    val session = spark.newSession()
-    val q = session.readStream
-      .schema(session.read.parquet(splitDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(splitDir)
-      .writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) =>
-        cmsPartial(batch)
-          .write.mode("overwrite").parquet(s"$store/batch_id=$batchId"))
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val nBatches = Option(new java.io.File(store).listFiles())
-      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
+    Replay.drain(spark, splitDir, s"$work/ckpt", 0L)((batch, batchId) =>
+      cmsPartial(batch)
+        .write.mode("overwrite").parquet(s"$store/batch_id=$batchId"))
+    val nBatches = Replay.countBatchDirs(store)
     val merged = spark.read.parquet(store).drop("batch_id")
       .groupBy("r", "bucket").agg(sum("c").as("c"))
     (watchEstimates(spark.read.parquet(watchPath), merged), nBatches)
@@ -350,14 +300,6 @@ object StreamSketch {
   /** x11's serve window: the LAST [[WindowBatches]] micro-batches. */
   val WindowBatches = 2
 
-  /** x11/x12/x13's shared replay scaffolding: write `src` as
-    * [[SplitFiles]] mtime-ascending waves keyed by `splitKey` mod
-    * SplitFiles — the DATA membership rule that lets a serve window
-    * name an exact, oracle-expressible row set — replay them one file
-    * per micro-batch through `body`, and return how many micro-batches
-    * ran. One definition so the replay-order contract (mtime base,
-    * part-file filter, wave accounting) cannot drift between the
-    * windowed gates. */
   /** Two-phase variant of [[runWaveReplay]] for MID-STREAM store
     * maintenance gates (d19's adversarial moment, shared scaffolding):
     * waves [0, splitAt) replay as one query, then `midpoint()` runs
@@ -379,29 +321,15 @@ object StreamSketch {
     // is cleared and re-dealt (no stream has run: the marker precedes
     // the first checkpoint)
     if (!dealComplete(work)) {
-      dirs.foreach(clearDir)
+      dirs.foreach(d => Replay.deleteRecursively(new java.io.File(d)))
       dealWaves(src, splitKey, SplitFiles, s"$work/in_staged",
         b => dirs(if (b < splitAt) 0 else 1))
       markDealt(work)
     }
-    def phase(inDir: String, ckpt: String, offset: Long): Unit = {
-      val session = spark.newSession()
-      val q = session.readStream
-        .schema(session.read.parquet(inDir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(inDir)
-        .writeStream
-        .foreachBatch((batch: DataFrame, batchId: Long) =>
-          body(batch, offset + batchId))
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    phase(dirs(0), s"$work/ckptA", 0L)
+    Replay.drain(spark, dirs(0), s"$work/ckptA", 0L)(body)
     midpoint()
-    phase(dirs(1), s"$work/ckptB", splitAt.toLong)
-    countBatchDirs(store)
+    Replay.drain(spark, dirs(1), s"$work/ckptB", splitAt.toLong)(body)
+    Replay.countBatchDirs(store)
   }
 
   /** Crash-recoverable store swap shared by the compaction verbs
@@ -458,12 +386,6 @@ object StreamSketch {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true): Unit
   }
 
-  /** How many `batch_id=N` partitions a store currently holds — the
-    * quantity the compaction gates (d19/x20/p7) bound. */
-  private[streaming] def countBatchDirs(store: String): Int =
-    Option(new java.io.File(store).listFiles())
-      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
-
   /** One-pass wave deal shared by [[runWaveReplay]] and
     * [[runWaveReplayPhased]]. The previous deal scanned `src` once PER
     * WAVE (`waves` full passes, each funneled through a single-task
@@ -505,11 +427,9 @@ object StreamSketch {
           dest.listFiles().filter(f =>
             f.getName.startsWith("part-") && !prior(f.getName))
         }
-      files.foreach(f =>
-        require(f.setLastModified(1000000000000L + b * 60000L),
-          s"cannot set mtime on $f; file-replay order would be undefined"))
+      files.foreach(Replay.stampArrival(_, b))
     }
-    clearDir(staged)
+    Replay.deleteRecursively(new java.io.File(staged))
   }
 
   /** The deal-completion marker both replay scaffolds trust: created
@@ -524,16 +444,15 @@ object StreamSketch {
     require(f.createNewFile(), s"cannot create deal marker $f")
   }
 
-  /** Clear a torn deal's debris (recursive delete; absent dir is fine). */
-  private def clearDir(dir: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(); ()
-    }
-    rm(new java.io.File(dir))
-  }
-
-  /** `splitFiles` defaults to the gate fixture's [[SplitFiles]]; the
+  /** x11/x12/x13's shared replay scaffolding: write `src` as
+    * [[SplitFiles]] mtime-ascending waves keyed by `splitKey` mod
+    * SplitFiles — the DATA membership rule that lets a serve window
+    * name an exact, oracle-expressible row set — replay them one file
+    * per micro-batch through `body` ([[Replay.drain]]), and return how
+    * many `batch_id=N` partitions `store` holds. One definition so the
+    * replay-order contract (mtime base, part-file filter, wave
+    * accounting) cannot drift between the windowed gates.
+    * `splitFiles` defaults to the gate fixture's [[SplitFiles]]; the
     * batches-axis ScaleCheck instrument passes 2× to measure per-batch
     * cost growth against batch INDEX at fixed data. */
   private[streaming] def runWaveReplay(spark: SparkSession, src: DataFrame, splitKey: String,
@@ -549,23 +468,12 @@ object StreamSketch {
     // cleared and re-dealt from scratch (safe — no stream has run yet:
     // the marker precedes the first checkpoint).
     if (!dealComplete(work)) {
-      clearDir(splitDir)
+      Replay.deleteRecursively(new java.io.File(splitDir))
       dealWaves(src, splitKey, splitFiles, s"$work/in_staged", _ => splitDir)
       markDealt(work)
     }
-    val session = spark.newSession()
-    val q = session.readStream
-      .schema(session.read.parquet(splitDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(splitDir)
-      .writeStream
-      .foreachBatch(body)
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    Option(new java.io.File(store).listFiles())
-      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
+    Replay.drain(spark, splitDir, s"$work/ckpt", 0L)(body)
+    Replay.countBatchDirs(store)
   }
 
   def x11StreamWindowQuantile(spark: SparkSession, dir: String): DataFrame =
@@ -842,10 +750,10 @@ object StreamSketch {
     // materialize the pre-vacuum serve NOW — a lazy frame would re-read
     // the store after the vacuum and make the invariance check vacuous
     val beforeRows = before.collect()
-    val partsBefore = countBatchDirs(store)
+    val partsBefore = Replay.countBatchDirs(store)
     val retired = vacuumBatches(spark, store, nBatches - WindowBatches)
     val after = x11Serve(spark, store, nBatches)
-    (after, beforeRows, retired, partsBefore, countBatchDirs(store))
+    (after, beforeRows, retired, partsBefore, Replay.countBatchDirs(store))
   }
 
 

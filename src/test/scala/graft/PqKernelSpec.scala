@@ -155,6 +155,41 @@ class PqKernelSpec extends AnyFunSuite {
       e2.getMessage.toLowerCase.contains("data type mismatch"))
   }
 
+  /** Evaluate `e` through interpreted `eval` and through its generated
+    * code alone (no interpreted fallback), returning each path's thrown
+    * exception — or failing the test if a path returns instead. */
+  private def thrownByBothPaths(e: org.apache.spark.sql.catalyst.expressions.Expression)
+      : Seq[Throwable] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    Seq[() => Any](
+      () => e.eval(null),
+      () => GenerateUnsafeProjection.generate(Seq(e)).apply(InternalRow.empty).get(0, e.dataType))
+      .map(path => try { path(); fail(s"$e returned instead of raising") }
+        catch { case t: IllegalArgumentException => t })
+  }
+
+  test("malformed tables raise in both interpreted eval and codegen, for either nullability") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types._
+    for (n <- Seq(true, false)) {
+      val cbsT = ArrayType(ArrayType(ArrayType(DoubleType, n), n), n)
+      val vec = Literal.create(Seq(1.0, 2.0, 3.0, 4.0), ArrayType(DoubleType, n))
+      val entry = Seq(1.0, 2.0)
+      // an empty FIRST codebook row, then an empty LATER one: no code exists
+      for ((cbs, m) <- Seq((Seq(Seq.empty, Seq(entry)), 0), (Seq(Seq(entry), Seq.empty), 1))) {
+        val errs = thrownByBothPaths(
+          graft.functions.PqEncode(Literal.create(cbs, cbsT), vec))
+        assert(errs.forall(_.getMessage.contains(s"subspace $m has no entries")), errs)
+      }
+      // more codes than table rows
+      val lut = Literal.create(Seq(Seq(1.0, 2.0)), ArrayType(ArrayType(DoubleType, n), n))
+      val codes = Literal.create(Seq(0, 1), ArrayType(IntegerType, n))
+      val errs = thrownByBothPaths(graft.functions.AdcSum(lut, codes))
+      assert(errs.forall(_.getMessage.contains("2 codes exceed a table of 1 rows")), errs)
+    }
+  }
+
   test("interpreted eval agrees with the codegen path") {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types._

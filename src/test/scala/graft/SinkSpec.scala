@@ -104,6 +104,46 @@ class SinkSpec extends AnyFunSuite {
       s"resumed store diverged from the uninterrupted aggregate: $got vs $expected")
   }
 
+  test("Replay.drain: a body failure fails the runner; the re-run ends with the clean run's store") {
+    // the shared runner behind every foreachBatch store gate, on its own:
+    // a body that throws at batch k must surface as an exception — never
+    // as a silently short store a caller would count — and a re-run over
+    // the same work dir + checkpoint must redo from k, ending exactly as
+    // an uninterrupted run does
+    import graft.streaming.{Replay, StreamAnnIngest}
+    val n = StreamAnnIngest.SplitFiles
+    val events = Sources.table(spark, sf, "events").select("event_id", "event_type")
+    def replay(work: String, crashAt: Option[Long]): Unit =
+      Replay.drain(spark, s"$work/in", s"$work/ckpt", 0L) { (batch, batchId) =>
+        batch.groupBy("event_type").agg(count(lit(1)).as("cnt"))
+          .write.mode("overwrite").parquet(s"$work/st/batch_id=$batchId")
+        if (crashAt.contains(batchId)) sys.error(s"injected failure in batch $batchId")
+      }
+    def prepared(): String = {
+      val work = tmp("graft_drain_")
+      events.repartitionByRange(n, col("event_id")).write.parquet(s"$work/in")
+      new java.io.File(s"$work/in").listFiles()
+        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+        .zipWithIndex.foreach { case (f, i) => Replay.stampArrival(f, i) }
+      work
+    }
+    val clean = prepared()
+    replay(clean, None)
+    val crashed = prepared()
+    val k = 2L
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      replay(crashed, Some(k))
+    }
+    // the failed batch's write landed before the throw: a torn batch_id=k
+    assert(Replay.countBatchDirs(s"$crashed/st") == k + 1)
+    replay(crashed, None)
+    assert(Replay.countBatchDirs(s"$crashed/st") == n)
+    def store(work: String) = rows(spark.read.parquet(s"$work/st")
+      .select("batch_id", "event_type", "cnt").orderBy("batch_id", "event_type"))
+    assert(store(crashed) == store(clean),
+      "the re-run's store diverged from an uninterrupted run")
+  }
+
   test("partitionedAppend writes the ES-analog partitioned layout, replay-safe") {
     val out = tmp("graft_part_out_"); val ckpt = tmp("graft_part_ckpt_")
     val expected = Sources.table(spark, sf, "events").count()

@@ -601,10 +601,10 @@ class StreamEquivSpec extends AnyFunSuite {
     // store-served probe must equal batch s26's answer exactly
     val expect = rows(ops.s26HierRetrain(spark, sf))
     val (store, _, nBatches) =
-      graft.streaming.StreamAnnIngest.runHierIngestStreamWith(spark, sf,
-        col("vec_id"),
-        (all, path) =>
-          ops.s26RetrainedCodebook(all).coalesce(1).write.parquet(path))
+      graft.streaming.StreamAnnIngest.runIngestStream(spark, sf,
+        graft.streaming.StreamAnnIngest.Hier.copy(write = (all, path) =>
+          ops.s26RetrainedCodebook(all).coalesce(1).write.parquet(path)),
+        col("vec_id"))
     assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     val served = rows(ops.probeAssigned(
