@@ -264,10 +264,10 @@ object ScaleCheck {
       // is excluded from [[Gates]])
       "s21_bulk_topk_scaled_k" ->
         ((dir, k) => SimilarityOps.s21TopKAssigned(
-          SimilarityOps.s21AssignedK(spark, dir, k))),
+          SimilarityOps.flat(k).index(SimilarityOps.normed(spark, dir)))),
       "s22_hier_bulk_scaled_k" ->
         ((dir, k) => SimilarityOps.s21ServeAssigned(
-          SimilarityOps.s22HierAssignedK(spark, dir, k, hierSubFor(k)))),
+          SimilarityOps.hier(k, hierSubFor(k)).index(SimilarityOps.normed(spark, dir)))),
       "d18_semdedup_hier_scaled_k" ->
         ((dir, k) => SimilarityOps.d18SemDedupHierK(spark, dir, k,
           hierSubFor(k))))
@@ -391,7 +391,7 @@ object ScaleCheck {
     val root = java.nio.file.Files.createTempDirectory("graft_s21store_").toString
     def prep(tag: String, dir: String, k: Int): String = {
       val path = s"$root/$tag"
-      SimilarityOps.s21AssignedK(spark, dir, k)
+      SimilarityOps.flat(k).index(SimilarityOps.normed(spark, dir))
         .write.mode("overwrite").parquet(path)
       path
     }

@@ -98,17 +98,40 @@ object SimilarityOps {
   def q22KnnCosine(spark: SparkSession, dir: String): DataFrame =
     q22From(normed(spark, dir))
 
-  private def q22From(all: DataFrame): DataFrame = {
-    val q = all.filter(col("label") === 1)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val pairs = all.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .withColumn("c", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-    val w = Window.partitionBy("q_id").orderBy(col("c").desc, col("vec_id"))
-    pairs.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 5)
-      .select(col("q_id"), col("vec_id").as("n_id"), r4(col("c")).as("cos_sim"), col("rnk"))
+  private def q22From(all: DataFrame): DataFrame =
+    topPerQuery(all.join(broadcast(queryFrame(all)), col("vec_id") =!= col("q_id"))
+      .withColumn("c", cosine), 5)
+
+  /** Exact cosine of a (query, corpus row) pair frame. */
+  private val cosine: Column = dot(col("qv"), col("v")) / (col("qn") * col("nrm"))
+
+  /** The query rows (label = 1) as (q_id, qv, qn), plus `extra` columns. */
+  private def queryFrame(frame: DataFrame, extra: String*): DataFrame =
+    frame.filter(col("label") === 1)
+      .select(Seq(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn")) ++
+        extra.map(col): _*)
+
+  /** Candidate pairs of every probe: corpus rows meet the broadcast query
+    * frame on `keys` (the cell, plus the tenant for the filtered probe),
+    * self-pairs dropped, exact cosine `c` per pair. */
+  private def probePairs(corpus: DataFrame, qs: DataFrame, keys: Seq[String]): DataFrame =
+    corpus.join(broadcast(qs), keys)
+      .filter(col("vec_id") =!= col("q_id"))
+      .withColumn("c", cosine)
+
+  /** Per-query rank `rnk` of candidate pairs: cosine `c` descending, ties
+    * to the lower `id` — the one rank window of every top-k read. */
+  private def rankPerQuery(pairs: DataFrame, id: String): DataFrame =
+    pairs.withColumn("rnk", row_number()
+      .over(Window.partitionBy("q_id").orderBy(col("c").desc, col(id))).cast("long"))
+
+  /** The top-`k` neighbours per query in s3's output shape
+    * (q_id, n_id, cos_sim, rnk, extra…). */
+  private def topPerQuery(pairs: DataFrame, k: Int, extra: String*): DataFrame =
+    rankPerQuery(pairs, "vec_id").filter(col("rnk") <= k)
+      .select(Seq(col("q_id"), col("vec_id").as("n_id"), r4(col("c")).as("cos_sim"),
+        col("rnk")) ++ extra.map(col): _*)
       .orderBy("q_id", "rnk")
-  }
 
   /** Deterministic sign-LSH bucket: 8 sign bits of the leading dims. */
   def signBucket(v: Column): Column =
@@ -133,17 +156,7 @@ object SimilarityOps {
 
   private def s2From(frame: DataFrame): DataFrame = {
     val all = frame.withColumn("bucket", signBucket(col("v")))
-    val q = all.filter(col("label") === 1)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qn"), col("bucket"))
-    val pairs = all.join(broadcast(q), Seq("bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("c", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-    val w = Window.partitionBy("q_id").orderBy(col("c").desc, col("vec_id"))
-    pairs.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("q_id"), col("vec_id").as("n_id"), r4(col("c")).as("cos_sim"), col("rnk"))
-      .orderBy("q_id", "rnk")
+    topPerQuery(probePairs(all, queryFrame(all, "bucket"), Seq("bucket")), 3)
   }
 
   /** Number of IVF cells (coarse centroids) for s3. */
@@ -191,106 +204,133 @@ object SimilarityOps {
       when(c.getField("ccos") > acc.getField("ccos"), c).otherwise(acc))
   }
 
-  /** s3's deterministic coarse quantizer as a standalone table — the
-    * offline artifact an incremental ingest (s11) trains once and ships
-    * to every batch. Columns (c_id, cv, cn). */
-  private[graft] def ivfSeedCentroids(all: DataFrame): DataFrame =
-    all.filter(col("vec_id") < IvfCells)
+  /** The k lowest-vec_id vectors as a centroid table (c_id, cv, cn) —
+    * s3's deterministic seed trick at any k, so the oracle replays the
+    * identical cells. */
+  private[graft] def seedCentroids(all: DataFrame, k: Int): DataFrame =
+    all.filter(col("vec_id") < k)
       .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
 
-  /** Quantizer assignment as a standalone narrow map: every row of
-    * `frame` (vec_id, v, nrm, label) gains its nearest-centroid `cell` —
-    * the same expression-side argmax as [[ivfProbe]], exposed for the
-    * streaming ingest path where assignment happens per batch and the
-    * probe later reads cells from the index store. */
-  private[graft] def assignCells(frame: DataFrame, seeds: DataFrame,
-                                 extra: Seq[String] = Nil): DataFrame = {
-    val centArr = seeds
-      .select(struct(col("c_id"), col("cv"), col("cn")).as("cent"))
+  /** s3's deterministic coarse quantizer: the [[IvfCells]] seeds. */
+  private[graft] def ivfSeedCentroids(all: DataFrame): DataFrame =
+    seedCentroids(all, IvfCells)
+
+  /** A centroid table as one c_id-sorted array literal `cents` — k rows ×
+    * dim doubles, attached to every row by a single-row broadcast. */
+  private def centroidArray(seeds: DataFrame): DataFrame =
+    seeds.select(struct(col("c_id"), col("cv"), col("cn")).as("cent"))
       .agg(array_sort(collect_list(col("cent"))).as("cents"))
-    frame.crossJoin(broadcast(centArr))
+
+  /** Centroids per group at the gate configuration: [[IvfCells]] cells
+    * fold into IvfCells/[[HierSub]] groups of HierSub — group of cell c
+    * is ⌊c / HierSub⌋, the deterministic rule both engines replay. */
+  val HierSub = 4
+
+  /** The coarse quantizer as ONE value — the seam every ANN probe,
+    * retrain and stream is written against, batch and stream alike:
+    *   - `seeds(all)`: the centroid table (c_id, cv, cn) the artifact is
+    *     built from;
+    *   - `build(seeds)`: the artifact — flat keeps the seed table itself,
+    *     hier the one-row [[hierCentArr]] codebook;
+    *   - `assign(frame, art)`: every row of `frame` (vec_id, v, nrm,
+    *     label) gains its `cell` (hier rows also `ccos`, the winning
+    *     centroid cosine — d20's victim signal);
+    *   - `queryCells(queries, art, n)`: every query row (q_id, qv, qn),
+    *     exploded to its top-`n` probed cells.
+    * Everything downstream of the cell column — store layout, probe,
+    * tombstones, compaction — is quantizer-agnostic. */
+  private[graft] final case class Quantizer(
+      seeds: DataFrame => DataFrame,
+      build: DataFrame => DataFrame,
+      assign: (DataFrame, DataFrame) => DataFrame,
+      queryCells: (DataFrame, DataFrame, Int) => DataFrame) {
+    def artifact(all: DataFrame): DataFrame = build(seeds(all))
+    /** Build the artifact once, ahead of a stream (production IVF:
+      * train ahead of time, ingest only assigns). */
+    def write(all: DataFrame, path: String): Unit =
+      artifact(all).coalesce(1).write.parquet(path)
+    /** Every row of `all` assigned under the artifact built over it. */
+    def index(all: DataFrame): DataFrame = assign(all, artifact(all))
+    /** The gen-1 quantizer of one fixed-precision Lloyd step (s17/s26):
+      * its seeds are the per-cell means of the gen-0 assignment, so its
+      * artifact is `build(cellMeans(assign(all, build(seeds))))`. */
+    def retrained: Quantizer = copy(seeds = all => cellMeans(index(all)))
+  }
+
+  /** Query rows (q_id, qv, qn) exploded to their probed cells: `cells`
+    * ranks each row against the broadcast one-row artifact `art`. */
+  private def explodeCells(qs: DataFrame, art: DataFrame, cells: Column): DataFrame =
+    qs.crossJoin(broadcast(art))
+      .select(col("q_id"), col("qv"), col("qn"), explode(cells).as("cell"))
+
+  /** s3's flat quantizer over the first `k` corpus vectors as seeds:
+    * argmax over all k per vector. */
+  private[graft] def flat(k: Int): Quantizer = Quantizer(
+    seedCentroids(_, k), seeds => seeds, assignCells,
+    (qs, seeds, n) => explodeCells(qs, centroidArray(seeds),
+      rankedCells(col("cents"), col("qv"), col("qn"), n)))
+
+  /** s22's two-level quantizer over the first `k` corpus vectors as
+    * seeds, `sub` cells per group: assignment is the G + sub ≈ 2√k
+    * fold, the query fan-out is at the GROUP level ([[hierQueryCells]]). */
+  private[graft] def hier(k: Int, sub: Int): Quantizer = Quantizer(
+    seedCentroids(_, k), hierCentArr(_, sub), hierAssignWithCodebook,
+    (qs, arr, n) => explodeCells(qs, arr,
+      hierQueryCells(col("groups"), col("qv"), col("qn"), n)))
+
+  /** The two quantizers at the gate configuration. */
+  private[graft] val Flat = flat(IvfCells)
+  private[graft] val Hier = hier(IvfCells, HierSub)
+
+  /** Flat assignment as a narrow map: every row of `frame` (vec_id, v,
+    * nrm, label) gains its nearest-centroid `cell` against the seed
+    * table — the expression-side argmax, never a shuffle. */
+  private[graft] def assignCells(frame: DataFrame, seeds: DataFrame): DataFrame =
+    frame.crossJoin(broadcast(centroidArray(seeds)))
       .withColumn("cell",
         element_at(rankedCells(col("cents"), col("v"), col("nrm"), 1), 1))
-      .select((Seq("vec_id", "v", "nrm", "label", "cell") ++ extra).map(col): _*)
+      .select("vec_id", "v", "nrm", "label", "cell")
+
+  /** The one top-3 probe over an assigned corpus (vec_id, v, nrm, label,
+    * cell) — every store-served and batch probe, flat or hier. Corpus
+    * rows meet queries on their STORED cell, so the corpus side never
+    * pays quantizer work. At n = 1 queries probe their own stored cell
+    * ([[probeAssigned]]); above it only the query rows — a tiny,
+    * broadcast-sized set — re-rank the artifact `art` through
+    * `q.queryCells` and fan out to their top-n cells (s3's nprobe, s22's
+    * gprobe). Fan-out cost is queries × n broadcast rows, a constant at
+    * any corpus size; the store is never exchanged (LayoutSpec's s15/s24
+    * cases). Cells partition the corpus, so probed pairs are unique by
+    * construction — no dedup pass. `art` is by-name: at n = 1 it is
+    * never read, so a store-served caller pays no artifact scan. */
+  private[graft] def serve(q: Quantizer, assigned: DataFrame, art: => DataFrame,
+                           n: Int): DataFrame =
+    if (n == 1) probeAssigned(assigned)
+    else topPerQuery(probePairs(assigned,
+      q.queryCells(queryFrame(assigned), art, n), Seq("cell")), 3)
+
+  /** [[serve]] at n = 1: every query probes its stored cell, so neither
+    * the quantizer nor its artifact is read — query time pays zero
+    * assignment work (InvariantSpec pins that this stored cell is what
+    * `queryCells(…, 1)` would pick). Emits s3's exact output shape. */
+  private[graft] def probeAssigned(assigned: DataFrame): DataFrame =
+    topPerQuery(probePairs(assigned, queryFrame(assigned, "cell"), Seq("cell")), 3)
+
+  /** The batch probe: index the corpus under `q`, then [[serve]] it. */
+  private[graft] def probe(q: Quantizer, all: DataFrame, n: Int): DataFrame = {
+    val art = q.artifact(all)
+    serve(q, q.assign(all, art), art, n)
   }
 
-  /** The nprobe=1 IVF probe over an ALREADY-ASSIGNED frame (vec_id, v,
-    * nrm, label, cell): queries meet their inverted list on a cell
-    * equi-join — no quantizer in sight, which is the point: when the
-    * index store already carries cells (s11), query time pays zero
-    * assignment work over the corpus. Emits s3's exact output shape. */
-  private[graft] def probeAssigned(assigned: DataFrame): DataFrame = {
-    val q = assigned.filter(col("label") === 1)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qn"), col("cell"))
-    probeTail(assigned, q)
-  }
-
-  /** The shared tail of every store-served probe: queries — already
-    * carrying their probed `cell` keys — ride a broadcast into the cell
-    * equi-join against the assigned corpus, exact cosine per candidate,
-    * rank ≤ 3 per query, s3's exact output shape. The query frames
-    * differ per probe (single stored cell, flat top-nprobe fan-out,
-    * hierarchical top-gprobe group fan-out); the join does not. */
-  private def probeTail(assigned: DataFrame, q: DataFrame): DataFrame = {
-    val pairs = assigned.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("c", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-    val w = Window.partitionBy("q_id").orderBy(col("c").desc, col("vec_id"))
-    pairs.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("q_id"), col("vec_id").as("n_id"), r4(col("c")).as("cos_sim"), col("rnk"))
-      .orderBy("q_id", "rnk")
-  }
-
-  /** The store-served probe widened to nprobe > 1 — s3's standard recall
-    * lever applied to s11's index store (s15). The corpus side is
-    * byte-identical to [[probeAssigned]]: store rows meet queries on
-    * their STORED cell key, no quantizer anywhere near the corpus. Only
-    * the query rows — already a tiny, broadcast-sized set — re-rank the
-    * broadcast quantizer to fan out to their top-`nprobe` cells and then
-    * ride the same broadcast into the cell equi-join. Fan-out cost is
-    * queries × nprobe rows, a constant at any corpus size; the store is
-    * never exchanged (LayoutSpec's s15 case proves zero shuffle
-    * exchanges on the real bucketed layout — the one exchange in the
-    * plan is the query broadcast itself). Emits s3's exact output shape,
-    * and equals batch s3 at the same nprobe row-for-row
-    * (StreamEquivSpec). */
+  /** s15's store-served multiprobe under the flat quantizer. */
   private[graft] def probeAssignedMulti(assigned: DataFrame, seeds: DataFrame,
-                                        nprobe: Int): DataFrame = {
-    val centArr = seeds
-      .select(struct(col("c_id"), col("cv"), col("cn")).as("cent"))
-      .agg(array_sort(collect_list(col("cent"))).as("cents"))
-    val q = assigned.filter(col("label") === 1)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-      .crossJoin(broadcast(centArr))
-      .select(col("q_id"), col("qv"), col("qn"),
-        explode(rankedCells(col("cents"), col("qv"), col("qn"), nprobe)).as("cell"))
-    probeTail(assigned, q)
-  }
+                                        nprobe: Int): DataFrame =
+    serve(Flat, assigned, seeds, nprobe)
 
-  /** The store-served probe under the HIERARCHICAL quantizer at a
-    * level-1 fan-out of `gprobe` (s24) — the recall-recovery lever the
-    * s4 battery measures as `hier_np2`, served from a STORED two-level
-    * assignment (s23's stream-built index): corpus rows meet queries on
-    * their stored cell with zero quantizer work ([[probeAssigned]]'s
-    * rule), and only the query rows re-rank the codebook artifact `arr`
-    * (the one-row [[hierCentArr]] nested literal s23's ingest wrote) to
-    * explode to the level-2 argmax cell of each of their top-`gprobe`
-    * groups ([[hierQueryCells]]' rule — fan-out at the GROUP level,
-    * where the hier quantizer's level-1 errors live). Fan-out cost is
-    * queries × gprobe broadcast rows, constant in corpus size; the
-    * store is never exchanged. At gprobe=1 this is s23's own probe. */
-  private[graft] def probeAssignedHierMulti(assigned: DataFrame,
-                                            arr: DataFrame,
-                                            gprobe: Int): DataFrame = {
-    val q = assigned.filter(col("label") === 1)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-      .crossJoin(broadcast(arr))
-      .select(col("q_id"), col("qv"), col("qn"),
-        explode(hierQueryCells(col("groups"), col("qv"), col("qn"), gprobe)).as("cell"))
-    probeTail(assigned, q)
-  }
+  /** s24's store-served multiprobe under the hier codebook `arr`. */
+  private[graft] def probeAssignedHierMulti(assigned: DataFrame, arr: DataFrame,
+                                            gprobe: Int): DataFrame =
+    serve(Hier, assigned, arr, gprobe)
 
   /** Decimal places at which retrained centroids are published (s17).
     * A shipped codebook is a frozen artifact, not a float accident:
@@ -301,27 +341,21 @@ object SimilarityOps {
     * of the ANN suite lives in. */
   val CentroidScale = 6
 
-  /** One deterministic Lloyd refinement of the coarse quantizer: every
-    * vector joins its current cell (argmax cosine against `seeds`), and
+  /** The Lloyd M-step over an already-assigned frame ([[Quantizer.retrained]]):
     * the refined centroid of a cell is the dimension-wise MEAN of its
     * members, published at [[CentroidScale]] decimals with its norm
-    * recomputed. Cells that lost all members retire — exactly what a
-    * production retrain does to a centroid the corpus drifted away from.
+    * recomputed; cells that lost all members retire by the groupBy —
+    * exactly what a production retrain does to a centroid the corpus
+    * drifted away from. Assignment-source-agnostic — s17 feeds it the
+    * flat argmax, s26 the two-level fold — because the update never
+    * looks at HOW a row got its cell.
     *
-    * Scale shape: the update is the standard KMeans M-step — a
-    * posexplode to (cell, dim, val) followed by a partial-aggregated
-    * groupBy(cell, dim) mean, i.e. one shuffle of 64 doubles per vector
-    * that map-side combines down to cells × dims rows, then a cells-sized
-    * rebuild. No driver-side math; the new codebook is a DataFrame the
-    * next stage broadcasts, exactly like the seed codebook it replaces. */
-  private[graft] def lloydStep(all: DataFrame, seeds: DataFrame): DataFrame =
-    cellMeans(assignCells(all, seeds))
-
-  /** The M-step alone, over an already-assigned frame: per-cell
-    * dimension-wise means at [[CentroidScale]] decimals, norms
-    * recomputed, memberless cells retired by the groupBy. Assignment-
-    * source-agnostic — s17 feeds it the flat argmax, s26 the two-level
-    * fold — because the update never looks at HOW a row got its cell. */
+    * Scale shape: the standard KMeans M-step — a posexplode to (cell,
+    * dim, val) followed by a partial-aggregated groupBy(cell, dim) mean,
+    * i.e. one shuffle of 64 doubles per vector that map-side combines
+    * down to cells × dims rows, then a cells-sized rebuild. No
+    * driver-side math; the new codebook is a DataFrame the next stage
+    * broadcasts, exactly like the seed codebook it replaces. */
   private[graft] def cellMeans(assigned: DataFrame): DataFrame =
     assigned
       .select(col("cell"), posexplode(col("v")).as(Seq("i", "val")))
@@ -335,7 +369,7 @@ object SimilarityOps {
   /** s17 quantizer retrain + re-index: the index-lifecycle motion the
     * ingest → delete → compact → upsert chain (s11/s12/s13/s16) still
     * lacked. The gen-0 seed quantizer is refined by one deterministic
-    * Lloyd step ([[lloydStep]]) over the corpus it has drifted from,
+    * Lloyd step ([[Quantizer.retrained]]) over the corpus it has drifted from,
     * the WHOLE corpus re-assigns under the gen-1 centroids (a narrow
     * map — re-indexing is an assignment sweep, not a data rewrite), and
     * queries probe the rebuilt inverted lists. The oracle replays the
@@ -348,18 +382,13 @@ object SimilarityOps {
     * a rebuild in flight is invisible until its marker lands (the
     * atomic flip) — proven in LayoutSpec with the partition-pruned,
     * exchange-free plan. */
-  def s17IvfRetrain(spark: SparkSession, dir: String): DataFrame = {
-    val all = normed(spark, dir)
-    val gen1 = lloydStep(all, ivfSeedCentroids(all))
-    probeAssigned(assignCells(all, gen1))
-  }
+  def s17IvfRetrain(spark: SparkSession, dir: String): DataFrame =
+    probe(Flat.retrained, normed(spark, dir), 1)
 
   /** The gen-1 index store s17's deployment half writes: every corpus
     * vector with its gen-1 cell assignment. */
-  private[graft] def s17Gen1Assigned(spark: SparkSession, dir: String): DataFrame = {
-    val all = normed(spark, dir)
-    assignCells(all, lloydStep(all, ivfSeedCentroids(all)))
-  }
+  private[graft] def s17Gen1Assigned(spark: SparkSession, dir: String): DataFrame =
+    Flat.retrained.index(normed(spark, dir))
 
   /** Append one index generation under `gen=N` and commit it with an
     * explicit marker file. The marker — not the data files — is what a
@@ -446,43 +475,15 @@ object SimilarityOps {
     old
   }
 
-  /** The IVF probe plan, parameterized by the centroid table: assign every
-    * vector to its nearest coarse centroid (argmax cosine against the
-    * broadcast centroid set), build the inverted lists implicitly as the
-    * `cell` key, and answer each query from its top-`nprobe` cells (the
-    * corpus side always lives in exactly one cell, so probed pairs are
-    * unique by construction — no dedup pass).
-    * The plan is centroid-source-agnostic — quantizer assignment is a
-    * narrow map over the broadcast centroid array, the search a
-    * co-partitioned join on cell id — which is exactly why a trained
-    * quantizer (x4) drops in without a plan change. */
-  private def ivfProbe(all: DataFrame, seeds: DataFrame, nprobe: Int = 1): DataFrame = {
-    // IvfCells rows × dim doubles → one array literal attached to every
-    // row by a single-row broadcast; sorted by c_id for determinism.
-    val centArr = seeds
-      .select(struct(col("c_id"), col("cv"), col("cn")).as("cent"))
-      .agg(array_sort(collect_list(col("cent"))).as("cents"))
-    val assigned = all.crossJoin(broadcast(centArr))
-      .withColumn("cells", rankedCells(col("cents"), col("v"), col("nrm"), nprobe))
-      .select(col("vec_id"), col("v"), col("nrm"), col("label"),
-        element_at(col("cells"), 1).as("cell"), col("cells"))
-    val q = assigned.filter(col("label") === 1)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qn"), explode(col("cells")).as("cell"))
-    val pairs = assigned.drop("cells").join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("c", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-    val w = Window.partitionBy("q_id").orderBy(col("c").desc, col("vec_id"))
-    pairs.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("q_id"), col("vec_id").as("n_id"), r4(col("c")).as("cos_sim"), col("rnk"))
-      .orderBy("q_id", "rnk")
-  }
-
   /** s3 IVF-style ANN over a deterministic coarse quantizer (the IvfCells
     * lowest-vec_id vectors serve as centroids) so the DuckDB oracle
-    * replays the identical cells. [[x4IvfKmeans]] is the trained-quantizer
-    * variant on the same plan. */
+    * replays the identical cells: assign every vector to its nearest
+    * coarse centroid (a narrow map over the broadcast centroid array),
+    * build the inverted lists implicitly as the `cell` key, and answer
+    * each query from its cell by a co-partitioned join on cell id
+    * ([[probe]]). The plan is centroid-source-agnostic, which is exactly
+    * why a trained quantizer ([[x4IvfKmeans]]) drops in without a plan
+    * change. */
   def s3AnnIvf(spark: SparkSession, dir: String): DataFrame =
     s3AnnIvfProbe(spark, dir, nprobe = 1)
 
@@ -492,13 +493,7 @@ object SimilarityOps {
     * plan shape (narrow assignment + equi-join on cell) is identical at
     * any nprobe. s4 measures the recall gain. */
   def s3AnnIvfProbe(spark: SparkSession, dir: String, nprobe: Int): DataFrame =
-    s3ProbeFrom(normed(spark, dir), nprobe)
-
-  private def s3ProbeFrom(all: DataFrame, nprobe: Int): DataFrame = {
-    val seeds = all.filter(col("vec_id") < IvfCells)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-    ivfProbe(all, seeds, nprobe)
-  }
+    probe(Flat, normed(spark, dir), nprobe)
 
   /** Tenant count for s18's metadata rule (`vec_id mod TenantMod`). */
   val TenantMod = 3
@@ -519,23 +514,17 @@ object SimilarityOps {
     * cell-bucketed store the subset-key co-partition rule keeps it
     * exchange-free). The oracle is s3's chain with the tenant equality
     * added to the probe join. */
-  def s18AnnFiltered(spark: SparkSession, dir: String): DataFrame = {
-    val all = normed(spark, dir)
+  def s18AnnFiltered(spark: SparkSession, dir: String): DataFrame =
+    filteredProbe(Flat, normed(spark, dir))
+
+  /** The filtered probe under quantizer `q` (s18 flat, s28 hier): the
+    * tenant derives from vec_id after assignment — the quantizer never
+    * reads it — and joins as the second probe key. */
+  private def filteredProbe(q: Quantizer, all: DataFrame): DataFrame = {
+    val assigned = q.index(all)
       .withColumn("tenant", (col("vec_id") % TenantMod).cast("long"))
-    val seeds = ivfSeedCentroids(all.drop("tenant"))
-    val assigned = assignCells(all, seeds, extra = Seq("tenant"))
-    val q = assigned.filter(col("label") === 1)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qn"), col("cell"), col("tenant"))
-    val pairs = assigned.join(broadcast(q), Seq("cell", "tenant"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("c", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-    val w = Window.partitionBy("q_id").orderBy(col("c").desc, col("vec_id"))
-    pairs.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("q_id"), col("vec_id").as("n_id"), r4(col("c")).as("cos_sim"),
-        col("rnk"), col("tenant"))
-      .orderBy("q_id", "rnk")
+    topPerQuery(probePairs(assigned, queryFrame(assigned, "cell", "tenant"),
+      Seq("cell", "tenant")), 3, "tenant")
   }
 
   /** Cosine threshold for s19's radius search — chosen against the
@@ -560,27 +549,33 @@ object SimilarityOps {
     * scan. The radius bounds the answer the way top-k can't: a query in
     * a dense cell returns more rows, but never more than clear τ —
     * exactly the semantics the downstream consumer asked for. */
-  def s19AnnRadius(spark: SparkSession, dir: String): DataFrame = {
-    val all = normed(spark, dir)
-    val assigned = assignCells(all, ivfSeedCentroids(all))
-    val q = assigned.filter(col("label") === 1)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qn"), col("cell"))
-    assigned.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("c", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .filter(col("c") >= RadiusTau)
-      .select(col("q_id"), col("vec_id").as("n_id"), r4(col("c")).as("cos_sim"))
+  def s19AnnRadius(spark: SparkSession, dir: String): DataFrame =
+    radiusProbe(Flat, normed(spark, dir))
+
+  /** The radius probe under quantizer `q` (s19 flat, s29 hier). */
+  private def radiusProbe(q: Quantizer, all: DataFrame): DataFrame = {
+    val assigned = q.index(all)
+    withinRadius(assigned, queryFrame(assigned, "cell"))
+      .select(col("q_id"), col("n_id"), r4(col("c")).as("cos_sim"))
       .orderBy("q_id", "n_id")
   }
+
+  /** The radius read of every probe and alert stream (s19/s29, s20/s30):
+    * corpus rows meet the broadcast query frame (q_id, qv, qn, cell) on
+    * their cell, and every pair at cosine ≥ [[RadiusTau]] is kept as
+    * (q_id, n_id, c) — no rank window. */
+  private[graft] def withinRadius(assigned: DataFrame, qs: DataFrame): DataFrame =
+    probePairs(assigned, qs, Seq("cell"))
+      .filter(col("c") >= RadiusTau)
+      .select(col("q_id"), col("vec_id").as("n_id"), col("c"))
 
   /** x4: the IVF probe with a KMeans-trained coarse quantizer
     * (`ml.clustering.KMeans`, seed-pinned) — the production form of s3:
     * train once on a sample, broadcast the (tiny) centroid table, and the
-    * probe plan is byte-for-byte the one s3 runs (same [[ivfProbe]]).
-    * Training is not SQL-expressible, so like x2/x3 this entry is
-    * rows-only at the gate and golden-pinned + determinism-tested in
-    * MlGoldenSpec. */
+    * probe plan is byte-for-byte the one s3 runs (the flat [[probe]] with
+    * the trained table as its seeds). Training is not SQL-expressible,
+    * so like x2/x3 this entry is rows-only at the gate and golden-pinned
+    * + determinism-tested in MlGoldenSpec. */
   def x4IvfKmeans(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
@@ -589,7 +584,7 @@ object SimilarityOps {
     val model = new KMeans()
       .setK(IvfCells).setSeed(7L).setMaxIter(10).setTol(1e-6)
       .fit(feat)
-    // centroid table: IvfCells × dim doubles — KBs; broadcast by ivfProbe
+    // centroid table: IvfCells × dim doubles — KBs; broadcast by the probe
     val centroids = model.clusterCenters.zipWithIndex.map { case (c, i) =>
       (i.toLong, c.toArray.toSeq)
     }.toSeq
@@ -597,7 +592,7 @@ object SimilarityOps {
     val seeds = centroids.toDF("c_id", "cv")
       .select(col("c_id"), col("cv").cast("array<double>").as("cv"))
       .withColumn("cn", sqrt(dot(col("cv"), col("cv"))))
-    ivfProbe(all, seeds)
+    probe(Flat.copy(seeds = _ => seeds), all, 1)
   }
 
   /** s4: recall@3 of the approximate paths against the exact scan — the
@@ -655,10 +650,7 @@ object SimilarityOps {
     // the same tiny query frame. Branch SCORING is expression-identical
     // to the standalone gates', so recall rows are bit-identical
     // (hash-proven; the sf0.01 oracle re-checks per branch).
-    val cents = ivfSeedCentroids(all)
-      .select(struct(col("c_id"), col("cv"), col("cn")).as("cent"))
-      .agg(array_sort(collect_list(col("cent"))).as("cents"))
-      .localCheckpoint()
+    val cents = centroidArray(ivfSeedCentroids(all)).localCheckpoint()
     val cb = pqCodebook(all).localCheckpoint()
     // one flat-IVF corpus assignment (top-1 is nprobe-free) feeds the
     // ivf probes, the PQ encode, and the residual branch's base
@@ -669,18 +661,16 @@ object SimilarityOps {
       .localCheckpoint()
     // query-side ranked cells at the battery's max fan-out (4); each
     // nprobe branch explodes a PREFIX slice of the same array
-    val qCells = all.filter(col("label") === 1).crossJoin(broadcast(cents))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"),
-        rankedCells(col("cents"), col("v"), col("nrm"), 4).as("cells4"))
+    val qCells = queryFrame(all).crossJoin(broadcast(cents))
+      .select(col("q_id"), col("qv"), col("qn"),
+        rankedCells(col("cents"), col("qv"), col("qn"), 4).as("cells"))
       .localCheckpoint()
-    def ivfBranch(nprobe: Int): DataFrame = {
-      val q = qCells.select(col("q_id"), col("qv"), col("qn"),
-        explode(slice(col("cells4"), 1, nprobe)).as("cell"))
-      val pairs = ivfAssigned.join(broadcast(q), Seq("cell"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("c", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      val w = Window.partitionBy("q_id").orderBy(col("c").desc, col("vec_id"))
-      pairs.withColumn("rnk", row_number().over(w).cast("long"))
+    // an ivf or hier branch: the first n of each query's ranked cells,
+    // through the probe's own candidate join and rank
+    def probeBranch(assigned: DataFrame, ranked: DataFrame, n: Int): DataFrame = {
+      val q = ranked.select(col("q_id"), col("qv"), col("qn"),
+        explode(slice(col("cells"), 1, n)).as("cell"))
+      rankPerQuery(probePairs(assigned, q, Seq("cell")), "vec_id")
         .filter(col("rnk") <= 3)
         .select(col("q_id"), col("vec_id").as("n_id"))
     }
@@ -693,77 +683,48 @@ object SimilarityOps {
       .select("vec_id", "label", "nrm", "cell", "codes", "rnrm")
       .localCheckpoint()
     val qPq = qCells.crossJoin(broadcast(cb))
-      .select(col("q_id"), col("qn"), element_at(col("cells4"), 1).as("cell"),
+      .select(col("q_id"), col("qn"), element_at(col("cells"), 1).as("cell"),
         lutCol(col("cbs"), col("qv")).as("lut"))
       .localCheckpoint()
-    val pqBranch = {
-      val pairs = pqEnc.join(broadcast(qPq.drop("cell")),
-          col("vec_id") =!= col("q_id"))
+    val pqBranch = rankPerQuery(
+      pqEnc.join(broadcast(qPq.drop("cell")), col("vec_id") =!= col("q_id"))
         .withColumn("c",
-          adcCol(col("lut"), col("codes")) / (col("qn") * col("rnrm")))
-      val w = Window.partitionBy("q_id").orderBy(col("c").desc, col("vec_id"))
-      pairs.withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= 3)
-        .select(col("q_id"), col("vec_id").as("n_id"))
-    }
+          adcCol(col("lut"), col("codes")) / (col("qn") * col("rnrm"))), "vec_id")
+      .filter(col("rnk") <= 3)
+      .select(col("q_id"), col("vec_id").as("n_id"))
     // ONE ADC ranking serves both ivfpq (rnk ≤ 3 is a prefix of
     // rnk ≤ RerankR) and the re-rank shortlist — the output-sized
     // Q × RerankR frame is the only thing checkpointed
-    val ranked = {
-      val pairs = pqEnc.select("vec_id", "cell", "codes", "rnrm")
+    val ranked = rankPerQuery(
+      pqEnc.select("vec_id", "cell", "codes", "rnrm")
         .join(broadcast(qPq), Seq("cell"))
         .filter(col("vec_id") =!= col("q_id"))
         .withColumn("c",
-          adcCol(col("lut"), col("codes")) / (col("qn") * col("rnrm")))
-      val w = Window.partitionBy("q_id").orderBy(col("c").desc, col("vec_id"))
-      pairs.withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= RerankR)
-        .select("q_id", "vec_id", "rnk")
-        .localCheckpoint()
-    }
+          adcCol(col("lut"), col("codes")) / (col("qn") * col("rnrm"))), "vec_id")
+      .filter(col("rnk") <= RerankR)
+      .select("q_id", "vec_id", "rnk")
+      .localCheckpoint()
     val ivfpqBranch = ranked.filter(col("rnk") <= 3)
       .select(col("q_id"), col("vec_id").as("n_id"))
-    val rrBranch = {
-      val short = ranked
-        .select(col("q_id"), col("vec_id").as("n_id"))
-      val qv = all.filter(col("label") === 1)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-      val corpus = all.select(col("vec_id").as("n_id"), col("v").as("nv"),
-        col("nrm").as("nn"))
-      val ex = short.join(corpus, Seq("n_id")).join(broadcast(qv), Seq("q_id"))
-        .withColumn("c", ipFold(col("qv"), col("nv")) / (col("qn") * col("nn")))
-      val w = Window.partitionBy("q_id").orderBy(col("c").desc, col("n_id"))
-      ex.withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= 3)
-        .select(col("q_id"), col("n_id"))
-    }
+    val rrBranch = rerank(all, ranked.select(col("q_id"), col("vec_id").as("n_id")))
+      .filter(col("rnk") <= 3)
+      .select(col("q_id"), col("n_id"))
     // residual branch: reuses the shared corpus assignment; the
     // residual encode itself stays branch-local (its codes differ)
     val resBranch = s8ScanCont(ivfAssigned.crossJoin(broadcast(cents)),
       res => pqCodebook(res, lo = IvfCells))
     // hier: one two-level assignment + one query group-ranking at the
     // max fan-out (2), sliced per branch
-    val harr = hierCentArr(ivfSeedCentroids(all), HierSub).localCheckpoint()
-    val hAssigned = hierAssignWithCodebook(all, harr).localCheckpoint()
-    val hQueries = all.filter(col("label") === 1).crossJoin(broadcast(harr))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"),
-        hierQueryCells(col("groups"), col("v"), col("nrm"), 2).as("hcells2"))
+    val harr = Hier.artifact(all).localCheckpoint()
+    val hAssigned = Hier.assign(all, harr).localCheckpoint()
+    val hQueries = queryFrame(all).crossJoin(broadcast(harr))
+      .select(col("q_id"), col("qv"), col("qn"),
+        hierQueryCells(col("groups"), col("qv"), col("qn"), 2).as("cells"))
       .localCheckpoint()
-    def hierBranch(gprobe: Int): DataFrame = {
-      val q = hQueries.select(col("q_id"), col("qv"), col("qn"),
-        explode(slice(col("hcells2"), 1, gprobe)).as("cell"))
-      val pairs = hAssigned.join(broadcast(q), Seq("cell"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("c", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      val w = Window.partitionBy("q_id").orderBy(col("c").desc, col("vec_id"))
-      pairs.withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= 3)
-        .select(col("q_id"), col("vec_id").as("n_id"))
-    }
     recallOf(s2From(all), "bucket")
-      .unionByName(recallOf(ivfBranch(1), "ivf"))
-      .unionByName(recallOf(ivfBranch(2), "ivf_np2"))
-      .unionByName(recallOf(ivfBranch(4), "ivf_np4"))
+      .unionByName(recallOf(probeBranch(ivfAssigned, qCells, 1), "ivf"))
+      .unionByName(recallOf(probeBranch(ivfAssigned, qCells, 2), "ivf_np2"))
+      .unionByName(recallOf(probeBranch(ivfAssigned, qCells, 4), "ivf_np4"))
       .unionByName(recallOf(pqBranch, "pq"))
       .unionByName(recallOf(ivfpqBranch, "ivfpq"))
       .unionByName(recallOf(resBranch, "ivfpq_res"))
@@ -772,8 +733,8 @@ object SimilarityOps {
       // battery that prices every other path: hier (gprobe=1, s22's
       // probe) shows the 2√k assignment's cost; hier_np2 (top-2 GROUPS)
       // measures the documented recovery lever against flat ivf/ivf_np2
-      .unionByName(recallOf(hierBranch(1), "hier"))
-      .unionByName(recallOf(hierBranch(2), "hier_np2"))
+      .unionByName(recallOf(probeBranch(hAssigned, hQueries, 1), "hier"))
+      .unionByName(recallOf(probeBranch(hAssigned, hQueries, 2), "hier_np2"))
       .orderBy("q_id", "method")
   }
 
@@ -845,7 +806,7 @@ object SimilarityOps {
 
   /** The codebook as one single-row frame: `cbs[m][k]` = the k-th
     * sub-centroid of subspace m (nested array literal, KBs — attached to
-    * every row by a 1-row broadcast, the ivfProbe centroid pattern). */
+    * every row by a 1-row broadcast, the [[centroidArray]] pattern). */
   private def pqCodebook(all: DataFrame, lo: Int = 0): DataFrame =
     all.filter(col("vec_id") >= lo && col("vec_id") < lo + PqK)
       .select(col("vec_id").as("k"), col("v"))
@@ -939,8 +900,7 @@ object SimilarityOps {
     val pairs = coded.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .withColumn("adc", adcCol(col("lut"), col("codes")))
       .withColumn("c", col("adc") / (col("qn") * col("rnrm")))
-    val w = Window.partitionBy("q_id").orderBy(col("c").desc, col("vec_id"))
-    pairs.withColumn("rnk", row_number().over(w).cast("long"))
+    rankPerQuery(pairs, "vec_id")
       .filter(col("rnk") <= 3)
       .select(col("q_id"), col("vec_id").as("n_id"), r4(col("c")).as("adc_sim"), col("rnk"))
       .orderBy("q_id", "rnk")
@@ -1024,13 +984,9 @@ object SimilarityOps {
     * the keep-k cut): `(q_id, vec_id, c, rnk)`. s6 keeps rnk ≤ 3; s9
     * keeps rnk ≤ [[RerankR]] and re-ranks those by exact cosine. */
   private def ivfPqAdcRanked(all: DataFrame): DataFrame = {
-    val seeds = all.filter(col("vec_id") < IvfCells)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-    val centArr = seeds
-      .select(struct(col("c_id"), col("cv"), col("cn")).as("cent"))
-      .agg(array_sort(collect_list(col("cent"))).as("cents"))
     val coded = all
-      .crossJoin(broadcast(centArr)).crossJoin(broadcast(pqCodebook(all)))
+      .crossJoin(broadcast(centroidArray(ivfSeedCentroids(all))))
+      .crossJoin(broadcast(pqCodebook(all)))
       .withColumn("cell", element_at(rankedCells(col("cents"), col("v"), col("nrm"), 1), 1))
       .withColumn("codes", pqCodes(col("cbs"), col("v")))
       .withColumn("rnrm", rnrmCol(col("cbn"), col("codes")))
@@ -1044,8 +1000,7 @@ object SimilarityOps {
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("adc", adcCol(col("lut"), col("codes")))
       .withColumn("c", col("adc") / (col("qn") * col("rnrm")))
-    val w = Window.partitionBy("q_id").orderBy(col("c").desc, col("vec_id"))
-    pairs.withColumn("rnk", row_number().over(w).cast("long"))
+    rankPerQuery(pairs, "vec_id")
   }
 
   /** s9 shortlist size: candidates the ADC pass hands to the exact
@@ -1071,22 +1026,23 @@ object SimilarityOps {
     val short = ivfPqAdcRanked(all)
       .filter(col("rnk") <= RerankR)
       .select(col("q_id"), col("vec_id").as("n_id"), col("rnk").as("adc_rnk"))
-    val qs = all.filter(col("label") === 1)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val corpus = all.select(col("vec_id").as("n_id"), col("v").as("nv"), col("nrm").as("nn"))
-    // the exact-float fetch: the shortlist (Q × R rows, tiny by
-    // construction) equi-joins the corpus on vec_id — AQE broadcasts
-    // the shortlist side, so full vectors are read once for shortlisted
-    // rows only, never re-scanned per query
-    val ex = short.join(corpus, Seq("n_id"))
-      .join(broadcast(qs), Seq("q_id"))
-      .withColumn("c", ipFold(col("qv"), col("nv")) / (col("qn") * col("nn")))
-    val w = Window.partitionBy("q_id").orderBy(col("c").desc, col("n_id"))
-    ex.withColumn("rnk", row_number().over(w).cast("long"))
+    rerank(all, short)
       .filter(col("rnk") <= 3)
       .select(col("q_id"), col("n_id"), r4(col("c")).as("cos_sim"),
         col("rnk"), col("adc_rnk").cast("long").as("adc_rnk"))
       .orderBy("q_id", "rnk")
+  }
+
+  /** The exact re-rank of a (q_id, n_id, …) shortlist (s9, s4's
+    * ivfpq_rr): the shortlist (Q × R rows, tiny by construction)
+    * equi-joins the corpus on vec_id — AQE broadcasts the shortlist
+    * side, so full vectors are read once for shortlisted rows only,
+    * never re-scanned per query — and is ranked by exact cosine. */
+  private def rerank(all: DataFrame, short: DataFrame): DataFrame = {
+    val corpus = all.select(col("vec_id").as("n_id"), col("v").as("nv"), col("nrm").as("nn"))
+    rankPerQuery(short.join(corpus, Seq("n_id"))
+      .join(broadcast(queryFrame(all)), Seq("q_id"))
+      .withColumn("c", ipFold(col("qv"), col("nv")) / (col("qn") * col("nn"))), "n_id")
   }
 
   /** s8 residual IVF-PQ — the production IVFADC layout (Jégou et al.,
@@ -1135,16 +1091,10 @@ object SimilarityOps {
 
   /** The residual IVF-PQ scan, parameterized by the residual-codebook
     * builder (input: the residual frame with `v` = v − c(cell)). */
-  private def s8Scan(all: DataFrame, cbOf: DataFrame => DataFrame): DataFrame = {
-    val seeds = all.filter(col("vec_id") < IvfCells)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-    val centArr = seeds
-      .select(struct(col("c_id"), col("cv"), col("cn")).as("cent"))
-      .agg(array_sort(collect_list(col("cent"))).as("cents"))
-    s8ScanCont(all.crossJoin(broadcast(centArr))
+  private def s8Scan(all: DataFrame, cbOf: DataFrame => DataFrame): DataFrame =
+    s8ScanCont(all.crossJoin(broadcast(centroidArray(ivfSeedCentroids(all))))
       .withColumn("cell", element_at(rankedCells(col("cents"), col("v"), col("nrm"), 1), 1)),
       cbOf)
-  }
 
   /** The residual scan CONTINUATION from an already cell-assigned frame
     * that still carries the `cents` column — the seam the s4/s7/s10
@@ -1185,8 +1135,7 @@ object SimilarityOps {
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("adc", col("qc") + adcCol(col("lut"), col("codes")))
       .withColumn("c", col("adc") / (col("qn") * col("encnorm")))
-    val w = Window.partitionBy("q_id").orderBy(col("c").desc, col("vec_id"))
-    pairs.withColumn("rnk", row_number().over(w).cast("long"))
+    rankPerQuery(pairs, "vec_id")
       .filter(col("rnk") <= 3)
       .select(col("q_id"), col("vec_id").as("n_id"), r4(col("c")).as("adc_sim"), col("rnk"))
       .orderBy("q_id", "rnk")
@@ -1306,11 +1255,7 @@ object SimilarityOps {
     * trick at any k, so the oracle replays identical cells). */
   private def semAssignedK(spark: SparkSession, dir: String, k: Int): DataFrame = {
     val all = normed(spark, dir)
-    val centArr = all.filter(col("vec_id") < k)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-      .select(struct(col("c_id"), col("cv"), col("cn")).as("cent"))
-      .agg(array_sort(collect_list(col("cent"))).as("cents"))
-    all.crossJoin(broadcast(centArr))
+    all.crossJoin(broadcast(centroidArray(seedCentroids(all, k))))
       .withColumn("best", bestCellStruct(col("cents"), col("v"), col("nrm")))
       .select(col("vec_id"), col("v"), col("nrm"),
         col("best.c_id").as("cell"), col("best.ccos").as("ccos"))
@@ -1318,20 +1263,28 @@ object SimilarityOps {
 
   /** d15/d16's shared within-cell duplicate pairs (exact cosine at
     * [[SemThreshold]]), each carrying the pairwise victim. */
-  private def semPairs(asn: DataFrame): DataFrame = {
-    val a = asn.select(col("cell"), col("vec_id").as("a_id"), col("v").as("av"),
-      col("nrm").as("an"), col("ccos").as("acc"))
-    val b = asn.select(col("cell"), col("vec_id").as("b_id"), col("v").as("bv"),
-      col("nrm").as("bn"), col("ccos").as("bcc"))
-    a.join(b, Seq("cell"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("cs", dot(col("av"), col("bv")) / (col("an") * col("bn")))
+  private def semPairs(asn: DataFrame): DataFrame =
+    semVictims(semSide(asn, "a", "cell").join(semSide(asn, "b", "cell"), Seq("cell"))
+      .filter(col("a_id") < col("b_id")))
+
+  /** One side of a SemDeDup candidate pair: `keys`, then the assigned
+    * row as (a_id, av, an, acc) for side "a", (b_id, bv, bn, bcc) for "b". */
+  private[graft] def semSide(asn: DataFrame, side: String, keys: String*): DataFrame =
+    asn.select(keys.map(col) ++ Seq(col("vec_id").as(s"${side}_id"),
+      col("v").as(s"${side}v"), col("nrm").as(s"${side}n"), col("ccos").as(s"${side}cc")): _*)
+
+  /** SemDeDup's pairwise rule over candidate pairs of two [[semSide]]s,
+    * shared by batch d15/d18 and stream d20: exact cosine `cs`, pairs
+    * at ≥ [[SemThreshold]] kept, and of each pair the member NEARER its
+    * centroid (higher centroid cosine; a tie drops the larger id) is the
+    * `victim` — keeping cluster-edge representatives. */
+  private[graft] def semVictims(pairs: DataFrame): DataFrame =
+    pairs.withColumn("cs", dot(col("av"), col("bv")) / (col("an") * col("bn")))
       .filter(col("cs") >= SemThreshold)
       .withColumn("victim",
         when(col("acc") > col("bcc"), col("a_id"))
           .when(col("acc") < col("bcc"), col("b_id"))
           .otherwise(greatest(col("a_id"), col("b_id"))))
-  }
 
   /** d16 semantic dup-clusters: SemDeDup's keep rule at COMPONENT
     * granularity — d15's pairwise rule can over-drop a chain's middle
@@ -1437,22 +1390,9 @@ object SimilarityOps {
     * decade at k=16 → 160, the honest configuration, not the fixed-k
     * degenerate one. */
   private[graft] def s21AnnBulkProbeK(spark: SparkSession, dir: String, k: Int): DataFrame =
-    s21ServeAssigned(s21AssignedK(spark, dir, k))
-
-  /** The k-cell assignment s21 serves from — written to parquet by
-    * ScaleCheck's serve-only decade entry (the ingest-time artifact). */
-  private[graft] def s21AssignedK(spark: SparkSession, dir: String, k: Int): DataFrame = {
-    val seeds = normed(spark, dir).filter(col("vec_id") < k)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-    assignCells(normed(spark, dir), seeds)
-  }
+    s21ServeAssigned(flat(k).index(normed(spark, dir)))
 
   // ---- s22: hierarchical coarse quantizer (two-level assignment) -----
-
-  /** Centroids per group at the gate configuration: [[IvfCells]] cells
-    * fold into IvfCells/[[HierSub]] groups of HierSub — group of cell c
-    * is ⌊c / HierSub⌋, the deterministic rule both engines replay. */
-  val HierSub = 4
 
   /** The two-level codebook as one broadcastable nested array literal:
     * per group, the SUPER-centroid (dimension-wise mean of the group's
@@ -1541,17 +1481,14 @@ object SimilarityOps {
     * The chosen group's subs are fetched by the WINNING FOLD POSITION
     * ([[bestGroupIdx]]) — O(1), and correct under the sparse group ids
     * a retrained codebook (s26) has. */
-  private[graft] def hierAssignWithCodebook(frame: DataFrame, arr: DataFrame,
-                                            extra: Seq[String] = Nil): DataFrame = {
+  private[graft] def hierAssignWithCodebook(frame: DataFrame, arr: DataFrame): DataFrame =
     frame.crossJoin(broadcast(arr))
       .withColumn("gidx", bestGroupIdx(col("groups"), col("v"), col("nrm")))
       .withColumn("subs",
         element_at(col("groups"), col("gidx") + 1).getField("subs"))
       .withColumn("best", bestCellStruct(col("subs"), col("v"), col("nrm")))
-      .select(Seq(col("vec_id"), col("v"), col("nrm"), col("label"),
-        col("best.c_id").as("cell"), col("best.ccos").as("ccos")) ++
-        extra.map(col): _*)
-  }
+      .select(col("vec_id"), col("v"), col("nrm"), col("label"),
+        col("best.c_id").as("cell"), col("best.ccos").as("ccos"))
 
   /** Probed cell ids for one QUERY under the hierarchical quantizer at
     * a level-1 fan-out of `gprobe`: rank the G super-centroids, keep
@@ -1582,82 +1519,34 @@ object SimilarityOps {
         v, nrm).getField("c_id"))
   }
 
-  /** The batch twin of s24's store-served probe — the s4 battery's
-    * hier_np2 chain as a standalone frame (the spec seam for the
-    * s23 × multiprobe composition pin, s15's "≡ batch at the same
-    * nprobe" move lifted to the two-level quantizer). */
-  private[graft] def hierMultiprobeBatch(spark: SparkSession, dir: String,
-                                         gprobe: Int): DataFrame =
-    hierProbeFrom(normed(spark, dir), gprobe)
-
-  /** The hier probe at a level-1 fan-out of `gprobe` — s22's probe with
-    * the query side widened to its top-`gprobe` groups ([[hierQueryCells]]),
-    * the s4 battery's np2 move lifted to the two-level quantizer. The
-    * corpus side is the unchanged single-cell assignment; only the tiny
-    * query set fans out, so plan shape and cost class match s3's
-    * multiprobe exactly. At gprobe=1 this IS s22's probe. */
-  private def hierProbeFrom(all: DataFrame, gprobe: Int): DataFrame = {
-    val arr = hierCentArr(ivfSeedCentroids(all), HierSub)
-    val assigned = hierAssignWithCodebook(all, arr)
-    val q = all.filter(col("label") === 1)
-      .crossJoin(broadcast(arr))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"),
-        explode(hierQueryCells(col("groups"), col("v"), col("nrm"), gprobe)).as("cell"))
-    val pairs = assigned.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("c", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-    val w = Window.partitionBy("q_id").orderBy(col("c").desc, col("vec_id"))
-    pairs.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("q_id"), col("vec_id").as("n_id"), r4(col("c")).as("cos_sim"), col("rnk"))
-  }
-
   /** s22: the IVF probe under a HIERARCHICAL coarse quantizer — the
     * production answer to the flat sweep's N·k assignment cost that
     * §4.2b's scaled-k entries measure (at k ∝ corpus the flat argmax is
     * N·k dot products — quadratic; two levels make it N·(G + sub),
     * ~N·2√k). The codebook is derived from s3's seed centroids in
     * closed form (group means at fixed precision), assignment is two
-    * narrow expression-side folds, and the probe is byte-identical in
-    * shape to s3's cell equi-join. The oracle replays the full
+    * narrow expression-side folds, and the probe is s3's own ([[probe]]
+    * under [[Hier]]; at a level-1 fan-out it is the s4 battery's
+    * hier_np2 chain). The oracle replays the full
     * two-level chain — group means, level-1 argmax, level-2 argmax,
     * probe — so the gate is oracle-checked end to end even though the
     * hierarchical quantizer assigns some vectors to different cells
     * than the flat one (it is its own quantizer, not an approximation
     * being graded against the flat answer). */
-  def s22AnnHier(spark: SparkSession, dir: String): DataFrame = {
-    val all = normed(spark, dir)
-    probeAssigned(hierAssignCells(all, ivfSeedCentroids(all), HierSub))
-  }
+  def s22AnnHier(spark: SparkSession, dir: String): DataFrame =
+    probe(Hier, normed(spark, dir), 1)
 
   /** s28: s18's tenant-partitioned (filtered) probe under the HIER
     * quantizer — the "metadata predicate pushed INTO the index read"
     * probe mode proven on the two-level codebook, completing the
     * probe-mode × quantizer matrix (top-k / multiprobe / filtered /
-    * radius, each on flat AND hier). The tenant column rides through
-    * the assignment untouched ([[hierAssignWithCodebook]]'s `extra`
-    * seam — the quantizer never reads it) and lands in the join key,
+    * radius, each on flat AND hier). The tenant column never reaches
+    * the quantizer ([[filteredProbe]]) and lands in the join key,
     * so the candidate set shrinks to (cell, tenant) buckets: the
     * filter CUTS probe work rather than post-filtering it, exactly
     * s18's scale argument, at the hier assignment's N·2√k cost. */
-  def s28HierFiltered(spark: SparkSession, dir: String): DataFrame = {
-    val all = normed(spark, dir)
-      .withColumn("tenant", (col("vec_id") % TenantMod).cast("long"))
-    val arr = hierCentArr(ivfSeedCentroids(all.drop("tenant")), HierSub)
-    val assigned = hierAssignWithCodebook(all, arr, extra = Seq("tenant"))
-    val q = assigned.filter(col("label") === 1)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qn"), col("cell"), col("tenant"))
-    val pairs = assigned.join(broadcast(q), Seq("cell", "tenant"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("c", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-    val w = Window.partitionBy("q_id").orderBy(col("c").desc, col("vec_id"))
-    pairs.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("q_id"), col("vec_id").as("n_id"), r4(col("c")).as("cos_sim"),
-        col("rnk"), col("tenant"))
-      .orderBy("q_id", "rnk")
-  }
+  def s28HierFiltered(spark: SparkSession, dir: String): DataFrame =
+    filteredProbe(Hier, normed(spark, dir))
 
   /** s29: s19's radius probe under the HIER quantizer — "everything
     * with cosine ≥ [[RadiusTau]]" answered from the two-level cells.
@@ -1665,65 +1554,35 @@ object SimilarityOps {
     * probe is one broadcast hash join with a fused threshold filter),
     * with the assignment cost dropped from N·k to N·2√k. The oracle
     * replays the hier chain with the threshold tail. */
-  def s29HierRadius(spark: SparkSession, dir: String): DataFrame = {
-    val all = normed(spark, dir)
-    val assigned = hierAssignCells(all, ivfSeedCentroids(all), HierSub)
-    val q = assigned.filter(col("label") === 1)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qn"), col("cell"))
-    assigned.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("c", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .filter(col("c") >= RadiusTau)
-      .select(col("q_id"), col("vec_id").as("n_id"), r4(col("c")).as("cos_sim"))
-      .orderBy("q_id", "n_id")
-  }
-
-  /** The k-cell hierarchical assignment at an explicit (k, sub) — the
-    * scaled-k decade seam (ScaleCheck passes sub ≈ √k on each side). */
-  private[graft] def s22HierAssignedK(spark: SparkSession, dir: String,
-                                      k: Int, sub: Int): DataFrame = {
-    val seeds = normed(spark, dir).filter(col("vec_id") < k)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-    hierAssignCells(normed(spark, dir), seeds, sub)
-  }
+  def s29HierRadius(spark: SparkSession, dir: String): DataFrame =
+    radiusProbe(Hier, normed(spark, dir))
 
   // ---- s26: retrain of the two-level codebook (s17 × s22) ------------
-
-  /** The gen-1 two-level codebook: ONE fixed-precision Lloyd M-step
-    * under the HIER assignment — every vector joins its current
-    * two-level cell ([[hierAssignCells]]), each cell's centroid is
-    * refined to its members' dimension-wise mean at [[CentroidScale]]
-    * decimals ([[cellMeans]], s17's rule verbatim), and the two-level
-    * structure is REBUILT from the surviving cells by [[hierCentArr]]'s
-    * own closed form: cells keep their group (g = ⌊c_id / sub⌋ — ids
-    * are preserved by the M-step), memberless cells retire, a group
-    * whose every cell retired disappears from the codebook entirely,
-    * and each group's super-centroid is recomputed as the mean of its
-    * SURVIVING refined centroids. Retirement is exactly why
-    * [[hierAssignWithCodebook]] fetches the winning group's subs by the
-    * ARRAY POSITION carried through the scoring fold ([[bestGroupIdx]]),
-    * never by group ID: a retrained codebook has sparse ids by design,
-    * so id-as-index reads the wrong group, and the filter-by-id scan
-    * that would fix it deep-copies the nested sub-codebooks per row
-    * (measured ~4–7× at scaled k — the r13 regression). The fold
-    * position is sparse-id-correct AND O(1). */
-  private[graft] def s26RetrainedCodebook(all: DataFrame): DataFrame =
-    hierCentArr(
-      cellMeans(hierAssignCells(all, ivfSeedCentroids(all), HierSub)),
-      HierSub)
 
   /** s26: quantizer retrain for the HIERARCHICAL codebook — s17's
     * drift verb composed with s22's two-level structure, owed since s23
     * made the hier codebook the recommended ingest artifact (the flat
     * retrain s17 covers a quantizer the 100 TB deployment no longer
-    * ships). The gen-0 codebook is refined by [[s26RetrainedCodebook]],
-    * the whole corpus re-assigns under gen-1 (the same G + sub ≈ 2√k
-    * narrow fold — re-indexing is an assignment sweep, not a data
-    * rewrite), and queries probe the rebuilt inverted lists. The oracle
-    * replays the entire chain in closed form: gen-0 supers → two-level
-    * assignment → per-cell means at fixed precision → gen-1 supers over
-    * survivors → two-level re-assignment → probe.
+    * ships). The gen-0 codebook is refined by one fixed-precision Lloyd
+    * M-step under the HIER assignment ([[Quantizer.retrained]]) and the
+    * two-level structure is REBUILT from the surviving cells by
+    * [[hierCentArr]]'s own closed form: cells keep their group
+    * (g = ⌊c_id / sub⌋ — ids are preserved by the M-step), memberless
+    * cells retire, a group whose every cell retired disappears from the
+    * codebook entirely, and each group's super-centroid is recomputed
+    * as the mean of its SURVIVING refined centroids. Retirement is
+    * exactly why [[hierAssignWithCodebook]] fetches the winning group's
+    * subs by the ARRAY POSITION carried through the scoring fold
+    * ([[bestGroupIdx]]), never by group ID: a retrained codebook has
+    * sparse ids by design, so id-as-index reads the wrong group, and the
+    * filter-by-id scan that would fix it deep-copies the nested
+    * sub-codebooks per row (measured ~4–7× at scaled k — the r13
+    * regression). The whole corpus then re-assigns under gen-1 (the
+    * same G + sub ≈ 2√k narrow fold — re-indexing is an assignment
+    * sweep, not a data rewrite), and queries probe the rebuilt inverted
+    * lists. The oracle replays the entire chain in closed form: gen-0
+    * supers → two-level assignment → per-cell means at fixed precision
+    * → gen-1 supers over survivors → two-level re-assignment → probe.
     *
     * The deployment half REUSES s17's generation machinery unchanged
     * ([[s17WriteGeneration]] / [[s17ServeLatest]] / vacuum) — the
@@ -1738,14 +1597,12 @@ object SimilarityOps {
     * kilobyte broadcast codebook at 2√k dots per vector where the flat
     * retrain pays k. */
   def s26HierRetrain(spark: SparkSession, dir: String): DataFrame =
-    probeAssigned(s26Gen1Assigned(spark, dir))
+    probe(Hier.retrained, normed(spark, dir), 1)
 
   /** The gen-1 hier index store s26's deployment half writes: every
     * corpus vector with its gen-1 two-level cell assignment. */
-  private[graft] def s26Gen1Assigned(spark: SparkSession, dir: String): DataFrame = {
-    val all = normed(spark, dir)
-    hierAssignWithCodebook(all, s26RetrainedCodebook(all))
-  }
+  private[graft] def s26Gen1Assigned(spark: SparkSession, dir: String): DataFrame =
+    Hier.retrained.index(normed(spark, dir))
 
   /** d18: SemDeDup under the HIERARCHICAL quantizer — s22's assignment
     * composed into the d-family, which is where the k ∝ corpus rule
@@ -1771,14 +1628,15 @@ object SimilarityOps {
     * exactly (StreamEquivSpec's stream ≡ batch pin for the semantic
     * family). */
   private[graft] def d20BatchPairs(spark: SparkSession, dir: String): DataFrame =
-    semPairs(s22HierAssignedK(spark, dir, IvfCells, HierSub))
-      .select(col("a_id"), col("b_id"),
-        graft.out.Canonical.r4(col("cs")).as("cos_sim"), col("victim"))
+    semPairs(Hier.index(normed(spark, dir)))
+      .select(col("a_id"), col("b_id"), r4(col("cs")).as("cos_sim"), col("victim"))
       .orderBy("a_id", "b_id")
 
+  /** d18 at an explicit (k, sub) — the scaled-k decade seam (ScaleCheck
+    * passes sub ≈ √k). */
   private[graft] def d18SemDedupHierK(spark: SparkSession, dir: String,
                                       k: Int, sub: Int): DataFrame =
-    d15Ledger(s22HierAssignedK(spark, dir, k, sub))
+    d15Ledger(hier(k, sub).index(normed(spark, dir)))
 
   /** s21's serve over an ALREADY-ASSIGNED frame (vec_id, v, nrm, cell) —
     * the production read: the corpus side's cell is a stored column
@@ -1833,7 +1691,7 @@ object SimilarityOps {
     * (c DESC, n_id ASC) rank; PlanSpec locks no Window, no broadcast on
     * a vector side, and partial_graft_topk present. */
   def s21AnnBulkTopK(spark: SparkSession, dir: String): DataFrame =
-    s21TopKAssigned(s21AssignedK(spark, dir, IvfCells))
+    s21TopKAssigned(Flat.index(normed(spark, dir)))
 
   private[graft] def s21TopKAssigned(assigned: DataFrame): DataFrame =
     s21Pairs(assigned)

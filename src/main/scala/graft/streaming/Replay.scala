@@ -276,6 +276,12 @@ object Replay {
     Option(new java.io.File(store).listFiles())
       .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
 
+  /** Rows per `batch_id=N` partition of the store at `path`, in batch
+    * order — the per-batch evidence the delete and alert specs read. */
+  private[graft] def rowsPerBatch(spark: SparkSession, path: String): Array[Long] =
+    spark.read.parquet(path).groupBy("batch_id").count().orderBy("batch_id")
+      .collect().map(_.getLong(1))
+
   /** Run mutually independent writes (disjoint target paths) concurrently
     * — each is a short stage wave that leaves executors idle at its
     * tail, so overlapping them costs about the slowest one. Waits for

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.SimilarityOps
+import graft.ops.SimilarityOps.{Flat, Hier, Quantizer, hier, probeAssigned}
 
 /** s11: streaming ANN-index ingest — the incremental form of s3's IVF,
   * completing the online story for the similarity family the way d12/p3
@@ -47,40 +48,6 @@ object StreamAnnIngest {
     * one batch would vacuously reduce ingest to a batch build. */
   val SplitFiles = 4
 
-  /** The offline coarse quantizer as ONE value — the seam every stream
-    * below is written against. `write(all, path)` builds the artifact
-    * once before the stream starts (production IVF: train ahead of
-    * time, ingest only assigns); `assign(frame, artifact)` gives each
-    * row of `frame` (vec_id, v, nrm, label) its `cell`, and runs at
-    * EVERY assignment site (per-batch arrivals, s20/s30's one-time
-    * watchlist), so no two sites can assign under different quantizers.
-    * Everything downstream of the cell column — store layout, probe,
-    * tombstones, compaction — is quantizer-agnostic. */
-  private[graft] final case class Quantizer(
-      write: (DataFrame, String) => Unit,
-      assign: (DataFrame, DataFrame) => DataFrame)
-
-  /** s3's flat quantizer: the deterministic seed centroids, argmax over
-    * all k per vector. Assigned rows: (vec_id, v, nrm, label, cell). */
-  private[graft] val Flat = Quantizer(
-    (all, path) => SimilarityOps.ivfSeedCentroids(all).coalesce(1).write.parquet(path),
-    (frame, art) => SimilarityOps.assignCells(frame, art))
-
-  /** s22's two-level quantizer over the first `k` corpus vectors as
-    * seeds, `sub` cells per group: the artifact is one nested
-    * [[SimilarityOps.hierCentArr]] row, and assignment is the
-    * G + sub ≈ 2√k fold. Assigned rows also carry `ccos` (the winning
-    * centroid cosine — d20's victim signal). */
-  private[graft] def hier(k: Int, sub: Int): Quantizer = Quantizer(
-    (all, path) => SimilarityOps.hierCentArr(
-      all.filter(col("vec_id") < k)
-        .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn")),
-      sub).coalesce(1).write.parquet(path),
-    (frame, art) => SimilarityOps.hierAssignWithCodebook(frame, art))
-
-  /** The two-level quantizer at the gate configuration. */
-  private[graft] val Hier = hier(SimilarityOps.IvfCells, SimilarityOps.HierSub)
-
   /** Split the corpus into `files` replay files, range-ordered by
     * `orderExpr` (which rows share a micro-batch). */
   private[streaming] def splitCorpus(all: DataFrame, splitDir: String,
@@ -98,27 +65,30 @@ object StreamAnnIngest {
       .write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
 
   def s11StreamAnnIngest(spark: SparkSession, dir: String): DataFrame =
-    s11WithBatchCount(spark, dir)._1
+    ingestWithBatchCount(spark, dir, Flat, 1, col("vec_id"))._1
 
-  /** Test seam: result + micro-batch count actually replayed.
-    * `orderExpr` controls which rows share a micro-batch: s11 has NO
+  /** The store-served probe of an ingest stream under quantizer `q` at
+    * fan-out `n` — s11/s15 (flat), s23/s24 (hier): the batch probe
+    * ([[SimilarityOps.serve]]) over the stream-built store, the query
+    * fan-out re-ranking the very artifact file the ingest batches read.
+    * Test seam: result + micro-batch count actually replayed.
+    * `orderExpr` controls which rows share a micro-batch: ingest has NO
     * ordering precondition — the index is a set union of per-batch
     * assignments (each row assigned independently against the static
     * quantizer artifact) — and StreamEquivSpec proves it by replaying
-    * the REVERSED assignment to the same batch-s3 answer. */
-  private[graft] def s11WithBatchCount(spark: SparkSession, dir: String,
-      orderExpr: Column = col("vec_id")): (DataFrame, Int) = {
-    val (store, _, nBatches) = runIngestStream(spark, dir, Flat, orderExpr)
-    val result = SimilarityOps.probeAssigned(
-      spark.read.parquet(store).drop("batch_id"))
-    (result, nBatches)
+    * the REVERSED assignment to the same batch answer. */
+  private[graft] def ingestWithBatchCount(spark: SparkSession, dir: String,
+      q: Quantizer, n: Int, orderExpr: Column): (DataFrame, Int) = {
+    val (store, art, nBatches) = runIngestStream(spark, dir, q, orderExpr)
+    (SimilarityOps.serve(q, spark.read.parquet(store).drop("batch_id"),
+      spark.read.parquet(art), n), nBatches)
   }
 
   /** The ingest stream under quantizer `q`, shared by s11/s15 (flat)
     * and s23/s24 (hier): returns (index store path, quantizer artifact
     * path, batch count). Any artifact `q` writes plugs in — the batches
     * only ever read the written file (StreamEquivSpec's s23 × s26 case
-    * streams over [[SimilarityOps.s26RetrainedCodebook]] and matches
+    * streams under `Hier.retrained` and matches
     * batch s26: ingest → retrain → re-ingest). */
   private[graft] def runIngestStream(spark: SparkSession, dir: String,
       q: Quantizer, orderExpr: Column): (String, String, Int) = {
@@ -161,9 +131,6 @@ object StreamAnnIngest {
     * first recall step of s4's measured nprobe ladder. */
   val MultiNprobe = 2
 
-  def s15StreamAnnMultiprobe(spark: SparkSession, dir: String): DataFrame =
-    s15WithBatchCount(spark, dir)._1
-
   /** s15: s11's store-served probe widened to nprobe=[[MultiNprobe]] —
     * the recall lever s4 measures on the BATCH index (ivf_np2: 0.36 vs
     * 0.23 on uniform vectors), now available against the STREAM-built
@@ -172,23 +139,15 @@ object StreamAnnIngest {
     * corpus); only the query rows re-rank the quantizer artifact — the
     * same file the ingest batches read — and explode to their top-2
     * cells before riding the broadcast into the cell equi-join
-    * ([[SimilarityOps.probeAssignedMulti]]). The gate checks the
+    * ([[SimilarityOps.serve]] at n = 2). The gate checks the
     * store-served answer against batch s3's nprobe=2 oracle — so s4's
     * ivf_np2 recall row IS this probe's recall, by proven equivalence.
     * Scale: fan-out adds queries × nprobe broadcast rows, constant in
     * corpus size; the store is never exchanged (LayoutSpec s15). */
-  private[graft] def s15WithBatchCount(spark: SparkSession, dir: String): (DataFrame, Int) = {
-    val (store, seedsPath, nBatches) = runIngestStream(spark, dir, Flat, col("vec_id"))
-    val result = SimilarityOps.probeAssignedMulti(
-      spark.read.parquet(store).drop("batch_id"),
-      spark.read.parquet(seedsPath), MultiNprobe)
-    (result, nBatches)
-  }
+  def s15StreamAnnMultiprobe(spark: SparkSession, dir: String): DataFrame =
+    ingestWithBatchCount(spark, dir, Flat, MultiNprobe, col("vec_id"))._1
 
   // ---- s23: ingest under the hierarchical coarse quantizer ----------
-
-  def s23StreamHierIngest(spark: SparkSession, dir: String): DataFrame =
-    s23WithBatchCount(spark, dir)._1
 
   /** s23: s11's ingest with the N·k flat sweep REPLACED by s22's
     * two-level assignment — closing the one place the flat argmax cost
@@ -219,13 +178,8 @@ object StreamAnnIngest {
     * upsert (s27, oracle-checked on the updated-corpus hier chain),
     * retrain (s26), and the stored-assignment bulk serve
     * (StreamEquivSpec's s21 × s23 case). */
-  private[graft] def s23WithBatchCount(spark: SparkSession, dir: String,
-      orderExpr: Column = col("vec_id")): (DataFrame, Int) = {
-    val (store, _, nBatches) = runIngestStream(spark, dir, Hier, orderExpr)
-    val result = SimilarityOps.probeAssigned(
-      spark.read.parquet(store).drop("batch_id"))
-    (result, nBatches)
-  }
+  def s23StreamHierIngest(spark: SparkSession, dir: String): DataFrame =
+    ingestWithBatchCount(spark, dir, Hier, 1, col("vec_id"))._1
 
   /** Test seam (the s21 × s23 composition pin): the stream-built hier
     * store and codebook paths at the gate configuration, for serves
@@ -241,19 +195,14 @@ object StreamAnnIngest {
     * scaled-k ingest seam (k ∝ corpus, the deployment rule): returns
     * the store-served probe so the timed unit is the full gate. */
   private[graft] def s23IngestK(spark: SparkSession, dir: String,
-                                k: Int, sub: Int): DataFrame = {
-    val (store, _, _) = runIngestStream(spark, dir, hier(k, sub), col("vec_id"))
-    SimilarityOps.probeAssigned(spark.read.parquet(store).drop("batch_id"))
-  }
+                                k: Int, sub: Int): DataFrame =
+    ingestWithBatchCount(spark, dir, hier(k, sub), 1, col("vec_id"))._1
 
   // ---- s24: hier multiprobe over the stream-built store --------------
 
   /** Query-side GROUP fan-out for the stream-store hier probe (s24); 2
     * matches the s4 battery's measured `hier_np2` recovery row. */
   val HierGprobe = 2
-
-  def s24StreamHierMultiprobe(spark: SparkSession, dir: String): DataFrame =
-    s24WithBatchCount(spark, dir)._1
 
   /** s24: the recall-recovery lever CLOSED over the stream index — s22
     * pinned the hierarchical quantizer's recall trade (hier 0.177 vs
@@ -265,7 +214,7 @@ object StreamAnnIngest {
     * STORED cell — the quantizer swap stays invisible to the store),
     * and only the query rows re-rank the ingest's own codebook artifact
     * to fan out to their top-[[HierGprobe]] groups' level-2 argmax
-    * cells ([[SimilarityOps.probeAssignedHierMulti]]) — s15's move
+    * cells ([[SimilarityOps.serve]] under [[Hier]]) — s15's move
     * lifted to the two-level quantizer, exactly as s15 lifted s4's np2
     * move to the flat store. Oracle-checked against the batch hier
     * chain with the query CTE widened to grn ≤ 2; the s15 × s23
@@ -275,13 +224,8 @@ object StreamAnnIngest {
     * Scale: fan-out adds queries × gprobe broadcast rows — constant in
     * corpus size; per-batch ingest cost and store layout are s23's
     * unchanged; the store is never exchanged. */
-  private[graft] def s24WithBatchCount(spark: SparkSession, dir: String): (DataFrame, Int) = {
-    val (store, cbPath, nBatches) = runIngestStream(spark, dir, Hier, col("vec_id"))
-    val result = SimilarityOps.probeAssignedHierMulti(
-      spark.read.parquet(store).drop("batch_id"),
-      spark.read.parquet(cbPath), HierGprobe)
-    (result, nBatches)
-  }
+  def s24StreamHierMultiprobe(spark: SparkSession, dir: String): DataFrame =
+    ingestWithBatchCount(spark, dir, Hier, HierGprobe, col("vec_id"))._1
 
   // ---- s12: deletes — the tombstone merge s11's scaladoc promises ----
 
@@ -323,16 +267,13 @@ object StreamAnnIngest {
     * with zero exchanges (LayoutSpec's s12 case). */
   private[graft] def s12WithBatchCount(spark: SparkSession, dir: String): (DataFrame, Int, () => Array[Long]) = {
     val (_, store, tombs, nBatches) = runDeleteStream(spark, dir, Flat)
-    val live = liveRows(spark, store, tombs)
     // test seam, LAZY (guide §1.2 — the gate's declared output is the
     // probe; this diagnostic ran one extra job inside every timed gate
     // invocation before): tombstones registered per drain batch, in
     // batch order — >1 non-empty batch proves requests stayed pending
     // until their vector arrived (the out-of-order case)
-    val drainCounts = () => spark.read.parquet(tombs)
-      .groupBy("batch_id").count().orderBy("batch_id")
-      .collect().map(_.getLong(1))
-    (SimilarityOps.probeAssigned(live), nBatches, drainCounts)
+    (probeAssigned(liveRows(spark, store, tombs)), nBatches,
+      () => Replay.rowsPerBatch(spark, tombs))
   }
 
   /** The ingest-with-deletes stream under quantizer `q` — s12/s13/s14
@@ -376,6 +317,14 @@ object StreamAnnIngest {
       .join(spark.read.parquet(tombs).drop("batch_id").select("cell", "vec_id"),
         Seq("cell", "vec_id"), "left_anti")
 
+  /** The compaction rewrite (s13, and the s14/s16/s25 variants): the
+    * live rows written cell-partitioned — one inverted list per cell,
+    * tombstoned rows gone — and read back as the compacted store. */
+  private def compact(live: DataFrame, path: String): DataFrame = {
+    live.repartition(col("cell")).write.partitionBy("cell").parquet(path)
+    live.sparkSession.read.parquet(path)
+  }
+
   def s13AnnCompact(spark: SparkSession, dir: String): DataFrame =
     s13WithStoreInfo(spark, dir)._1
 
@@ -406,14 +355,10 @@ object StreamAnnIngest {
     * anti-join-free. */
   private[graft] def s13WithStoreInfo(spark: SparkSession, dir: String): (DataFrame, () => Long, () => Long) = {
     val (work, store, tombs, _) = runDeleteStream(spark, dir, Flat)
-    val compacted = s"$work/compacted"
-    liveRows(spark, store, tombs)
-      .repartition(col("cell"))
-      .write.partitionBy("cell").parquet(compacted)
-    val comp = spark.read.parquet(compacted)
+    val comp = compact(liveRows(spark, store, tombs), s"$work/compacted")
     // store/tombstone counts are spec-only diagnostics — lazy, so the
     // gate's timed path pays the rewrite + probe and nothing else
-    (SimilarityOps.probeAssigned(comp), () => comp.count(),
+    (probeAssigned(comp), () => comp.count(),
       () => spark.read.parquet(tombs).count())
   }
 
@@ -498,7 +443,7 @@ object StreamAnnIngest {
     val moved = tombRows.join(newCells, Seq("vec_id"))
     // same-cell / cross-cell replacement evidence is spec-only — lazy,
     // so the timed gate path no longer runs the moved-join + 3 counts
-    (SimilarityOps.probeAssigned(live.drop("batch_id")), nBatches,
+    (probeAssigned(live.drop("batch_id")), nBatches,
       () => tombRows.count(),
       () => moved.filter(col("old_cell") === col("new_cell")).count(),
       () => moved.filter(col("old_cell") =!= col("new_cell")).count())
@@ -567,13 +512,10 @@ object StreamAnnIngest {
       : (DataFrame, Long, Long) = {
     val (store, tombs, _) = runUpsertStream(spark, dir, Flat)
     val work = new java.io.File(store).getParent
-    val compacted = s"$work/compacted"
-    s16LiveRows(spark, store, tombs).drop("batch_id")
-      .repartition(col("cell"))
-      .write.partitionBy("cell").parquet(compacted)
-    val comp = spark.read.parquet(compacted)
+    val comp = compact(s16LiveRows(spark, store, tombs).drop("batch_id"),
+      s"$work/compacted")
     val nDupIds = comp.groupBy("vec_id").count().filter(col("count") > 1).count()
-    (SimilarityOps.probeAssigned(comp), comp.count(), nDupIds)
+    (probeAssigned(comp), comp.count(), nDupIds)
   }
 
   /** s16's upsert stream under quantizer `q`, shared by the flat (s16,
@@ -683,8 +625,8 @@ object StreamAnnIngest {
   private[graft] def s14WithBranches(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, () => Long, () => Long) = {
     val (_, comp, uncomp, nRetired, nPending) = partialCompactState(spark, dir)
-    val compProbe = SimilarityOps.probeAssigned(comp)
-    val uncompProbe = SimilarityOps.probeAssigned(uncomp)
+    val compProbe = probeAssigned(comp)
+    val uncompProbe = probeAssigned(uncomp)
     val served = compProbe.unionByName(uncompProbe).orderBy("q_id", "rnk")
     (served, compProbe, uncompProbe, nRetired, nPending)
   }
@@ -705,14 +647,10 @@ object StreamAnnIngest {
   private[graft] def partialCompactStateFrom(spark: SparkSession, work: String,
                                              store: String, tombs: String)
       : (String, DataFrame, DataFrame, () => Long, () => Long) = {
-    val compacted = s"$work/compacted_subset"
     // the partial rewrite: ONLY the subset's cells, survivors only —
     // cell-local, the uncompacted cells' files are never read
-    liveRows(spark, store, tombs)
-      .filter(inCompactedSubset(col("cell")))
-      .repartition(col("cell"))
-      .write.partitionBy("cell").parquet(compacted)
-    val comp = spark.read.parquet(compacted)
+    val comp = compact(liveRows(spark, store, tombs).filter(inCompactedSubset(col("cell"))),
+      s"$work/compacted_subset")
     // the still-serving remainder: s12's merge, restricted to its cells
     val uncompRows = spark.read.parquet(store).drop("batch_id")
       .filter(!inCompactedSubset(col("cell")))
@@ -735,7 +673,7 @@ object StreamAnnIngest {
     * decomposition s14 uses at nprobe=1 no longer applies; instead the
     * branch STORES union — compacted rows plus tombstone-merged
     * uncompacted rows, a partition concatenation with no exchange — and
-    * the standard store-served multiprobe ([[SimilarityOps.probeAssignedMulti]])
+    * the standard store-served multiprobe ([[SimilarityOps.serve]])
     * runs over the union: corpus side untouched, query rows fan out
     * against the same quantizer artifact the ingest wrote.
     * StreamEquivSpec pins this against the batch multiprobe twin
@@ -747,8 +685,8 @@ object StreamAnnIngest {
     val (work, comp, uncomp, nRetired, nPending) = partialCompactState(spark, dir)
     val cols = Seq("vec_id", "v", "nrm", "label", "cell").map(col)
     val mixed = comp.select(cols: _*).unionByName(uncomp.select(cols: _*))
-    val served = SimilarityOps.probeAssignedMulti(
-      mixed, spark.read.parquet(s"$work/quantizer"), MultiNprobe)
+    val served = SimilarityOps.serve(
+      Flat, mixed, spark.read.parquet(s"$work/quantizer"), MultiNprobe)
     (served, nRetired, nPending)
   }
 
@@ -808,17 +746,10 @@ object StreamAnnIngest {
   private[graft] def s25WithInfo(spark: SparkSession, dir: String)
       : (DataFrame, Int, () => Array[Long], () => Long, () => Long) = {
     val (work, store, tombs, nBatches) = runDeleteStream(spark, dir, Hier)
-    val compacted = s"$work/compacted"
-    liveRows(spark, store, tombs)
-      .repartition(col("cell"))
-      .write.partitionBy("cell").parquet(compacted)
-    val comp = spark.read.parquet(compacted)
+    val comp = compact(liveRows(spark, store, tombs), s"$work/compacted")
     // drain/count diagnostics are spec-only — lazy (guide §1.2), so the
     // timed gate path pays the rewrite + probe and nothing else
-    (SimilarityOps.probeAssigned(comp), nBatches,
-      () => spark.read.parquet(tombs)
-        .groupBy("batch_id").count().orderBy("batch_id")
-        .collect().map(_.getLong(1)),
+    (probeAssigned(comp), nBatches, () => Replay.rowsPerBatch(spark, tombs),
       () => comp.count(),
       () => spark.read.parquet(tombs).count())
   }
@@ -911,31 +842,17 @@ object StreamAnnIngest {
           .coalesce(1).write.parquet(watchPath)
       })
     val alerts = s"$work/alerts"
-    Replay.drain(spark, s"$work/in", s"$work/ckpt", 0L)((batch, batchId) =>
-      processAlertBatch(q, batch, batchId, art, watchPath, alerts))
-    val nBatches = Replay.countBatchDirs(alerts)
-    val ledger = spark.read.parquet(alerts)
-    // test seam, LAZY: alerts raised per arrival batch, in batch order
-    val perBatch = () => ledger.groupBy("batch_id").count().orderBy("batch_id")
-      .collect().map(_.getLong(1))
-    val result = ledger
+    // per batch: the arrivals' cells, then s19's radius read against the
+    // broadcast watchlist, appended at arrival time
+    Replay.drain(spark, s"$work/in", s"$work/ckpt", 0L) { (batch, batchId) =>
+      val read = batch.sparkSession.read
+      SimilarityOps.withinRadius(q.assign(batch, read.parquet(art)), read.parquet(watchPath))
+        .write.mode("overwrite").parquet(s"$alerts/batch_id=$batchId")
+    }
+    val result = spark.read.parquet(alerts)
       .select(col("q_id"), col("n_id"), graft.out.Canonical.r4(col("c")).as("cos_sim"))
       .orderBy("q_id", "n_id")
-    (result, nBatches, perBatch)
-  }
-
-  private def processAlertBatch(q: Quantizer, batch: DataFrame, batchId: Long,
-                                art: String, watchPath: String,
-                                alerts: String): Unit = {
-    val spark = batch.sparkSession
-    val watch = spark.read.parquet(watchPath)
-    q.assign(batch, spark.read.parquet(art))
-      .join(broadcast(watch), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("c",
-        SimilarityOps.dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .filter(col("c") >= SimilarityOps.RadiusTau)
-      .select(col("q_id"), col("vec_id").as("n_id"), col("c"))
-      .write.mode("overwrite").parquet(s"$alerts/batch_id=$batchId")
+    // test seam, LAZY: alerts raised per arrival batch, in batch order
+    (result, Replay.countBatchDirs(alerts), () => Replay.rowsPerBatch(spark, alerts))
   }
 }

@@ -133,7 +133,7 @@ object StreamSemDedup {
 
   /** Split the normed corpus into replay waves and write the offline
     * two-level codebook (s23's quantizer-file motion,
-    * [[StreamAnnIngest.Hier]]) — shared by the single-replay gate
+    * [[SimilarityOps.Hier]]) — shared by the single-replay gate
     * (d20) and the phased compaction gate (d21). */
   private def prepare(spark: SparkSession, dir: String, work: String,
                       orderExpr: org.apache.spark.sql.Column,
@@ -145,7 +145,7 @@ object StreamSemDedup {
     // only): overlap them (§2.6)
     Replay.fence(
       () => StreamAnnIngest.splitCorpus(all, splitDir, waves, orderExpr),
-      () => StreamAnnIngest.Hier.write(all, cbPath))
+      () => SimilarityOps.Hier.write(all, cbPath))
     (splitDir, cbPath)
   }
 
@@ -179,7 +179,7 @@ object StreamSemDedup {
     val spark = batch.sparkSession
     // batch-size × 2√k assignment against the static codebook; ccos
     // (the centroid cosine) rides along — it IS the victim signal
-    val asn = StreamAnnIngest.Hier.assign(batch, spark.read.parquet(cbPath))
+    val asn = SimilarityOps.Hier.assign(batch, spark.read.parquet(cbPath))
       .select("vec_id", "v", "nrm", "cell", "ccos")
       .persist()
     try {
@@ -196,17 +196,9 @@ object StreamSemDedup {
       // exact verify + the pairwise victim rule (d15/d18's): vector
       // payloads are fetched by id from the seen set, so the pair rows
       // that shuffle carry ids — never two vectors per candidate twice
-      val a = seen.select(col("vec_id").as("a_id"), col("v").as("av"),
-        col("nrm").as("an"), col("ccos").as("acc"))
-      val b = seen.select(col("vec_id").as("b_id"), col("v").as("bv"),
-        col("nrm").as("bn"), col("ccos").as("bcc"))
-      val pairsOut = cand.join(a, "a_id").join(b, "b_id")
-        .withColumn("cs", SimilarityOps.dot(col("av"), col("bv")) / (col("an") * col("bn")))
-        .filter(col("cs") >= SimilarityOps.SemThreshold)
-        .withColumn("victim",
-          when(col("acc") > col("bcc"), col("a_id"))
-            .when(col("acc") < col("bcc"), col("b_id"))
-            .otherwise(greatest(col("a_id"), col("b_id"))))
+      val pairsOut = SimilarityOps.semVictims(cand
+          .join(SimilarityOps.semSide(seen, "a"), "a_id")
+          .join(SimilarityOps.semSide(seen, "b"), "b_id"))
         .select(col("a_id"), col("b_id"), r4(col("cs")).as("cos_sim"), col("victim"))
       // the two writes are independent (disjoint dirs, both derived
       // from the persisted assignment + committed < batchId state) and

@@ -596,7 +596,7 @@ class InvariantSpec extends AnyFunSuite {
         .select((dot(col("v"), col("cv")) / (col("nrm") * col("cn"))).as("c"))
         .agg(avg("c")).collect()(0).getDouble(0)
     val gen0 = objective(seeds0)
-    val gen1 = objective(SimilarityOps.lloydStep(all, seeds0))
+    val gen1 = objective(SimilarityOps.Flat.retrained.seeds(all))
     assert(gen1 >= gen0 - 1e-4,
       f"retrain worsened the objective: gen0 $gen0%.6f -> gen1 $gen1%.6f")
     // and on this fixture the improvement is macroscopic, so the gate's
@@ -807,6 +807,37 @@ class InvariantSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val hier = led.map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(hier != flat, "hier cell populations equal flat everywhere — d18 is d15 renamed here")
+  }
+
+  test("quantizer contract: queryCells(frame, art, 1) picks every row's assign cell, ties to the lowest id") {
+    // The one probe serves n = 1 from the STORED cell (no quantizer work)
+    // and n > 1 from queryCells' fan-out, so both must pick the same top
+    // cell. Flat assigns and fans out through one sorted ranking; hier
+    // assigns with strict-improvement folds but fans out through a sort
+    // of the groups, so a tie could split them. The tie fixture repeats
+    // seed centroids 0..7 as 8..15 (for hier: groups 0, 1 repeated as
+    // 2, 3), so every row's best centroid — and best group — ties
+    // exactly, and the lowest id must win on the sort and the fold path.
+    val all = SimilarityOps.normed(spark, sf)
+    val frame = all.select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
+    val base = SimilarityOps.seedCentroids(all, 8)
+    val tied = base.unionByName(base.withColumn("c_id", col("c_id") + 8))
+    for ((name, q) <- Seq("flat" -> SimilarityOps.Flat, "hier" -> SimilarityOps.Hier);
+         (fixture, seeds) <- Seq("sf" -> q.seeds(all), "tie" -> tied)) {
+      val art = q.build(seeds)
+      val assigned = q.assign(all, art).select("vec_id", "cell").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val probed = q.queryCells(frame, art, 1).select("q_id", "cell").collect()
+        .map(r => r.getLong(0) -> r.getLong(1))
+      assert(assigned.nonEmpty)
+      assert(probed.length == assigned.size,
+        s"$name/$fixture: queryCells at n = 1 is not one cell per row")
+      assert(probed.toMap == assigned,
+        s"$name/$fixture: queryCells(…, 1) disagrees with assign")
+      if (fixture == "tie")
+        assert(assigned.values.forall(_ < 8),
+          s"$name: a tied row went to the higher duplicate id")
+    }
   }
 
   test("s26 hier retrain: genuinely moves assignments, and sparse-id codebooks assign correctly") {

@@ -196,7 +196,8 @@ class StreamEquivSpec extends AnyFunSuite {
   test("s11 streaming ANN ingest: stream-built index serves batch s3's answer") {
     val batch = rows(graft.ops.SimilarityOps.s3AnnIvf(spark, sf))
     val (streamDf, nBatches) =
-      graft.streaming.StreamAnnIngest.s11WithBatchCount(spark, sf)
+      graft.streaming.StreamAnnIngest.ingestWithBatchCount(spark, sf,
+        graft.ops.SimilarityOps.Flat, 1, org.apache.spark.sql.functions.col("vec_id"))
     assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(batch.nonEmpty)
@@ -322,7 +323,8 @@ class StreamEquivSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val batch = rows(graft.ops.SimilarityOps.s22AnnHier(spark, sf))
     val (streamDf, nBatches) =
-      graft.streaming.StreamAnnIngest.s23WithBatchCount(spark, sf)
+      graft.streaming.StreamAnnIngest.ingestWithBatchCount(spark, sf,
+        graft.ops.SimilarityOps.Hier, 1, col("vec_id"))
     assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(batch.nonEmpty)
@@ -340,7 +342,7 @@ class StreamEquivSpec extends AnyFunSuite {
     // order-free (the s11 move): each row assigns independently against
     // the static two-level codebook, so reversed arrival is the same set
     val (rev, nr) = graft.streaming.StreamAnnIngest
-      .s23WithBatchCount(spark, sf, negate(col("vec_id")))
+      .ingestWithBatchCount(spark, sf, graft.ops.SimilarityOps.Hier, 1, negate(col("vec_id")))
     assert(nr == graft.streaming.StreamAnnIngest.SplitFiles)
     assert(rows(rev) == batch,
       "reversed-arrival s23 diverged from batch s22 — hier index union is order-dependent")
@@ -393,7 +395,8 @@ class StreamEquivSpec extends AnyFunSuite {
     val np = graft.streaming.StreamAnnIngest.MultiNprobe
     val batch = rows(graft.ops.SimilarityOps.s3AnnIvfProbe(spark, sf, np))
     val (streamDf, nBatches) =
-      graft.streaming.StreamAnnIngest.s15WithBatchCount(spark, sf)
+      graft.streaming.StreamAnnIngest.ingestWithBatchCount(spark, sf,
+        graft.ops.SimilarityOps.Flat, np, org.apache.spark.sql.functions.col("vec_id"))
     assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(batch.nonEmpty)
@@ -602,9 +605,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val expect = rows(ops.s26HierRetrain(spark, sf))
     val (store, _, nBatches) =
       graft.streaming.StreamAnnIngest.runIngestStream(spark, sf,
-        graft.streaming.StreamAnnIngest.Hier.copy(write = (all, path) =>
-          ops.s26RetrainedCodebook(all).coalesce(1).write.parquet(path)),
-        col("vec_id"))
+        ops.Hier.retrained, col("vec_id"))
     assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     val served = rows(ops.probeAssigned(
@@ -1912,7 +1913,7 @@ class StreamEquivSpec extends AnyFunSuite {
     assert(rows(d12Rev) == rows(graft.ops.DedupOps.d3MinhashLsh(spark, sf)),
       "reversed-arrival d12 diverged from batch d3 — pair emission is order-dependent")
     val (s11Rev, ns) = graft.streaming.StreamAnnIngest
-      .s11WithBatchCount(spark, sf, negate(col("vec_id")))
+      .ingestWithBatchCount(spark, sf, graft.ops.SimilarityOps.Flat, 1, negate(col("vec_id")))
     assert(ns == graft.streaming.StreamAnnIngest.SplitFiles)
     assert(rows(s11Rev) == rows(graft.ops.SimilarityOps.s3AnnIvf(spark, sf)),
       "reversed-arrival s11 diverged from batch s3 — index union is order-dependent")
@@ -2245,12 +2246,13 @@ class StreamEquivSpec extends AnyFunSuite {
     // the s4 battery measures (so that recall row IS this probe's
     // recall, by proven equivalence)
     val (stream, nBatches) =
-      graft.streaming.StreamAnnIngest.s24WithBatchCount(spark, sf)
+      graft.streaming.StreamAnnIngest.ingestWithBatchCount(spark, sf, graft.ops.SimilarityOps.Hier,
+        graft.streaming.StreamAnnIngest.HierGprobe, col("vec_id"))
     assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     val streamRows = rows(stream)
-    val batch = rows(graft.ops.SimilarityOps
-      .hierMultiprobeBatch(spark, sf, graft.streaming.StreamAnnIngest.HierGprobe)
+    val batch = rows(graft.ops.SimilarityOps.probe(graft.ops.SimilarityOps.Hier,
+        graft.ops.SimilarityOps.normed(spark, sf), graft.streaming.StreamAnnIngest.HierGprobe)
       .orderBy("q_id", "rnk"))
     assert(streamRows.nonEmpty)
     assert(streamRows == batch,
