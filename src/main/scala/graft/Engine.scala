@@ -12,8 +12,19 @@ import org.apache.spark.sql.SparkSession
   */
 object Engine {
 
-  /** Common tuning applied to every session graft creates. */
+  /** Common tuning applied to every session graft creates.
+    *
+    * The `file:` scheme resolves to [[graft.io.NioLocalFileSystem]] and
+    * [[graft.io.NioLocalFs]], which set permissions and read link status
+    * through java.nio instead of forking `chmod`/`readlink`: every
+    * checkpoint file (offsets, commits, source log, state changelogs)
+    * goes through both. Other schemes keep Spark's defaults. Hadoop
+    * caches `FileSystem` instances per scheme regardless of conf, so
+    * nothing may call `FileSystem.get` on `file:` before this builds
+    * the JVM's first session. */
   def tuned(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder = b
+    .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.NioLocalFs].getName)
     .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
