@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 /** Measurement harness for the optimization rounds (not part of the
   * declared query surface): decomposed phase timers, 3-pass noop-sink
   * A/B timing (`benchonly`), full-result md5 identity proofs (`hash`),
-  * plan dumps (`explain`), and a noise-immune Spark job/task counter
-  * (`jobs`). Kept committed so the second optimization round A/Bs
-  * against the same instruments. */
+  * plan dumps (`explain`), a duplicate-evaluation audit (`dups`), and a
+  * noise-immune Spark job/task counter (`jobs`). Kept committed so the
+  * second optimization round A/Bs against the same instruments. */
 object Scratch {
   def t[A](label: String)(f: => A): A = {
     val t0 = System.nanoTime()
@@ -111,6 +111,46 @@ object Scratch {
             java.nio.file.Paths.get(s"$outDir/$name.txt"), plan)
           System.err.println(s"[scratch] wrote $outDir/$name.txt")
         }
+      case "dups" =>
+        // duplicate-evaluation audit, written to the path in arg(1): per
+        // gate, each expensive expression whose canonical form appears in
+        // more than one operator of the optimized plan (what predicate
+        // pushdown's alias substitution produces). Stream gates are
+        // audited only through the frame they return, not their bodies.
+        import org.apache.spark.sql.catalyst.expressions._
+        def expensive(e: Expression): Boolean = e match {
+          case _: CsvToStructs | _: JsonToStructs | _: ScalaUDF | _: HigherOrderFunction |
+               _: RegExpReplace | _: RegExpExtract | _: RegExpExtractAll |
+               _: StringSplit | _: RLike => true
+          case _ => e.getClass.getName.startsWith("graft.functions.")
+        }
+        def outermost(e: Expression): Seq[Expression] =
+          if (expensive(e)) Seq(e) else e.children.flatMap(outermost)
+        val outPath = args(1)
+        val sb = new StringBuilder
+        var flagged = 0
+        val gates = SparkEntry.queries.toSeq.sortBy(_._1)
+        gates.foreach { case (name, fn) =>
+          val plan = fn(spark, sfDir).queryExecution.optimizedPlan
+          // (canonical form, expression, operator) once per operator
+          val sites = plan.collectWithSubqueries { case op =>
+            op.expressions.flatMap(outermost).distinctBy(_.canonicalized)
+              .map(e => (e.canonicalized, e, op.nodeName))
+          }.flatten
+          val dups = sites.groupBy(_._1).values.filter(_.size > 1).toSeq
+          if (dups.nonEmpty) flagged += 1
+          dups.foreach { ops =>
+            val e = ops.head._2
+            val line = s"$name ${e.nodeName} x${ops.size} in ${ops.map(_._3).mkString("+")}: " +
+              e.sql.take(160)
+            sb.append(line + "\n")
+            System.err.println(s"[scratch] $line")
+          }
+        }
+        sb.append(s"flagged $flagged of ${gates.size} gates\n")
+        System.err.println(s"[scratch] flagged $flagged of ${gates.size} gates")
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), sb.toString)
+        ()
       case "ledgerplan" =>
         // before/after physical plans of the m16/m21 per-batch ledger
         // folds over parquet-backed pair-set fixtures (the frames the

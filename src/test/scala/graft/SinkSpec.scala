@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -258,6 +259,69 @@ class SinkSpec extends AnyFunSuite {
     val parsed = StreamPipeline.scoreTransform(wire)
     assert(parsed.count() == 1)
     assert(rows(parsed.select("event_id")).head.head == 1L)
+
+    // the single-parse transform against the three-parse formulation it
+    // replaced (parsed struct aliased, then guarded and labelled), over
+    // quoting, whitespace, empty, special-double and arity edge cases
+    def reference(w: DataFrame): DataFrame =
+      w.select(from_csv(col("line"), StreamPipeline.wireSchema,
+          Map("mode" -> "PERMISSIVE")).as("r"))
+        .select("r.*")
+        .filter(col("event_id").isNotNull && col("value").isNotNull)
+        .withColumn("label", when(col("value") > 100, "flagged").otherwise("normal"))
+    val edges = Seq(
+      "3,4,\"a,b\",150", "4,5,\"say \"\"hi\"\"\",7.5",
+      " 5,6,view,9.0", "6,6,view,9.0 ", " 7 , 6 , view , 9.0 ", "", ",,,",
+      "8,1,view,NaN", "9,1,view,Inf", "10,1,view,-Inf", "11,1,view,3e2",
+      "12,1,view,5.0,extra", "13,1,view")
+    val lines = Seq("1,7,click,12.5", "garbage-line", "2,9,view,NaNope") ++ edges
+    def sameRows(a: DataFrame, b: DataFrame): Unit = {
+      // Row strings, sorted: a multiset compare that also equates NaN with NaN
+      def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      assert(sorted(a) == sorted(b))
+    }
+    val batchWire = (lines.map(Option(_)) :+ None).toDF("line")
+    val got = StreamPipeline.scoreTransform(batchWire)
+    val want = reference(batchWire)
+    assert(got.schema == want.schema, s"${got.schema.treeString} vs ${want.schema.treeString}")
+    sameRows(got, want)
+    assert(got.count() > 3, "the edge cases should keep some well-formed rows")
+
+    // the same lines through an AvailableNow file stream (a text file
+    // holds no null line)
+    val work = tmp("graft_wire_edges_")
+    lines.toDF("line").coalesce(1).write.text(s"$work/in")
+    val streamed = StreamPipeline.scoreTransform(
+      spark.readStream.text(s"$work/in").toDF("line"))
+    assert(streamed.schema == want.schema)
+    streamed.writeStream.format("parquet")
+      .option("checkpointLocation", s"$work/ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start(s"$work/out").awaitTermination()
+    sameRows(spark.read.parquet(s"$work/out"), reference(spark.read.text(s"$work/in").toDF("line")))
+  }
+
+  test("scoreTransform parses each wire line once: one CsvToStructs in the optimized plan") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.CsvToStructs
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val dir = tmp("graft_wire_plan_") + "/in"
+    Seq("1,7,click,12.5").toDF("line").write.text(dir)
+    def parses(plan: LogicalPlan): Int =
+      plan.flatMap(_.expressions.flatMap(_.collect { case p: CsvToStructs => p })).size
+    val batch = StreamPipeline.scoreTransform(spark.read.text(dir).toDF("line"))
+    assert(parses(batch.queryExecution.optimizedPlan) == 1, "batch input")
+    // a streaming frame is optimized only once a micro-batch runs: read
+    // the plan of the batch that processed the file
+    val q = StreamPipeline.scoreTransform(spark.readStream.text(dir).toDF("line"))
+      .writeStream.format("noop")
+      .option("checkpointLocation", tmp("graft_wire_plan_ckpt_"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    val micro = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
+    assert(parses(micro.optimizedPlan) == 1, "streaming input")
   }
 }
 
