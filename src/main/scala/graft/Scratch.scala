@@ -49,9 +49,11 @@ object Scratch {
         }
       case "m15" =>
         for (i <- 1 to 2) {
-          val times = t(s"m15BatchTimes #$i") {
-            graft.streaming.StreamMediaDedup.m15BatchTimes(spark, sfDir, 4)
+          val (_, batches) = t(s"m15 replay #$i") {
+            graft.streaming.Replay.recorded(
+              graft.streaming.StreamMediaDedup.m15StreamNearDup(spark, sfDir, 4))
           }
+          val times = batches.map(_.durationMs.get("addBatch").doubleValue / 1e3)
           System.err.println("[scratch] m15 batch times: " +
             times.map(v => f"$v%.3f").mkString(", ") + f" sum=${times.sum}%.3f")
         }

@@ -74,9 +74,9 @@ object SparkEntry {
     "d9_simhash_near_dup" -> (DedupOps.d9SimhashNearDup _),
     "d10_dup_clusters" -> (DedupOps.d10DupClusters _),
     "d11_dedup_impact" -> (DedupOps.d11DedupImpact _),
-    "d12_stream_minhash" -> (graft.streaming.IncrementalDedup.d12StreamMinhash _),
+    "d12_stream_minhash" -> (graft.streaming.IncrementalDedup.d12StreamMinhash(_, _)),
     "d19_band_compact" -> (graft.streaming.IncrementalDedup.d19BandCompact _),
-    "d20_stream_semdedup" -> (graft.streaming.StreamSemDedup.d20StreamSemDedup _),
+    "d20_stream_semdedup" -> (graft.streaming.StreamSemDedup.d20StreamSemDedup(_, _)),
     "d21_sem_compact" -> (graft.streaming.StreamSemDedup.d21SemCompact _),
     "d13_consensus_near_dup" -> (DedupOps.d13ConsensusNearDup _),
     "d14_bloom_decontam" -> (DedupOps.d14BloomDecontamination _),
@@ -88,7 +88,7 @@ object SparkEntry {
     "d6_quantize" -> (SimilarityOps.d6Quantize _),
     "s2_ann_bucket" -> (SimilarityOps.s2AnnBucket _),
     "s3_ann_ivf" -> (SimilarityOps.s3AnnIvf _),
-    "s11_stream_ann_ingest" -> (graft.streaming.StreamAnnIngest.s11StreamAnnIngest _),
+    "s11_stream_ann_ingest" -> (graft.streaming.StreamAnnIngest.s11StreamAnnIngest(_, _)),
     "s23_stream_hier_ingest" -> (graft.streaming.StreamAnnIngest.s23StreamHierIngest _),
     "s24_stream_hier_multiprobe" -> (graft.streaming.StreamAnnIngest.s24StreamHierMultiprobe _),
     "s12_stream_ann_delete" -> (graft.streaming.StreamAnnIngest.s12StreamAnnDelete _),
@@ -150,30 +150,30 @@ object SparkEntry {
     "m12_bmp_audit" -> (MultimodalOps.m12BmpAudit _),
     "m13_bmp_near_dup" -> (MultimodalOps.m13BmpNearDup _),
     "m14_wav_near_dup" -> (MultimodalOps.m14WavNearDup _),
-    "m15_stream_near_dup" -> (graft.streaming.StreamMediaDedup.m15StreamNearDup _),
-    "m16_near_dup_delta" -> (graft.streaming.StreamMediaDedup.m16NearDupDelta _),
+    "m15_stream_near_dup" -> (graft.streaming.StreamMediaDedup.m15StreamNearDup(_, _)),
+    "m16_near_dup_delta" -> (graft.streaming.StreamMediaDedup.m16NearDupDelta(_, _)),
     "m17_consensus_near_dup" -> (MultimodalOps.m17ConsensusNearDup _),
     "m18_stream_wav_near_dup" ->
-      (graft.streaming.StreamMediaDedup.m18StreamWavNearDup _),
+      (graft.streaming.StreamMediaDedup.m18StreamWavNearDup(_, _)),
     "m19_media_compact" ->
       (graft.streaming.StreamMediaDedup.m19MediaCompact _),
     "m20_stream_consensus" ->
-      (graft.streaming.StreamMediaDedup.m20StreamConsensus _),
+      (graft.streaming.StreamMediaDedup.m20StreamConsensus(_, _)),
     "m21_consensus_delta" ->
-      (graft.streaming.StreamMediaDedup.m21ConsensusDelta _),
+      (graft.streaming.StreamMediaDedup.m21ConsensusDelta(_, _)),
     "p1_pipeline" -> (PipelineOps.p1PipelineLedger _),
     "p2_stream_funnel" -> (graft.streaming.StreamFunnel.p2StreamFunnel _),
     "p3_full_funnel" -> (graft.streaming.FullFunnel.p3StreamFunnel _),
     "p4_curate_pack" -> (PipelineOps.p4CuratePack _),
     "p5_shuffle_shard" -> (PipelineOps.p5ShuffleShard _),
     "p6_incremental_export" ->
-      (graft.streaming.IncrementalExport.p6IncrementalExport _),
+      (graft.streaming.IncrementalExport.p6IncrementalExport(_, _)),
     "p8_mixture_sample" -> (graft.ops.PipelineOps.p8MixtureSample _),
     "p9_weighted_mixture" -> (graft.ops.PipelineOps.p9WeightedMixture _),
     "p10_sampled_export" -> (graft.ops.PipelineOps.p10SampledExport _),
-    "p11_stream_blend" -> (graft.streaming.BlendMonitor.p11StreamBlend _),
+    "p11_stream_blend" -> (graft.streaming.BlendMonitor.p11StreamBlend(_, _)),
     "p12_blend_compact" -> (graft.streaming.BlendMonitor.p12BlendCompact _),
-    "p13_stream_sample" -> (graft.streaming.StreamSampler.p13StreamSample _),
+    "p13_stream_sample" -> (graft.streaming.StreamSampler.p13StreamSample(_, _)),
     "p14_sample_delta" -> (graft.streaming.StreamSampler.p14SampleDelta _),
     "p15_sampled_shuffle" -> (graft.ops.PipelineOps.p15SampledShuffle _),
     "p7_export_compact" ->
@@ -184,22 +184,22 @@ object SparkEntry {
     "x6_pq_trained" -> (SimilarityOps.x6PqTrained _),
     "x7_res_trained" -> (SimilarityOps.x7ResTrained _),
     "x5_sketch_agg" -> (Relational.x5SketchAgg _),
-    "x8_stream_sketch" -> (graft.streaming.StreamSketch.x8StreamSketch _),
-    "x9_stream_quantile" -> (graft.streaming.StreamSketch.x9StreamQuantile _),
-    "x10_stream_cms" -> (graft.streaming.StreamSketch.x10StreamCms _),
+    "x8_stream_sketch" -> (graft.streaming.StreamSketch.x8StreamSketch(_, _)),
+    "x9_stream_quantile" -> (graft.streaming.StreamSketch.x9StreamQuantile(_, _)),
+    "x10_stream_cms" -> (graft.streaming.StreamSketch.x10StreamCms(_, _)),
     "x11_stream_window_quantile" ->
-      (graft.streaming.StreamSketch.x11StreamWindowQuantile _),
+      (graft.streaming.StreamSketch.x11StreamWindowQuantile(_, _)),
     "x12_stream_window_distinct" ->
-      (graft.streaming.StreamSketch.x12StreamWindowDistinct _),
+      (graft.streaming.StreamSketch.x12StreamWindowDistinct(_, _)),
     "x13_stream_window_cms" ->
-      (graft.streaming.StreamSketch.x13StreamWindowCms _),
+      (graft.streaming.StreamSketch.x13StreamWindowCms(_, _)),
     "x14_sketch_overlap" -> (TextOps.x14SketchOverlap _),
     "x15_stream_drift" -> (graft.streaming.StreamSketch.x15StreamDrift _),
     "x16_stream_topk" -> (graft.streaming.StreamSketch.x16StreamTopk _),
-    "x17_stream_growth" -> (graft.streaming.StreamSketch.x17StreamGrowth _),
+    "x17_stream_growth" -> (graft.streaming.StreamSketch.x17StreamGrowth(_, _)),
     "x18_retention_vacuum" ->
       (graft.streaming.StreamSketch.x18RetentionVacuum _),
-    "x19_late_ledger" -> (graft.streaming.LateLedger.x19LateLedger _),
+    "x19_late_ledger" -> (graft.streaming.LateLedger.x19LateLedger(_, _)),
     "x20_stats_compact" -> (graft.streaming.LateLedger.x20StatsCompact _),
     "x21_fmgws_sessions" -> (graft.streaming.StatefulOps.x21FmgwsSessions _),
     "x22_tws_sessions" -> (graft.streaming.StatefulOps.x22TwsSessions _)

@@ -47,51 +47,25 @@ import graft.ops.TextOps
   */
 object BlendMonitor {
 
-  def p11StreamBlend(spark: SparkSession, dir: String): DataFrame =
-    p11WithBatchCount(spark, dir)._1
-
-  /** Test seam: result + the number of micro-batches actually replayed
-    * (StreamEquivSpec asserts it matches [[StreamSketch.SplitFiles]] —
-    * the ledger genuinely accreted, not one vacuous batch). */
-  private[graft] def p11WithBatchCount(spark: SparkSession, dir: String)
-      : (DataFrame, Int) = {
+  /** `waves` is the replay's batch count at fixed data — ScaleCheck's
+    * `p11_batches_axis` doubles it: the blend re-derivation reads only
+    * the sources × arrived-batches stats store (tiny rows), so the
+    * index-growing term is that narrow listing (p12's compaction bounds
+    * it in production) and last ≈ first is the design claim. */
+  def p11StreamBlend(spark: SparkSession, dir: String,
+                     waves: Int = StreamSketch.SplitFiles): DataFrame = {
     val work = Files.createTempDirectory("graft_blendmon_").toString
     val stats = s"$work/stats"
     val ledger = s"$work/ledger"
     val docs = Sources.table(spark, dir, "documents")
       .select("doc_id", "source", "text")
-    val nBatches = StreamSketch.runWaveReplay(spark, docs, "doc_id", work, ledger) {
+    StreamSketch.runWaveReplay(spark, docs, "doc_id", work, ledger, waves) {
       (batch, batchId) => blendBatch(batch, batchId, stats, ledger)
     }
-    val result = spark.read.parquet(ledger)
+    spark.read.parquet(ledger)
       .select(col("batch_id").cast("long").as("batch_id"), col("source"),
         col("w"), col("tot"), col("budget"))
       .orderBy("batch_id", "source")
-    (result, nBatches)
-  }
-
-  /** Batches-axis instrument seam (ScaleCheck `p11_batches_axis`):
-    * replay [[blendBatch]] over `waves` micro-batches at FIXED data,
-    * returning each batch's body wall seconds in batch order — the
-    * blend re-derivation reads only the sources × arrived-batches
-    * stats store (tiny rows), so the index-growing term is that narrow
-    * listing (p12's compaction bounds it in production) and last ≈
-    * first is the design claim. */
-  private[graft] def p11BatchTimes(spark: SparkSession, dir: String,
-      waves: Int): Seq[Double] = {
-    val work = Files.createTempDirectory("graft_blendmon_ax_").toString
-    val stats = s"$work/stats"
-    val ledger = s"$work/ledger"
-    val docs = Sources.table(spark, dir, "documents")
-      .select("doc_id", "source", "text")
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Double]
-    StreamSketch.runWaveReplay(spark, docs, "doc_id", work, ledger, waves) {
-      (batch, batchId) =>
-        val t0 = System.nanoTime()
-        blendBatch(batch, batchId, stats, ledger)
-        buf += (System.nanoTime() - t0) / 1e9
-    }
-    buf.toSeq
   }
 
   def p12BlendCompact(spark: SparkSession, dir: String): DataFrame =
@@ -113,7 +87,7 @@ object BlendMonitor {
     * bounds (half the replay's dirs collapse to one; the listing stays
     * 1 + batches-since afterwards) and ledger ≡ p11 row-for-row. */
   private[graft] def p12WithStoreInfo(spark: SparkSession, dir: String)
-      : (DataFrame, Int, Int, Int, Int) = {
+      : (DataFrame, Int, Int, Int) = {
     val work = Files.createTempDirectory("graft_blendmon12_").toString
     val stats = s"$work/stats"
     val ledger = s"$work/ledger"
@@ -121,7 +95,7 @@ object BlendMonitor {
       .select("doc_id", "source", "text")
     var partsBefore = 0
     var partsAfter = 0
-    val nBatches = StreamSketch.runWaveReplayPhased(spark, docs, "doc_id",
+    StreamSketch.runWaveReplayPhased(spark, docs, "doc_id",
       work, ledger, StreamSketch.SplitFiles / 2) {
       (batch, batchId) => blendBatch(batch, batchId, stats, ledger)
     } { () =>
@@ -133,8 +107,7 @@ object BlendMonitor {
       .select(col("batch_id").cast("long").as("batch_id"), col("source"),
         col("w"), col("tot"), col("budget"))
       .orderBy("batch_id", "source")
-    (result, nBatches, partsBefore, partsAfter,
-      Replay.countBatchDirs(stats))
+    (result, partsBefore, partsAfter, Replay.countBatchDirs(stats))
   }
 
   /** Fold the shipped stats partitions into ONE consolidated

@@ -72,11 +72,6 @@ object FullFunnel {
   val SplitFiles = 4
 
   def p3StreamFunnel(spark: SparkSession, dir: String): DataFrame =
-    p3WithBatchCount(spark, dir)._1
-
-  /** Test seam: result + actual micro-batch count (StreamEquivSpec
-    * asserts it equals [[SplitFiles]]). */
-  private[graft] def p3WithBatchCount(spark: SparkSession, dir: String): (DataFrame, Int) =
     p3From(Sources.table(spark, dir, "documents"))
 
   /** Frame-level seam: StreamEquivSpec replays fixtures with PLANTED
@@ -87,14 +82,13 @@ object FullFunnel {
     * misses every cross-batch near-dup (StreamEquivSpec asserts exactly
     * that divergence: the precondition is load-bearing, not prose). */
   private[graft] def p3From(docs: DataFrame,
-      orderExpr: org.apache.spark.sql.Column = col("doc_id")): (DataFrame, Int) = {
+      orderExpr: org.apache.spark.sql.Column = col("doc_id")): DataFrame = {
     val spark = docs.sparkSession
     val work = Files.createTempDirectory("graft_fullfunnel_").toString
     writeReplayFiles(docs, s"$work/in", orderExpr)
     val stores = prepArtifacts(docs, work)
     runPhase(spark, s"$work/in", s"$work/ckpt", 0L, stores)
-    val nBatches = Replay.countBatchDirs(stores.labels)
-    (ledger(spark.read.parquet(stores.labels)), nBatches)
+    ledger(spark.read.parquet(stores.labels))
   }
 
   /** Write the doc_id-range replay files with ascending mtimes.

@@ -57,57 +57,34 @@ object IncrementalDedup {
     * one batch would vacuously reduce d12 to d3. */
   val SplitFiles = 4
 
-  def d12StreamMinhash(spark: SparkSession, dir: String): DataFrame =
-    d12WithBatchCount(spark, dir)._1
-
-  /** Test seam: the result plus the number of micro-batches the replay
-    * actually ran — StreamEquivSpec asserts it matches [[SplitFiles]],
-    * so the stream≡batch claim is proven over a genuinely incremental
-    * run, not a single vacuous batch. `orderExpr` controls which rows
-    * share a micro-batch: d12 has NO ordering precondition — the
-    * candidate join is symmetric (least/greatest normalization) and a
-    * pair is emitted exactly once in the batch of its later ARRIVAL,
-    * whichever doc that is — and StreamEquivSpec proves it by replaying
-    * the REVERSED assignment to the same batch-d3 answer. */
-  private[graft] def d12WithBatchCount(spark: SparkSession, dir: String,
-      orderExpr: org.apache.spark.sql.Column = col("doc_id")): (DataFrame, Int) = {
+  /** `orderExpr` controls which rows share a micro-batch: d12 has NO
+    * ordering precondition — the candidate join is symmetric
+    * (least/greatest normalization) and a pair is emitted exactly once
+    * in the batch of its later ARRIVAL, whichever doc that is — and
+    * StreamEquivSpec proves it by replaying the REVERSED assignment to
+    * the same batch-d3 answer (and reads the batch count from
+    * [[Replay.recorded]]: a genuinely incremental run, not a single
+    * vacuous batch). `waves` is the replay's batch count at fixed data
+    * (ScaleCheck's `d12_batches_axis` doubles it: the candidate join is
+    * batch × store, so the only index-growing term is the key-pruned
+    * store side). */
+  def d12StreamMinhash(spark: SparkSession, dir: String,
+      orderExpr: org.apache.spark.sql.Column = col("doc_id"),
+      waves: Int = SplitFiles): DataFrame = {
     val work = Files.createTempDirectory("graft_incdedup_").toString
     val splitDir = s"$work/in"
     Sources.table(spark, dir, "documents")
       .select("doc_id", "text")
-      .repartitionByRange(SplitFiles, orderExpr)
+      .repartitionByRange(waves, orderExpr)
       .write.parquet(splitDir)
     val bandStore = s"$work/bands"
     val shingleStore = s"$work/shingles"
     val pairStore = s"$work/pairs"
     Replay.drain(spark, splitDir, s"$work/ckpt", 0L)((batch, batchId) =>
       processBatch(batch, batchId, bandStore, shingleStore, pairStore))
-    val nBatches = Replay.countBatchDirs(pairStore)
-    val result = spark.read.parquet(pairStore)
+    spark.read.parquet(pairStore)
       .select(col("a_id"), col("b_id"), col("jaccard"))
       .orderBy("a_id", "b_id")
-    (result, nBatches)
-  }
-
-  /** Batches-axis instrument seam (ScaleCheck `d12_batches_axis`):
-    * replay [[processBatch]] over `waves` micro-batches at FIXED data,
-    * returning each batch's body wall seconds in batch order — the
-    * per-batch-growth decomposition of the stream-replay band (the
-    * candidate join is batch × store, so the only index-growing term
-    * is the key-pruned store side). */
-  private[graft] def d12BatchTimes(spark: SparkSession, dir: String,
-      waves: Int): Seq[Double] = {
-    val work = Files.createTempDirectory("graft_incdedup_ax_").toString
-    val splitDir = s"$work/in"
-    Sources.table(spark, dir, "documents")
-      .select("doc_id", "text")
-      .repartitionByRange(waves, col("doc_id"))
-      .write.parquet(splitDir)
-    val bandStore = s"$work/bands"
-    val shingleStore = s"$work/shingles"
-    val pairStore = s"$work/pairs"
-    Replay.drainTimed(spark, splitDir, s"$work/ckpt")((batch, batchId) =>
-      processBatch(batch, batchId, bandStore, shingleStore, pairStore))
   }
 
   private def processBatch(batch: DataFrame, batchId: Long,

@@ -60,18 +60,19 @@ import graft.ops.{PipelineOps, TextOps}
   */
 object IncrementalExport {
 
-  def p6IncrementalExport(spark: SparkSession, dir: String): DataFrame =
-    p6WithBatchCount(spark, dir)._1
-
   /** `crashAt`/`workDir` are the crash-recovery test seam (SinkSpec's
     * restart shape applied to a TWO-store batch): a crash between the
     * manifest write and the keys write leaves the stores torn relative
     * to each other, and the resumed run over the same workDir must
-    * converge to the from-scratch answer. */
-  private[graft] def p6WithBatchCount(spark: SparkSession, dir: String,
+    * converge to the from-scratch answer. `waves` is the replay's batch
+    * count at fixed data — ScaleCheck's `p6_batches_axis` doubles it:
+    * p6's per-batch work is batch-sized flagging + digest-keyed joins
+    * against a key-pruned store, so last ≈ first is the design claim. */
+  def p6IncrementalExport(spark: SparkSession, dir: String,
       crashAt: Option[Long] = None,
-      workDir: Option[String] = None): (DataFrame, Int) =
-    p6OnDocs(spark, exportDocs(spark, dir), crashAt, workDir)
+      workDir: Option[String] = None,
+      waves: Int = StreamSketch.SplitFiles): DataFrame =
+    p6OnDocs(spark, exportDocs(spark, dir), crashAt, workDir, waves)
 
   private def exportDocs(spark: SparkSession, dir: String): DataFrame =
     Sources.table(spark, dir, "documents")
@@ -84,34 +85,15 @@ object IncrementalExport {
     * vacuously checkable). */
   private[graft] def p6OnDocs(spark: SparkSession, docs: DataFrame,
       crashAt: Option[Long] = None,
-      workDir: Option[String] = None): (DataFrame, Int) = {
+      workDir: Option[String] = None,
+      waves: Int = StreamSketch.SplitFiles): DataFrame = {
     val work = workDir.getOrElse(Files.createTempDirectory("graft_increxport_").toString)
     val manifest = s"$work/manifest"
     val keys = s"$work/keys"
-    val nBatches = StreamSketch.runWaveReplay(spark, docs, "doc_id", work, manifest) {
+    StreamSketch.runWaveReplay(spark, docs, "doc_id", work, manifest, waves) {
       (batch, batchId) => processBatch(batch, batchId, keys, manifest, crashAt)
     }
-    (readManifest(spark, manifest), nBatches)
-  }
-
-  /** Batches-axis instrument seam (ScaleCheck `p6_batches_axis`):
-    * replay [[processBatch]] over `waves` micro-batches at FIXED data,
-    * returning each batch's body wall seconds in batch order — p6's
-    * per-batch work is batch-sized flagging + digest-keyed joins
-    * against a key-pruned store, so last ≈ first is the design claim. */
-  private[graft] def p6BatchTimes(spark: SparkSession, dir: String,
-      waves: Int): Seq[Double] = {
-    val work = Files.createTempDirectory("graft_increxport_ax_").toString
-    val manifest = s"$work/manifest"
-    val keys = s"$work/keys"
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Double]
-    StreamSketch.runWaveReplay(spark, exportDocs(spark, dir), "doc_id",
-      work, manifest, waves) { (batch, batchId) =>
-      val t0 = System.nanoTime()
-      processBatch(batch, batchId, keys, manifest, None)
-      buf += (System.nanoTime() - t0) / 1e9
-    }
-    buf.toSeq
+    readManifest(spark, manifest)
   }
 
   private def readManifest(spark: SparkSession, manifest: String): DataFrame =

@@ -61,9 +61,6 @@ object LateLedger {
     * late majority and an on-time tail — both guard branches fire). */
   val LateDelayMicros: Long = 7L * 24 * 3600 * 1000000L
 
-  def x19LateLedger(spark: SparkSession, dir: String): DataFrame =
-    x19WithBatchCount(spark, dir)._1
-
   /** `crashAt`/`workDir`: the p6 crash seam applied to x19's TWO-store
     * batch — dying between the ledger write and the stats write leaves
     * the batch's ledger row visible but its max-event-time unregistered
@@ -71,18 +68,18 @@ object LateLedger {
     * writes are idempotent per-batch overwrites, and the watermark read
     * prunes to batch_id < current, so the torn row is invisible to the
     * redo) and must converge to the closed-form answer. */
-  private[graft] def x19WithBatchCount(spark: SparkSession, dir: String,
+  def x19LateLedger(spark: SparkSession, dir: String,
       crashAt: Option[Long] = None,
-      workDir: Option[String] = None): (DataFrame, Int) = {
+      workDir: Option[String] = None): DataFrame = {
     val work = workDir.getOrElse(Files.createTempDirectory("graft_lateledger_").toString)
     val ledger = s"$work/ledger"
     val stats = s"$work/stats"
     val events = Sources.table(spark, dir, "events")
       .select("event_id", "event_type", "value", "ts")
-    val nBatches = StreamSketch.runWaveReplay(spark, events, "event_id", work, ledger) {
+    StreamSketch.runWaveReplay(spark, events, "event_id", work, ledger) {
       (batch, batchId) => ledgerBatch(batch, batchId, ledger, stats, crashAt)
     }
-    (readLedger(spark, ledger), nBatches)
+    readLedger(spark, ledger)
   }
 
   /** The per-batch ledger step — shared verbatim by x19's single-phase

@@ -2,13 +2,14 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.{Await, Future}
 import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.io.{Sinks, Sources}
@@ -37,9 +38,11 @@ import graft.io.{Sinks, Sources}
   * store (the ES-index pattern), last write per key wins.
   *
   * The foreachBatch store gates (d12, s11–s30, p2/p3, x8–x20, …) share
-  * one file-replay runner, [[drain]], plus its two companions:
-  * [[countBatchDirs]] (how many `batch_id=N` partitions a store holds)
-  * and [[fence]] (overlapped independent writes).
+  * one file-replay runner, [[drain]], plus its companions: [[recorded]]
+  * (the micro-batches a call ran, from Spark's own per-batch progress),
+  * [[countBatchDirs]] (how many `batch_id=N` partitions a store holds —
+  * a store fact, which a resumed or vacuumed run tells apart from the
+  * batches it ran) and [[fence]] (overlapped independent writes).
   */
 object Replay {
 
@@ -99,7 +102,8 @@ object Replay {
                    (transform: DataFrame => DataFrame): DataFrame = {
     val session = isolated(spark, statePartitions)
     val src = Sources.stream(session, dir, table)
-    val sentinelDir = Files.createTempDirectory("graft_flush_").toString + "/flush"
+    val flushRoot = Files.createTempDirectory("graft_flush_")
+    val sentinelDir = s"$flushRoot/flush"
     writeSentinel(session, src.schema, tsCol, sentinelDir)
     val sentinel = session.readStream.schema(src.schema).parquet(sentinelDir)
     val outDir = Files.createTempDirectory("graft_replay_out_").toString
@@ -114,7 +118,11 @@ object Replay {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally deleteRecursively(checkpoint.toFile)
+    } finally {
+      // only the query reads the sentinel; the result is the sink's files
+      deleteRecursively(checkpoint.toFile)
+      deleteRecursively(flushRoot.toFile)
+    }
     spark.read.parquet(outDir)
   }
 
@@ -230,11 +238,13 @@ object Replay {
     * the query has drained; a `body` failure fails the query and is
     * rethrown here, and a re-run over the same checkpoint redoes only
     * the uncommitted batches — bodies write idempotent `batch_id=N`
-    * overwrites, so a torn write is replaced, never merged. */
+    * overwrites, so a torn write is replaced, never merged. Inside a
+    * [[recorded]] scope on the calling thread, the batches the query
+    * ran are appended to the scope's record. */
   private[graft] def drain(spark: SparkSession, inDir: String, ckpt: String,
                            offset: Long)(body: (DataFrame, Long) => Unit): Unit = {
     val session = spark.newSession()
-    session.readStream
+    val q = session.readStream
       .schema(session.read.parquet(inDir).schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(inDir)
@@ -243,23 +253,30 @@ object Replay {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
-      .awaitTermination()
+    q.awaitTermination()
+    Option(record.get).foreach(_ ++= q.recentProgress)
   }
 
-  /** [[drain]] from batch id 0 with each batch's `body` wall seconds
-    * returned in batch order — the batches-axis instrument (ScaleCheck's
-    * `*_batches_axis` rows: per-batch cost against batch INDEX at fixed
-    * data). */
-  private[graft] def drainTimed(spark: SparkSession, inDir: String, ckpt: String)
-                               (body: (DataFrame, Long) => Unit): Seq[Double] = {
-    val secs = scala.collection.mutable.ArrayBuffer.empty[Double]
-    drain(spark, inDir, ckpt, 0L) { (batch, batchId) =>
-      val t0 = System.nanoTime()
-      body(batch, batchId)
-      secs += (System.nanoTime() - t0) / 1e9
-      ()
-    }
-    secs.toSeq
+  /** The open [[recorded]] scope of each thread. A plain ThreadLocal,
+    * not the inheritable one `scala.util.DynamicVariable` holds: a
+    * thread started inside the scope must not record into it. */
+  private val record = new ThreadLocal[ArrayBuffer[StreamingQueryProgress]]
+
+  /** Run `f` and return, with its result, Spark's progress entry for
+    * every micro-batch the [[drain]] calls on this thread ran, in run
+    * order: `batchId` (the query's own, before the caller's offset),
+    * `numInputRows`, and `durationMs` with `addBatch` (the body),
+    * `queryPlanning`, `walCommit` and `commitOffsets`. Its size is how
+    * many batches the call ran — not how many partitions a store holds
+    * ([[countBatchDirs]]): a resumed run redoes only the torn batches.
+    * A nested scope records for itself alone. Each query keeps its last
+    * `spark.sql.streaming.numRecentProgressUpdates` (100) entries. */
+  private[graft] def recorded[T](f: => T): (T, Seq[StreamingQueryProgress]) = {
+    val outer = record.get
+    val batches = ArrayBuffer.empty[StreamingQueryProgress]
+    record.set(batches)
+    try { val r = f; (r, batches.toSeq) }
+    finally record.set(outer)
   }
 
   /** Stamp replay file `f` as the `i`-th arrival: the file source orders

@@ -64,34 +64,43 @@ object StreamAnnIngest {
     q.assign(batch, batch.sparkSession.read.parquet(art))
       .write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
 
-  def s11StreamAnnIngest(spark: SparkSession, dir: String): DataFrame =
-    ingestWithBatchCount(spark, dir, Flat, 1, col("vec_id"))._1
+  /** `waves` is the replay's batch count at fixed data — ScaleCheck's
+    * `s11_batches_axis` doubles it: ingest's per-batch work is a
+    * batch-sized assignment against the static broadcast quantizer plus
+    * one append (the store is never read back during ingest), so last ≈
+    * first is the design claim; the only index-growing term is the
+    * checkpoint/listing machinery, which m19-class compaction bounds in
+    * production. */
+  def s11StreamAnnIngest(spark: SparkSession, dir: String,
+                         waves: Int = SplitFiles): DataFrame =
+    ingestServe(spark, dir, Flat, 1, col("vec_id"), waves)
 
   /** The store-served probe of an ingest stream under quantizer `q` at
     * fan-out `n` — s11/s15 (flat), s23/s24 (hier): the batch probe
     * ([[SimilarityOps.serve]]) over the stream-built store, the query
     * fan-out re-ranking the very artifact file the ingest batches read.
-    * Test seam: result + micro-batch count actually replayed.
     * `orderExpr` controls which rows share a micro-batch: ingest has NO
     * ordering precondition — the index is a set union of per-batch
     * assignments (each row assigned independently against the static
     * quantizer artifact) — and StreamEquivSpec proves it by replaying
     * the REVERSED assignment to the same batch answer. */
-  private[graft] def ingestWithBatchCount(spark: SparkSession, dir: String,
-      q: Quantizer, n: Int, orderExpr: Column): (DataFrame, Int) = {
-    val (store, art, nBatches) = runIngestStream(spark, dir, q, orderExpr)
-    (SimilarityOps.serve(q, spark.read.parquet(store).drop("batch_id"),
-      spark.read.parquet(art), n), nBatches)
+  private[graft] def ingestServe(spark: SparkSession, dir: String,
+      q: Quantizer, n: Int, orderExpr: Column,
+      waves: Int = SplitFiles): DataFrame = {
+    val (store, art) = runIngestStream(spark, dir, q, orderExpr, waves)
+    SimilarityOps.serve(q, spark.read.parquet(store).drop("batch_id"),
+      spark.read.parquet(art), n)
   }
 
   /** The ingest stream under quantizer `q`, shared by s11/s15 (flat)
     * and s23/s24 (hier): returns (index store path, quantizer artifact
-    * path, batch count). Any artifact `q` writes plugs in — the batches
+    * path). Any artifact `q` writes plugs in — the batches
     * only ever read the written file (StreamEquivSpec's s23 × s26 case
     * streams under `Hier.retrained` and matches
     * batch s26: ingest → retrain → re-ingest). */
   private[graft] def runIngestStream(spark: SparkSession, dir: String,
-      q: Quantizer, orderExpr: Column): (String, String, Int) = {
+      q: Quantizer, orderExpr: Column,
+      waves: Int = SplitFiles): (String, String) = {
     val work = Files.createTempDirectory("graft_annstream_").toString
     val all = SimilarityOps.normed(spark, dir)
     val art = s"$work/quantizer"
@@ -99,30 +108,12 @@ object StreamAnnIngest {
     // only the source table) — overlap them (§2.6) so the quantizer
     // build back-fills the split write's task tail
     Replay.fence(
-      () => splitCorpus(all, s"$work/in", SplitFiles, orderExpr),
+      () => splitCorpus(all, s"$work/in", waves, orderExpr),
       () => q.write(all, art))
     val store = s"$work/index"
     Replay.drain(spark, s"$work/in", s"$work/ckpt", 0L)((batch, batchId) =>
       appendAssigned(q, batch, batchId, art, store))
-    (store, art, Replay.countBatchDirs(store))
-  }
-
-  /** Batches-axis instrument seam (ScaleCheck `s11_batches_axis`):
-    * replay the ingest append over `waves` micro-batches at FIXED data,
-    * returning each batch's body wall seconds in batch order — ingest's
-    * per-batch work is a batch-sized assignment against the static
-    * broadcast quantizer plus one append (the store is never read back
-    * during ingest), so last ≈ first is the design claim; the only
-    * index-growing term is the checkpoint/listing machinery, which
-    * m19-class compaction bounds in production. */
-  private[graft] def s11BatchTimes(spark: SparkSession, dir: String,
-      waves: Int): Seq[Double] = {
-    val work = Files.createTempDirectory("graft_annstream_ax_").toString
-    val all = SimilarityOps.normed(spark, dir)
-    splitCorpus(all, s"$work/in", waves, col("vec_id"))
-    Flat.write(all, s"$work/quantizer")
-    Replay.drainTimed(spark, s"$work/in", s"$work/ckpt")((batch, batchId) =>
-      appendAssigned(Flat, batch, batchId, s"$work/quantizer", s"$work/index"))
+    (store, art)
   }
 
   // ---- s15: multi-probe against the streamed store ------------------
@@ -145,7 +136,7 @@ object StreamAnnIngest {
     * Scale: fan-out adds queries × nprobe broadcast rows, constant in
     * corpus size; the store is never exchanged (LayoutSpec s15). */
   def s15StreamAnnMultiprobe(spark: SparkSession, dir: String): DataFrame =
-    ingestWithBatchCount(spark, dir, Flat, MultiNprobe, col("vec_id"))._1
+    ingestServe(spark, dir, Flat, MultiNprobe, col("vec_id"))
 
   // ---- s23: ingest under the hierarchical coarse quantizer ----------
 
@@ -179,24 +170,22 @@ object StreamAnnIngest {
     * retrain (s26), and the stored-assignment bulk serve
     * (StreamEquivSpec's s21 × s23 case). */
   def s23StreamHierIngest(spark: SparkSession, dir: String): DataFrame =
-    ingestWithBatchCount(spark, dir, Hier, 1, col("vec_id"))._1
+    ingestServe(spark, dir, Hier, 1, col("vec_id"))
 
   /** Test seam (the s21 × s23 composition pin): the stream-built hier
     * store and codebook paths at the gate configuration, for serves
     * that read the store directly (the bulk serve's stored-assignment
     * production state). */
   private[graft] def s23StoreAndCodebook(spark: SparkSession, dir: String)
-      : (String, String) = {
-    val (store, cb, _) = runIngestStream(spark, dir, Hier, col("vec_id"))
-    (store, cb)
-  }
+      : (String, String) =
+    runIngestStream(spark, dir, Hier, col("vec_id"))
 
   /** The hier-ingest stream at an explicit (k, sub) — ScaleCheck's
     * scaled-k ingest seam (k ∝ corpus, the deployment rule): returns
     * the store-served probe so the timed unit is the full gate. */
   private[graft] def s23IngestK(spark: SparkSession, dir: String,
                                 k: Int, sub: Int): DataFrame =
-    ingestWithBatchCount(spark, dir, hier(k, sub), 1, col("vec_id"))._1
+    ingestServe(spark, dir, hier(k, sub), 1, col("vec_id"))
 
   // ---- s24: hier multiprobe over the stream-built store --------------
 
@@ -225,7 +214,7 @@ object StreamAnnIngest {
     * corpus size; per-batch ingest cost and store layout are s23's
     * unchanged; the store is never exchanged. */
   def s24StreamHierMultiprobe(spark: SparkSession, dir: String): DataFrame =
-    ingestWithBatchCount(spark, dir, Hier, HierGprobe, col("vec_id"))._1
+    ingestServe(spark, dir, Hier, HierGprobe, col("vec_id"))
 
   // ---- s12: deletes — the tombstone merge s11's scaladoc promises ----
 
@@ -237,7 +226,7 @@ object StreamAnnIngest {
       .select("vec_id")
 
   def s12StreamAnnDelete(spark: SparkSession, dir: String): DataFrame =
-    s12WithBatchCount(spark, dir)._1
+    s12WithInfo(spark, dir)._1
 
   /** The delete rule's Spark-side predicate, shared with the batch twin
     * in StreamEquivSpec (the oracle mirrors it in SQL). */
@@ -265,14 +254,14 @@ object StreamAnnIngest {
     * anti-join keys on (cell, vec_id) — tombstones carry their cell —
     * and at 100 TB rides the same cell-bucketed layout as the index
     * with zero exchanges (LayoutSpec's s12 case). */
-  private[graft] def s12WithBatchCount(spark: SparkSession, dir: String): (DataFrame, Int, () => Array[Long]) = {
-    val (_, store, tombs, nBatches) = runDeleteStream(spark, dir, Flat)
+  private[graft] def s12WithInfo(spark: SparkSession, dir: String): (DataFrame, () => Array[Long]) = {
+    val (_, store, tombs) = runDeleteStream(spark, dir, Flat)
     // test seam, LAZY (guide §1.2 — the gate's declared output is the
     // probe; this diagnostic ran one extra job inside every timed gate
     // invocation before): tombstones registered per drain batch, in
     // batch order — >1 non-empty batch proves requests stayed pending
     // until their vector arrived (the out-of-order case)
-    (probeAssigned(liveRows(spark, store, tombs)), nBatches,
+    (probeAssigned(liveRows(spark, store, tombs)),
       () => Replay.rowsPerBatch(spark, tombs))
   }
 
@@ -281,9 +270,9 @@ object StreamAnnIngest {
     * batch after the batch's index append ([[drainDeleteLedger]], which
     * reads only the store's cell column — why the quantizer swap is
     * invisible to it). Returns (work root, index store path, tombstone
-    * store path, batch count). */
+    * store path). */
   private def runDeleteStream(spark: SparkSession, dir: String, q: Quantizer)
-      : (String, String, String, Int) = {
+      : (String, String, String) = {
     val work = Files.createTempDirectory("graft_annstream_del_").toString
     val all = SimilarityOps.normed(spark, dir)
     val art = s"$work/quantizer"
@@ -301,7 +290,7 @@ object StreamAnnIngest {
       appendAssigned(q, batch, batchId, art, store)
       drainDeleteLedger(batch.sparkSession, batchId, reqPath, store, tombs)
     }
-    (work, store, tombs, Replay.countBatchDirs(store))
+    (work, store, tombs)
   }
 
   /** The query-time tombstone merge: index rows minus deleted vectors.
@@ -354,7 +343,7 @@ object StreamAnnIngest {
     * layout that the post-compaction probe is exchange-free AND
     * anti-join-free. */
   private[graft] def s13WithStoreInfo(spark: SparkSession, dir: String): (DataFrame, () => Long, () => Long) = {
-    val (work, store, tombs, _) = runDeleteStream(spark, dir, Flat)
+    val (work, store, tombs) = runDeleteStream(spark, dir, Flat)
     val comp = compact(liveRows(spark, store, tombs), s"$work/compacted")
     // store/tombstone counts are spec-only diagnostics — lazy, so the
     // gate's timed path pays the rewrite + probe and nothing else
@@ -423,9 +412,9 @@ object StreamAnnIngest {
     * (cell, vec_id, batch_id) group — trailing keys change no
     * exchange structure). */
   private[graft] def s16WithInfo(spark: SparkSession, dir: String)
-      : (DataFrame, Int, () => Long, () => Long, () => Long) = {
-    val (store, tombs, nBatches) = runUpsertStream(spark, dir, Flat)
-    upsertProbeInfo(spark, store, tombs, nBatches)
+      : (DataFrame, () => Long, () => Long, () => Long) = {
+    val (store, tombs) = runUpsertStream(spark, dir, Flat)
+    upsertProbeInfo(spark, store, tombs)
   }
 
   /** The latest-version merge + test seams shared by the flat (s16) and
@@ -434,8 +423,8 @@ object StreamAnnIngest {
     * 3-key precision and the cell-move path are each exercised). The
     * new cell is read from the SURVIVING entry — the live view itself. */
   private def upsertProbeInfo(spark: SparkSession, store: String,
-                              tombs: String, nBatches: Int)
-      : (DataFrame, Int, () => Long, () => Long, () => Long) = {
+                              tombs: String)
+      : (DataFrame, () => Long, () => Long, () => Long) = {
     val live = s16LiveRows(spark, store, tombs)
     val tombRows = spark.read.parquet(tombs)
       .select(col("vec_id"), col("cell").as("old_cell"))
@@ -443,7 +432,7 @@ object StreamAnnIngest {
     val moved = tombRows.join(newCells, Seq("vec_id"))
     // same-cell / cross-cell replacement evidence is spec-only — lazy,
     // so the timed gate path no longer runs the moved-join + 3 counts
-    (probeAssigned(live.drop("batch_id")), nBatches,
+    (probeAssigned(live.drop("batch_id")),
       () => tombRows.count(),
       () => moved.filter(col("old_cell") === col("new_cell")).count(),
       () => moved.filter(col("old_cell") =!= col("new_cell")).count())
@@ -475,22 +464,21 @@ object StreamAnnIngest {
     * tombstones, key-pruned drains, the 3-key merge on the same
     * cell-bucketed layout — with per-batch assignment at 2√k dots. */
   private[graft] def s27WithInfo(spark: SparkSession, dir: String)
-      : (DataFrame, Int, () => Long, () => Long, () => Long) = {
-    val (store, tombs, nBatches) = runUpsertStream(spark, dir, Hier)
-    upsertProbeInfo(spark, store, tombs, nBatches)
+      : (DataFrame, () => Long, () => Long, () => Long) = {
+    val (store, tombs) = runUpsertStream(spark, dir, Hier)
+    upsertProbeInfo(spark, store, tombs)
   }
 
   /** s27's upsert run with the MERGED store exposed — the s27 × s26
     * composition seam: the live (latest-version) rows of the hier store
-    * after the update wave, plus the replayed batch count. This frame
+    * after the update wave. This frame
     * is the corpus a production retrain sees when it runs AFTER an
     * upsert wave — the last unproven lifecycle sequence, pinned in
     * StreamEquivSpec against the closed-form gen-1 oracle over the
     * updated corpus. */
-  private[graft] def s27LiveRows(spark: SparkSession, dir: String)
-      : (DataFrame, Int) = {
-    val (store, tombs, nBatches) = runUpsertStream(spark, dir, Hier)
-    (s16LiveRows(spark, store, tombs).drop("batch_id"), nBatches)
+  private[graft] def s27LiveRows(spark: SparkSession, dir: String): DataFrame = {
+    val (store, tombs) = runUpsertStream(spark, dir, Hier)
+    s16LiveRows(spark, store, tombs).drop("batch_id")
   }
 
   /** s16's merge, keyed on the victim's full physical address
@@ -510,7 +498,7 @@ object StreamAnnIngest {
     * compacted store holds exactly one row per vec_id. */
   private[graft] def s16CompactedInfo(spark: SparkSession, dir: String)
       : (DataFrame, Long, Long) = {
-    val (store, tombs, _) = runUpsertStream(spark, dir, Flat)
+    val (store, tombs) = runUpsertStream(spark, dir, Flat)
     val work = new java.io.File(store).getParent
     val comp = compact(s16LiveRows(spark, store, tombs).drop("batch_id"),
       s"$work/compacted")
@@ -522,9 +510,9 @@ object StreamAnnIngest {
     * its compaction seam) and hier (s27) gates — everything but the
     * quantizer, including the 3-key victim tombstone drain, is
     * quantizer-agnostic. Returns (index store path, tombstone store
-    * path, batch count). */
+    * path). */
   private def runUpsertStream(spark: SparkSession, dir: String, q: Quantizer)
-      : (String, String, Int) = {
+      : (String, String) = {
     val work = Files.createTempDirectory("graft_annstream_ups_").toString
     val splitDir = s"$work/in"
     val all = SimilarityOps.normed(spark, dir)
@@ -555,7 +543,7 @@ object StreamAnnIngest {
       appendAssigned(q, batch, batchId, art, store)
       tombstonePriorVersions(batch, batchId, store, tombs)
     }
-    (store, tombs, Replay.countBatchDirs(store))
+    (store, tombs)
   }
 
   /** Tombstone every PRIOR physical entry of an incoming vec_id — the
@@ -636,7 +624,7 @@ object StreamAnnIngest {
     * uncompacted-merged branch, tombstones retired, tombstones pending). */
   private def partialCompactState(spark: SparkSession, dir: String)
       : (String, DataFrame, DataFrame, () => Long, () => Long) = {
-    val (work, store, tombs, _) = runDeleteStream(spark, dir, Flat)
+    val (work, store, tombs) = runDeleteStream(spark, dir, Flat)
     partialCompactStateFrom(spark, work, store, tombs)
   }
 
@@ -744,12 +732,12 @@ object StreamAnnIngest {
     * only the per-batch assignment cost (k → G + sub ≈ 2√k dots per
     * vector, s23's saving, now carried through the whole lifecycle). */
   private[graft] def s25WithInfo(spark: SparkSession, dir: String)
-      : (DataFrame, Int, () => Array[Long], () => Long, () => Long) = {
-    val (work, store, tombs, nBatches) = runDeleteStream(spark, dir, Hier)
+      : (DataFrame, () => Array[Long], () => Long, () => Long) = {
+    val (work, store, tombs) = runDeleteStream(spark, dir, Hier)
     val comp = compact(liveRows(spark, store, tombs), s"$work/compacted")
     // drain/count diagnostics are spec-only — lazy (guide §1.2), so the
     // timed gate path pays the rewrite + probe and nothing else
-    (probeAssigned(comp), nBatches, () => Replay.rowsPerBatch(spark, tombs),
+    (probeAssigned(comp), () => Replay.rowsPerBatch(spark, tombs),
       () => comp.count(),
       () => spark.read.parquet(tombs).count())
   }
@@ -764,14 +752,14 @@ object StreamAnnIngest {
     * s24, upsert s27, retrain s26). */
   private[graft] def hierPartialCompactState(spark: SparkSession, dir: String)
       : (String, DataFrame, DataFrame, () => Long, () => Long) = {
-    val (work, store, tombs, _) = runDeleteStream(spark, dir, Hier)
+    val (work, store, tombs) = runDeleteStream(spark, dir, Hier)
     partialCompactStateFrom(spark, work, store, tombs)
   }
 
   // ---- s20: streaming radius alerts (the watchlist match-on-ingest) --
 
   def s20StreamRadiusAlert(spark: SparkSession, dir: String): DataFrame =
-    s20WithBatchCount(spark, dir)._1
+    s20WithInfo(spark, dir)._1
 
   /** s20: s19's radius read turned into the ALERT-ON-INGEST motion — the
     * content-flagging / dedup-on-arrival read a production pipeline
@@ -796,13 +784,13 @@ object StreamAnnIngest {
     * No ordering precondition: each arrival is checked independently
     * against the static watchlist, so the alert SET is replay-order
     * invariant (same class as s11's set-union index). */
-  private[graft] def s20WithBatchCount(spark: SparkSession, dir: String): (DataFrame, Int, () => Array[Long]) =
+  private[graft] def s20WithInfo(spark: SparkSession, dir: String): (DataFrame, () => Array[Long]) =
     runRadiusAlertStream(spark, dir, Flat)
 
   // ---- s30: the alert stream under the hier quantizer -----------------
 
   def s30HierRadiusAlert(spark: SparkSession, dir: String): DataFrame =
-    s30WithBatchCount(spark, dir)._1
+    s30WithInfo(spark, dir)._1
 
   /** s30: s20's alert-on-ingest with the quantizer artifact swapped to
     * the TWO-LEVEL codebook — the streaming alert verb proven on the
@@ -815,7 +803,7 @@ object StreamAnnIngest {
     * verb). The union of alert batches must equal batch s29, so the
     * oracle is s29's SQL string verbatim (the shared-string move s20
     * makes with s19, lifted to the hier chain). */
-  private[graft] def s30WithBatchCount(spark: SparkSession, dir: String): (DataFrame, Int, () => Array[Long]) =
+  private[graft] def s30WithInfo(spark: SparkSession, dir: String): (DataFrame, () => Array[Long]) =
     runRadiusAlertStream(spark, dir, Hier)
 
   /** The alert-on-ingest scaffold under quantizer `q`: s20 plugs the
@@ -823,7 +811,7 @@ object StreamAnnIngest {
     * the one-time watchlist build and every per-batch arrival, so the
     * two sides can never assign under different quantizers. */
   private def runRadiusAlertStream(spark: SparkSession, dir: String,
-      q: Quantizer): (DataFrame, Int, () => Array[Long]) = {
+      q: Quantizer): (DataFrame, () => Array[Long]) = {
     val work = Files.createTempDirectory("graft_annstream_radius_").toString
     val all = SimilarityOps.normed(spark, dir)
     val art = s"$work/quantizer"
@@ -853,6 +841,6 @@ object StreamAnnIngest {
       .select(col("q_id"), col("n_id"), graft.out.Canonical.r4(col("c")).as("cos_sim"))
       .orderBy("q_id", "n_id")
     // test seam, LAZY: alerts raised per arrival batch, in batch order
-    (result, Replay.countBatchDirs(alerts), () => Replay.rowsPerBatch(spark, alerts))
+    (result, () => Replay.rowsPerBatch(spark, alerts))
   }
 }

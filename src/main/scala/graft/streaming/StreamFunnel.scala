@@ -50,11 +50,6 @@ object StreamFunnel {
   val SplitFiles = 4
 
   def p2StreamFunnel(spark: SparkSession, dir: String): DataFrame =
-    p2WithBatchCount(spark, dir)._1
-
-  /** Test seam: result + actual micro-batch count (StreamEquivSpec
-    * asserts it equals [[SplitFiles]]). */
-  private[graft] def p2WithBatchCount(spark: SparkSession, dir: String): (DataFrame, Int) =
     p2From(Sources.table(spark, dir, "documents"))
 
   /** Frame-level seam: StreamEquivSpec replays a fixture with PLANTED
@@ -65,7 +60,7 @@ object StreamFunnel {
     * StreamEquivSpec asserts the reversed replay genuinely breaks it
     * (the precondition is load-bearing, not prose). */
   private[graft] def p2From(docs: DataFrame,
-      orderExpr: org.apache.spark.sql.Column = col("doc_id")): (DataFrame, Int) = {
+      orderExpr: org.apache.spark.sql.Column = col("doc_id")): DataFrame = {
     val spark = docs.sparkSession
     val work = Files.createTempDirectory("graft_funnel_").toString
     val splitDir = s"$work/in"
@@ -76,8 +71,7 @@ object StreamFunnel {
     val labelStore = s"$work/labels"
     Replay.drain(spark, splitDir, s"$work/ckpt", 0L)((batch, batchId) =>
       processBatch(batch, batchId, keyStore, labelStore))
-    val nBatches = Replay.countBatchDirs(labelStore)
-    val result = spark.read.parquet(labelStore)
+    spark.read.parquet(labelStore)
       .groupBy("lang", "source")
       .agg(
         count(lit(1)).as("n_docs"),
@@ -87,7 +81,6 @@ object StreamFunnel {
         sum(when(col("stage") === "kept", 1L).otherwise(0L)).as("n_kept"),
         sum(when(col("stage") === "kept", col("wc")).otherwise(0L)).as("tok_kept"))
       .orderBy("lang", "source")
-    (result, nBatches)
   }
 
   private def processBatch(batch: DataFrame, batchId: Long,

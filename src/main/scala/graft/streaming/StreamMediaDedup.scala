@@ -103,11 +103,31 @@ object StreamMediaDedup {
   private[graft] val ImageFp: DataFrame => DataFrame =
     d => MultimodalOps.ahashBandsFrom(d.select("doc_id", "text"))
 
-  def m15StreamNearDup(spark: SparkSession, dir: String): DataFrame =
-    m15WithInfo(spark, dir)._1
+  /** m15's final pair set. The change-feed ledger is NOT computed here
+    * (`writeLedger = false`): m15's declared output is the pair set
+    * alone, and the per-batch ledger diff (a full-outer over two
+    * committed pair sets + the two-level digest fold + a third store
+    * write) is m16's product — a deployment that doesn't consume the
+    * change feed doesn't pay for it, per batch (guide §1.2: don't
+    * compute what you throw away). m16 runs the identical replay WITH
+    * the ledger, so the feed's cost is priced on the gate that declares
+    * it. `waves` is the replay's batch count at fixed data — ScaleCheck's
+    * `*_batches_axis` rows double it for m15/m16/m18: the incremental
+    * design's claim is that per-batch cost does NOT grow with batch
+    * index (additions are batch-bounded, retractions amortize to zero,
+    * the only index-growing term is the narrow fingerprint-store scan)
+    * — last-batch ≈ first-batch seconds is that claim as a number,
+    * where the r15 per-batch re-derivation read last ≈ B × first. */
+  def m15StreamNearDup(spark: SparkSession, dir: String,
+                       waves: Int = StreamSketch.SplitFiles): DataFrame =
+    runReplay(spark, docsOf(spark, dir), "doc_id", writeLedger = false,
+      waves = waves)._1
 
-  def m16NearDupDelta(spark: SparkSession, dir: String): DataFrame =
-    m16WithInfo(spark, dir)._1
+  /** m16's change-feed ledger: m15's replay with the per-batch ledger
+    * diff written. */
+  def m16NearDupDelta(spark: SparkSession, dir: String,
+                      waves: Int = StreamSketch.SplitFiles): DataFrame =
+    runReplay(spark, docsOf(spark, dir), "doc_id", waves = waves)._2
 
   /** m18: m15's streaming replay over the SECOND codec family — the
     * audio sample-hash fingerprint ([[MultimodalOps.whashBandsFrom]],
@@ -116,37 +136,12 @@ object StreamMediaDedup {
     * proven across both containers exactly as m14 proved the batch
     * verb. Oracle = m14's SQL verbatim (the m15 ≡ m13 shared-string
     * move on the audio chain). */
-  def m18StreamWavNearDup(spark: SparkSession, dir: String): DataFrame =
-    m18WithInfo(spark, dir)._1
-
-  /** Test seam: final pair set + replayed batch count. The change-feed
-    * ledger is NOT computed here (`writeLedger = false`): m15's
-    * declared output is the pair set alone, and the per-batch ledger
-    * diff (a full-outer over two committed pair sets + the two-level
-    * digest fold + a third store write) is m16's product — a deployment
-    * that doesn't consume the change feed doesn't pay for it, per batch
-    * (guide §1.2: don't compute what you throw away). m16 runs the
-    * identical replay WITH the ledger, so the feed's cost is priced on
-    * the gate that declares it. */
-  private[graft] def m15WithInfo(spark: SparkSession, dir: String): (DataFrame, Int) = {
-    val (pairs, _, n) = runReplay(spark, docsOf(spark, dir), "doc_id",
-      writeLedger = false)
-    (pairs, n)
-  }
-
-  /** Test seam: change-feed ledger + replayed batch count. */
-  private[graft] def m16WithInfo(spark: SparkSession, dir: String): (DataFrame, Int) = {
-    val (_, ledger, n) = runReplay(spark, docsOf(spark, dir), "doc_id")
-    (ledger, n)
-  }
-
-  /** Test seam: final audio pair set + replayed batch count. */
-  private[graft] def m18WithInfo(spark: SparkSession, dir: String): (DataFrame, Int) = {
+  def m18StreamWavNearDup(spark: SparkSession, dir: String,
+                          waves: Int = StreamSketch.SplitFiles): DataFrame = {
     val docs = Sources.table(spark, dir, "documents")
       .select("doc_id", "lang", "text")
-    val (pairs, _, n) = runReplay(spark, docs, "doc_id",
-      d => MultimodalOps.whashBandsFrom(d), writeLedger = false)
-    (pairs, n)
+    runReplay(spark, docs, "doc_id", d => MultimodalOps.whashBandsFrom(d),
+      writeLedger = false, waves = waves)._1
   }
 
   def m19MediaCompact(spark: SparkSession, dir: String): DataFrame =
@@ -182,8 +177,9 @@ object StreamMediaDedup {
     * density, two committed pair sets on (a_id, b_id)) — never corpus-
     * sized. All three writes are idempotent `batch_id=N` overwrites
     * reading only committed data, so a retried batch converges. */
-  def m20StreamConsensus(spark: SparkSession, dir: String): DataFrame =
-    m20WithInfo(spark, dir)._1
+  def m20StreamConsensus(spark: SparkSession, dir: String,
+                         waves: Int = StreamSketch.SplitFiles): DataFrame =
+    m20WithInfo(spark, dir, waves)._1
 
   /** m21: m20's per-channel change feed as its OWN oracle-checked gate
     * — the m16 move on the consensus axis: the whole ledger (every
@@ -191,29 +187,34 @@ object StreamMediaDedup {
     * in DuckDB (both codec chains per wave, channel CASE, shifted
     * self-join), so per-channel conservation and the flip's paired
     * leave+enter are oracle-checked, not just spec-pinned. */
-  def m21ConsensusDelta(spark: SparkSession, dir: String): DataFrame =
-    m20WithInfo(spark, dir)._2
+  def m21ConsensusDelta(spark: SparkSession, dir: String,
+                        waves: Int = StreamSketch.SplitFiles): DataFrame =
+    m20WithInfo(spark, dir, waves)._2
 
-  /** Test seam: (final consensus set, delta ledger, batches replayed). */
-  private[graft] def m20WithInfo(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, Int) =
+  /** (final consensus set, delta ledger) of one consensus replay over
+    * `waves` batches — ScaleCheck's m20/m21 batches-axis rows double
+    * it: m15's incremental claim twice over plus the output-sized
+    * consensus join, so last ≈ first is the design law. */
+  private[graft] def m20WithInfo(spark: SparkSession, dir: String,
+                                 waves: Int = StreamSketch.SplitFiles)
+      : (DataFrame, DataFrame) =
     runConsensusReplay(spark,
       Sources.table(spark, dir, "documents").select("doc_id", "lang", "text"),
-      "doc_id")
+      "doc_id", waves)
 
   /** The consensus replay over an arbitrary `(doc_id, lang, text)`
     * frame — StreamEquivSpec drives it with a planted image-only
     * df-cap crossing (a pair flipping `both`→`audio` mid-stream) and a
     * second-channel-lands flip (`image`→`both`). */
   private[graft] def runConsensusReplay(spark: SparkSession, docs: DataFrame,
-      splitKey: String): (DataFrame, DataFrame, Int) = {
+      splitKey: String,
+      waves: Int = StreamSketch.SplitFiles): (DataFrame, DataFrame) = {
     val work = Files.createTempDirectory("graft_mediaconsensus_").toString
     val consStore = s"$work/consensus"
     val consLed = s"$work/cons_ledger"
     val times = new java.util.concurrent.ConcurrentLinkedQueue[ConsensusTimes]()
-    val n = StreamSketch.runWaveReplay(spark, docs, splitKey, work, consStore) {
-      (batch, batchId) => consensusStep(batch, batchId, work, times.add(_))
-    }
+    val n = StreamSketch.runWaveReplay(spark, docs, splitKey, work, consStore,
+      waves) { (batch, batchId) => consensusStep(batch, batchId, work, times.add(_)) }
     // the §4.2b decomposition record: summed per-chain vs step wall —
     // excess of Σ step over Σ (max(img, aud) + cons) is the residual
     // the chains' overlap does NOT recover on one local JVM
@@ -233,7 +234,7 @@ object StreamMediaDedup {
       .select(col("batch_id").cast("long").as("batch_id"), col("channel"),
         col("n_pairs"), col("n_added"), col("n_retracted"))
       .orderBy("batch_id", "channel")
-    (result, ledger, n)
+    (result, ledger)
   }
 
   /** One consensus step: full-outer the two codecs' COMMITTED batch-N
@@ -417,19 +418,21 @@ object StreamMediaDedup {
     * waves (doc_id for the gates); `fpFrom` is the per-batch
     * fingerprint function — the quantizer-seam move: m15 plugs the
     * image aHash, m18 the audio sample-hash, and the
-    * replay/store/delta machinery is shared verbatim.
-    * Returns (final pair set, change-feed ledger, batches replayed). */
+    * replay/store/delta machinery is shared verbatim. `waves` is the
+    * replay's batch count at fixed data.
+    * Returns (final pair set, change-feed ledger). */
   private[graft] def runReplay(spark: SparkSession, docs: DataFrame,
       splitKey: String,
       fpFrom: DataFrame => DataFrame = ImageFp,
-      writeLedger: Boolean = true)
-      : (DataFrame, DataFrame, Int) = {
+      writeLedger: Boolean = true,
+      waves: Int = StreamSketch.SplitFiles)
+      : (DataFrame, DataFrame) = {
     val work = Files.createTempDirectory("graft_mediadedup_").toString
     val fpStore = s"$work/fp"
     val curStore = s"$work/cur"
     val ledgerStore = s"$work/ledger"
-    val n = StreamSketch.runWaveReplay(spark, docs, splitKey, work, curStore) {
-      (batch, batchId) =>
+    val n = StreamSketch.runWaveReplay(spark, docs, splitKey, work, curStore,
+      waves) { (batch, batchId) =>
         processBatch(batch, batchId, fpStore, curStore, ledgerStore, fpFrom,
           writeLedger)
     }
@@ -443,102 +446,7 @@ object StreamMediaDedup {
         .select(col("batch_id").cast("long").as("batch_id"), col("n_pairs"),
           col("n_added"), col("n_retracted"), col("add_md5"), col("rm_md5"))
         .orderBy("batch_id")
-    (pairs, ledger, n)
-  }
-
-  /** Batches-axis instrument seam (ScaleCheck `m15_batches_axis`):
-    * replay [[processBatch]] over `waves` micro-batches at FIXED data
-    * and return each batch's body wall seconds in batch order. The
-    * incremental design's claim is that per-batch cost does NOT grow
-    * with batch index (additions are batch-bounded, retractions
-    * amortize to zero, the only index-growing term is the narrow
-    * fingerprint-store scan) — last-batch ≈ first-batch seconds is that
-    * claim as a number, where the r15 per-batch re-derivation read
-    * last ≈ B × first. */
-  private[graft] def m15BatchTimes(spark: SparkSession, dir: String,
-      waves: Int): Seq[Double] =
-    chainBatchTimes(spark, docsOf(spark, dir), ImageFp, readLedger = false, waves)
-
-  /** m16's batches-axis row: m15's replay body PLUS the change-feed
-    * consumer's per-batch read of the just-committed ledger partition
-    * (one fixed-width row) — the part of m16's gate that runs per
-    * batch; the final full-ledger read is a one-time serve. */
-  private[graft] def m16BatchTimes(spark: SparkSession, dir: String,
-      waves: Int): Seq[Double] =
-    chainBatchTimes(spark, docsOf(spark, dir), ImageFp, readLedger = true, waves)
-
-  /** m18's batches-axis row: the identical replay body through the
-    * AUDIO codec chain (the RIFF chunk walk) — the quantizer-seam move
-    * on the instrument itself. */
-  private[graft] def m18BatchTimes(spark: SparkSession, dir: String,
-      waves: Int): Seq[Double] =
-    chainBatchTimes(spark,
-      Sources.table(spark, dir, "documents").select("doc_id", "lang", "text"),
-      d => MultimodalOps.whashBandsFrom(d), readLedger = false, waves)
-
-  /** The shared single-chain instrument body: replay [[processBatch]]
-    * over `waves` micro-batches at FIXED data, returning each batch's
-    * body wall seconds in batch order; `readLedger` adds the per-batch
-    * ledger-partition read the change-feed gates' consumers pay. */
-  private def chainBatchTimes(spark: SparkSession, docs: DataFrame,
-      fpFrom: DataFrame => DataFrame, readLedger: Boolean,
-      waves: Int): Seq[Double] = {
-    val work = Files.createTempDirectory("graft_mediadedup_ax_").toString
-    val fpStore = s"$work/fp"
-    val curStore = s"$work/cur"
-    val ledgerStore = s"$work/ledger"
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Double]
-    // writeLedger tracks readLedger so each instrument prices its own
-    // gate's per-batch body: m15/m18's replays no longer compute the
-    // change feed, m16's does (and its consumer reads it back)
-    StreamSketch.runWaveReplay(spark, docs, "doc_id", work,
-      curStore, waves) { (batch, batchId) =>
-      val t0 = System.nanoTime()
-      processBatch(batch, batchId, fpStore, curStore, ledgerStore, fpFrom,
-        writeLedger = readLedger)
-      if (readLedger)
-        batch.sparkSession.read.parquet(s"$ledgerStore/batch_id=$batchId")
-          .write.format("noop").mode("overwrite").save()
-      buf += (System.nanoTime() - t0) / 1e9
-    }
-    buf.toSeq
-  }
-
-  /** Batches-axis instrument seam (ScaleCheck `m20_batches_axis`): the
-    * consensus replay's per-batch body seconds over `waves` batches at
-    * FIXED data — inherits m15's incremental claim twice over plus the
-    * output-sized consensus join, so last ≈ first is the design law. */
-  private[graft] def m20BatchTimes(spark: SparkSession, dir: String,
-      waves: Int): Seq[Double] =
-    consensusBatchTimes(spark, dir, readLedger = false, waves)
-
-  /** m21's batches-axis row: m20's body plus the per-channel change
-    * feed consumer's read of the just-committed ledger partition
-    * (≤ 3 fixed-width rows per batch). */
-  private[graft] def m21BatchTimes(spark: SparkSession, dir: String,
-      waves: Int): Seq[Double] =
-    consensusBatchTimes(spark, dir, readLedger = true, waves)
-
-  private def consensusBatchTimes(spark: SparkSession, dir: String,
-      readLedger: Boolean, waves: Int): Seq[Double] = {
-    val work = Files.createTempDirectory("graft_mediaconsensus_ax_").toString
-    val docs = Sources.table(spark, dir, "documents")
-      .select("doc_id", "lang", "text")
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val dec = scala.collection.mutable.ArrayBuffer.empty[ConsensusTimes]
-    StreamSketch.runWaveReplay(spark, docs, "doc_id", work,
-      s"$work/consensus", waves) { (batch, batchId) =>
-      val t0 = System.nanoTime()
-      consensusStep(batch, batchId, work, t => dec.synchronized { dec += t; () })
-      if (readLedger)
-        batch.sparkSession.read.parquet(s"$work/cons_ledger/batch_id=$batchId")
-          .write.format("noop").mode("overwrite").save()
-      buf += (System.nanoTime() - t0) / 1e9
-    }
-    // per-batch chain decomposition for the §4.2b record
-    System.err.println("[m20ax] img/aud/cons per batch: " + dec.map(t =>
-      f"${t.img}%.2f/${t.aud}%.2f/${t.cons}%.2f").mkString(", "))
-    buf.toSeq
+    (pairs, ledger)
   }
 
   /** Per-chain wall decomposition of one [[consensusStep]] call — the
@@ -553,8 +461,8 @@ object StreamMediaDedup {
 
   /** One full consensus micro-batch under `work`: both per-codec
     * incremental chains, then the committed-set full-outer + ledger —
-    * shared by [[runConsensusReplay]], the batches-axis seam, and
-    * (driven directly) the torn-write redo spec.
+    * shared by [[runConsensusReplay]] and (driven directly) the
+    * torn-write redo spec.
     *
     * The two chains touch DISJOINT stores and only read the shared
     * batch, so they run CONCURRENTLY through [[Replay.fence]]: both are stage-wave

@@ -48,56 +48,29 @@ import graft.ops.{PipelineOps, TextOps}
   */
 object StreamSampler {
 
-  def p13StreamSample(spark: SparkSession, dir: String): DataFrame =
-    p13WithBatchCount(spark, dir)._1
-
-  /** Test seam: result + replayed micro-batch count (StreamEquivSpec
-    * asserts the ledger genuinely accreted across all waves). */
-  private[graft] def p13WithBatchCount(spark: SparkSession, dir: String)
-      : (DataFrame, Int) = {
+  /** `waves` is the replay's batch count at fixed data — ScaleCheck's
+    * `p13_batches_axis` doubles it: p13 re-derives the keep rule per
+    * batch over the accreting NARROW stats store, so its per-batch cost
+    * legitimately grows with arrived STATS (3-column rows); the
+    * instrument prices that term. */
+  def p13StreamSample(spark: SparkSession, dir: String,
+                      waves: Int = StreamSketch.SplitFiles): DataFrame = {
     val work = Files.createTempDirectory("graft_samplemon_").toString
     val stats = s"$work/stats"
     val ledger = s"$work/ledger"
     val docs = Sources.table(spark, dir, "documents")
       .select("doc_id", "source", "text")
-    val nBatches = StreamSketch.runWaveReplay(spark, docs, "doc_id", work, ledger) {
+    StreamSketch.runWaveReplay(spark, docs, "doc_id", work, ledger, waves) {
       (batch, batchId) => sampleBatch(batch, batchId, stats, ledger)
     }
-    val result = spark.read.parquet(ledger)
+    spark.read.parquet(ledger)
       .select(col("batch_id").cast("long").as("batch_id"), col("source"),
         col("w"), col("budget"), col("n_docs"), col("n_tok"),
         col("n_docs_sampled"), col("n_tok_sampled"), col("sample_md5"))
       .orderBy("batch_id", "source")
-    (result, nBatches)
-  }
-
-  /** Batches-axis instrument seam (ScaleCheck `p13_batches_axis`):
-    * replay [[sampleBatch]] over `waves` micro-batches at FIXED data,
-    * returning each batch's body wall seconds in batch order — p13
-    * re-derives the keep rule per batch over the accreting NARROW
-    * stats store, so its per-batch cost legitimately grows with
-    * arrived STATS (3-column rows); the instrument prices that term. */
-  private[graft] def p13BatchTimes(spark: SparkSession, dir: String,
-      waves: Int): Seq[Double] = {
-    val work = Files.createTempDirectory("graft_samplemon_ax_").toString
-    val stats = s"$work/stats"
-    val ledger = s"$work/ledger"
-    val docs = Sources.table(spark, dir, "documents")
-      .select("doc_id", "source", "text")
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Double]
-    StreamSketch.runWaveReplay(spark, docs, "doc_id", work, ledger, waves) {
-      (batch, batchId) =>
-        val t0 = System.nanoTime()
-        sampleBatch(batch, batchId, stats, ledger)
-        buf += (System.nanoTime() - t0) / 1e9
-    }
-    buf.toSeq
   }
 
   // ---- p14: the kept-set CHANGE feed ---------------------------------
-
-  def p14SampleDelta(spark: SparkSession, dir: String): DataFrame =
-    p14WithBatchCount(spark, dir)._1
 
   /** p14 sample-delta: the kept-set CHANGE feed — p13 answers "which
     * documents are in the blend as of batch b"; p14 answers the question
@@ -126,22 +99,20 @@ object StreamSampler {
     * bucket-folded digests — per-batch state in any single aggregation
     * buffer stays ≤ set/(sources·buckets) ids. Both per-batch caches
     * are dropped before the next batch. */
-  private[graft] def p14WithBatchCount(spark: SparkSession, dir: String)
-      : (DataFrame, Int) = {
+  def p14SampleDelta(spark: SparkSession, dir: String): DataFrame = {
     val work = Files.createTempDirectory("graft_sampledelta_").toString
     val stats = s"$work/stats"
     val ledger = s"$work/ledger"
     val docs = Sources.table(spark, dir, "documents")
       .select("doc_id", "source", "text")
-    val nBatches = StreamSketch.runWaveReplay(spark, docs, "doc_id", work, ledger) {
+    StreamSketch.runWaveReplay(spark, docs, "doc_id", work, ledger) {
       (batch, batchId) => deltaBatch(batch, batchId, stats, ledger)
     }
-    val result = spark.read.parquet(ledger)
+    spark.read.parquet(ledger)
       .select(col("batch_id").cast("long").as("batch_id"), col("source"),
         col("n_kept"), col("n_added"), col("n_evicted"),
         col("added_md5"), col("evicted_md5"))
       .orderBy("batch_id", "source")
-    (result, nBatches)
   }
 
   /** The kept rows (doc_id, source, u, bucket) of the blend over the

@@ -44,21 +44,19 @@ import graft.out.Canonical._
   * unchanged because the quantizer is a pluggable offline artifact. */
 object StreamSemDedup {
 
-  def d20StreamSemDedup(spark: SparkSession, dir: String): DataFrame =
-    d20WithBatchCount(spark, dir)._1
-
-  /** Test seam: result + replayed micro-batch count, with the arrival
-    * order pluggable (StreamEquivSpec replays REVERSED arrival to the
-    * same pair set — the order-free claim, proven not asserted). */
-  private[graft] def d20WithBatchCount(spark: SparkSession, dir: String,
-      orderExpr: org.apache.spark.sql.Column = col("vec_id")): (DataFrame, Int) = {
+  /** The arrival order is pluggable (StreamEquivSpec replays REVERSED
+    * arrival to the same pair set — the order-free claim, proven not
+    * asserted); `waves` is the replay's batch count at fixed data
+    * (ScaleCheck's `d20_batches_axis` doubles it). */
+  def d20StreamSemDedup(spark: SparkSession, dir: String,
+      orderExpr: org.apache.spark.sql.Column = col("vec_id"),
+      waves: Int = StreamAnnIngest.SplitFiles): DataFrame = {
     val work = Files.createTempDirectory("graft_semstream_").toString
-    val (splitDir, cbPath) = prepare(spark, dir, work, orderExpr)
+    val (splitDir, cbPath) = prepare(spark, dir, work, orderExpr, waves)
     val store = s"$work/assigned"
     val pairStore = s"$work/pairs"
     runStream(spark, splitDir, s"$work/ckpt", cbPath, store, pairStore, 0L)
-    val nBatches = Replay.countBatchDirs(pairStore)
-    (readPairs(spark, pairStore), nBatches)
+    readPairs(spark, pairStore)
   }
 
   def d21SemCompact(spark: SparkSession, dir: String): DataFrame =
@@ -147,19 +145,6 @@ object StreamSemDedup {
       () => StreamAnnIngest.splitCorpus(all, splitDir, waves, orderExpr),
       () => SimilarityOps.Hier.write(all, cbPath))
     (splitDir, cbPath)
-  }
-
-  /** Batches-axis instrument seam (ScaleCheck `d20_batches_axis`):
-    * replay [[processBatch]] over `waves` micro-batches at FIXED data,
-    * returning each batch's body wall seconds in batch order. */
-  private[graft] def d20BatchTimes(spark: SparkSession, dir: String,
-      waves: Int): Seq[Double] = {
-    val work = Files.createTempDirectory("graft_semstream_ax_").toString
-    val (splitDir, cbPath) = prepare(spark, dir, work, col("vec_id"), waves)
-    val store = s"$work/assigned"
-    val pairStore = s"$work/pairs"
-    Replay.drainTimed(spark, splitDir, s"$work/ckpt")((batch, batchId) =>
-      processBatch(batch, batchId, cbPath, store, pairStore))
   }
 
   private def runStream(spark: SparkSession, inDir: String, ckpt: String,

@@ -55,53 +55,33 @@ object StreamSketch {
     * 1.6%; the StreamEquivSpec pin allows 5% (≈3σ). */
   val LgK = 12
 
-  def x8StreamSketch(spark: SparkSession, dir: String): DataFrame =
-    x8WithBatchCount(spark, dir)._1
-
-  /** Test seam: result + micro-batch count actually replayed.
-    * `orderExpr` controls which rows share a micro-batch (StreamEquivSpec
-    * replays with the REVERSED assignment to prove the merge is
-    * arrival-order-independent — register maxima and count addition
-    * don't care which batch a row landed in). */
-  private[graft] def x8WithBatchCount(spark: SparkSession, dir: String,
-      orderExpr: org.apache.spark.sql.Column = col("event_id")): (DataFrame, Int) = {
+  /** `orderExpr` controls which rows share a micro-batch
+    * (StreamEquivSpec replays with the REVERSED assignment to prove the
+    * merge is arrival-order-independent — register maxima and count
+    * addition don't care which batch a row landed in). `waves` is the
+    * replay's batch count at fixed data — ScaleCheck's
+    * `x8_batches_axis` doubles it: per-batch work is one
+    * map-side-combinable aggregation with a types × ≤1.5 KB output plus
+    * one append, independent of every prior batch, so last ≈ first is
+    * the claim as a number. */
+  def x8StreamSketch(spark: SparkSession, dir: String,
+      orderExpr: org.apache.spark.sql.Column = col("event_id"),
+      waves: Int = SplitFiles): DataFrame = {
     val work = Files.createTempDirectory("graft_sketchstream_").toString
     val splitDir = s"$work/in"
     Sources.table(spark, dir, "events")
       .select("event_id", "event_type", "user_id")
-      .repartitionByRange(SplitFiles, orderExpr)
+      .repartitionByRange(waves, orderExpr)
       .write.parquet(splitDir)
     val store = s"$work/sketches"
     Replay.drain(spark, splitDir, s"$work/ckpt", 0L)((batch, batchId) =>
       processBatch(batch, batchId, store))
-    val nBatches = Replay.countBatchDirs(store)
-    val result = spark.read.parquet(store).drop("batch_id")
+    spark.read.parquet(store).drop("batch_id")
       .groupBy("event_type")
       .agg(
         expr("hll_sketch_estimate(hll_union_agg(sk, false))").as("approx_users"),
         sum("n_events").as("n_events"))
       .orderBy("event_type")
-    (result, nBatches)
-  }
-
-  /** Batches-axis instrument seam (ScaleCheck `x8_batches_axis`):
-    * replay the sketch-append [[processBatch]] over `waves`
-    * micro-batches at FIXED data, returning each batch's body wall
-    * seconds in batch order — the mergeable-summary design point says
-    * per-batch work is one map-side-combinable aggregation with a
-    * types × ≤1.5 KB output plus one append, independent of every
-    * prior batch, so last ≈ first is the claim as a number. */
-  private[graft] def x8BatchTimes(spark: SparkSession, dir: String,
-      waves: Int): Seq[Double] = {
-    val work = Files.createTempDirectory("graft_sketchstream_ax_").toString
-    val splitDir = s"$work/in"
-    Sources.table(spark, dir, "events")
-      .select("event_id", "event_type", "user_id")
-      .repartitionByRange(waves, col("event_id"))
-      .write.parquet(splitDir)
-    val store = s"$work/sketches"
-    Replay.drainTimed(spark, splitDir, s"$work/ckpt")((batch, batchId) =>
-      processBatch(batch, batchId, store))
   }
 
   /** The batch twin: one sketch built over the whole table in a single
@@ -138,9 +118,6 @@ object StreamSketch {
     * in the bucket). */
   val BucketWidth: Double = (Hi - Lo) / Buckets
 
-  def x9StreamQuantile(spark: SparkSession, dir: String): DataFrame =
-    x9WithBatchCount(spark, dir)._1
-
   /** x9: x8's quantile counterpart — per-type p50/p90 estimates whose
     * per-batch summaries MERGE, and which — unlike x5's
     * `percentile_approx`/x8's HLL (engine-specific internals, rows-only)
@@ -168,8 +145,8 @@ object StreamSketch {
     * summing counts. This is the production shape for "p50/p90 latency
     * per key, updated per batch over 100 TB" — the exact twin would
     * re-sort every value ever seen, per batch. */
-  private[graft] def x9WithBatchCount(spark: SparkSession, dir: String,
-      orderExpr: org.apache.spark.sql.Column = col("event_id")): (DataFrame, Int) = {
+  def x9StreamQuantile(spark: SparkSession, dir: String,
+      orderExpr: org.apache.spark.sql.Column = col("event_id")): DataFrame = {
     val work = Files.createTempDirectory("graft_quantstream_").toString
     val splitDir = s"$work/in"
     Sources.table(spark, dir, "events")
@@ -181,9 +158,7 @@ object StreamSketch {
       batch.groupBy(col("event_type"), bucket(col("value")).as("b"))
         .agg(count(lit(1)).as("cnt"))
         .write.mode("overwrite").parquet(s"$store/batch_id=$batchId"))
-    val nBatches = Replay.countBatchDirs(store)
-    (quantilesFromHistogram(
-      spark.read.parquet(store).drop("batch_id")), nBatches)
+    quantilesFromHistogram(spark.read.parquet(store).drop("batch_id"))
   }
 
   /** The batch twin: the whole table pushed through one histogram —
@@ -199,9 +174,6 @@ object StreamSketch {
   /** Watchlist size: the terms whose counts the merged sketch serves —
     * t6's top-20 rule, materialized as an offline artifact. */
   val WatchK = 20
-
-  def x10StreamCms(spark: SparkSession, dir: String): DataFrame =
-    x10WithBatchCount(spark, dir)._1
 
   /** x10: t6's count-min sketch MERGED across micro-batches — the third
     * member of the mergeable-summary family (x8 HLL registers merge by
@@ -230,8 +202,8 @@ object StreamSketch {
     * (bit-for-bit vs the whole-table twin), the CMS overcount property
     * (est ≥ exact count per watched term), and arrival-order
     * independence (reversed replay merges identically). */
-  private[graft] def x10WithBatchCount(spark: SparkSession, dir: String,
-      orderExpr: org.apache.spark.sql.Column = col("doc_id")): (DataFrame, Int) = {
+  def x10StreamCms(spark: SparkSession, dir: String,
+      orderExpr: org.apache.spark.sql.Column = col("doc_id")): DataFrame = {
     import graft.ops.TextOps
     val work = Files.createTempDirectory("graft_cmsstream_").toString
     val splitDir = s"$work/in"
@@ -247,10 +219,9 @@ object StreamSketch {
     Replay.drain(spark, splitDir, s"$work/ckpt", 0L)((batch, batchId) =>
       cmsPartial(batch)
         .write.mode("overwrite").parquet(s"$store/batch_id=$batchId"))
-    val nBatches = Replay.countBatchDirs(store)
     val merged = spark.read.parquet(store).drop("batch_id")
       .groupBy("r", "bucket").agg(sum("c").as("c"))
-    (watchEstimates(spark.read.parquet(watchPath), merged), nBatches)
+    watchEstimates(spark.read.parquet(watchPath), merged)
   }
 
   /** The batch twin: the whole table pushed through one sketch — equal
@@ -476,9 +447,6 @@ object StreamSketch {
     Replay.countBatchDirs(store)
   }
 
-  def x11StreamWindowQuantile(spark: SparkSession, dir: String): DataFrame =
-    x11WithBatchCount(spark, dir)._1
-
   /** x11: the claim x8/x9/x10 all make in prose — "any window of batches
     * merges after the fact at interactive cost" — converted into an
     * oracle-checked gate: per-type p50/p90 over ONLY the last
@@ -504,8 +472,8 @@ object StreamSketch {
     * size AND of total stream length (older partials are partition-pruned
     * by `batch_id`, never deserialized) — where the exact twin re-sorts
     * the window's raw values per question asked. */
-  private[graft] def x11WithBatchCount(spark: SparkSession, dir: String,
-      workDir: Option[String] = None): (DataFrame, Int) = {
+  def x11StreamWindowQuantile(spark: SparkSession, dir: String,
+      workDir: Option[String] = None): DataFrame = {
     val work = workDir.getOrElse(Files.createTempDirectory("graft_winquant_").toString)
     val store = s"$work/hist"
     val events = Sources.table(spark, dir, "events")
@@ -516,7 +484,7 @@ object StreamSketch {
           .agg(count(lit(1)).as("cnt"))
           .write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
     }
-    (x11Serve(spark, store, nBatches), nBatches)
+    x11Serve(spark, store, nBatches)
   }
 
   /** The windowed quantile serve as a standalone read over the histogram
@@ -579,11 +547,8 @@ object StreamSketch {
     * demand" reads types × [[WindowBatches]] kilobyte rows no matter
     * how long the stream has run or how big the corpus is; the exact
     * twin re-shuffles every user_id in the window per question. */
-  def x12StreamWindowDistinct(spark: SparkSession, dir: String): DataFrame =
-    x12WithBatchCount(spark, dir)._1
-
-  private[graft] def x12WithBatchCount(spark: SparkSession, dir: String,
-      workDir: Option[String] = None): (DataFrame, Int) = {
+  def x12StreamWindowDistinct(spark: SparkSession, dir: String,
+      workDir: Option[String] = None): DataFrame = {
     val work = workDir.getOrElse(Files.createTempDirectory("graft_windist_").toString)
     val store = s"$work/sketches"
     val events = Sources.table(spark, dir, "events")
@@ -591,7 +556,7 @@ object StreamSketch {
     val nBatches = runWaveReplay(spark, events, "event_id", work, store) {
       (batch, batchId) => processBatch(batch, batchId, store)
     }
-    (x12Serve(spark, store, nBatches), nBatches)
+    x12Serve(spark, store, nBatches)
   }
 
   /** The windowed distinct serve as a standalone read over the HLL
@@ -637,11 +602,8 @@ object StreamSketch {
     * exact row set and the oracle rebuilds the identical windowed
     * sketch. StreamEquivSpec pins serve ≡ window batch twin bit-for-bit
     * and the per-term overcount property vs exact window counts. */
-  def x13StreamWindowCms(spark: SparkSession, dir: String): DataFrame =
-    x13WithBatchCount(spark, dir)._1
-
-  private[graft] def x13WithBatchCount(spark: SparkSession, dir: String,
-      workDir: Option[String] = None): (DataFrame, Int) = {
+  def x13StreamWindowCms(spark: SparkSession, dir: String,
+      workDir: Option[String] = None): DataFrame = {
     import graft.ops.TextOps
     val work = workDir.getOrElse(Files.createTempDirectory("graft_wincms_").toString)
     val store = s"$work/counters"
@@ -657,7 +619,7 @@ object StreamSketch {
         cmsPartial(batch)
           .write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
     }
-    (x13Serve(spark, store, watchPath, nBatches), nBatches)
+    x13Serve(spark, store, watchPath, nBatches)
   }
 
   /** The windowed CMS serve as a standalone read (x18's vacuum seam).
@@ -746,13 +708,12 @@ object StreamSketch {
       : (DataFrame, Array[org.apache.spark.sql.Row], Seq[Long], Int, Int) = {
     val work = Files.createTempDirectory("graft_retention_").toString
     val store = s"$work/hist"
-    val (before, nBatches) = x11WithBatchCount(spark, dir, Some(work))
     // materialize the pre-vacuum serve NOW — a lazy frame would re-read
     // the store after the vacuum and make the invariance check vacuous
-    val beforeRows = before.collect()
+    val beforeRows = x11StreamWindowQuantile(spark, dir, Some(work)).collect()
     val partsBefore = Replay.countBatchDirs(store)
-    val retired = vacuumBatches(spark, store, nBatches - WindowBatches)
-    val after = x11Serve(spark, store, nBatches)
+    val retired = vacuumBatches(spark, store, partsBefore - WindowBatches)
+    val after = x11Serve(spark, store, partsBefore)
     (after, beforeRows, retired, partsBefore, Replay.countBatchDirs(store))
   }
 
@@ -782,18 +743,15 @@ object StreamSketch {
     * ever seen and windows over their first appearance, per question;
     * the sketch answer is free once the per-batch partials the store
     * already pays for exist. */
-  def x17StreamGrowth(spark: SparkSession, dir: String): DataFrame =
-    x17WithBatchCount(spark, dir)._1
-
-  private[graft] def x17WithBatchCount(spark: SparkSession, dir: String,
-      workDir: Option[String] = None): (DataFrame, Int) = {
+  def x17StreamGrowth(spark: SparkSession, dir: String,
+      workDir: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val work = workDir.getOrElse(
       Files.createTempDirectory("graft_growthstream_").toString)
     val store = s"$work/sketches"
     val events = Sources.table(spark, dir, "events")
       .select("event_id", "event_type", "user_id")
-    val nBatches = runWaveReplay(spark, events, "event_id", work, store) {
+    runWaveReplay(spark, events, "event_id", work, store) {
       (batch, batchId) => processBatch(batch, batchId, store)
     }
     val partials = spark.read.parquet(store)
@@ -807,13 +765,12 @@ object StreamSketch {
         sum(when(col("batch_id") === col("b"), col("n_events"))
           .otherwise(0L)).as("n_events"))
     val w = Window.partitionBy("event_type").orderBy("batch_id")
-    val result = cum
+    cum
       .withColumn("approx_new",
         col("cum_users") - coalesce(lag("cum_users", 1).over(w), lit(0L)))
       .select(col("batch_id").cast("long").as("batch_id"), col("event_type"),
         col("approx_new"), col("cum_users"), col("n_events"))
       .orderBy("batch_id", "event_type")
-    (result, nBatches)
   }
 
   /** The exact twin of the growth curve under the membership rule: a
@@ -858,15 +815,12 @@ object StreamSketch {
     * touches candidates × d grid rows. "Who is trending over 100 TB of
     * stream" costs kilobytes per batch — the exact twin re-shuffles
     * every token ever seen, per question. */
-  def x16StreamTopk(spark: SparkSession, dir: String): DataFrame =
-    x16WithBatchCount(spark, dir)._1
-
-  private[graft] def x16WithBatchCount(spark: SparkSession, dir: String): (DataFrame, Int) = {
+  def x16StreamTopk(spark: SparkSession, dir: String): DataFrame = {
     val work = Files.createTempDirectory("graft_topkstream_").toString
     val store = s"$work/counters"
     val cands = s"$work/candidates"
     val docs = Sources.table(spark, dir, "documents").select("doc_id", "text")
-    val nBatches = runWaveReplay(spark, docs, "doc_id", work, store) {
+    runWaveReplay(spark, docs, "doc_id", work, store) {
       (batch, batchId) =>
         import graft.ops.TextOps
         cmsPartial(batch)
@@ -880,9 +834,8 @@ object StreamSketch {
     val merged = spark.read.parquet(store).drop("batch_id")
       .groupBy("r", "bucket").agg(sum("c").as("c"))
     val candidates = spark.read.parquet(cands).select("token").distinct()
-    val result = watchEstimates(candidates, merged)
+    watchEstimates(candidates, merged)
       .orderBy(col("cms_est").desc, col("token")).limit(WatchK)
-    (result, nBatches)
   }
 
   /** The batch twin: per-slice local top-K unioned, ranked by the
@@ -912,9 +865,6 @@ object StreamSketch {
     * pooled-prior mean. */
   val DriftZ = 2.0
 
-  def x15StreamDrift(spark: SparkSession, dir: String): DataFrame =
-    x15WithBatchCount(spark, dir)._1
-
   /** x15: the MONITORING member of the mergeable family — per-batch
     * MOMENT partials (count, Σvalue, Σvalue² as DECIMAL(18,4) addends,
     * so the sums are order-independent and merge by exact addition) and
@@ -941,7 +891,7 @@ object StreamSketch {
     * batch-over-baseline comparison merges after the fact by decimal
     * addition. The exact twin re-aggregates the full history per
     * question asked. */
-  private[graft] def x15WithBatchCount(spark: SparkSession, dir: String): (DataFrame, Int) = {
+  def x15StreamDrift(spark: SparkSession, dir: String): DataFrame = {
     val work = Files.createTempDirectory("graft_driftstream_").toString
     val store = s"$work/moments"
     val events = Sources.table(spark, dir, "events")
@@ -951,7 +901,7 @@ object StreamSketch {
         momentPartial(batch)
           .write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
     }
-    (driftFromMoments(spark.read.parquet(store), nBatches - 1), nBatches)
+    driftFromMoments(spark.read.parquet(store), nBatches - 1)
   }
 
   /** The batch twin: the latest/prior slices named by the membership

@@ -145,6 +145,77 @@ class SinkSpec extends AnyFunSuite {
       "the re-run's store diverged from an uninterrupted run")
   }
 
+  test("Replay.recorded: Spark's progress entry per batch a drain ran on this thread, nothing else") {
+    // the record is the query's own per-batch progress: as many entries
+    // as batches the call ran (a fresh store shows the same number of
+    // partitions), in batch order, each with its addBatch time; a
+    // drain on another thread or outside any scope is not recorded,
+    // and a failed drain still fails the caller
+    import graft.streaming.Replay
+    val events = Sources.table(spark, sf, "events").select("event_id", "event_type")
+    def prepared(work: String, in: String, rows: DataFrame, files: Int): Unit = {
+      rows.repartitionByRange(files, col("event_id")).write.parquet(s"$work/$in")
+      new java.io.File(s"$work/$in").listFiles()
+        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+        .zipWithIndex.foreach { case (f, i) => Replay.stampArrival(f, i) }
+    }
+    def drain(work: String, in: String, offset: Long, crashAt: Option[Long] = None): Unit =
+      Replay.drain(spark, s"$work/$in", s"$work/ckpt_$in", offset) { (batch, batchId) =>
+        batch.groupBy("event_type").agg(count(lit(1)).as("cnt"))
+          .write.mode("overwrite").parquet(s"$work/st/batch_id=$batchId")
+        if (crashAt.contains(batchId)) sys.error(s"injected failure in batch $batchId")
+      }
+    val whole = tmp("graft_rec_")
+    prepared(whole, "in", events, 4)
+    val ((), ran) = Replay.recorded(drain(whole, "in", 0L))
+    assert(ran.map(_.batchId) == (0L until 4L))
+    assert(ran.forall(_.durationMs.containsKey("addBatch")))
+    assert(ran.map(_.numInputRows).sum == events.count())
+    assert(ran.size == Replay.countBatchDirs(s"$whole/st"))
+    // a phased run (two queries, the second's bodies offset by 2): the
+    // record appends both, the second phase under its own query's ids
+    val phased = tmp("graft_rec_")
+    prepared(phased, "inA", events.filter(col("event_id") % 2 === 0), 2)
+    prepared(phased, "inB", events.filter(col("event_id") % 2 =!= 0), 2)
+    val ((), phases) = Replay.recorded {
+      drain(phased, "inA", 0L)
+      drain(phased, "inB", 2L)
+    }
+    assert(phases.map(_.batchId) == Seq(0L, 1L, 0L, 1L))
+    assert(phases.map(_.id).distinct.size == 2 && phases(1).id != phases(2).id)
+    assert(phases.size == Replay.countBatchDirs(s"$phased/st"))
+    // a drain another thread runs while the scope is open is its own
+    val other = tmp("graft_rec_")
+    prepared(other, "in", events, 4)
+    val ((), seen) = Replay.recorded {
+      val t = new Thread(() => drain(other, "in", 0L))
+      t.start(); t.join()
+    }
+    assert(seen.isEmpty, s"another thread's drain leaked ${seen.size} entries into the scope")
+    assert(Replay.countBatchDirs(s"$other/st") == 4, "the other thread's drain did not run")
+    // outside any scope a drain runs and records nothing
+    val bare = tmp("graft_rec_")
+    prepared(bare, "in", events, 4)
+    drain(bare, "in", 0L)
+    assert(Replay.countBatchDirs(s"$bare/st") == 4)
+    assert(Replay.recorded(())._2.isEmpty)
+    // a failed drain rethrows through the scope
+    val failed = tmp("graft_rec_")
+    prepared(failed, "in", events, 4)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      Replay.recorded(drain(failed, "in", 0L, crashAt = Some(1L)))
+    }
+  }
+
+  test("Replay.appendFlushed leaves no flush-sentinel directory behind") {
+    def flushDirs(): Int =
+      Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+        .map(_.count(_.startsWith("graft_flush_"))).getOrElse(0)
+    val before = flushDirs()
+    SparkEntry.queries("q07_tumbling_window")(spark, sf).collect()
+    assert(flushDirs() == before, "q07's replay left its graft_flush_* sentinel dir in the temp dir")
+  }
+
   test("partitionedAppend writes the ES-analog partitioned layout, replay-safe") {
     val out = tmp("graft_part_out_"); val ckpt = tmp("graft_part_ckpt_")
     val expected = Sources.table(spark, sf, "events").count()

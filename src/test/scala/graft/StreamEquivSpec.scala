@@ -12,6 +12,12 @@ import graft.streaming.{Replay, StreamPipeline}
 class StreamEquivSpec extends AnyFunSuite {
   import TestSpark._
 
+  /** `f`'s result and the number of micro-batches its replays ran. */
+  private def withBatches[T](f: => T): (T, Int) = {
+    val (r, batches) = Replay.recorded(f)
+    (r, batches.size)
+  }
+
   test("q07 tumbling window: batch twin ≡ streaming gate entry") {
     val batch = rows(Windowed.q07TumblingBatch(spark, sf))
     val stream = rows(Windowed.q07Tumbling(spark, sf))
@@ -186,7 +192,7 @@ class StreamEquivSpec extends AnyFunSuite {
     // over batches is the full d3 answer with no dedup pass at read time
     val batch = rows(graft.ops.DedupOps.d3MinhashLsh(spark, sf))
     val (streamDf, nBatches) =
-      graft.streaming.IncrementalDedup.d12WithBatchCount(spark, sf)
+      withBatches(graft.streaming.IncrementalDedup.d12StreamMinhash(spark, sf))
     assert(nBatches == graft.streaming.IncrementalDedup.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(batch.nonEmpty)
@@ -196,8 +202,8 @@ class StreamEquivSpec extends AnyFunSuite {
   test("s11 streaming ANN ingest: stream-built index serves batch s3's answer") {
     val batch = rows(graft.ops.SimilarityOps.s3AnnIvf(spark, sf))
     val (streamDf, nBatches) =
-      graft.streaming.StreamAnnIngest.ingestWithBatchCount(spark, sf,
-        graft.ops.SimilarityOps.Flat, 1, org.apache.spark.sql.functions.col("vec_id"))
+      withBatches(graft.streaming.StreamAnnIngest.ingestServe(spark, sf,
+        graft.ops.SimilarityOps.Flat, 1, org.apache.spark.sql.functions.col("vec_id")))
     assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(batch.nonEmpty)
@@ -323,8 +329,8 @@ class StreamEquivSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val batch = rows(graft.ops.SimilarityOps.s22AnnHier(spark, sf))
     val (streamDf, nBatches) =
-      graft.streaming.StreamAnnIngest.ingestWithBatchCount(spark, sf,
-        graft.ops.SimilarityOps.Hier, 1, col("vec_id"))
+      withBatches(graft.streaming.StreamAnnIngest.ingestServe(spark, sf,
+        graft.ops.SimilarityOps.Hier, 1, col("vec_id")))
     assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(batch.nonEmpty)
@@ -341,8 +347,8 @@ class StreamEquivSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"))
     // order-free (the s11 move): each row assigns independently against
     // the static two-level codebook, so reversed arrival is the same set
-    val (rev, nr) = graft.streaming.StreamAnnIngest
-      .ingestWithBatchCount(spark, sf, graft.ops.SimilarityOps.Hier, 1, negate(col("vec_id")))
+    val (rev, nr) = withBatches(graft.streaming.StreamAnnIngest
+      .ingestServe(spark, sf, graft.ops.SimilarityOps.Hier, 1, negate(col("vec_id"))))
     assert(nr == graft.streaming.StreamAnnIngest.SplitFiles)
     assert(rows(rev) == batch,
       "reversed-arrival s23 diverged from batch s22 — hier index union is order-dependent")
@@ -350,8 +356,8 @@ class StreamEquivSpec extends AnyFunSuite {
 
   test("s20 streaming radius alerts: per-arrival alert union ≡ batch s19, raised incrementally") {
     val batch = rows(graft.ops.SimilarityOps.s19AnnRadius(spark, sf))
-    val (streamDf, nBatches, perBatchF) =
-      graft.streaming.StreamAnnIngest.s20WithBatchCount(spark, sf)
+    val ((streamDf, perBatchF), nBatches) =
+      withBatches(graft.streaming.StreamAnnIngest.s20WithInfo(spark, sf))
     val perBatch = perBatchF()
     assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
@@ -375,8 +381,8 @@ class StreamEquivSpec extends AnyFunSuite {
     // cells must genuinely differ from the flat ones somewhere (else
     // the quantizer seam is vacuous on this fixture)
     val batch = rows(graft.ops.SimilarityOps.s29HierRadius(spark, sf))
-    val (streamDf, nBatches, perBatchF) =
-      graft.streaming.StreamAnnIngest.s30WithBatchCount(spark, sf)
+    val ((streamDf, perBatchF), nBatches) =
+      withBatches(graft.streaming.StreamAnnIngest.s30WithInfo(spark, sf))
     val perBatch = perBatchF()
     assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
@@ -395,8 +401,8 @@ class StreamEquivSpec extends AnyFunSuite {
     val np = graft.streaming.StreamAnnIngest.MultiNprobe
     val batch = rows(graft.ops.SimilarityOps.s3AnnIvfProbe(spark, sf, np))
     val (streamDf, nBatches) =
-      graft.streaming.StreamAnnIngest.ingestWithBatchCount(spark, sf,
-        graft.ops.SimilarityOps.Flat, np, org.apache.spark.sql.functions.col("vec_id"))
+      withBatches(graft.streaming.StreamAnnIngest.ingestServe(spark, sf,
+        graft.ops.SimilarityOps.Flat, np, org.apache.spark.sql.functions.col("vec_id")))
     assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(batch.nonEmpty)
@@ -427,8 +433,8 @@ class StreamEquivSpec extends AnyFunSuite {
     val survivors = graft.streaming.StreamAnnIngest.survivorFilter(
       all.select("vec_id", "v", "nrm", "label"))
     val batch = rows(ops.probeAssigned(ops.assignCells(survivors, seeds)))
-    val (streamDf, nBatches, drainsF) =
-      graft.streaming.StreamAnnIngest.s12WithBatchCount(spark, sf)
+    val ((streamDf, drainsF), nBatches) =
+      withBatches(graft.streaming.StreamAnnIngest.s12WithInfo(spark, sf))
     val drains = drainsF()
     assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
@@ -481,8 +487,8 @@ class StreamEquivSpec extends AnyFunSuite {
       all.select("vec_id", "v", "nrm", "label"))
     val batch = rows(ops.probeAssigned(
       ops.hierAssignCells(survivors, ops.ivfSeedCentroids(all), ops.HierSub)))
-    val (compDf, nBatches, drainsF, nLiveF, nDroppedF) =
-      graft.streaming.StreamAnnIngest.s25WithInfo(spark, sf)
+    val ((compDf, drainsF, nLiveF, nDroppedF), nBatches) =
+      withBatches(graft.streaming.StreamAnnIngest.s25WithInfo(spark, sf))
     val (drains, nLive, nDropped) = (drainsF(), nLiveF(), nDroppedF())
     assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
@@ -521,8 +527,8 @@ class StreamEquivSpec extends AnyFunSuite {
           .otherwise(col("v")))
       .withColumn("nrm", sqrt(ops.dot(col("v"), col("v"))))
     val batch = rows(ops.probeAssigned(ops.assignCells(updated, seeds)))
-    val (streamDf, nBatches, nTombsF, nSameF, nMovedF) =
-      graft.streaming.StreamAnnIngest.s16WithInfo(spark, sf)
+    val ((streamDf, nTombsF, nSameF, nMovedF), nBatches) =
+      withBatches(graft.streaming.StreamAnnIngest.s16WithInfo(spark, sf))
     val (nTombs, nSame, nMoved) = (nTombsF(), nSameF(), nMovedF())
     // 4 corpus batches + the update wave
     assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles + 1,
@@ -557,8 +563,8 @@ class StreamEquivSpec extends AnyFunSuite {
       .withColumn("nrm", sqrt(ops.dot(col("v"), col("v"))))
     val batch = rows(ops.probeAssigned(
       ops.hierAssignCells(updated, ops.ivfSeedCentroids(all), ops.HierSub)))
-    val (streamDf, nBatches, nTombsF, nSameF, nMovedF) =
-      graft.streaming.StreamAnnIngest.s27WithInfo(spark, sf)
+    val ((streamDf, nTombsF, nSameF, nMovedF), nBatches) =
+      withBatches(graft.streaming.StreamAnnIngest.s27WithInfo(spark, sf))
     val (nTombs, nSame, nMoved) = (nTombsF(), nSameF(), nMovedF())
     assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles + 1,
       s"replay ran $nBatches micro-batches — expected corpus batches + update wave")
@@ -603,9 +609,9 @@ class StreamEquivSpec extends AnyFunSuite {
     // sparse group ids and all — must plug in unchanged, and the
     // store-served probe must equal batch s26's answer exactly
     val expect = rows(ops.s26HierRetrain(spark, sf))
-    val (store, _, nBatches) =
-      graft.streaming.StreamAnnIngest.runIngestStream(spark, sf,
-        ops.Hier.retrained, col("vec_id"))
+    val ((store, _), nBatches) =
+      withBatches(graft.streaming.StreamAnnIngest.runIngestStream(spark, sf,
+        ops.Hier.retrained, col("vec_id")))
     assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     val served = rows(ops.probeAssigned(
@@ -623,7 +629,7 @@ class StreamEquivSpec extends AnyFunSuite {
     // store, the marker flips, and the serve must equal the closed-form
     // gen-1 chain over the UPDATED corpus — no stream anywhere in the
     // oracle side
-    val (live, nBatches) = graft.streaming.StreamAnnIngest.s27LiveRows(spark, sf)
+    val (live, nBatches) = withBatches(graft.streaming.StreamAnnIngest.s27LiveRows(spark, sf))
     assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles + 1,
       s"replay ran $nBatches micro-batches — expected corpus batches + update wave")
     val liveC = live.cache()
@@ -673,7 +679,7 @@ class StreamEquivSpec extends AnyFunSuite {
   }
 
   test("p11 stream blend: ledger accretes per batch, final batch ≡ p9's batch view, totals monotone") {
-    val (df, nBatches) = graft.streaming.BlendMonitor.p11WithBatchCount(spark, sf)
+    val (df, nBatches) = withBatches(graft.streaming.BlendMonitor.p11StreamBlend(spark, sf))
     assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     val ledger = df.collect()
@@ -706,8 +712,8 @@ class StreamEquivSpec extends AnyFunSuite {
 
   test("p12 blend-stats compaction: mid-stream sum fold invisible to the ledger, partitions bounded") {
     val half = graft.streaming.StreamSketch.SplitFiles / 2
-    val (df, nBatches, before, after, end) =
-      graft.streaming.BlendMonitor.p12WithStoreInfo(spark, sf)
+    val ((df, before, after, end), nBatches) =
+      withBatches(graft.streaming.BlendMonitor.p12WithStoreInfo(spark, sf))
     assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
       s"phased replay ran $nBatches micro-batches")
     // the fold genuinely consolidated: half the replay's stats dirs
@@ -723,7 +729,7 @@ class StreamEquivSpec extends AnyFunSuite {
   }
 
   test("p13 stream sampler: ledger accretes per batch, final batch ≡ p9's sample, binding source whole") {
-    val (df, nBatches) = graft.streaming.StreamSampler.p13WithBatchCount(spark, sf)
+    val (df, nBatches) = withBatches(graft.streaming.StreamSampler.p13StreamSample(spark, sf))
     assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     val ledger = df.collect()
@@ -763,12 +769,12 @@ class StreamEquivSpec extends AnyFunSuite {
     val batch = rows(graft.ops.SimilarityOps.d20BatchPairs(spark, sf))
     assert(batch.nonEmpty)
     val (streamDf, nBatches) =
-      graft.streaming.StreamSemDedup.d20WithBatchCount(spark, sf)
+      withBatches(graft.streaming.StreamSemDedup.d20StreamSemDedup(spark, sf))
     assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(rows(streamDf) == batch)
-    val (revDf, nRev) = graft.streaming.StreamSemDedup
-      .d20WithBatchCount(spark, sf, negate(col("vec_id")))
+    val (revDf, nRev) = withBatches(graft.streaming.StreamSemDedup
+      .d20StreamSemDedup(spark, sf, negate(col("vec_id"))))
     assert(nRev == graft.streaming.StreamAnnIngest.SplitFiles)
     assert(rows(revDf) == batch,
       "reversed-arrival d20 diverged from batch d18 pairs — emission is order-dependent")
@@ -804,7 +810,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val batch = rows(graft.ops.MultimodalOps.m13BmpNearDup(spark, sf))
     assert(batch.nonEmpty)
     val (streamDf, nBatches) =
-      graft.streaming.StreamMediaDedup.m15WithInfo(spark, sf)
+      withBatches(graft.streaming.StreamMediaDedup.m15StreamNearDup(spark, sf))
     assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(rows(streamDf) == batch)
@@ -813,8 +819,8 @@ class StreamEquivSpec extends AnyFunSuite {
     val docs = Sources.table(spark, sf, "documents").select("doc_id", "text")
       .withColumn("rk", lit(graft.streaming.StreamSketch.SplitFiles - 1)
         - pmod(col("doc_id"), lit(graft.streaming.StreamSketch.SplitFiles)))
-    val (revPairs, _, nRev) =
-      graft.streaming.StreamMediaDedup.runReplay(spark, docs, "rk")
+    val ((revPairs, _), nRev) =
+      withBatches(graft.streaming.StreamMediaDedup.runReplay(spark, docs, "rk"))
     assert(nRev == graft.streaming.StreamSketch.SplitFiles)
     assert(rows(revPairs) == batch,
       "reversed-arrival m15 diverged from batch m13 — the re-derivation is order-dependent")
@@ -828,7 +834,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val batch = rows(graft.ops.MultimodalOps.m14WavNearDup(spark, sf))
     assert(batch.nonEmpty)
     val (streamDf, nBatches) =
-      graft.streaming.StreamMediaDedup.m18WithInfo(spark, sf)
+      withBatches(graft.streaming.StreamMediaDedup.m18StreamWavNearDup(spark, sf))
     assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(rows(streamDf) == batch,
@@ -836,7 +842,7 @@ class StreamEquivSpec extends AnyFunSuite {
   }
 
   test("m16 change feed: conservation, batch 0 all-additions, digest null-ness") {
-    val (df, nBatches) = graft.streaming.StreamMediaDedup.m16WithInfo(spark, sf)
+    val (df, nBatches) = withBatches(graft.streaming.StreamMediaDedup.m16NearDupDelta(spark, sf))
     assert(nBatches == graft.streaming.StreamSketch.SplitFiles)
     val ledger = df.collect()
     assert(ledger.length == nBatches)
@@ -876,8 +882,8 @@ class StreamEquivSpec extends AnyFunSuite {
         concat(lit("background-"), col("id").cast("string"),
           lit(" payload with enough distinct bytes to matter")).as("text"))
     val docs = clique.unionByName(bg)
-    val (finalPairs, ledgerDf, n) =
-      graft.streaming.StreamMediaDedup.runReplay(spark, docs, "doc_id")
+    val ((finalPairs, ledgerDf), n) =
+      withBatches(graft.streaming.StreamMediaDedup.runReplay(spark, docs, "doc_id"))
     assert(n == m)
     val ledger = ledgerDf.collect().map(r =>
       r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
@@ -961,8 +967,8 @@ class StreamEquivSpec extends AnyFunSuite {
   test("m20 streaming consensus: final channel-tagged set ≡ batch m17, ledger conserves") {
     val batch = rows(graft.ops.MultimodalOps.m17ConsensusNearDup(spark, sf))
     assert(batch.nonEmpty)
-    val (streamDf, ledgerDf, nBatches) =
-      graft.streaming.StreamMediaDedup.m20WithInfo(spark, sf)
+    val ((streamDf, ledgerDf), nBatches) =
+      withBatches(graft.streaming.StreamMediaDedup.m20WithInfo(spark, sf))
     assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(rows(streamDf) == batch,
@@ -1031,8 +1037,8 @@ class StreamEquivSpec extends AnyFunSuite {
       .select((col("id") * 34L + 17L).as("doc_id"), lit("xx").as("lang"),
         payload.as("text"))
     val docs = pair.unionByName(crowd)
-    val (finalDf, ledgerDf, n) =
-      graft.streaming.StreamMediaDedup.runConsensusReplay(spark, docs, "doc_id")
+    val ((finalDf, ledgerDf), n) =
+      withBatches(graft.streaming.StreamMediaDedup.runConsensusReplay(spark, docs, "doc_id"))
     assert(n == m)
     // the flip really happened: the pair was `both` while cold and
     // `audio` after the image-side crossing
@@ -1195,7 +1201,7 @@ class StreamEquivSpec extends AnyFunSuite {
   }
 
   test("p14 sample delta: conservation per source, batch 0 all-additions, both directions occur, final blend ≡ p9") {
-    val (df, nBatches) = graft.streaming.StreamSampler.p14WithBatchCount(spark, sf)
+    val (df, nBatches) = withBatches(graft.streaming.StreamSampler.p14SampleDelta(spark, sf))
     assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     val ledger = df.collect()
@@ -1413,7 +1419,7 @@ class StreamEquivSpec extends AnyFunSuite {
     // implements, and p2's n_kept must equal everything p1's tail stages
     // (near/contam/kept) still hold — the funnel prefix is stage-exact
     val (streamDf, nBatches) =
-      graft.streaming.StreamFunnel.p2WithBatchCount(spark, sf)
+      withBatches(graft.streaming.StreamFunnel.p2StreamFunnel(spark, sf))
     assert(nBatches == graft.streaming.StreamFunnel.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     val p1 = graft.ops.PipelineOps.p1PipelineLedger(spark, sf)
@@ -1447,7 +1453,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val copies = docs.join(eligIds, Seq("doc_id"))
       .withColumn("doc_id", col("doc_id") + lit(1000000L)) // % EvalMod preserved
     val planted = docs.unionByName(copies)
-    val (streamDf, nBatches) = graft.streaming.StreamFunnel.p2From(planted)
+    val (streamDf, nBatches) = withBatches(graft.streaming.StreamFunnel.p2From(planted))
     assert(nBatches == graft.streaming.StreamFunnel.SplitFiles)
     val nExact = streamDf.agg(sum("n_exact_dup")).collect()(0).getLong(0)
     assert(nExact == 5, s"expected the 5 planted copies to drop, got $nExact")
@@ -1486,7 +1492,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val copies = copyIds.map(id =>
       original.withColumn("doc_id", lit(id))).reduce(_ unionByName _)
     val planted = docs.unionByName(copies)
-    val (streamDf, nBatches) = graft.streaming.StreamFunnel.p2From(planted)
+    val (streamDf, nBatches) = withBatches(graft.streaming.StreamFunnel.p2From(planted))
     assert(nBatches == graft.streaming.StreamFunnel.SplitFiles)
     val totals = streamDf.agg(
       sum("n_docs").as("nd"), sum("n_exact_dup").as("ne")).collect()(0)
@@ -1514,7 +1520,7 @@ class StreamEquivSpec extends AnyFunSuite {
     assert(orphans.count() == 0,
       "fixture has a chain-shaped cluster — p3≡p1 parity not expected")
     val (streamDf, nBatches) =
-      graft.streaming.FullFunnel.p3WithBatchCount(spark, sf)
+      withBatches(graft.streaming.FullFunnel.p3StreamFunnel(spark, sf))
     assert(nBatches == graft.streaming.FullFunnel.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     val p1 = rows(graft.ops.PipelineOps.p1PipelineLedger(spark, sf))
@@ -1551,7 +1557,7 @@ class StreamEquivSpec extends AnyFunSuite {
       .filter(col("jac") >= 0.7)
     assert(ver.count() == 3, "planted truncations failed to verify at J >= 0.7")
     val twin = rows(graft.streaming.FullFunnel.batchTwin(planted))
-    val (streamDf, nBatches) = graft.streaming.FullFunnel.p3From(planted)
+    val (streamDf, nBatches) = withBatches(graft.streaming.FullFunnel.p3From(planted))
     assert(nBatches == graft.streaming.FullFunnel.SplitFiles)
     assert(rows(streamDf) == twin, "stream diverged from the batch twin")
     // the fixture's natural near-dup count is 14 (deterministic md5/LSH,
@@ -1563,7 +1569,7 @@ class StreamEquivSpec extends AnyFunSuite {
   test("x8 merged stream sketches ≡ single batch sketch, within 5% of exact") {
     import org.apache.spark.sql.functions._
     val (streamDf, nBatches) =
-      graft.streaming.StreamSketch.x8WithBatchCount(spark, sf)
+      withBatches(graft.streaming.StreamSketch.x8StreamSketch(spark, sf))
     assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     val stream = rows(streamDf)
@@ -1593,7 +1599,7 @@ class StreamEquivSpec extends AnyFunSuite {
   test("x9 merged stream histograms ≡ whole-table histogram, quantiles within one bucket of exact") {
     import org.apache.spark.sql.functions._
     val (streamDf, nBatches) =
-      graft.streaming.StreamSketch.x9WithBatchCount(spark, sf)
+      withBatches(graft.streaming.StreamSketch.x9StreamQuantile(spark, sf))
     assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     val stream = rows(streamDf)
@@ -1632,7 +1638,7 @@ class StreamEquivSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val w17 = java.nio.file.Files.createTempDirectory("graft_growth17_").toString
     val (growth, nBatches) =
-      graft.streaming.StreamSketch.x17WithBatchCount(spark, sf, Some(w17))
+      withBatches(graft.streaming.StreamSketch.x17StreamGrowth(spark, sf, Some(w17)))
     assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     val g = growth.collect()
@@ -1689,7 +1695,7 @@ class StreamEquivSpec extends AnyFunSuite {
   test("p6 incremental export: manifest ≡ from-scratch twin, rows spread across batches") {
     import org.apache.spark.sql.functions.col
     val (streamDf, nBatches) =
-      graft.streaming.IncrementalExport.p6WithBatchCount(spark, sf)
+      withBatches(graft.streaming.IncrementalExport.p6IncrementalExport(spark, sf))
     assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     val twin = rows(graft.streaming.IncrementalExport.p6BatchTwin(spark, sf))
@@ -1726,15 +1732,16 @@ class StreamEquivSpec extends AnyFunSuite {
     val work = java.nio.file.Files.createTempDirectory("graft_p6crash_").toString
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       graft.streaming.IncrementalExport
-        .p6WithBatchCount(spark, sf, crashAt = Some(2L), workDir = Some(work))
+        .p6IncrementalExport(spark, sf, crashAt = Some(2L), workDir = Some(work))
     }
     // the tear really happened: batch 2's manifest landed, its keys did not
     assert(new java.io.File(s"$work/manifest/batch_id=2").exists(),
       "crash fired before the manifest write — the tear under test never formed")
     assert(!new java.io.File(s"$work/keys/batch_id=2").exists(),
       "keys for the dying batch exist — the crash seam is after both writes")
-    val (resumed, nBatches) = graft.streaming.IncrementalExport
-      .p6WithBatchCount(spark, sf, workDir = Some(work))
+    val resumed = graft.streaming.IncrementalExport
+      .p6IncrementalExport(spark, sf, workDir = Some(work))
+    val nBatches = Replay.countBatchDirs(s"$work/manifest")
     assert(nBatches == graft.streaming.StreamSketch.SplitFiles)
     assert(rows(resumed) ==
       rows(graft.streaming.IncrementalExport.p6BatchTwin(spark, sf)),
@@ -1757,7 +1764,8 @@ class StreamEquivSpec extends AnyFunSuite {
     // CMS counters): build, serve (materialized BEFORE the vacuum),
     // vacuum, re-serve — byte-identical
     val w12 = java.nio.file.Files.createTempDirectory("graft_ret12_").toString
-    val (served12, n12) = StreamSketch.x12WithBatchCount(spark, sf, Some(w12))
+    val served12 = StreamSketch.x12StreamWindowDistinct(spark, sf, Some(w12))
+    val n12 = Replay.countBatchDirs(s"$w12/sketches")
     val pre12 = rows(served12)
     val r12 = StreamSketch.vacuumBatches(spark, s"$w12/sketches",
       n12 - StreamSketch.WindowBatches)
@@ -1765,7 +1773,8 @@ class StreamEquivSpec extends AnyFunSuite {
     assert(rows(StreamSketch.x12Serve(spark, s"$w12/sketches", n12)) == pre12,
       "HLL windowed serve changed across the vacuum")
     val w13 = java.nio.file.Files.createTempDirectory("graft_ret13_").toString
-    val (served13, n13) = StreamSketch.x13WithBatchCount(spark, sf, Some(w13))
+    val served13 = StreamSketch.x13StreamWindowCms(spark, sf, Some(w13))
+    val n13 = Replay.countBatchDirs(s"$w13/counters")
     val pre13 = rows(served13)
     val r13 = StreamSketch.vacuumBatches(spark, s"$w13/counters",
       n13 - StreamSketch.WindowBatches)
@@ -1778,7 +1787,7 @@ class StreamEquivSpec extends AnyFunSuite {
   test("x19 late ledger: stream ≡ closed-form twin, batch 0 all on-time, both guard branches fire, nothing lost") {
     import org.apache.spark.sql.functions.col
     val (streamDf, nBatches) =
-      graft.streaming.LateLedger.x19WithBatchCount(spark, sf)
+      withBatches(graft.streaming.LateLedger.x19LateLedger(spark, sf))
     assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     val stream = rows(streamDf)
@@ -1813,15 +1822,16 @@ class StreamEquivSpec extends AnyFunSuite {
     val work = java.nio.file.Files.createTempDirectory("graft_x19crash_").toString
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       graft.streaming.LateLedger
-        .x19WithBatchCount(spark, sf, crashAt = Some(2L), workDir = Some(work))
+        .x19LateLedger(spark, sf, crashAt = Some(2L), workDir = Some(work))
     }
     // the tear really happened: batch 2's ledger landed, its stats did not
     assert(new java.io.File(s"$work/ledger/batch_id=2").exists(),
       "crash fired before the ledger write — the tear under test never formed")
     assert(!new java.io.File(s"$work/stats/batch_id=2").exists(),
       "stats for the dying batch exist — the crash seam is after both writes")
-    val (resumed, nBatches) = graft.streaming.LateLedger
-      .x19WithBatchCount(spark, sf, workDir = Some(work))
+    val resumed = graft.streaming.LateLedger
+      .x19LateLedger(spark, sf, workDir = Some(work))
+    val nBatches = Replay.countBatchDirs(s"$work/ledger")
     assert(nBatches == graft.streaming.StreamSketch.SplitFiles)
     assert(rows(resumed) == rows(graft.streaming.LateLedger.x19Batch(spark, sf)),
       "resumed ledger diverged from the closed-form derivation — the torn state leaked")
@@ -1830,7 +1840,7 @@ class StreamEquivSpec extends AnyFunSuite {
   test("x16 streaming top-k: store-served ≡ batch twin, candidates recover the exact top-K, estimates overcount") {
     import org.apache.spark.sql.functions.col
     val (streamDf, nBatches) =
-      graft.streaming.StreamSketch.x16WithBatchCount(spark, sf)
+      withBatches(graft.streaming.StreamSketch.x16StreamTopk(spark, sf))
     assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     val batch = rows(graft.streaming.StreamSketch.x16Batch(spark, sf))
@@ -1859,7 +1869,7 @@ class StreamEquivSpec extends AnyFunSuite {
     // the store-served read (decimal partials merged by addition) must
     // equal the direct aggregation of the membership-rule slices exactly
     val (streamDf, nBatches) =
-      graft.streaming.StreamSketch.x15WithBatchCount(spark, sf)
+      withBatches(graft.streaming.StreamSketch.x15StreamDrift(spark, sf))
     assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     val batch = rows(graft.streaming.StreamSketch.x15Batch(spark, sf))
@@ -1886,13 +1896,13 @@ class StreamEquivSpec extends AnyFunSuite {
     // assignment: the REVERSED event order. Equality is against the
     // whole-table batch twin, i.e. also bit-identical to the ordered
     // replay's pinned result.
-    val (x8Rev, n8) = graft.streaming.StreamSketch
-      .x8WithBatchCount(spark, sf, negate(col("event_id")))
+    val (x8Rev, n8) = withBatches(graft.streaming.StreamSketch
+      .x8StreamSketch(spark, sf, negate(col("event_id"))))
     assert(n8 == graft.streaming.StreamSketch.SplitFiles)
     assert(rows(x8Rev) == rows(graft.streaming.StreamSketch.x8Batch(spark, sf)),
       "reversed-arrival HLL merge diverged — sketch merge is not order-independent")
-    val (x9Rev, n9) = graft.streaming.StreamSketch
-      .x9WithBatchCount(spark, sf, negate(col("event_id")))
+    val (x9Rev, n9) = withBatches(graft.streaming.StreamSketch
+      .x9StreamQuantile(spark, sf, negate(col("event_id"))))
     assert(n9 == graft.streaming.StreamSketch.SplitFiles)
     assert(rows(x9Rev) == rows(graft.streaming.StreamSketch.x9Batch(spark, sf)),
       "reversed-arrival histogram merge diverged — count addition is not order-independent")
@@ -1907,13 +1917,13 @@ class StreamEquivSpec extends AnyFunSuite {
     // an ordering precondition, unlike the first-arrival funnels below —
     // proven here by replaying the reversed assignment to the same
     // batch answers.
-    val (d12Rev, nd) = graft.streaming.IncrementalDedup
-      .d12WithBatchCount(spark, sf, negate(col("doc_id")))
+    val (d12Rev, nd) = withBatches(graft.streaming.IncrementalDedup
+      .d12StreamMinhash(spark, sf, negate(col("doc_id"))))
     assert(nd == graft.streaming.IncrementalDedup.SplitFiles)
     assert(rows(d12Rev) == rows(graft.ops.DedupOps.d3MinhashLsh(spark, sf)),
       "reversed-arrival d12 diverged from batch d3 — pair emission is order-dependent")
-    val (s11Rev, ns) = graft.streaming.StreamAnnIngest
-      .ingestWithBatchCount(spark, sf, graft.ops.SimilarityOps.Flat, 1, negate(col("vec_id")))
+    val (s11Rev, ns) = withBatches(graft.streaming.StreamAnnIngest
+      .ingestServe(spark, sf, graft.ops.SimilarityOps.Flat, 1, negate(col("vec_id"))))
     assert(ns == graft.streaming.StreamAnnIngest.SplitFiles)
     assert(rows(s11Rev) == rows(graft.ops.SimilarityOps.s3AnnIvf(spark, sf)),
       "reversed-arrival s11 diverged from batch s3 — index union is order-dependent")
@@ -1928,8 +1938,8 @@ class StreamEquivSpec extends AnyFunSuite {
     // is never labeled: the ledger loses near-dups and the p3 ≡ p1
     // parity breaks. This pins the precondition as load-bearing — an
     // unordered production feed MUST NOT reuse this gate's plan as-is.
-    val (revDf, nBatches) = graft.streaming.FullFunnel.p3From(
-      graft.io.Sources.table(spark, sf, "documents"), negate(col("doc_id")))
+    val (revDf, nBatches) = withBatches(graft.streaming.FullFunnel.p3From(
+      graft.io.Sources.table(spark, sf, "documents"), negate(col("doc_id"))))
     assert(nBatches == graft.streaming.FullFunnel.SplitFiles)
     val rev = rows(revDf)
     val p1 = rows(graft.ops.PipelineOps.p1PipelineLedger(spark, sf))
@@ -1958,8 +1968,8 @@ class StreamEquivSpec extends AnyFunSuite {
       .withColumn("doc_id", col("doc_id") + lit(1000000L)) // % EvalMod kept
       .withColumn("source", lit("planted_src"))
     val planted = docs.unionByName(copy)
-    val (ordDf, n1) = graft.streaming.StreamFunnel.p2From(planted)
-    val (revDf, n2) = graft.streaming.StreamFunnel.p2From(planted, negate(col("doc_id")))
+    val (ordDf, n1) = withBatches(graft.streaming.StreamFunnel.p2From(planted))
+    val (revDf, n2) = withBatches(graft.streaming.StreamFunnel.p2From(planted, negate(col("doc_id"))))
     assert(n1 == graft.streaming.StreamFunnel.SplitFiles && n2 == n1)
     val ord = rows(ordDf)
     val rev = rows(revDf)
@@ -1979,7 +1989,7 @@ class StreamEquivSpec extends AnyFunSuite {
   test("x10 merged stream CMS ≡ whole-table sketch; estimates dominate exact counts; order-independent") {
     import org.apache.spark.sql.functions._
     val (streamDf, nBatches) =
-      graft.streaming.StreamSketch.x10WithBatchCount(spark, sf)
+      withBatches(graft.streaming.StreamSketch.x10StreamCms(spark, sf))
     assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     val stream = rows(streamDf)
@@ -2000,8 +2010,8 @@ class StreamEquivSpec extends AnyFunSuite {
     }
     // arrival-order independence, same class as x8/x9: addition doesn't
     // care which batch a document landed in
-    val (revDf, _) = graft.streaming.StreamSketch
-      .x10WithBatchCount(spark, sf, negate(col("doc_id")))
+    val revDf = graft.streaming.StreamSketch
+      .x10StreamCms(spark, sf, negate(col("doc_id")))
     assert(rows(revDf) == batch,
       "reversed-arrival CMS merge diverged — counter addition is not order-independent")
   }
@@ -2009,7 +2019,7 @@ class StreamEquivSpec extends AnyFunSuite {
   test("x11 windowed serve from the partials store ≡ batch over the window's rows; window ≠ whole corpus") {
     import org.apache.spark.sql.functions._
     val (streamDf, nBatches) =
-      graft.streaming.StreamSketch.x11WithBatchCount(spark, sf)
+      withBatches(graft.streaming.StreamSketch.x11StreamWindowQuantile(spark, sf))
     assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     val stream = rows(streamDf)
@@ -2045,7 +2055,7 @@ class StreamEquivSpec extends AnyFunSuite {
   test("x12 windowed distinct serve from the sketch store ≡ batch sketch over the window's rows, within 5% of exact") {
     import org.apache.spark.sql.functions._
     val (streamDf, nBatches) =
-      graft.streaming.StreamSketch.x12WithBatchCount(spark, sf)
+      withBatches(graft.streaming.StreamSketch.x12StreamWindowDistinct(spark, sf))
     assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     val stream = rows(streamDf)
@@ -2088,7 +2098,7 @@ class StreamEquivSpec extends AnyFunSuite {
   test("x13 windowed CMS serve from the counter store ≡ window batch sketch; estimates dominate window counts") {
     import org.apache.spark.sql.functions._
     val (streamDf, nBatches) =
-      graft.streaming.StreamSketch.x13WithBatchCount(spark, sf)
+      withBatches(graft.streaming.StreamSketch.x13StreamWindowCms(spark, sf))
     assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     val stream = rows(streamDf)
@@ -2246,8 +2256,8 @@ class StreamEquivSpec extends AnyFunSuite {
     // the s4 battery measures (so that recall row IS this probe's
     // recall, by proven equivalence)
     val (stream, nBatches) =
-      graft.streaming.StreamAnnIngest.ingestWithBatchCount(spark, sf, graft.ops.SimilarityOps.Hier,
-        graft.streaming.StreamAnnIngest.HierGprobe, col("vec_id"))
+      withBatches(graft.streaming.StreamAnnIngest.ingestServe(spark, sf, graft.ops.SimilarityOps.Hier,
+        graft.streaming.StreamAnnIngest.HierGprobe, col("vec_id")))
     assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
       s"replay ran $nBatches micro-batches — not incremental")
     val streamRows = rows(stream)
@@ -2332,7 +2342,7 @@ class StreamEquivSpec extends AnyFunSuite {
     assert(keptDocs == 7L,
       s"planted cross-phase duplicate was not dropped through the compacted store ($keptDocs kept)")
     // and the planted run is itself swap-invariant vs the unphased twin
-    val (pm6, _) = graft.streaming.IncrementalExport.p6OnDocs(spark, planted)
+    val pm6 = graft.streaming.IncrementalExport.p6OnDocs(spark, planted)
     assert(rows(pm) == rows(pm6),
       "compaction changed the planted-frame manifest")
   }
@@ -2411,7 +2421,7 @@ class StreamEquivSpec extends AnyFunSuite {
     assert(pm.agg(sum("n_near_dup")).collect()(0).getLong(0) == 1L,
       "planted cross-phase near copy was not dropped through the compacted band/shingle stores")
     // and the planted run is itself swap-invariant vs the unphased twin
-    val (plainPlanted, _) = graft.streaming.FullFunnel.p3From(planted)
+    val plainPlanted = graft.streaming.FullFunnel.p3From(planted)
     assert(rows(pm) == rows(plainPlanted),
       "compaction changed the planted-frame ledger")
   }
