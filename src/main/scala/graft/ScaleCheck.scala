@@ -330,7 +330,6 @@ object ScaleCheck {
       // variants and the audio chain through the same instrument
       ("m16_batches_axis", StreamMediaDedup.m16NearDupDelta _, base),
       ("m18_batches_axis", StreamMediaDedup.m18StreamWavNearDup _, base),
-      ("m21_batches_axis", StreamMediaDedup.m21ConsensusDelta _, base),
       ("d12_batches_axis", (s, d, w) => IncrementalDedup.d12StreamMinhash(s, d, waves = w), base),
       ("d20_batches_axis", (s, d, w) => StreamSemDedup.d20StreamSemDedup(s, d, waves = w), base),
       ("p13_batches_axis", StreamSampler.p13StreamSample _, base),
@@ -371,7 +370,7 @@ object ScaleCheck {
     * fixed data is the r15-ordered instrument shape — more batch
     * indices for growth to show, smaller per-batch data so a genuine
     * per-batch-growth term dominates orchestration sooner. */
-  val AxisWaves: Int = 2 * graft.streaming.StreamSketch.SplitFiles
+  val AxisWaves: Int = 2 * graft.streaming.Replay.Waves
 
   /** Full-replay repetitions per axis entry; per-batch minima are taken
     * across runs (a contention burst poisons one replay's batch, not

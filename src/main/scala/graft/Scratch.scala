@@ -3,11 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Measurement harness for the optimization rounds (not part of the
-  * declared query surface): decomposed phase timers, 3-pass noop-sink
-  * A/B timing (`benchonly`), full-result md5 identity proofs (`hash`),
-  * plan dumps (`explain`), a duplicate-evaluation audit (`dups`), and a
-  * noise-immune Spark job/task counter (`jobs`). Kept committed so the
-  * second optimization round A/Bs against the same instruments. */
+  * declared query surface), one mode per first argument: gate timers
+  * (`m15` with its per-batch body times, `m20`, `p3`, or any gate name),
+  * 3-pass noop-sink A/B timing (`benchonly`), full-result md5 identity
+  * proofs (`hash`), plan dumps (`explain`, `ledgerplan`, `blendplan`),
+  * a duplicate-evaluation audit (`dups`), and a noise-immune Spark
+  * job/task counter (`jobs`). Kept committed so the second optimization
+  * round A/Bs against the same instruments. */
 object Scratch {
   def t[A](label: String)(f: => A): A = {
     val t0 = System.nanoTime()
@@ -27,26 +29,6 @@ object Scratch {
     val what = args.headOption.getOrElse("m15")
 
     what match {
-      case "deal" =>
-        // cost of the legacy per-wave deal shape, measured standalone:
-        // 4 filtered scans + coalesce(1) writes (what runWaveReplay did)
-        // vs one partitioned write (what it does now)
-        val docs = graft.io.Sources.table(spark, sfDir, "documents").select("doc_id", "text")
-        for (i <- 1 to 3) {
-          val work = java.nio.file.Files.createTempDirectory("graft_scratch_deal_").toString
-          t(s"deal 4-scan #$i") {
-            (0 until 4).foreach { b =>
-              docs.filter(pmod(col("doc_id"), lit(4)) === b)
-                .coalesce(1).write.mode("append").parquet(s"$work/in")
-            }
-          }
-          val work2 = java.nio.file.Files.createTempDirectory("graft_scratch_deal_").toString
-          t(s"deal 1-job #$i") {
-            docs.withColumn("__wave", pmod(col("doc_id"), lit(4)))
-              .repartition(4, col("__wave"))
-              .write.partitionBy("__wave").parquet(s"$work2/in")
-          }
-        }
       case "m15" =>
         for (i <- 1 to 2) {
           val (_, batches) = t(s"m15 replay #$i") {

@@ -510,11 +510,11 @@ object SparkEntry {
        |SELECT q_id, n_id, round(c, 4) AS cos_sim FROM p WHERE c >= ${SimilarityOps.RadiusTau} ORDER BY q_id, n_id""".stripMargin
 
   /** x11's windowed-histogram oracle: x9's deterministic histogram SQL
-    * over the window slice the mod-SplitFiles membership rule names.
+    * over the window slice the mod-Replay.Waves membership rule names.
     * Shared verbatim by x18 (the retention vacuum serves the identical
     * answer from the shrunken store). */
   private def x11WindowQuantileSql: String = {
-    val m = graft.streaming.StreamSketch.SplitFiles
+    val m = graft.streaming.Replay.Waves
     val lo = m - graft.streaming.StreamSketch.WindowBatches
     s"""WITH h AS (
        |  SELECT event_type,
@@ -758,7 +758,7 @@ object SparkEntry {
   // {wave <= b}; per (batch, source): totals, t14's weight, the binding
   // source by (tot/w, source), the integer largest-feasible budget
   private lazy val p11BlendSql: String = {
-    val m = graft.streaming.StreamSketch.SplitFiles
+    val m = graft.streaming.Replay.Waves
     s"""WITH tok AS (SELECT doc_id, source, len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS n_tok FROM documents),
        |t AS (SELECT doc_id % $m AS wave, source, n_tok FROM tok WHERE n_tok > 0),
        |b AS (SELECT unnest(range($m)) AS batch_id),
@@ -777,11 +777,11 @@ object SparkEntry {
     * doc's keep verdict per batch): p9's full derivation — weight
     * table, binding source, integer budgets, u-ordered prefix keep —
     * re-derived PER BATCH over the wave rule's arrived corpus
-    * (`doc_id mod SplitFiles ≤ b`, p11's membership CTE). Shared by
+    * (`doc_id mod Replay.Waves ≤ b`, p11's membership CTE). Shared by
     * p13's ledger tail and p14's delta tail, so the two streaming
     * sampler oracles cannot drift on the keep rule. */
   private lazy val streamSampleKeepCtes: String = {
-    val m = graft.streaming.StreamSketch.SplitFiles
+    val m = graft.streaming.Replay.Waves
     val (mod, mul) = (TextOps.MixHashMod, TextOps.MixHashMul)
     val width = TextOps.MixHashMod / PipelineOps.MixBuckets
     s"""tok AS (SELECT doc_id, source, len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS n_tok FROM documents),
@@ -824,7 +824,7 @@ object SparkEntry {
     * joins against the empty blend (kp is shifted OUT of range), so its
     * rows are all-additions exactly as the engine's. */
   private lazy val p14SampleDeltaSql: String = {
-    val m = graft.streaming.StreamSketch.SplitFiles
+    val m = graft.streaming.Replay.Waves
     s"""WITH $streamSampleKeepCtes,
        |k AS (SELECT batch_id, doc_id, source, u, bucket FROM s WHERE keep = 1),
        |kp AS (SELECT batch_id + 1 AS batch_id, doc_id, source, u, bucket FROM k WHERE batch_id + 1 < $m),
@@ -851,7 +851,7 @@ object SparkEntry {
   }
 
   private lazy val p6ExportSql: String = {
-    val m = graft.streaming.StreamSketch.SplitFiles
+    val m = graft.streaming.Replay.Waves
     s"""WITH tok AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS ts FROM documents),
        |$funnelHeadCtes,
        |e6 AS (SELECT fl.*, doc_id % $m AS bid FROM fl WHERE NOT is_eval AND q),
@@ -880,7 +880,7 @@ object SparkEntry {
   /** x19's oracle — also x20's verbatim (the running-max fold must be
     * invisible to every watermark the ledger derives). */
   private lazy val x19LedgerSql: String = {
-    val m = graft.streaming.StreamSketch.SplitFiles
+    val m = graft.streaming.Replay.Waves
     val d = graft.streaming.LateLedger.LateDelayMicros
     s"""WITH e AS (SELECT event_id % $m AS bid, event_type, value, epoch_us(ts) AS tsu FROM events),
        |bm AS (SELECT bid, max(tsu) AS mt FROM e GROUP BY bid),
@@ -1010,13 +1010,13 @@ object SparkEntry {
 
   /** The per-wave banded chain over whatever `bands` CTE is in scope —
     * m16's wave machinery factored so m21 can run it on BOTH codec
-    * chains: arrived membership `doc_id mod SplitFiles ≤ wb`, df cap
+    * chains: arrived membership `doc_id mod Replay.Waves ≤ wb`, df cap
     * re-evaluated per wave (band document-frequency is a property of
     * the ARRIVED corpus — the non-monotone rule), banded candidates,
     * Hamming verify. Yields (wb, a_id, b_id). */
   private lazy val perWaveChainSql: String = {
     val nb = MultimodalOps.AHashBands
-    val m = graft.streaming.StreamSketch.SplitFiles
+    val m = graft.streaming.Replay.Waves
     s"""waves AS (SELECT unnest(range($m)) AS wb),
        |ab AS (SELECT w.wb AS wb, bands.doc_id, bi, bv FROM bands CROSS JOIN waves w WHERE bands.doc_id % $m <= w.wb),
        |okb AS (SELECT wb, bi, bv FROM ab GROUP BY wb, bi, bv HAVING count(*) <= ${MultimodalOps.AHashDfMax}),
@@ -1039,7 +1039,7 @@ object SparkEntry {
     * flipped away) — so per-channel conservation and the flip's paired
     * leave+enter are oracle-checked, not just spec-pinned. */
   private lazy val m21ConsensusDeltaSql: String = {
-    val m = graft.streaming.StreamSketch.SplitFiles
+    val m = graft.streaming.Replay.Waves
     s"""WITH ci AS (WITH $ahashBandsCtes,
        |$perWaveChainSql),
        |ca AS (WITH $whashBandsCtes,
@@ -1067,8 +1067,8 @@ object SparkEntry {
   }
 
   /** m16's oracle: the m13 chain re-run per wave `wb` over the arrived
-    * corpus (`doc_id mod SplitFiles ≤ wb` — [[graft.streaming
-    * .StreamSketch.runWaveReplay]]'s membership rule), with the df cap
+    * corpus (`doc_id mod Replay.Waves ≤ wb` — [[graft.streaming
+    * .Replay.ByMod]]'s membership rule), with the df cap
     * re-evaluated per wave (band document-frequency is a property of
     * the ARRIVED corpus — the non-monotone rule m15 re-derives for),
     * then per-direction deltas from a one-batch-shifted self-join and
@@ -1077,7 +1077,7 @@ object SparkEntry {
     * empty). */
   private lazy val m16NearDupDeltaSql: String = {
     val nb = MultimodalOps.AHashBands
-    val m = graft.streaming.StreamSketch.SplitFiles
+    val m = graft.streaming.Replay.Waves
     val dbk = graft.streaming.StreamMediaDedup.DigestBuckets
     s"""WITH $ahashBandsCtes,
        |waves AS (SELECT unnest(range($m)) AS wb),
@@ -1727,7 +1727,7 @@ object SparkEntry {
          |pack_md5
          |FROM shg JOIN src ON src.oshard = shg.oshard ORDER BY oshard""".stripMargin,
     // p11 replays the streaming blend monitor closed-form: batch
-    // membership is the wave rule (doc_id mod SplitFiles), so the
+    // membership is the wave rule (doc_id mod Replay.Waves), so the
     // arrived corpus after batch b is {wave <= b}; per (batch, source):
     // totals, t14's weight, the binding source by (tot/w, source), and
     // the integer largest-feasible budget — every ledger row re-derived
@@ -2366,7 +2366,7 @@ object SparkEntry {
     // the perceptual-hash family — the shared-string convention)
     "m15_stream_near_dup" -> m13NearDupSql,
     // m16 replays the whole CHANGE FEED closed-form: the m13 chain per
-    // wave under the `doc_id mod SplitFiles ≤ b` membership rule (df
+    // wave under the `doc_id mod Replay.Waves ≤ b` membership rule (df
     // caps re-evaluated per arrived corpus — the non-monotone rule), a
     // one-batch-shifted self-join per direction, and the identical
     // two-level digest fold
@@ -2476,7 +2476,7 @@ object SparkEntry {
         |       round((CAST(min(CASE WHEN cum * 10 >= total * 9 THEN b END) AS DOUBLE) - 0.5) * 3.90625, 4) AS p90_est
         |FROM c GROUP BY event_type ORDER BY event_type""".stripMargin,
     // x11 serves the LAST-2-batches window from x9's partials store;
-    // batch membership is a data rule (event_id mod SplitFiles, waves
+    // batch membership is a data rule (event_id mod Replay.Waves, waves
     // mtime-ordered), so the window is a plain predicate over events and
     // the oracle is x9's histogram SQL over exactly that slice
     "x11_stream_window_quantile" -> x11WindowQuantileSql,
@@ -2514,9 +2514,9 @@ object SparkEntry {
     // x15's drift read from the moments store: decimal sums replay
     // exactly (the q04/q12 DECIMAL-addend precedent), batch membership
     // is x11's data rule, and mean/std/z are identical IEEE expressions
-    // on both engines (constants interpolated from SplitFiles/DriftZ)
+    // on both engines (constants interpolated from Replay.Waves/DriftZ)
     "x15_stream_drift" -> {
-      val m = graft.streaming.StreamSketch.SplitFiles
+      val m = graft.streaming.Replay.Waves
       val latest = m - 1
       val dz = graft.streaming.StreamSketch.DriftZ
       s"""WITH b AS (SELECT event_type, event_id % $m AS bid, value FROM events),
@@ -2559,7 +2559,7 @@ object SparkEntry {
       val d = TextOps.CmsDepth
       val rs = (0 until d).map(_.toString).mkString(", ")
       val k = graft.streaming.StreamSketch.WatchK
-      val sfK = graft.streaming.StreamSketch.SplitFiles
+      val sfK = graft.streaming.Replay.Waves
       s"""WITH t AS (SELECT doc_id, unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS token FROM documents),
          |sc AS (SELECT doc_id % $sfK AS bid, token, count(*) AS cnt FROM t GROUP BY 1, 2),
          |rk AS (SELECT bid, token, row_number() OVER (PARTITION BY bid ORDER BY cnt DESC, token) AS rk FROM sc),
@@ -2581,7 +2581,7 @@ object SparkEntry {
       val d = TextOps.CmsDepth
       val rs = (0 until d).map(_.toString).mkString(", ")
       val k = graft.streaming.StreamSketch.WatchK
-      val sfK = graft.streaming.StreamSketch.SplitFiles
+      val sfK = graft.streaming.Replay.Waves
       val win = sfK - graft.streaming.StreamSketch.WindowBatches
       s"""WITH t AS (SELECT doc_id, unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS token FROM documents),
          |tc AS (SELECT token, count(*) AS cnt FROM t GROUP BY token),

@@ -22,7 +22,7 @@ import graft.ops.TextOps
   * last batch buy us?"
   *
   * Semantics are closed-form end to end: batch membership is the wave
-  * replay's DATA rule (doc_id mod [[StreamSketch.SplitFiles]]), so the
+  * replay's DATA rule (doc_id mod [[Replay.Waves]]), so the
   * arrived corpus after batch b is exactly {doc_id mod m ≤ b}, and the
   * DuckDB oracle re-derives EVERY (batch, source) ledger row — totals,
   * weights, binding source, integer budgets — in one statement. The
@@ -53,13 +53,13 @@ object BlendMonitor {
     * index-growing term is that narrow listing (p12's compaction bounds
     * it in production) and last ≈ first is the design claim. */
   def p11StreamBlend(spark: SparkSession, dir: String,
-                     waves: Int = StreamSketch.SplitFiles): DataFrame = {
+                     waves: Int = Replay.Waves): DataFrame = {
     val work = Files.createTempDirectory("graft_blendmon_").toString
     val stats = s"$work/stats"
     val ledger = s"$work/ledger"
     val docs = Sources.table(spark, dir, "documents")
       .select("doc_id", "source", "text")
-    StreamSketch.runWaveReplay(spark, docs, "doc_id", work, ledger, waves) {
+    Replay.replay(spark, docs, Replay.ByMod("doc_id"), work, waves) {
       (batch, batchId) => blendBatch(batch, batchId, stats, ledger)
     }
     spark.read.parquet(ledger)
@@ -95,13 +95,13 @@ object BlendMonitor {
       .select("doc_id", "source", "text")
     var partsBefore = 0
     var partsAfter = 0
-    StreamSketch.runWaveReplayPhased(spark, docs, "doc_id",
-      work, ledger, StreamSketch.SplitFiles / 2) {
+    Replay.replay(spark, docs, Replay.ByMod("doc_id"), work,
+      splitAt = Replay.Waves / 2, midpoint = () => {
+        partsBefore = Replay.countBatchDirs(stats)
+        compactBlendStats(spark, stats)
+        partsAfter = Replay.countBatchDirs(stats)
+      }) {
       (batch, batchId) => blendBatch(batch, batchId, stats, ledger)
-    } { () =>
-      partsBefore = Replay.countBatchDirs(stats)
-      compactBlendStats(spark, stats)
-      partsAfter = Replay.countBatchDirs(stats)
     }
     val result = spark.read.parquet(ledger)
       .select(col("batch_id").cast("long").as("batch_id"), col("source"),

@@ -67,10 +67,6 @@ import graft.ops.{DedupOps, PipelineOps, TextOps}
   */
 object FullFunnel {
 
-  /** Fixture re-split count — same rationale as d12/p2: one batch would
-    * vacuously reduce p3 to batch p1. */
-  val SplitFiles = 4
-
   def p3StreamFunnel(spark: SparkSession, dir: String): DataFrame =
     p3From(Sources.table(spark, dir, "documents"))
 
@@ -85,30 +81,13 @@ object FullFunnel {
       orderExpr: org.apache.spark.sql.Column = col("doc_id")): DataFrame = {
     val spark = docs.sparkSession
     val work = Files.createTempDirectory("graft_fullfunnel_").toString
-    writeReplayFiles(docs, s"$work/in", orderExpr)
     val stores = prepArtifacts(docs, work)
-    runPhase(spark, s"$work/in", s"$work/ckpt", 0L, stores)
+    // first-arrival must mean min-doc_id: the range waves replay in
+    // stamped range order
+    Replay.replay(spark, docs.select("doc_id", "text", "lang", "source"),
+      Replay.ByRange(orderExpr), work)((batch, batchId) =>
+      processBatch(batch, batchId, stores))
     ledger(spark.read.parquet(stores.labels))
-  }
-
-  /** Write the doc_id-range replay files with ascending mtimes.
-    * First-arrival must mean min-doc_id: the file source orders by
-    * modification time; stamp range files with ascending mtimes —
-    * replay order IS the first-arrival semantics, so fail loudly on a
-    * filesystem that can't stamp mtimes rather than as a puzzling
-    * oracle mismatch downstream. Returns the files in arrival order.
-    * Shared with p2 ([[StreamFunnel]]), whose first-arrival rule is the
-    * same. */
-  private[streaming] def writeReplayFiles(docs: DataFrame, splitDir: String,
-      orderExpr: org.apache.spark.sql.Column): Array[java.io.File] = {
-    docs
-      .select("doc_id", "text", "lang", "source")
-      .repartitionByRange(SplitFiles, orderExpr)
-      .write.parquet(splitDir)
-    val parts = new java.io.File(splitDir).listFiles()
-      .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
-    parts.zipWithIndex.foreach { case (f, i) => Replay.stampArrival(f, i) }
-    parts
   }
 
   /** Materialize the static benchmark-side artifacts the stream consumes
@@ -129,16 +108,6 @@ object FullFunnel {
     Stores(s"$work/keys", s"$work/bands", s"$work/shingles",
       s"$work/labels", evalgPath, bloomPath)
   }
-
-  /** One AvailableNow replay over `inDir`; `offset` renumbers the
-    * phase's local batch ids into the stream-lifetime sequence (the
-    * phased runs' second half must keep appending AFTER the first
-    * half's ids, or the `batch_id < current` prunes would re-admit
-    * phase-A partitions as "future" state). */
-  private def runPhase(spark: SparkSession, inDir: String, ckpt: String,
-      offset: Long, stores: Stores): Unit =
-    Replay.drain(spark, inDir, ckpt, offset)((batch, batchId) =>
-      processBatch(batch, batchId, stores))
 
   private[graft] def p3CompactInfo(spark: SparkSession, dir: String)
       : (DataFrame, Seq[Int], Seq[Int], Seq[Int]) =
@@ -166,28 +135,22 @@ object FullFunnel {
   private[graft] def p3CompactOnDocs(spark: SparkSession, docs: DataFrame)
       : (DataFrame, Seq[Int], Seq[Int], Seq[Int]) = {
     val work = Files.createTempDirectory("graft_fullfunnel_c_").toString
-    val files = writeReplayFiles(docs, s"$work/in_all", col("doc_id"))
-    // deal the replay into two arrival phases (half each): the stream
-    // must CONTINUE over the compacted stores, not restart. The move
-    // preserves the stamped mtimes, so arrival order holds within and
-    // across phases.
-    val (aDir, bDir) = (s"$work/inA", s"$work/inB")
-    new java.io.File(aDir).mkdirs(); new java.io.File(bDir).mkdirs()
-    files.zipWithIndex.foreach { case (f, i) =>
-      val tgt = if (i < SplitFiles / 2) aDir else bDir
-      java.nio.file.Files.move(f.toPath,
-        java.nio.file.Paths.get(tgt, f.getName)): Unit
-    }
     val stores = prepArtifacts(docs, work)
     val tracked = Seq(stores.keys, stores.bands, stores.shingles)
     def counts(): Seq[Int] = tracked.map(Replay.countBatchDirs)
-    runPhase(spark, aDir, s"$work/ckptA", 0L, stores)
-    val before = counts()
-    IncrementalDedup.compactStore(spark, stores.keys, "norm_key")
-    IncrementalDedup.compactStore(spark, stores.bands, "bv")
-    IncrementalDedup.compactStore(spark, stores.shingles, "doc_id")
-    val after = counts()
-    runPhase(spark, bDir, s"$work/ckptB", (SplitFiles / 2).toLong, stores)
+    var before = Seq.empty[Int]
+    var after = Seq.empty[Int]
+    // two arrival phases (half each): the stream must CONTINUE over the
+    // compacted stores, not restart
+    Replay.replay(spark, docs.select("doc_id", "text", "lang", "source"),
+      Replay.ByRange(col("doc_id")), work, splitAt = Replay.Waves / 2,
+      midpoint = () => {
+        before = counts()
+        IncrementalDedup.compactStore(spark, stores.keys, "norm_key")
+        IncrementalDedup.compactStore(spark, stores.bands, "bv")
+        IncrementalDedup.compactStore(spark, stores.shingles, "doc_id")
+        after = counts()
+      })((batch, batchId) => processBatch(batch, batchId, stores))
     (ledger(spark.read.parquet(stores.labels)), before, after, counts())
   }
 

@@ -52,11 +52,6 @@ import graft.out.Canonical._
   */
 object IncrementalDedup {
 
-  /** The fixture is re-split into this many files so the file source
-    * (maxFilesPerTrigger=1) replays it as a genuine multi-batch stream —
-    * one batch would vacuously reduce d12 to d3. */
-  val SplitFiles = 4
-
   /** `orderExpr` controls which rows share a micro-batch: d12 has NO
     * ordering precondition — the candidate join is symmetric
     * (least/greatest normalization) and a pair is emitted exactly once
@@ -70,17 +65,13 @@ object IncrementalDedup {
     * store side). */
   def d12StreamMinhash(spark: SparkSession, dir: String,
       orderExpr: org.apache.spark.sql.Column = col("doc_id"),
-      waves: Int = SplitFiles): DataFrame = {
+      waves: Int = Replay.Waves): DataFrame = {
     val work = Files.createTempDirectory("graft_incdedup_").toString
-    val splitDir = s"$work/in"
-    Sources.table(spark, dir, "documents")
-      .select("doc_id", "text")
-      .repartitionByRange(waves, orderExpr)
-      .write.parquet(splitDir)
     val bandStore = s"$work/bands"
     val shingleStore = s"$work/shingles"
     val pairStore = s"$work/pairs"
-    Replay.drain(spark, splitDir, s"$work/ckpt", 0L)((batch, batchId) =>
+    Replay.replay(spark, Sources.table(spark, dir, "documents").select("doc_id", "text"),
+      Replay.ByRange(orderExpr), work, waves)((batch, batchId) =>
       processBatch(batch, batchId, bandStore, shingleStore, pairStore))
     spark.read.parquet(pairStore)
       .select(col("a_id"), col("b_id"), col("jaccard"))
@@ -186,34 +177,22 @@ object IncrementalDedup {
   private[graft] def d19WithStoreInfo(spark: SparkSession, dir: String)
       : (DataFrame, Int, Int, Int, Long) = {
     val work = Files.createTempDirectory("graft_bandcompact_").toString
-    val splitAll = s"$work/in_all"
-    Sources.table(spark, dir, "documents")
-      .select("doc_id", "text")
-      .repartitionByRange(SplitFiles, col("doc_id"))
-      .write.parquet(splitAll)
-    // deal the replay files into two arrival phases (half each): the
-    // stream must CONTINUE over a compacted store, not restart
-    val files = new java.io.File(splitAll).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val (aDir, bDir) = (s"$work/inA", s"$work/inB")
-    new java.io.File(aDir).mkdirs(); new java.io.File(bDir).mkdirs()
-    files.zipWithIndex.foreach { case (f, i) =>
-      val tgt = if (i < SplitFiles / 2) aDir else bDir
-      java.nio.file.Files.move(f.toPath,
-        java.nio.file.Paths.get(tgt, f.getName)): Unit
-    }
     val bandStore = s"$work/bands"
     val shingleStore = s"$work/shingles"
     val pairStore = s"$work/pairs"
-    def run(inDir: String, ckpt: String, offset: Long): Unit =
-      Replay.drain(spark, inDir, ckpt, offset)((batch, batchId) =>
-        processBatch(batch, batchId, bandStore, shingleStore, pairStore))
-    run(aDir, s"$work/ckptA", 0L)
-    val partsBefore = Replay.countBatchDirs(bandStore)
-    compactStore(spark, bandStore, "bv")
-    compactStore(spark, shingleStore, "doc_id")
-    val partsAfter = Replay.countBatchDirs(bandStore)
-    run(bDir, s"$work/ckptB", (SplitFiles / 2).toLong)
+    var partsBefore = 0
+    var partsAfter = 0
+    // two arrival phases (half each): the stream must CONTINUE over a
+    // compacted store, not restart
+    Replay.replay(spark, Sources.table(spark, dir, "documents").select("doc_id", "text"),
+      Replay.ByRange(col("doc_id")), work, splitAt = Replay.Waves / 2,
+      midpoint = () => {
+        partsBefore = Replay.countBatchDirs(bandStore)
+        compactStore(spark, bandStore, "bv")
+        compactStore(spark, shingleStore, "doc_id")
+        partsAfter = Replay.countBatchDirs(bandStore)
+      })((batch, batchId) =>
+      processBatch(batch, batchId, bandStore, shingleStore, pairStore))
     val partsEnd = Replay.countBatchDirs(bandStore)
     val emitted = Replay.countBatchDirs(pairStore).toLong
     val result = spark.read.parquet(pairStore)

@@ -39,7 +39,7 @@ import graft.ops.{PipelineOps, TextOps}
   *      a set).
   *
   * Batch membership is the windowed gates' DATA rule (`doc_id mod
-  * [[StreamSketch.SplitFiles]]`, waves written mtime-ascending), so
+  * [[Replay.Waves]]`, waves written mtime-ascending), so
   * first arrival means the lexicographically smallest (batch, doc_id)
   * — closed-form in doc_id — and the whole incremental run has an
   * exact from-scratch replay: the DuckDB oracle re-derives every
@@ -71,7 +71,7 @@ object IncrementalExport {
   def p6IncrementalExport(spark: SparkSession, dir: String,
       crashAt: Option[Long] = None,
       workDir: Option[String] = None,
-      waves: Int = StreamSketch.SplitFiles): DataFrame =
+      waves: Int = Replay.Waves): DataFrame =
     p6OnDocs(spark, exportDocs(spark, dir), crashAt, workDir, waves)
 
   private def exportDocs(spark: SparkSession, dir: String): DataFrame =
@@ -86,11 +86,11 @@ object IncrementalExport {
   private[graft] def p6OnDocs(spark: SparkSession, docs: DataFrame,
       crashAt: Option[Long] = None,
       workDir: Option[String] = None,
-      waves: Int = StreamSketch.SplitFiles): DataFrame = {
+      waves: Int = Replay.Waves): DataFrame = {
     val work = workDir.getOrElse(Files.createTempDirectory("graft_increxport_").toString)
     val manifest = s"$work/manifest"
     val keys = s"$work/keys"
-    StreamSketch.runWaveReplay(spark, docs, "doc_id", work, manifest, waves) {
+    Replay.replay(spark, docs, Replay.ByMod("doc_id"), work, waves) {
       (batch, batchId) => processBatch(batch, batchId, keys, manifest, crashAt)
     }
     readManifest(spark, manifest)
@@ -144,13 +144,13 @@ object IncrementalExport {
     val keys = s"$work/keys"
     var partsBefore = 0
     var partsAfter = 0
-    StreamSketch.runWaveReplayPhased(spark, docs, "doc_id", work, manifest,
-      StreamSketch.SplitFiles / 2) {
+    Replay.replay(spark, docs, Replay.ByMod("doc_id"), work,
+      splitAt = Replay.Waves / 2, midpoint = () => {
+        partsBefore = Replay.countBatchDirs(keys)
+        IncrementalDedup.compactStore(spark, keys, "norm_key")
+        partsAfter = Replay.countBatchDirs(keys)
+      }) {
       (batch, batchId) => processBatch(batch, batchId, keys, manifest, None)
-    } { () =>
-      partsBefore = Replay.countBatchDirs(keys)
-      IncrementalDedup.compactStore(spark, keys, "norm_key")
-      partsAfter = Replay.countBatchDirs(keys)
     }
     (readManifest(spark, manifest), partsBefore, partsAfter,
       Replay.countBatchDirs(keys))
@@ -232,7 +232,7 @@ object IncrementalExport {
     * to the incremental manifest row-for-row (the append-only claim in
     * engine form; the DuckDB oracle re-derives the same thing in SQL). */
   private[graft] def p6BatchTwin(spark: SparkSession, dir: String): DataFrame = {
-    val m = StreamSketch.SplitFiles
+    val m = Replay.Waves
     val docs = Sources.table(spark, dir, "documents")
       .select("doc_id", "text", "lang", "source")
     val flagged = PipelineOps.headFlags(docs)

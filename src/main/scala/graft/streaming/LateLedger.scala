@@ -12,7 +12,7 @@ import graft.io.Sources
   * q7–q10/q37 use real Structured Streaming watermarks, where Spark
   * DROPS late rows silently (observable only through streaming-query
   * metrics); the wave-replay gates (x8–x18, p2/p3/p6, d12, s11–s16)
-  * sidestep event time entirely via the mod-[[StreamSketch.SplitFiles]]
+  * sidestep event time entirely via the mod-[[Replay.Waves]]
   * DATA rule. x19 closes the gap between the two: the replay carries an
   * explicit WATERMARK GUARD, and rows it rejects are not dropped — they
   * are COUNTED into a per-(batch, event_type) dropped-late ledger, the
@@ -76,7 +76,7 @@ object LateLedger {
     val stats = s"$work/stats"
     val events = Sources.table(spark, dir, "events")
       .select("event_id", "event_type", "value", "ts")
-    StreamSketch.runWaveReplay(spark, events, "event_id", work, ledger) {
+    Replay.replay(spark, events, Replay.ByMod("event_id"), work) {
       (batch, batchId) => ledgerBatch(batch, batchId, ledger, stats, crashAt)
     }
     readLedger(spark, ledger)
@@ -171,13 +171,13 @@ object LateLedger {
       .select("event_id", "event_type", "value", "ts")
     var partsBefore = 0
     var partsAfter = 0
-    StreamSketch.runWaveReplayPhased(spark, events, "event_id", work, ledger,
-      StreamSketch.SplitFiles / 2) {
+    Replay.replay(spark, events, Replay.ByMod("event_id"), work,
+      splitAt = Replay.Waves / 2, midpoint = () => {
+        partsBefore = Replay.countBatchDirs(stats)
+        compactStats(spark, stats)
+        partsAfter = Replay.countBatchDirs(stats)
+      }) {
       (batch, batchId) => ledgerBatch(batch, batchId, ledger, stats, None)
-    } { () =>
-      partsBefore = Replay.countBatchDirs(stats)
-      compactStats(spark, stats)
-      partsAfter = Replay.countBatchDirs(stats)
     }
     (readLedger(spark, ledger), partsBefore, partsAfter,
       Replay.countBatchDirs(stats))
@@ -206,7 +206,7 @@ object LateLedger {
     * what the DuckDB oracle replays in SQL, in engine form for the
     * spec's equivalence pin. */
   private[graft] def x19Batch(spark: SparkSession, dir: String): DataFrame = {
-    val m = StreamSketch.SplitFiles
+    val m = Replay.Waves
     val e = Sources.table(spark, dir, "events")
       .select(pmod(col("event_id"), lit(m)).cast("long").as("bid"),
         col("event_type"), col("value"), unix_micros(col("ts")).as("tsu"))

@@ -6,7 +6,7 @@ import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.{Await, Future}
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
@@ -38,11 +38,16 @@ import graft.io.{Sinks, Sources}
   * store (the ES-index pattern), last write per key wins.
   *
   * The foreachBatch store gates (d12, s11–s30, p2/p3, x8–x20, …) share
-  * one file-replay runner, [[drain]], plus its companions: [[recorded]]
-  * (the micro-batches a call ran, from Spark's own per-batch progress),
-  * [[countBatchDirs]] (how many `batch_id=N` partitions a store holds —
-  * a store fact, which a resumed or vacuumed run tells apart from the
-  * batches it ran) and [[fence]] (overlapped independent writes).
+  * one file-replay runner, [[replay]]: [[deal]] writes a fixture as
+  * [[Waves]] files — by a range of an order column or by a key mod
+  * `waves` — each stamped with its wave's arrival time, split into one
+  * or two phases and sealed by a `_dealt` marker that a resumed run
+  * trusts; [[drain]] then runs each phase one file per micro-batch.
+  * Companions: [[recorded]] (the micro-batches a call ran, from Spark's
+  * own per-batch progress), [[countBatchDirs]] (how many `batch_id=N`
+  * partitions a store holds — a store fact, which a resumed or vacuumed
+  * run tells apart from the batches it ran) and [[fence]] (overlapped
+  * independent writes).
   */
 object Replay {
 
@@ -230,11 +235,11 @@ object Replay {
     * (the reference consumer's per-batch score-and-index loop,
     * ConsumerESFinal.scala:86-94). In a child session, the parquet
     * files under `inDir` replay ONE FILE PER MICRO-BATCH in
-    * modification-time order (stamp them with [[stampArrival]] when
-    * arrival order carries meaning), checkpointed at `ckpt`; `body`
-    * receives each batch with its id shifted by `offset`, so a phased
-    * run's later phase continues the stream-lifetime numbering and
-    * every `batch_id < current` store prune stays valid. Returns once
+    * modification-time order (the order [[deal]] stamps), checkpointed
+    * at `ckpt`; `body` receives each batch with its id shifted by
+    * `offset`, so a phased run's later phase continues the
+    * stream-lifetime numbering and every `batch_id < current` store
+    * prune stays valid. Returns once
     * the query has drained; a `body` failure fails the query and is
     * rethrown here, and a re-run over the same checkpoint redoes only
     * the uncommitted batches — bodies write idempotent `batch_id=N`
@@ -277,6 +282,104 @@ object Replay {
     record.set(batches)
     try { val r = f; (r, batches.toSeq) }
     finally record.set(outer)
+  }
+
+  /** Micro-batches per replay fixture: one batch would vacuously reduce
+    * every stream gate to its batch twin. */
+  val Waves = 4
+
+  /** Which rows of a replay fixture share a wave (one file, one
+    * micro-batch). */
+  private[graft] sealed trait Deal
+
+  /** Wave b is the b-th range of `order` (`repartitionByRange`): arrival
+    * order follows the column — the first-arrival precondition of
+    * p2/p3, and the order d12-class gates reverse to show they do not
+    * need one. */
+  private[graft] final case class ByRange(order: Column) extends Deal
+
+  /** Wave b holds the rows with `key mod waves = b`: a DATA membership
+    * rule, so an oracle can name any window of batches exactly
+    * (x11–x20, m15–m21, p6/p7, p11–p13). */
+  private[graft] final case class ByMod(key: String) extends Deal
+
+  /** Phase suffixes of a deal: `in`/`ckpt` alone, or `inA`/`inB` with
+    * `ckptA`/`ckptB` when `splitAt` cuts the waves in two. */
+  private def phases(waves: Int, splitAt: Int): Seq[String] =
+    if (splitAt < waves) Seq("A", "B") else Seq("")
+
+  /** Write `src` under `work` as `waves` replay files, one per wave in
+    * ONE job (each wave's rows land in exactly one write task), each
+    * stamped as arrival `b` ([[stampArrival]]); waves `< splitAt` go to
+    * `work/inA`, the rest to `work/inB` (all to `work/in` when `splitAt
+    * >= waves`). The `_dealt` marker is created last, so its presence
+    * means the whole wave set is on disk: a dealt `work` is left as it
+    * is (the resume path), and a torn deal is cleared and dealt again
+    * (no stream has run — the marker precedes the first checkpoint). An
+    * empty wave gets a schema-only file, so wave b stays batch b. */
+  private[graft] def deal(src: DataFrame, rule: Deal, work: String,
+      waves: Int = Waves, splitAt: Int = Int.MaxValue): Unit = {
+    val marker = new java.io.File(work, "_dealt")
+    if (!marker.exists()) {
+      val dirs = phases(waves, splitAt).map(p => new java.io.File(s"$work/in$p"))
+      val staged = new java.io.File(work, "in_staged")
+      (staged +: dirs).foreach(deleteRecursively)
+      def parts(dir: java.io.File, prefix: String): Array[java.io.File] =
+        Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
+          .filter(_.getName.startsWith(prefix))
+      val partsOf: Int => Array[java.io.File] = rule match {
+        case ByRange(order) =>
+          src.repartitionByRange(waves, order).write.parquet(staged.getPath)
+          b => parts(staged, f"part-$b%05d-")
+        case ByMod(key) =>
+          src.withColumn("__wave", pmod(col(key), lit(waves)))
+            .repartition(waves, col("__wave"))
+            .write.partitionBy("__wave").parquet(staged.getPath)
+          b => parts(new java.io.File(staged, s"__wave=$b"), "part-")
+      }
+      (0 until waves).foreach { b =>
+        val dest = dirs(if (b < splitAt) 0 else 1)
+        dest.mkdirs()
+        val moved = partsOf(b).map { f =>
+          val tgt = new java.io.File(dest, f"part-w$b%04d-" + f.getName.stripPrefix("part-"))
+          Files.move(f.toPath, tgt.toPath)
+          tgt
+        }
+        val files =
+          if (moved.nonEmpty) moved
+          else {
+            val prior = dest.list().toSet
+            src.limit(0).coalesce(1).write.mode("append").parquet(dest.getPath)
+            parts(dest, "part-").filterNot(f => prior(f.getName))
+          }
+        files.foreach(stampArrival(_, b))
+      }
+      deleteRecursively(staged)
+      require(marker.createNewFile(), s"cannot create deal marker $marker")
+    }
+  }
+
+  /** The replay of every foreachBatch store gate: [[deal]] `src` under
+    * `work` unless it is dealt already — concurrently with `alongside`,
+    * a setup write on disjoint paths, when one is given — then [[drain]]
+    * each phase, phase B's batch ids offset by phase A's wave count so
+    * the wave → batch-id mapping (and every `batch_id < current` store
+    * prune) is the single-phase run's. `midpoint` runs between the
+    * phases, while the stream is quiesced — when a production table
+    * service takes the store lock (the compaction gates fold their
+    * stores there). */
+  private[graft] def replay(spark: SparkSession, src: DataFrame, rule: Deal,
+      work: String, waves: Int = Waves, splitAt: Int = Int.MaxValue,
+      alongside: Option[() => Unit] = None, midpoint: () => Unit = () => ())
+      (body: (DataFrame, Long) => Unit): Unit = {
+    alongside match {
+      case Some(setup) => fence(() => deal(src, rule, work, waves, splitAt), setup)
+      case None => deal(src, rule, work, waves, splitAt)
+    }
+    phases(waves, splitAt).zipWithIndex.foreach { case (p, i) =>
+      if (i > 0) midpoint()
+      drain(spark, s"$work/in$p", s"$work/ckpt$p", if (i == 0) 0L else splitAt.toLong)(body)
+    }
   }
 
   /** Stamp replay file `f` as the `i`-th arrival: the file source orders

@@ -44,17 +44,9 @@ import graft.ops.SimilarityOps.{Flat, Hier, Quantizer, hier, probeAssigned}
   */
 object StreamAnnIngest {
 
-  /** Fixture re-split count, same rationale as [[IncrementalDedup]]:
-    * one batch would vacuously reduce ingest to a batch build. */
-  val SplitFiles = 4
-
-  /** Split the corpus into `files` replay files, range-ordered by
-    * `orderExpr` (which rows share a micro-batch). */
-  private[streaming] def splitCorpus(all: DataFrame, splitDir: String,
-                                     files: Int, orderExpr: Column): Unit =
+  /** The replayed columns of the normed corpus, in file order. */
+  private[streaming] def arrivals(all: DataFrame): DataFrame =
     all.select("vec_id", "v", "nrm", "label")
-      .repartitionByRange(files, orderExpr)
-      .write.parquet(splitDir)
 
   /** The per-batch index append every stream shares: assign the batch
     * against the artifact at `art`, write it as an idempotent
@@ -72,7 +64,7 @@ object StreamAnnIngest {
     * checkpoint/listing machinery, which m19-class compaction bounds in
     * production. */
   def s11StreamAnnIngest(spark: SparkSession, dir: String,
-                         waves: Int = SplitFiles): DataFrame =
+                         waves: Int = Replay.Waves): DataFrame =
     ingestServe(spark, dir, Flat, 1, col("vec_id"), waves)
 
   /** The store-served probe of an ingest stream under quantizer `q` at
@@ -86,7 +78,7 @@ object StreamAnnIngest {
     * the REVERSED assignment to the same batch answer. */
   private[graft] def ingestServe(spark: SparkSession, dir: String,
       q: Quantizer, n: Int, orderExpr: Column,
-      waves: Int = SplitFiles): DataFrame = {
+      waves: Int = Replay.Waves): DataFrame = {
     val (store, art) = runIngestStream(spark, dir, q, orderExpr, waves)
     SimilarityOps.serve(q, spark.read.parquet(store).drop("batch_id"),
       spark.read.parquet(art), n)
@@ -100,18 +92,16 @@ object StreamAnnIngest {
     * batch s26: ingest → retrain → re-ingest). */
   private[graft] def runIngestStream(spark: SparkSession, dir: String,
       q: Quantizer, orderExpr: Column,
-      waves: Int = SplitFiles): (String, String) = {
+      waves: Int = Replay.Waves): (String, String) = {
     val work = Files.createTempDirectory("graft_annstream_").toString
     val all = SimilarityOps.normed(spark, dir)
     val art = s"$work/quantizer"
-    // the two setup writes are independent (disjoint paths, both read
-    // only the source table) — overlap them (§2.6) so the quantizer
-    // build back-fills the split write's task tail
-    Replay.fence(
-      () => splitCorpus(all, s"$work/in", waves, orderExpr),
-      () => q.write(all, art))
     val store = s"$work/index"
-    Replay.drain(spark, s"$work/in", s"$work/ckpt", 0L)((batch, batchId) =>
+    // the quantizer build is independent of the deal (disjoint paths,
+    // both read only the source table) — overlap them (§2.6) so it
+    // back-fills the split write's task tail
+    Replay.replay(spark, arrivals(all), Replay.ByRange(orderExpr), work, waves,
+      alongside = Some(() => q.write(all, art)))((batch, batchId) =>
       appendAssigned(q, batch, batchId, art, store))
     (store, art)
   }
@@ -277,18 +267,18 @@ object StreamAnnIngest {
     val all = SimilarityOps.normed(spark, dir)
     val art = s"$work/quantizer"
     val reqPath = s"$work/delete_requests"
-    // three independent setup writes (disjoint paths, source-table
-    // reads only): overlap them (§2.6)
-    Replay.fence(
-      () => splitCorpus(all, s"$work/in", SplitFiles, col("vec_id")),
-      () => q.write(all, art),
-      // the standing request ledger, written once like a queue snapshot
-      () => deleteRequests(all).coalesce(1).write.parquet(reqPath))
     val store = s"$work/index"
     val tombs = s"$work/tombstones"
-    Replay.drain(spark, s"$work/in", s"$work/ckpt", 0L) { (batch, batchId) =>
-      appendAssigned(q, batch, batchId, art, store)
-      drainDeleteLedger(batch.sparkSession, batchId, reqPath, store, tombs)
+    // three independent setup writes (disjoint paths, source-table
+    // reads only): overlap them (§2.6)
+    Replay.replay(spark, arrivals(all), Replay.ByRange(col("vec_id")), work,
+      alongside = Some(() => Replay.fence(
+        () => q.write(all, art),
+        // the standing request ledger, written once like a queue snapshot
+        () => deleteRequests(all).coalesce(1).write.parquet(reqPath)))) {
+      (batch, batchId) =>
+        appendAssigned(q, batch, batchId, art, store)
+        drainDeleteLedger(batch.sparkSession, batchId, reqPath, store, tombs)
     }
     (work, store, tombs)
   }
@@ -517,29 +507,28 @@ object StreamAnnIngest {
     val splitDir = s"$work/in"
     val all = SimilarityOps.normed(spark, dir)
     val art = s"$work/quantizer"
+    val rule = Replay.ByRange(col("vec_id"))
     // the quantizer build is independent of the whole split-dir
     // sequence (disjoint paths, source-table reads only): overlap it
-    // with the split write + update-wave append + mtime stamping (§2.6)
+    // with the deal + update-wave append (§2.6)
     Replay.fence(
       () => {
-        splitCorpus(all, splitDir, SplitFiles, col("vec_id"))
-        val origFiles = new java.io.File(splitDir).listFiles()
-          .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+        Replay.deal(arrivals(all), rule, work)
+        val dealt = new java.io.File(splitDir).list().toSet
         // the update wave: new versions of already-streamed vectors,
         // landing as the LAST arrival (mtime-stamped — see the
         // ordering precondition)
         updatedVersions(all).coalesce(1)
           .write.mode("append").parquet(splitDir)
-        val updFiles = new java.io.File(splitDir).listFiles()
-          .filter(f => f.getName.startsWith("part-") && !origFiles.contains(f))
-        (origFiles ++ updFiles).zipWithIndex.foreach { case (f, i) =>
-          Replay.stampArrival(f, i)
-        }
+        new java.io.File(splitDir).listFiles()
+          .filter(f => f.getName.startsWith("part-") && !dealt(f.getName))
+          .foreach(Replay.stampArrival(_, Replay.Waves))
       },
       () => q.write(all, art))
     val store = s"$work/index"
     val tombs = s"$work/tombstones"
-    Replay.drain(spark, splitDir, s"$work/ckpt", 0L) { (batch, batchId) =>
+    // dealt above: the replay only drains
+    Replay.replay(spark, arrivals(all), rule, work) { (batch, batchId) =>
       appendAssigned(q, batch, batchId, art, store)
       tombstonePriorVersions(batch, batchId, store, tombs)
     }
@@ -816,23 +805,20 @@ object StreamAnnIngest {
     val all = SimilarityOps.normed(spark, dir)
     val art = s"$work/quantizer"
     val watchPath = s"$work/watchlist"
+    val alerts = s"$work/alerts"
     // two independent setup CHAINS (the watchlist must follow the
-    // quantizer it assigns under; the split write needs neither):
-    // overlap them (§2.6)
-    Replay.fence(
-      () => splitCorpus(all, s"$work/in", SplitFiles, col("vec_id")),
-      () => {
+    // quantizer it assigns under; the deal needs neither): overlap
+    // them (§2.6). Per batch: the arrivals' cells, then s19's radius
+    // read against the broadcast watchlist, appended at arrival time
+    Replay.replay(spark, arrivals(all), Replay.ByRange(col("vec_id")), work,
+      alongside = Some(() => {
         q.write(all, art)
         // the offline watchlist artifact: queries with their cells, once
         q.assign(all.filter(col("label") === 1), spark.read.parquet(art))
           .select(col("vec_id").as("q_id"), col("v").as("qv"),
             col("nrm").as("qn"), col("cell"))
           .coalesce(1).write.parquet(watchPath)
-      })
-    val alerts = s"$work/alerts"
-    // per batch: the arrivals' cells, then s19's radius read against the
-    // broadcast watchlist, appended at arrival time
-    Replay.drain(spark, s"$work/in", s"$work/ckpt", 0L) { (batch, batchId) =>
+      })) { (batch, batchId) =>
       val read = batch.sparkSession.read
       SimilarityOps.withinRadius(q.assign(batch, read.parquet(art)), read.parquet(watchPath))
         .write.mode("overwrite").parquet(s"$alerts/batch_id=$batchId")

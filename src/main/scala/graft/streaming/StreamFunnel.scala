@@ -45,10 +45,6 @@ import graft.ops.PipelineOps
   */
 object StreamFunnel {
 
-  /** Fixture re-split count — same rationale as IncrementalDedup: one
-    * batch would vacuously reduce p2 to p1's head. */
-  val SplitFiles = 4
-
   def p2StreamFunnel(spark: SparkSession, dir: String): DataFrame =
     p2From(Sources.table(spark, dir, "documents"))
 
@@ -63,13 +59,12 @@ object StreamFunnel {
       orderExpr: org.apache.spark.sql.Column = col("doc_id")): DataFrame = {
     val spark = docs.sparkSession
     val work = Files.createTempDirectory("graft_funnel_").toString
-    val splitDir = s"$work/in"
-    // first-arrival must mean min-doc_id: the range files replay in
-    // range order (FullFunnel's stamped split, shared)
-    FullFunnel.writeReplayFiles(docs, splitDir, orderExpr): Unit
     val keyStore = s"$work/keys"
     val labelStore = s"$work/labels"
-    Replay.drain(spark, splitDir, s"$work/ckpt", 0L)((batch, batchId) =>
+    // first-arrival must mean min-doc_id: the range waves replay in
+    // stamped range order
+    Replay.replay(spark, docs.select("doc_id", "text", "lang", "source"),
+      Replay.ByRange(orderExpr), work)((batch, batchId) =>
       processBatch(batch, batchId, keyStore, labelStore))
     spark.read.parquet(labelStore)
       .groupBy("lang", "source")

@@ -119,14 +119,14 @@ object StreamMediaDedup {
     * — last-batch ≈ first-batch seconds is that claim as a number,
     * where the r15 per-batch re-derivation read last ≈ B × first. */
   def m15StreamNearDup(spark: SparkSession, dir: String,
-                       waves: Int = StreamSketch.SplitFiles): DataFrame =
+                       waves: Int = Replay.Waves): DataFrame =
     runReplay(spark, docsOf(spark, dir), "doc_id", writeLedger = false,
       waves = waves)._1
 
   /** m16's change-feed ledger: m15's replay with the per-batch ledger
     * diff written. */
   def m16NearDupDelta(spark: SparkSession, dir: String,
-                      waves: Int = StreamSketch.SplitFiles): DataFrame =
+                      waves: Int = Replay.Waves): DataFrame =
     runReplay(spark, docsOf(spark, dir), "doc_id", waves = waves)._2
 
   /** m18: m15's streaming replay over the SECOND codec family — the
@@ -137,7 +137,7 @@ object StreamMediaDedup {
     * verb. Oracle = m14's SQL verbatim (the m15 ≡ m13 shared-string
     * move on the audio chain). */
   def m18StreamWavNearDup(spark: SparkSession, dir: String,
-                          waves: Int = StreamSketch.SplitFiles): DataFrame = {
+                          waves: Int = Replay.Waves): DataFrame = {
     val docs = Sources.table(spark, dir, "documents")
       .select("doc_id", "lang", "text")
     runReplay(spark, docs, "doc_id", d => MultimodalOps.whashBandsFrom(d),
@@ -178,7 +178,7 @@ object StreamMediaDedup {
     * sized. All three writes are idempotent `batch_id=N` overwrites
     * reading only committed data, so a retried batch converges. */
   def m20StreamConsensus(spark: SparkSession, dir: String,
-                         waves: Int = StreamSketch.SplitFiles): DataFrame =
+                         waves: Int = Replay.Waves): DataFrame =
     m20WithInfo(spark, dir, waves)._1
 
   /** m21: m20's per-channel change feed as its OWN oracle-checked gate
@@ -188,15 +188,15 @@ object StreamMediaDedup {
     * self-join), so per-channel conservation and the flip's paired
     * leave+enter are oracle-checked, not just spec-pinned. */
   def m21ConsensusDelta(spark: SparkSession, dir: String,
-                        waves: Int = StreamSketch.SplitFiles): DataFrame =
+                        waves: Int = Replay.Waves): DataFrame =
     m20WithInfo(spark, dir, waves)._2
 
   /** (final consensus set, delta ledger) of one consensus replay over
-    * `waves` batches — ScaleCheck's m20/m21 batches-axis rows double
+    * `waves` batches — ScaleCheck's m20 batches-axis row doubles
     * it: m15's incremental claim twice over plus the output-sized
     * consensus join, so last ≈ first is the design law. */
   private[graft] def m20WithInfo(spark: SparkSession, dir: String,
-                                 waves: Int = StreamSketch.SplitFiles)
+                                 waves: Int = Replay.Waves)
       : (DataFrame, DataFrame) =
     runConsensusReplay(spark,
       Sources.table(spark, dir, "documents").select("doc_id", "lang", "text"),
@@ -208,13 +208,15 @@ object StreamMediaDedup {
     * second-channel-lands flip (`image`→`both`). */
   private[graft] def runConsensusReplay(spark: SparkSession, docs: DataFrame,
       splitKey: String,
-      waves: Int = StreamSketch.SplitFiles): (DataFrame, DataFrame) = {
+      waves: Int = Replay.Waves): (DataFrame, DataFrame) = {
     val work = Files.createTempDirectory("graft_mediaconsensus_").toString
     val consStore = s"$work/consensus"
     val consLed = s"$work/cons_ledger"
     val times = new java.util.concurrent.ConcurrentLinkedQueue[ConsensusTimes]()
-    val n = StreamSketch.runWaveReplay(spark, docs, splitKey, work, consStore,
-      waves) { (batch, batchId) => consensusStep(batch, batchId, work, times.add(_)) }
+    Replay.replay(spark, docs, Replay.ByMod(splitKey), work, waves) {
+      (batch, batchId) => consensusStep(batch, batchId, work, times.add(_))
+    }
+    val n = Replay.countBatchDirs(consStore)
     // the §4.2b decomposition record: summed per-chain vs step wall —
     // excess of Σ step over Σ (max(img, aud) + cons) is the residual
     // the chains' overlap does NOT recover on one local JVM
@@ -355,24 +357,25 @@ object StreamMediaDedup {
     * per-batch store listing is bounded by 1 + batches-since-fold. */
   private[graft] def m19WithStoreInfo(spark: SparkSession, dir: String)
       : (DataFrame, Int, Int, Int, () => Long) = {
-    val half = StreamSketch.SplitFiles / 2
+    val half = Replay.Waves / 2
     val work = Files.createTempDirectory("graft_mediacompact_").toString
     val fpStore = s"$work/fp"
     val curStore = s"$work/cur"
     val ledgerStore = s"$work/ledger"
     var partsBefore = 0
     var partsAfter = 0
-    val n = StreamSketch.runWaveReplayPhased(spark, docsOf(spark, dir),
-      "doc_id", work, curStore, half) { (batch, batchId) =>
+    Replay.replay(spark, docsOf(spark, dir), Replay.ByMod("doc_id"), work,
+      splitAt = half, midpoint = () => {
+        partsBefore = Replay.countBatchDirs(fpStore)
+        IncrementalDedup.compactStore(spark, fpStore, "media_id")
+        partsAfter = Replay.countBatchDirs(fpStore)
+      }) { (batch, batchId) =>
       // m19's declared output is the final pair set; the change feed is
       // m16's product — writeLedger=false per the m15 rule
       processBatch(batch, batchId, fpStore, curStore, ledgerStore, ImageFp,
         writeLedger = false)
-    } { () =>
-      partsBefore = Replay.countBatchDirs(fpStore)
-      IncrementalDedup.compactStore(spark, fpStore, "media_id")
-      partsAfter = Replay.countBatchDirs(fpStore)
     }
+    val n = Replay.countBatchDirs(curStore)
     val partsEnd = Replay.countBatchDirs(fpStore)
     // cross-phase proof rows: final pairs with EXACTLY ONE side whose
     // fingerprint lives only in the consolidated batch_id=-1 partition
@@ -414,7 +417,7 @@ object StreamMediaDedup {
     * set is arrival-order-free because additions key on the order-free
     * fingerprint store and the crossing batch is order-dependent only
     * in WHEN, not WHETHER — df over the full corpus is order-free).
-    * `splitKey` must be a column whose `mod SplitFiles` value assigns
+    * `splitKey` must be a column whose `mod Replay.Waves` value assigns
     * waves (doc_id for the gates); `fpFrom` is the per-batch
     * fingerprint function — the quantizer-seam move: m15 plugs the
     * image aHash, m18 the audio sample-hash, and the
@@ -425,17 +428,18 @@ object StreamMediaDedup {
       splitKey: String,
       fpFrom: DataFrame => DataFrame = ImageFp,
       writeLedger: Boolean = true,
-      waves: Int = StreamSketch.SplitFiles)
+      waves: Int = Replay.Waves)
       : (DataFrame, DataFrame) = {
     val work = Files.createTempDirectory("graft_mediadedup_").toString
     val fpStore = s"$work/fp"
     val curStore = s"$work/cur"
     val ledgerStore = s"$work/ledger"
-    val n = StreamSketch.runWaveReplay(spark, docs, splitKey, work, curStore,
-      waves) { (batch, batchId) =>
+    Replay.replay(spark, docs, Replay.ByMod(splitKey), work, waves) {
+      (batch, batchId) =>
         processBatch(batch, batchId, fpStore, curStore, ledgerStore, fpFrom,
           writeLedger)
     }
+    val n = Replay.countBatchDirs(curStore)
     val pairs = spark.read.parquet(curStore)
       .filter(col("batch_id") === (n - 1).toLong)
       .select(col("a_id"), col("b_id"), col("hamming"))

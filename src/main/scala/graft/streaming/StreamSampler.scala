@@ -27,7 +27,7 @@ import graft.ops.{PipelineOps, TextOps}
   * equals the BATCH sampler's answer over the arrived corpus" —
   * enforced per batch by the oracle (every (batch, source) row
   * re-derived in closed form from the wave rule `doc_id mod
-  * [[StreamSketch.SplitFiles]] ≤ b`) and pinned at the final batch
+  * [[Replay.Waves]] ≤ b`) and pinned at the final batch
   * against p9 itself, whose machinery ([[PipelineOps.sampleKeepFrame]]
   * + [[PipelineOps.sampleLedger]]) runs here verbatim.
   *
@@ -54,13 +54,13 @@ object StreamSampler {
     * legitimately grows with arrived STATS (3-column rows); the
     * instrument prices that term. */
   def p13StreamSample(spark: SparkSession, dir: String,
-                      waves: Int = StreamSketch.SplitFiles): DataFrame = {
+                      waves: Int = Replay.Waves): DataFrame = {
     val work = Files.createTempDirectory("graft_samplemon_").toString
     val stats = s"$work/stats"
     val ledger = s"$work/ledger"
     val docs = Sources.table(spark, dir, "documents")
       .select("doc_id", "source", "text")
-    StreamSketch.runWaveReplay(spark, docs, "doc_id", work, ledger, waves) {
+    Replay.replay(spark, docs, Replay.ByMod("doc_id"), work, waves) {
       (batch, batchId) => sampleBatch(batch, batchId, stats, ledger)
     }
     spark.read.parquet(ledger)
@@ -105,7 +105,7 @@ object StreamSampler {
     val ledger = s"$work/ledger"
     val docs = Sources.table(spark, dir, "documents")
       .select("doc_id", "source", "text")
-    StreamSketch.runWaveReplay(spark, docs, "doc_id", work, ledger) {
+    Replay.replay(spark, docs, Replay.ByMod("doc_id"), work) {
       (batch, batchId) => deltaBatch(batch, batchId, stats, ledger)
     }
     spark.read.parquet(ledger)

@@ -50,12 +50,10 @@ object StreamSemDedup {
     * (ScaleCheck's `d20_batches_axis` doubles it). */
   def d20StreamSemDedup(spark: SparkSession, dir: String,
       orderExpr: org.apache.spark.sql.Column = col("vec_id"),
-      waves: Int = StreamAnnIngest.SplitFiles): DataFrame = {
+      waves: Int = Replay.Waves): DataFrame = {
     val work = Files.createTempDirectory("graft_semstream_").toString
-    val (splitDir, cbPath) = prepare(spark, dir, work, orderExpr, waves)
-    val store = s"$work/assigned"
     val pairStore = s"$work/pairs"
-    runStream(spark, splitDir, s"$work/ckpt", cbPath, store, pairStore, 0L)
+    runStream(spark, dir, work, orderExpr, waves)
     readPairs(spark, pairStore)
   }
 
@@ -88,27 +86,19 @@ object StreamSemDedup {
     * unchanged. */
   private[graft] def d21WithStoreInfo(spark: SparkSession, dir: String)
       : (DataFrame, Int, Int, Int, () => Long) = {
-    val half = StreamAnnIngest.SplitFiles / 2
+    val half = Replay.Waves / 2
     val work = Files.createTempDirectory("graft_semcompact_").toString
-    val (splitAll, cbPath) = prepare(spark, dir, work, col("vec_id"))
-    // deal the replay files into two arrival phases: the stream must
-    // CONTINUE over a compacted store, not restart (d19's shape)
-    val files = new java.io.File(splitAll).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val (aDir, bDir) = (s"$work/inA", s"$work/inB")
-    new java.io.File(aDir).mkdirs(); new java.io.File(bDir).mkdirs()
-    files.zipWithIndex.foreach { case (f, i) =>
-      val tgt = if (i < half) aDir else bDir
-      java.nio.file.Files.move(f.toPath,
-        java.nio.file.Paths.get(tgt, f.getName)): Unit
-    }
     val store = s"$work/assigned"
     val pairStore = s"$work/pairs"
-    runStream(spark, aDir, s"$work/ckptA", cbPath, store, pairStore, 0L)
-    val partsBefore = Replay.countBatchDirs(store)
-    IncrementalDedup.compactStore(spark, store, "cell")
-    val partsAfter = Replay.countBatchDirs(store)
-    runStream(spark, bDir, s"$work/ckptB", cbPath, store, pairStore, half.toLong)
+    var partsBefore = 0
+    var partsAfter = 0
+    // two arrival phases: the stream must CONTINUE over a compacted
+    // store, not restart (d19's shape)
+    runStream(spark, dir, work, col("vec_id"), splitAt = half, midpoint = () => {
+      partsBefore = Replay.countBatchDirs(store)
+      IncrementalDedup.compactStore(spark, store, "cell")
+      partsAfter = Replay.countBatchDirs(store)
+    })
     val partsEnd = Replay.countBatchDirs(store)
     // CROSS-PHASE pairs — emitted in a phase-B batch with the earlier
     // side living ONLY in the consolidated `batch_id=-1` partition:
@@ -129,29 +119,23 @@ object StreamSemDedup {
     (readPairs(spark, pairStore), partsBefore, partsAfter, partsEnd, crossPhase)
   }
 
-  /** Split the normed corpus into replay waves and write the offline
-    * two-level codebook (s23's quantizer-file motion,
-    * [[SimilarityOps.Hier]]) — shared by the single-replay gate
-    * (d20) and the phased compaction gate (d21). */
-  private def prepare(spark: SparkSession, dir: String, work: String,
-                      orderExpr: org.apache.spark.sql.Column,
-                      waves: Int = StreamAnnIngest.SplitFiles): (String, String) = {
-    val splitDir = s"$work/in"
+  /** The semantic-dedup replay under `work` — shared by the
+    * single-replay gate (d20) and the phased compaction gate (d21):
+    * deal the normed corpus into waves while the offline two-level
+    * codebook is written (s23's quantizer-file motion,
+    * [[SimilarityOps.Hier]]; disjoint paths, source-table reads only,
+    * so the two overlap, §2.6), then stream the waves into
+    * `work/assigned` and `work/pairs`. */
+  private def runStream(spark: SparkSession, dir: String, work: String,
+      orderExpr: org.apache.spark.sql.Column, waves: Int = Replay.Waves,
+      splitAt: Int = Int.MaxValue, midpoint: () => Unit = () => ()): Unit = {
     val all = SimilarityOps.normed(spark, dir)
     val cbPath = s"$work/codebook"
-    // two independent setup writes (disjoint paths, source-table reads
-    // only): overlap them (§2.6)
-    Replay.fence(
-      () => StreamAnnIngest.splitCorpus(all, splitDir, waves, orderExpr),
-      () => SimilarityOps.Hier.write(all, cbPath))
-    (splitDir, cbPath)
+    Replay.replay(spark, StreamAnnIngest.arrivals(all), Replay.ByRange(orderExpr),
+      work, waves, splitAt, Some(() => SimilarityOps.Hier.write(all, cbPath)),
+      midpoint)((batch, batchId) =>
+      processBatch(batch, batchId, cbPath, s"$work/assigned", s"$work/pairs"))
   }
-
-  private def runStream(spark: SparkSession, inDir: String, ckpt: String,
-                        cbPath: String, store: String, pairStore: String,
-                        offset: Long): Unit =
-    Replay.drain(spark, inDir, ckpt, offset)((batch, batchId) =>
-      processBatch(batch, batchId, cbPath, store, pairStore))
 
   private def readPairs(spark: SparkSession, pairStore: String): DataFrame =
     spark.read.parquet(pairStore)

@@ -47,10 +47,6 @@ import graft.io.Sources
   */
 object StreamSketch {
 
-  /** Fixture re-split count, same rationale as [[IncrementalDedup]]:
-    * one batch would vacuously reduce the merge to a batch build. */
-  val SplitFiles = 4
-
   /** DataSketches HLL lgConfigK: 2^12 registers → rsd ≈ 1.04/√4096 ≈
     * 1.6%; the StreamEquivSpec pin allows 5% (≈3σ). */
   val LgK = 12
@@ -66,15 +62,12 @@ object StreamSketch {
     * the claim as a number. */
   def x8StreamSketch(spark: SparkSession, dir: String,
       orderExpr: org.apache.spark.sql.Column = col("event_id"),
-      waves: Int = SplitFiles): DataFrame = {
+      waves: Int = Replay.Waves): DataFrame = {
     val work = Files.createTempDirectory("graft_sketchstream_").toString
-    val splitDir = s"$work/in"
-    Sources.table(spark, dir, "events")
-      .select("event_id", "event_type", "user_id")
-      .repartitionByRange(waves, orderExpr)
-      .write.parquet(splitDir)
     val store = s"$work/sketches"
-    Replay.drain(spark, splitDir, s"$work/ckpt", 0L)((batch, batchId) =>
+    Replay.replay(spark,
+      Sources.table(spark, dir, "events").select("event_id", "event_type", "user_id"),
+      Replay.ByRange(orderExpr), work, waves)((batch, batchId) =>
       processBatch(batch, batchId, store))
     spark.read.parquet(store).drop("batch_id")
       .groupBy("event_type")
@@ -148,13 +141,10 @@ object StreamSketch {
   def x9StreamQuantile(spark: SparkSession, dir: String,
       orderExpr: org.apache.spark.sql.Column = col("event_id")): DataFrame = {
     val work = Files.createTempDirectory("graft_quantstream_").toString
-    val splitDir = s"$work/in"
-    Sources.table(spark, dir, "events")
-      .select("event_id", "event_type", "value")
-      .repartitionByRange(SplitFiles, orderExpr)
-      .write.parquet(splitDir)
     val store = s"$work/hist"
-    Replay.drain(spark, splitDir, s"$work/ckpt", 0L)((batch, batchId) =>
+    Replay.replay(spark,
+      Sources.table(spark, dir, "events").select("event_id", "event_type", "value"),
+      Replay.ByRange(orderExpr), work)((batch, batchId) =>
       batch.groupBy(col("event_type"), bucket(col("value")).as("b"))
         .agg(count(lit(1)).as("cnt"))
         .write.mode("overwrite").parquet(s"$store/batch_id=$batchId"))
@@ -206,9 +196,7 @@ object StreamSketch {
       orderExpr: org.apache.spark.sql.Column = col("doc_id")): DataFrame = {
     import graft.ops.TextOps
     val work = Files.createTempDirectory("graft_cmsstream_").toString
-    val splitDir = s"$work/in"
     val docs = Sources.table(spark, dir, "documents").select("doc_id", "text")
-    docs.repartitionByRange(SplitFiles, orderExpr).write.parquet(splitDir)
     // the offline watchlist artifact: written once, read at serve time
     val watchPath = s"$work/watchlist"
     docs.select(explode(TextOps.tokens(col("text"))).as("token"))
@@ -216,7 +204,7 @@ object StreamSketch {
       .orderBy(col("cnt").desc, col("token")).limit(WatchK)
       .select("token").coalesce(1).write.parquet(watchPath)
     val store = s"$work/counters"
-    Replay.drain(spark, splitDir, s"$work/ckpt", 0L)((batch, batchId) =>
+    Replay.replay(spark, docs, Replay.ByRange(orderExpr), work)((batch, batchId) =>
       cmsPartial(batch)
         .write.mode("overwrite").parquet(s"$store/batch_id=$batchId"))
     val merged = spark.read.parquet(store).drop("batch_id")
@@ -270,38 +258,6 @@ object StreamSketch {
 
   /** x11's serve window: the LAST [[WindowBatches]] micro-batches. */
   val WindowBatches = 2
-
-  /** Two-phase variant of [[runWaveReplay]] for MID-STREAM store
-    * maintenance gates (d19's adversarial moment, shared scaffolding):
-    * waves [0, splitAt) replay as one query, then `midpoint()` runs
-    * while the stream is quiesced — exactly when a production table
-    * service takes the store lock — then waves [splitAt, SplitFiles)
-    * resume as a second query whose foreachBatch ids are offset by
-    * `splitAt`, so the wave → global-batch-id mapping (and with it
-    * every `batch_id < current` store prune and the oracle's membership
-    * rule) is IDENTICAL to the single-phase replay's. Same mod-key
-    * membership and ascending-mtime contract as [[runWaveReplay]]. */
-  private[streaming] def runWaveReplayPhased(spark: SparkSession, src: DataFrame,
-      splitKey: String, work: String, store: String, splitAt: Int)
-      (body: (DataFrame, Long) => Unit)(midpoint: () => Unit): Int = {
-    val dirs = Seq(s"$work/inA", s"$work/inB")
-    // resume idempotence (mirrors [[runWaveReplay]]'s marker guard): a
-    // re-run trusts the DEALT marker written after the LAST wave, never
-    // the directories' existence — a deal that died between waves would
-    // otherwise resume over a silently incomplete wave set; a torn deal
-    // is cleared and re-dealt (no stream has run: the marker precedes
-    // the first checkpoint)
-    if (!dealComplete(work)) {
-      dirs.foreach(d => Replay.deleteRecursively(new java.io.File(d)))
-      dealWaves(src, splitKey, SplitFiles, s"$work/in_staged",
-        b => dirs(if (b < splitAt) 0 else 1))
-      markDealt(work)
-    }
-    Replay.drain(spark, dirs(0), s"$work/ckptA", 0L)(body)
-    midpoint()
-    Replay.drain(spark, dirs(1), s"$work/ckptB", splitAt.toLong)(body)
-    Replay.countBatchDirs(store)
-  }
 
   /** Crash-recoverable store swap shared by the compaction verbs
     * (d19/p7's [[IncrementalDedup.compactStore]], x20's
@@ -357,96 +313,6 @@ object StreamSketch {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true): Unit
   }
 
-  /** One-pass wave deal shared by [[runWaveReplay]] and
-    * [[runWaveReplayPhased]]. The previous deal scanned `src` once PER
-    * WAVE (`waves` full passes, each funneled through a single-task
-    * coalesce(1) write) — `waves` scan+write jobs for one fixture. This
-    * is ONE job: every row is tagged `__wave = splitKey mod waves`, a
-    * hash repartition on the wave id places each wave's rows in exactly
-    * one task (explicit numPartitions, so AQE never re-splits it), and
-    * the dynamic-partitioned write therefore emits exactly one `part-`
-    * file per non-empty wave. The files are then promoted into their
-    * target directory (`destOf` routes a wave to its phase dir for the
-    * phased runner) with the SAME ascending-mtime stamps as before.
-    * Wave membership (the mod rule — the gates' oracle-expressible
-    * DATA contract) and one-file-per-wave are unchanged; an EMPTY wave
-    * (impossible for the gate fixtures, conceivable for an adversarial
-    * spec frame) falls back to a schema-only single-file write so the
-    * wave→batch-id numbering is preserved. */
-  private def dealWaves(src: DataFrame, splitKey: String, waves: Int,
-      staged: String, destOf: Int => String): Unit = {
-    src.withColumn("__wave", pmod(col(splitKey), lit(waves)))
-      .repartition(waves, col("__wave"))
-      .write.partitionBy("__wave").parquet(staged)
-    (0 until waves).foreach { b =>
-      val dest = new java.io.File(destOf(b))
-      dest.mkdirs()
-      val wdir = new java.io.File(staged, s"__wave=$b")
-      val parts = Option(wdir.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.startsWith("part-"))
-      val files: Array[java.io.File] =
-        if (parts.nonEmpty) parts.map { f =>
-          val tgt = new java.io.File(dest,
-            f"part-w$b%04d-" + f.getName.stripPrefix("part-"))
-          java.nio.file.Files.move(f.toPath, tgt.toPath)
-          tgt
-        }
-        else {
-          val prior = Option(dest.listFiles()).map(_.map(_.getName).toSet)
-            .getOrElse(Set.empty[String])
-          src.limit(0).coalesce(1).write.mode("append").parquet(dest.getPath)
-          dest.listFiles().filter(f =>
-            f.getName.startsWith("part-") && !prior(f.getName))
-        }
-      files.foreach(Replay.stampArrival(_, b))
-    }
-    Replay.deleteRecursively(new java.io.File(staged))
-  }
-
-  /** The deal-completion marker both replay scaffolds trust: created
-    * AFTER the last wave's mtime is stamped, so its presence means the
-    * full wave set is on disk. One metadata create — the s17 commit-
-    * marker rule applied to the replay fixture. */
-  private def dealComplete(work: String): Boolean =
-    new java.io.File(work, "_dealt").exists()
-
-  private def markDealt(work: String): Unit = {
-    val f = new java.io.File(work, "_dealt")
-    require(f.createNewFile(), s"cannot create deal marker $f")
-  }
-
-  /** x11/x12/x13's shared replay scaffolding: write `src` as
-    * [[SplitFiles]] mtime-ascending waves keyed by `splitKey` mod
-    * SplitFiles — the DATA membership rule that lets a serve window
-    * name an exact, oracle-expressible row set — replay them one file
-    * per micro-batch through `body` ([[Replay.drain]]), and return how
-    * many `batch_id=N` partitions `store` holds. One definition so the
-    * replay-order contract (mtime base, part-file filter, wave
-    * accounting) cannot drift between the windowed gates.
-    * `splitFiles` defaults to the gate fixture's [[SplitFiles]]; the
-    * batches-axis ScaleCheck instrument passes 2× to measure per-batch
-    * cost growth against batch INDEX at fixed data. */
-  private[streaming] def runWaveReplay(spark: SparkSession, src: DataFrame, splitKey: String,
-      work: String, store: String,
-      splitFiles: Int = SplitFiles)(body: (DataFrame, Long) => Unit): Int = {
-    val splitDir = s"$work/in"
-    // resume idempotence: a re-run over an existing work dir (the
-    // crash-recovery path — SinkSpec's restart shape) must not re-append
-    // the waves. What the re-run trusts is the DEALT marker, written
-    // after the LAST wave — not the directory's existence: a deal that
-    // died mid-wave leaves files but no marker, and resuming over it
-    // would silently replay an incomplete wave set, so a torn deal is
-    // cleared and re-dealt from scratch (safe — no stream has run yet:
-    // the marker precedes the first checkpoint).
-    if (!dealComplete(work)) {
-      Replay.deleteRecursively(new java.io.File(splitDir))
-      dealWaves(src, splitKey, splitFiles, s"$work/in_staged", _ => splitDir)
-      markDealt(work)
-    }
-    Replay.drain(spark, splitDir, s"$work/ckpt", 0L)(body)
-    Replay.countBatchDirs(store)
-  }
-
   /** x11: the claim x8/x9/x10 all make in prose — "any window of batches
     * merges after the fact at interactive cost" — converted into an
     * oracle-checked gate: per-type p50/p90 over ONLY the last
@@ -457,10 +323,10 @@ object StreamSketch {
     *
     * For the window to name an oracle-expressible row set, batch
     * membership must be a DATA rule, not an arrival accident: waves are
-    * written one at a time by `event_id mod [[SplitFiles]]` with
+    * dealt by `event_id mod [[Replay.Waves]]` ([[Replay.ByMod]]) with
     * ascending mtimes (the engine's stated file-replay order contract),
-    * so micro-batch b ≡ `event_id % SplitFiles = b` and the serve window
-    * is exactly `event_id % SplitFiles >= SplitFiles - WindowBatches` —
+    * so micro-batch b ≡ `event_id % Replay.Waves = b` and the serve window
+    * is exactly `event_id % Replay.Waves >= Replay.Waves - WindowBatches` —
     * the oracle runs x9's deterministic histogram SQL over that
     * predicate. In production the same role is played by the event-time
     * partition an ingest job assigns (batch ≈ hour/day); the window
@@ -478,12 +344,13 @@ object StreamSketch {
     val store = s"$work/hist"
     val events = Sources.table(spark, dir, "events")
       .select("event_id", "event_type", "value")
-    val nBatches = runWaveReplay(spark, events, "event_id", work, store) {
+    Replay.replay(spark, events, Replay.ByMod("event_id"), work) {
       (batch, batchId) =>
         batch.groupBy(col("event_type"), bucket(col("value")).as("b"))
           .agg(count(lit(1)).as("cnt"))
           .write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
     }
+    val nBatches = Replay.countBatchDirs(store)
     x11Serve(spark, store, nBatches)
   }
 
@@ -503,7 +370,7 @@ object StreamSketch {
   private[graft] def x11Batch(spark: SparkSession, dir: String): DataFrame =
     quantilesFromHistogram(
       Sources.table(spark, dir, "events")
-        .filter(pmod(col("event_id"), lit(SplitFiles)) >= SplitFiles - WindowBatches)
+        .filter(pmod(col("event_id"), lit(Replay.Waves)) >= Replay.Waves - WindowBatches)
         .groupBy(col("event_type"), bucket(col("value")).as("b"))
         .agg(count(lit(1)).as("cnt")))
 
@@ -526,7 +393,7 @@ object StreamSketch {
     * estimate. Raw events are never re-read; partials outside the
     * window are never deserialized.
     *
-    * Batch membership is x11's DATA rule (`event_id mod [[SplitFiles]]`,
+    * Batch membership is x11's DATA rule (`event_id mod [[Replay.Waves]]`,
     * waves written mtime-ascending per the engine's file-replay order
     * contract), so the window names an exact row set and the batch twin
     * — one sketch built directly over those rows — must agree
@@ -553,9 +420,10 @@ object StreamSketch {
     val store = s"$work/sketches"
     val events = Sources.table(spark, dir, "events")
       .select("event_id", "event_type", "user_id")
-    val nBatches = runWaveReplay(spark, events, "event_id", work, store) {
+    Replay.replay(spark, events, Replay.ByMod("event_id"), work) {
       (batch, batchId) => processBatch(batch, batchId, store)
     }
+    val nBatches = Replay.countBatchDirs(store)
     x12Serve(spark, store, nBatches)
   }
 
@@ -576,7 +444,7 @@ object StreamSketch {
     * BIT-FOR-BIT (register maxima are merge-invariant). */
   private[graft] def x12Batch(spark: SparkSession, dir: String): DataFrame =
     Sources.table(spark, dir, "events")
-      .filter(pmod(col("event_id"), lit(SplitFiles)) >= SplitFiles - WindowBatches)
+      .filter(pmod(col("event_id"), lit(Replay.Waves)) >= Replay.Waves - WindowBatches)
       .groupBy("event_type")
       .agg(
         expr(s"hll_sketch_estimate(hll_sketch_agg(user_id, $LgK))")
@@ -598,7 +466,7 @@ object StreamSketch {
     * the question is "how often did the tracked terms appear in the
     * last N batches", the trend-detection read a monitoring pipeline
     * issues. Batch membership is x11's DATA rule (`doc_id mod
-    * [[SplitFiles]]`, mtime-ascending waves), so the window names an
+    * [[Replay.Waves]]`, mtime-ascending waves), so the window names an
     * exact row set and the oracle rebuilds the identical windowed
     * sketch. StreamEquivSpec pins serve ≡ window batch twin bit-for-bit
     * and the per-term overcount property vs exact window counts. */
@@ -614,11 +482,12 @@ object StreamSketch {
       .groupBy("token").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("token")).limit(WatchK)
       .select("token").coalesce(1).write.parquet(watchPath)
-    val nBatches = runWaveReplay(spark, docs, "doc_id", work, store) {
+    Replay.replay(spark, docs, Replay.ByMod("doc_id"), work) {
       (batch, batchId) =>
         cmsPartial(batch)
           .write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
     }
+    val nBatches = Replay.countBatchDirs(store)
     x13Serve(spark, store, watchPath, nBatches)
   }
 
@@ -646,7 +515,7 @@ object StreamSketch {
       .groupBy("token").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("token")).limit(WatchK).select("token")
     val win = docs.filter(
-      pmod(col("doc_id"), lit(SplitFiles)) >= SplitFiles - WindowBatches)
+      pmod(col("doc_id"), lit(Replay.Waves)) >= Replay.Waves - WindowBatches)
     watchEstimates(watch, cmsPartial(win))
   }
 
@@ -731,7 +600,7 @@ object StreamSketch {
     * cumulative estimate EXACTLY (spec-pinned), cumulative estimates
     * are monotone, and each batch's estimate sits within the declared
     * error of the exact first-appearance count (computable in closed
-    * form because batch membership is the mod-[[SplitFiles]] DATA
+    * form because batch membership is the mod-[[Replay.Waves]] DATA
     * rule: a user's first batch is min(event_id mod m) over their
     * events). Rows-only by x8's declared precedent (HLL internals are
     * engine-specific); all pins live in StreamEquivSpec.
@@ -751,7 +620,7 @@ object StreamSketch {
     val store = s"$work/sketches"
     val events = Sources.table(spark, dir, "events")
       .select("event_id", "event_type", "user_id")
-    runWaveReplay(spark, events, "event_id", work, store) {
+    Replay.replay(spark, events, Replay.ByMod("event_id"), work) {
       (batch, batchId) => processBatch(batch, batchId, store)
     }
     val partials = spark.read.parquet(store)
@@ -774,13 +643,13 @@ object StreamSketch {
   }
 
   /** The exact twin of the growth curve under the membership rule: a
-    * user's first batch is min(event_id mod [[SplitFiles]]) over their
+    * user's first batch is min(event_id mod [[Replay.Waves]]) over their
     * events — the ground truth the sketch differences are pinned
     * against. */
   private[graft] def x17Exact(spark: SparkSession, dir: String): DataFrame =
     Sources.table(spark, dir, "events")
       .select(col("event_type"), col("user_id"),
-        pmod(col("event_id"), lit(SplitFiles)).cast("long").as("bid"))
+        pmod(col("event_id"), lit(Replay.Waves)).cast("long").as("bid"))
       .groupBy("event_type", "user_id").agg(min("bid").as("first_bid"))
       .groupBy("event_type", "first_bid")
       .agg(count(lit(1)).as("exact_new"))
@@ -820,7 +689,7 @@ object StreamSketch {
     val store = s"$work/counters"
     val cands = s"$work/candidates"
     val docs = Sources.table(spark, dir, "documents").select("doc_id", "text")
-    runWaveReplay(spark, docs, "doc_id", work, store) {
+    Replay.replay(spark, docs, Replay.ByMod("doc_id"), work) {
       (batch, batchId) =>
         import graft.ops.TextOps
         cmsPartial(batch)
@@ -847,7 +716,7 @@ object StreamSketch {
     import org.apache.spark.sql.expressions.Window
     val docs = Sources.table(spark, dir, "documents").select("doc_id", "text")
     val sliceCounts = docs
-      .withColumn("bid", pmod(col("doc_id"), lit(SplitFiles)))
+      .withColumn("bid", pmod(col("doc_id"), lit(Replay.Waves)))
       .select(col("bid"), explode(TextOps.tokens(col("text"))).as("token"))
       .groupBy("bid", "token").agg(count(lit(1)).as("cnt"))
     val w = Window.partitionBy("bid").orderBy(col("cnt").desc, col("token"))
@@ -877,7 +746,7 @@ object StreamSketch {
     *
     * Fully deterministic, so — like x9/x11/x13 and unlike the HLL pair
     * — ORACLE-CHECKED end to end: batch membership is x11's DATA rule
-    * (`event_id mod [[SplitFiles]]`, mtime-ascending waves), the
+    * (`event_id mod [[Replay.Waves]]`, mtime-ascending waves), the
     * decimal sums replay exactly in SQL (the q04/q12 DECIMAL-addend
     * precedent), and mean/std/z are the same IEEE expressions on both
     * engines. The fixture's pseudo-random split carries a law worth
@@ -896,11 +765,12 @@ object StreamSketch {
     val store = s"$work/moments"
     val events = Sources.table(spark, dir, "events")
       .select("event_id", "event_type", "value")
-    val nBatches = runWaveReplay(spark, events, "event_id", work, store) {
+    Replay.replay(spark, events, Replay.ByMod("event_id"), work) {
       (batch, batchId) =>
         momentPartial(batch)
           .write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
     }
+    val nBatches = Replay.countBatchDirs(store)
     driftFromMoments(spark.read.parquet(store), nBatches - 1)
   }
 
@@ -913,12 +783,12 @@ object StreamSketch {
       scaleLatest: Double = 1.0): DataFrame = {
     val events = Sources.table(spark, dir, "events")
       .select(col("event_id"), col("event_type"),
-        when(pmod(col("event_id"), lit(SplitFiles)) === SplitFiles - 1,
+        when(pmod(col("event_id"), lit(Replay.Waves)) === Replay.Waves - 1,
           col("value") * scaleLatest).otherwise(col("value")).as("value"))
-      .withColumn("batch_id", pmod(col("event_id"), lit(SplitFiles)).cast("long"))
+      .withColumn("batch_id", pmod(col("event_id"), lit(Replay.Waves)).cast("long"))
     val partials = momentPartial(events.groupBy(col("batch_id"),
       col("event_type")))
-    driftFromMoments(partials, SplitFiles - 1)
+    driftFromMoments(partials, Replay.Waves - 1)
   }
 
   /** One slice's moment partial: count + decimal-exact Σv and Σv² per

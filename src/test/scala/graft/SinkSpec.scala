@@ -111,8 +111,8 @@ class SinkSpec extends AnyFunSuite {
     // as a silently short store a caller would count — and a re-run over
     // the same work dir + checkpoint must redo from k, ending exactly as
     // an uninterrupted run does
-    import graft.streaming.{Replay, StreamAnnIngest}
-    val n = StreamAnnIngest.SplitFiles
+    import graft.streaming.Replay
+    val n = Replay.Waves
     val events = Sources.table(spark, sf, "events").select("event_id", "event_type")
     def replay(work: String, crashAt: Option[Long]): Unit =
       Replay.drain(spark, s"$work/in", s"$work/ckpt", 0L) { (batch, batchId) =>
@@ -205,6 +205,88 @@ class SinkSpec extends AnyFunSuite {
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       Replay.recorded(drain(failed, "in", 0L, crashAt = Some(1L)))
     }
+  }
+
+  test("Replay.deal: one stamped file per wave, phases split at splitAt, _dealt last and trusted") {
+    // the deal behind every store gate's replay, under both membership
+    // rules: wave b is one file stamped as arrival b, waves < splitAt
+    // are phase A, the `_dealt` marker seals the set — a torn deal is
+    // cleared and dealt again, a dealt work dir is left as it is
+    import graft.streaming.Replay
+    val events = Sources.table(spark, sf, "events").select("event_id", "event_type")
+    val waves = Replay.Waves
+    def parts(dir: String): Seq[java.io.File] =
+      Option(new java.io.File(dir).listFiles()).toSeq.flatten
+        .filter(_.getName.startsWith("part-"))
+    def ids(f: java.io.File): Seq[Long] =
+      spark.read.parquet(f.getPath).select("event_id").collect().map(_.getLong(0)).toSeq
+    val allIds = events.select("event_id").collect().map(_.getLong(0)).toSeq.sorted
+    def stamped(work: String): Seq[(String, Long)] =
+      Seq("in", "inA", "inB").flatMap(d => parts(s"$work/$d"))
+        .map(f => (f.getPath, f.lastModified)).sortBy(_._2)
+    for {
+      rule <- Seq(Replay.ByRange(col("event_id")), Replay.ByMod("event_id"))
+      splitAt <- Seq(Int.MaxValue, 2)
+    } {
+      val work = tmp("graft_deal_")
+      Replay.deal(events, rule, work, waves, splitAt)
+      val dealt = stamped(work)
+      val files = dealt.map(p => new java.io.File(p._1))
+      assert(files.size == waves, s"$rule split $splitAt: ${files.size} files for $waves waves")
+      val mtimes = dealt.map(_._2)
+      assert(mtimes.sliding(2).forall { case Seq(a, b) => a < b },
+        s"$rule: mtimes not strictly ascending: $mtimes")
+      val waveIds = files.map(ids)
+      assert(waveIds.flatten.sorted == allIds,
+        s"$rule: the waves do not partition the table")
+      rule match {
+        case Replay.ByMod(_) =>
+          waveIds.zipWithIndex.foreach { case (xs, b) =>
+            assert(xs.forall(x => Math.floorMod(x, waves.toLong) == b), s"wave $b holds ${xs.take(5)}")
+          }
+        case _ =>
+          waveIds.sliding(2).foreach { case Seq(a, b) =>
+            assert(a.max < b.min, s"range waves overlap: ${a.max} >= ${b.min}")
+          }
+      }
+      if (splitAt < waves) {
+        assert(parts(s"$work/inA").map(_.getPath).toSet == files.take(splitAt).map(_.getPath).toSet,
+          "phase A does not hold exactly the waves before splitAt")
+        assert(parts(s"$work/inB").size == waves - splitAt)
+      }
+      assert(new java.io.File(work, "_dealt").exists())
+      // dealt: a second call (even over another frame) leaves every
+      // file, name and stamp as the first call wrote it
+      Replay.deal(events.limit(0), rule, work, waves, splitAt)
+      assert(stamped(work) == dealt, s"$rule: a dealt work dir was dealt again")
+      // torn: part files but no marker — cleared and dealt again
+      new java.io.File(work, "_dealt").delete()
+      val stray = new java.io.File(files.head.getParentFile, "part-stray.parquet")
+      java.nio.file.Files.copy(files.last.toPath, stray.toPath)
+      Replay.deal(events, rule, work, waves, splitAt)
+      val redealt = stamped(work)
+      assert(redealt.size == waves && redealt.map(_._2) == mtimes && !stray.exists(),
+        s"$rule: a torn deal was not cleared: $redealt")
+      assert(redealt.map(_._1).toSet.intersect(dealt.map(_._1).toSet).isEmpty)
+      assert(new java.io.File(work, "_dealt").exists())
+    }
+    // an empty wave still gets its file, so wave b stays batch b
+    val holey = tmp("graft_deal_")
+    Replay.deal(events.filter(pmod(col("event_id"), lit(waves)) =!= 2), Replay.ByMod("event_id"), holey)
+    val holeyFiles = stamped(holey).map(p => new java.io.File(p._1))
+    assert(holeyFiles.map(ids(_).isEmpty) == Seq(false, false, true, false))
+    // the runner: phase B's ids continue phase A's, the midpoint runs
+    // between them, and a dealt work dir only drains
+    val run = tmp("graft_deal_")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    Replay.replay(spark, events, Replay.ByMod("event_id"), run, splitAt = 2,
+      midpoint = () => seen.add("mid"): Unit) { (batch, batchId) =>
+      seen.add(s"$batchId:${batch.count()}"): Unit
+    }
+    import scala.jdk.CollectionConverters._
+    val perWave = (0 until waves).map(b => events.filter(pmod(col("event_id"), lit(waves)) === b).count())
+    assert(seen.asScala.toSeq == Seq(s"0:${perWave(0)}", s"1:${perWave(1)}", "mid",
+      s"2:${perWave(2)}", s"3:${perWave(3)}"))
   }
 
   test("Replay.appendFlushed leaves no flush-sentinel directory behind") {

@@ -193,7 +193,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val batch = rows(graft.ops.DedupOps.d3MinhashLsh(spark, sf))
     val (streamDf, nBatches) =
       withBatches(graft.streaming.IncrementalDedup.d12StreamMinhash(spark, sf))
-    assert(nBatches == graft.streaming.IncrementalDedup.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(batch.nonEmpty)
     assert(rows(streamDf) == batch)
@@ -204,7 +204,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val (streamDf, nBatches) =
       withBatches(graft.streaming.StreamAnnIngest.ingestServe(spark, sf,
         graft.ops.SimilarityOps.Flat, 1, org.apache.spark.sql.functions.col("vec_id")))
-    assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(batch.nonEmpty)
     assert(rows(streamDf) == batch)
@@ -222,7 +222,7 @@ class StreamEquivSpec extends AnyFunSuite {
   }
 
   test("d19 band-store compaction: mid-stream swap invisible to first-arrival joins, partitions bounded") {
-    val half = graft.streaming.IncrementalDedup.SplitFiles / 2
+    val half = graft.streaming.Replay.Waves / 2
     val (result, before, after, end, emitted) =
       graft.streaming.IncrementalDedup.d19WithStoreInfo(spark, sf)
     // the compaction genuinely consolidated: half the replay's batch
@@ -232,7 +232,7 @@ class StreamEquivSpec extends AnyFunSuite {
     assert(after == 1, s"compacted store has $after partitions, expected 1")
     assert(end == 1 + half, s"post-stream store has $end partitions, expected ${1 + half}")
     // the pair OUTPUT ledger is untouched by compaction: one dir per batch
-    assert(emitted == graft.streaming.IncrementalDedup.SplitFiles,
+    assert(emitted == graft.streaming.Replay.Waves,
       s"pair ledger has $emitted batch dirs — compaction touched the output store")
     // the first-arrival claim end to end: the second half's batches read
     // the COMPACTED prior state, and the union still equals batch d3
@@ -331,7 +331,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val (streamDf, nBatches) =
       withBatches(graft.streaming.StreamAnnIngest.ingestServe(spark, sf,
         graft.ops.SimilarityOps.Hier, 1, col("vec_id")))
-    assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(batch.nonEmpty)
     assert(rows(streamDf) == batch)
@@ -349,7 +349,7 @@ class StreamEquivSpec extends AnyFunSuite {
     // the static two-level codebook, so reversed arrival is the same set
     val (rev, nr) = withBatches(graft.streaming.StreamAnnIngest
       .ingestServe(spark, sf, graft.ops.SimilarityOps.Hier, 1, negate(col("vec_id"))))
-    assert(nr == graft.streaming.StreamAnnIngest.SplitFiles)
+    assert(nr == graft.streaming.Replay.Waves)
     assert(rows(rev) == batch,
       "reversed-arrival s23 diverged from batch s22 — hier index union is order-dependent")
   }
@@ -359,7 +359,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val ((streamDf, perBatchF), nBatches) =
       withBatches(graft.streaming.StreamAnnIngest.s20WithInfo(spark, sf))
     val perBatch = perBatchF()
-    assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(batch.nonEmpty)
     // the union of the per-batch alert ledgers IS the batch radius answer
@@ -384,7 +384,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val ((streamDf, perBatchF), nBatches) =
       withBatches(graft.streaming.StreamAnnIngest.s30WithInfo(spark, sf))
     val perBatch = perBatchF()
-    assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(batch.nonEmpty)
     assert(rows(streamDf) == batch,
@@ -403,7 +403,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val (streamDf, nBatches) =
       withBatches(graft.streaming.StreamAnnIngest.ingestServe(spark, sf,
         graft.ops.SimilarityOps.Flat, np, org.apache.spark.sql.functions.col("vec_id")))
-    assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(batch.nonEmpty)
     // multi-probe genuinely widens the answer set vs the nprobe=1 serve
@@ -436,7 +436,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val ((streamDf, drainsF), nBatches) =
       withBatches(graft.streaming.StreamAnnIngest.s12WithInfo(spark, sf))
     val drains = drainsF()
-    assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     // the ledger drains per batch: requests for not-yet-arrived vectors
     // stay pending and are tombstoned by the batch their vector lands in
@@ -490,7 +490,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val ((compDf, drainsF, nLiveF, nDroppedF), nBatches) =
       withBatches(graft.streaming.StreamAnnIngest.s25WithInfo(spark, sf))
     val (drains, nLive, nDropped) = (drainsF(), nLiveF(), nDroppedF())
-    assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     // the ledger drains across batches (the out-of-order pending path)
     assert(drains.length > 1,
@@ -531,7 +531,7 @@ class StreamEquivSpec extends AnyFunSuite {
       withBatches(graft.streaming.StreamAnnIngest.s16WithInfo(spark, sf))
     val (nTombs, nSame, nMoved) = (nTombsF(), nSameF(), nMovedF())
     // 4 corpus batches + the update wave
-    assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles + 1,
+    assert(nBatches == graft.streaming.Replay.Waves + 1,
       s"replay ran $nBatches micro-batches — expected corpus batches + update wave")
     assert(nTombs > 0, "no prior entries were tombstoned — vacuous upsert run")
     // both replacement kinds exercised: a same-cell update proves the
@@ -566,7 +566,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val ((streamDf, nTombsF, nSameF, nMovedF), nBatches) =
       withBatches(graft.streaming.StreamAnnIngest.s27WithInfo(spark, sf))
     val (nTombs, nSame, nMoved) = (nTombsF(), nSameF(), nMovedF())
-    assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles + 1,
+    assert(nBatches == graft.streaming.Replay.Waves + 1,
       s"replay ran $nBatches micro-batches — expected corpus batches + update wave")
     assert(nTombs > 0, "no prior entries were tombstoned — vacuous upsert run")
     // both replacement kinds must occur UNDER THE HIER CELLS: the
@@ -612,7 +612,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val ((store, _), nBatches) =
       withBatches(graft.streaming.StreamAnnIngest.runIngestStream(spark, sf,
         ops.Hier.retrained, col("vec_id")))
-    assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     val served = rows(ops.probeAssigned(
       spark.read.parquet(store).drop("batch_id")))
@@ -630,7 +630,7 @@ class StreamEquivSpec extends AnyFunSuite {
     // gen-1 chain over the UPDATED corpus — no stream anywhere in the
     // oracle side
     val (live, nBatches) = withBatches(graft.streaming.StreamAnnIngest.s27LiveRows(spark, sf))
-    assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles + 1,
+    assert(nBatches == graft.streaming.Replay.Waves + 1,
       s"replay ran $nBatches micro-batches — expected corpus batches + update wave")
     val liveC = live.cache()
     try {
@@ -680,7 +680,7 @@ class StreamEquivSpec extends AnyFunSuite {
 
   test("p11 stream blend: ledger accretes per batch, final batch ≡ p9's batch view, totals monotone") {
     val (df, nBatches) = withBatches(graft.streaming.BlendMonitor.p11StreamBlend(spark, sf))
-    assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     val ledger = df.collect()
     // the composition pin: after the final batch the arrived corpus IS
@@ -711,10 +711,10 @@ class StreamEquivSpec extends AnyFunSuite {
   }
 
   test("p12 blend-stats compaction: mid-stream sum fold invisible to the ledger, partitions bounded") {
-    val half = graft.streaming.StreamSketch.SplitFiles / 2
+    val half = graft.streaming.Replay.Waves / 2
     val ((df, before, after, end), nBatches) =
       withBatches(graft.streaming.BlendMonitor.p12WithStoreInfo(spark, sf))
-    assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"phased replay ran $nBatches micro-batches")
     // the fold genuinely consolidated: half the replay's stats dirs
     // collapse to ONE batch_id=-1 partition, then the listing stays
@@ -730,7 +730,7 @@ class StreamEquivSpec extends AnyFunSuite {
 
   test("p13 stream sampler: ledger accretes per batch, final batch ≡ p9's sample, binding source whole") {
     val (df, nBatches) = withBatches(graft.streaming.StreamSampler.p13StreamSample(spark, sf))
-    assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     val ledger = df.collect()
     // the composition pin: after the final batch the arrived corpus IS
@@ -770,12 +770,12 @@ class StreamEquivSpec extends AnyFunSuite {
     assert(batch.nonEmpty)
     val (streamDf, nBatches) =
       withBatches(graft.streaming.StreamSemDedup.d20StreamSemDedup(spark, sf))
-    assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(rows(streamDf) == batch)
     val (revDf, nRev) = withBatches(graft.streaming.StreamSemDedup
       .d20StreamSemDedup(spark, sf, negate(col("vec_id"))))
-    assert(nRev == graft.streaming.StreamAnnIngest.SplitFiles)
+    assert(nRev == graft.streaming.Replay.Waves)
     assert(rows(revDf) == batch,
       "reversed-arrival d20 diverged from batch d18 pairs — emission is order-dependent")
   }
@@ -786,7 +786,7 @@ class StreamEquivSpec extends AnyFunSuite {
     // the batch hier SemDeDup answer exactly; the store listing must
     // genuinely consolidate (half the waves → 1) and stay bounded at
     // 1 + batches-since after
-    val half = graft.streaming.StreamAnnIngest.SplitFiles / 2
+    val half = graft.streaming.Replay.Waves / 2
     val (result, before, after, end, crossPhaseF) =
       graft.streaming.StreamSemDedup.d21WithStoreInfo(spark, sf)
     val crossPhase = crossPhaseF()
@@ -811,17 +811,17 @@ class StreamEquivSpec extends AnyFunSuite {
     assert(batch.nonEmpty)
     val (streamDf, nBatches) =
       withBatches(graft.streaming.StreamMediaDedup.m15StreamNearDup(spark, sf))
-    assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(rows(streamDf) == batch)
     // the per-batch re-derivation reads only the order-free fingerprint
     // store, so the final set must survive REVERSED arrival
     val docs = Sources.table(spark, sf, "documents").select("doc_id", "text")
-      .withColumn("rk", lit(graft.streaming.StreamSketch.SplitFiles - 1)
-        - pmod(col("doc_id"), lit(graft.streaming.StreamSketch.SplitFiles)))
+      .withColumn("rk", lit(graft.streaming.Replay.Waves - 1)
+        - pmod(col("doc_id"), lit(graft.streaming.Replay.Waves)))
     val ((revPairs, _), nRev) =
       withBatches(graft.streaming.StreamMediaDedup.runReplay(spark, docs, "rk"))
-    assert(nRev == graft.streaming.StreamSketch.SplitFiles)
+    assert(nRev == graft.streaming.Replay.Waves)
     assert(rows(revPairs) == batch,
       "reversed-arrival m15 diverged from batch m13 — the re-derivation is order-dependent")
   }
@@ -835,7 +835,7 @@ class StreamEquivSpec extends AnyFunSuite {
     assert(batch.nonEmpty)
     val (streamDf, nBatches) =
       withBatches(graft.streaming.StreamMediaDedup.m18StreamWavNearDup(spark, sf))
-    assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(rows(streamDf) == batch,
       "streamed audio near-dup diverged from batch m14")
@@ -843,7 +843,7 @@ class StreamEquivSpec extends AnyFunSuite {
 
   test("m16 change feed: conservation, batch 0 all-additions, digest null-ness") {
     val (df, nBatches) = withBatches(graft.streaming.StreamMediaDedup.m16NearDupDelta(spark, sf))
-    assert(nBatches == graft.streaming.StreamSketch.SplitFiles)
+    assert(nBatches == graft.streaming.Replay.Waves)
     val ledger = df.collect()
     assert(ledger.length == nBatches)
     // batch 0 diffs against the empty set: all additions, no retraction
@@ -867,7 +867,7 @@ class StreamEquivSpec extends AnyFunSuite {
 
   test("m15/m16 planted over-the-cap clique: pairs emit while cold, RETRACT when the band crosses the df cap") {
     import org.apache.spark.sql.functions._
-    val m = graft.streaming.StreamSketch.SplitFiles
+    val m = graft.streaming.Replay.Waves
     // 120 byte-identical payloads at a CONSTANT BMP width (doc_id ≡ 0
     // mod 17 pins buildBmp's 16 + id%17 geometry), so all 120 share one
     // fingerprint — every band value's df is exactly the arrived clique
@@ -945,7 +945,7 @@ class StreamEquivSpec extends AnyFunSuite {
     // set must still be batch m13's answer exactly; the store listing
     // must genuinely consolidate (half the waves → 1) and stay bounded
     // at 1 + batches-since after
-    val half = graft.streaming.StreamSketch.SplitFiles / 2
+    val half = graft.streaming.Replay.Waves / 2
     val (result, before, after, end, crossPhaseF) =
       graft.streaming.StreamMediaDedup.m19WithStoreInfo(spark, sf)
     val crossPhase = crossPhaseF()
@@ -969,7 +969,7 @@ class StreamEquivSpec extends AnyFunSuite {
     assert(batch.nonEmpty)
     val ((streamDf, ledgerDf), nBatches) =
       withBatches(graft.streaming.StreamMediaDedup.m20WithInfo(spark, sf))
-    assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(rows(streamDf) == batch,
       "streamed consensus diverged from batch m17")
@@ -1028,7 +1028,7 @@ class StreamEquivSpec extends AnyFunSuite {
     // 2, still cold). The crowd's own audio clique (df 120) crosses its
     // cap the same wave, so the final consensus is exactly {(0, 34,
     // audio)}.
-    val m = graft.streaming.StreamSketch.SplitFiles
+    val m = graft.streaming.Replay.Waves
     assert(m == 4, "plant's wave arithmetic assumes 4 waves")
     val payload = lit("planted twin payload")
     val pair = spark.range(0, 2)
@@ -1087,7 +1087,7 @@ class StreamEquivSpec extends AnyFunSuite {
     // foreachBatch contract is exactly "re-invoke with the same id".
     import org.apache.spark.sql.functions._
     val md = graft.streaming.StreamMediaDedup
-    val m = graft.streaming.StreamSketch.SplitFiles
+    val m = graft.streaming.Replay.Waves
     val docs = Sources.table(spark, sf, "documents").select("doc_id", "text")
     def wave(b: Int) = docs.filter(pmod(col("doc_id"), lit(m.toLong)) === b)
     val work = java.nio.file.Files.createTempDirectory("graft_mediaredo_").toString
@@ -1143,7 +1143,7 @@ class StreamEquivSpec extends AnyFunSuite {
     // foreachBatch contract is exactly "re-invoke with the same id".
     import org.apache.spark.sql.functions._
     val md = graft.streaming.StreamMediaDedup
-    val m = graft.streaming.StreamSketch.SplitFiles
+    val m = graft.streaming.Replay.Waves
     val docs = Sources.table(spark, sf, "documents")
       .select("doc_id", "lang", "text")
     def wave(b: Int) = docs.filter(pmod(col("doc_id"), lit(m.toLong)) === b)
@@ -1202,7 +1202,7 @@ class StreamEquivSpec extends AnyFunSuite {
 
   test("p14 sample delta: conservation per source, batch 0 all-additions, both directions occur, final blend ≡ p9") {
     val (df, nBatches) = withBatches(graft.streaming.StreamSampler.p14SampleDelta(spark, sf))
-    assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     val ledger = df.collect()
     assert(ledger.nonEmpty)
@@ -1242,7 +1242,7 @@ class StreamEquivSpec extends AnyFunSuite {
 
   test("p11 blendBatch heals a crashed swap BEFORE its per-batch write: totals stay full-history") {
     import org.apache.spark.sql.functions._
-    val sm = graft.streaming.StreamSketch.SplitFiles
+    val sm = graft.streaming.Replay.Waves
     val work = java.nio.file.Files.createTempDirectory("graft_blendheal_").toString
     val stats = s"$work/stats"
     val ledger = s"$work/ledger"
@@ -1420,7 +1420,7 @@ class StreamEquivSpec extends AnyFunSuite {
     // (near/contam/kept) still hold — the funnel prefix is stage-exact
     val (streamDf, nBatches) =
       withBatches(graft.streaming.StreamFunnel.p2StreamFunnel(spark, sf))
-    assert(nBatches == graft.streaming.StreamFunnel.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     val p1 = graft.ops.PipelineOps.p1PipelineLedger(spark, sf)
       .select(col("lang"), col("source"), col("n_docs"), col("n_eval"),
@@ -1454,7 +1454,7 @@ class StreamEquivSpec extends AnyFunSuite {
       .withColumn("doc_id", col("doc_id") + lit(1000000L)) // % EvalMod preserved
     val planted = docs.unionByName(copies)
     val (streamDf, nBatches) = withBatches(graft.streaming.StreamFunnel.p2From(planted))
-    assert(nBatches == graft.streaming.StreamFunnel.SplitFiles)
+    assert(nBatches == graft.streaming.Replay.Waves)
     val nExact = streamDf.agg(sum("n_exact_dup")).collect()(0).getLong(0)
     assert(nExact == 5, s"expected the 5 planted copies to drop, got $nExact")
     // and the ledger still balances doc-for-doc
@@ -1493,7 +1493,7 @@ class StreamEquivSpec extends AnyFunSuite {
       original.withColumn("doc_id", lit(id))).reduce(_ unionByName _)
     val planted = docs.unionByName(copies)
     val (streamDf, nBatches) = withBatches(graft.streaming.StreamFunnel.p2From(planted))
-    assert(nBatches == graft.streaming.StreamFunnel.SplitFiles)
+    assert(nBatches == graft.streaming.Replay.Waves)
     val totals = streamDf.agg(
       sum("n_docs").as("nd"), sum("n_exact_dup").as("ne")).collect()(0)
     assert(totals.getLong(0) == 503L,
@@ -1521,7 +1521,7 @@ class StreamEquivSpec extends AnyFunSuite {
       "fixture has a chain-shaped cluster — p3≡p1 parity not expected")
     val (streamDf, nBatches) =
       withBatches(graft.streaming.FullFunnel.p3StreamFunnel(spark, sf))
-    assert(nBatches == graft.streaming.FullFunnel.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     val p1 = rows(graft.ops.PipelineOps.p1PipelineLedger(spark, sf))
     assert(rows(streamDf) == p1, "online funnel diverged from batch p1")
@@ -1558,7 +1558,7 @@ class StreamEquivSpec extends AnyFunSuite {
     assert(ver.count() == 3, "planted truncations failed to verify at J >= 0.7")
     val twin = rows(graft.streaming.FullFunnel.batchTwin(planted))
     val (streamDf, nBatches) = withBatches(graft.streaming.FullFunnel.p3From(planted))
-    assert(nBatches == graft.streaming.FullFunnel.SplitFiles)
+    assert(nBatches == graft.streaming.Replay.Waves)
     assert(rows(streamDf) == twin, "stream diverged from the batch twin")
     // the fixture's natural near-dup count is 14 (deterministic md5/LSH,
     // no RNG anywhere); all 3 copies must drop as near on top of it
@@ -1570,7 +1570,7 @@ class StreamEquivSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val (streamDf, nBatches) =
       withBatches(graft.streaming.StreamSketch.x8StreamSketch(spark, sf))
-    assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     val stream = rows(streamDf)
     // merge-invariance: HLL register maxima are order- and partition-
@@ -1600,7 +1600,7 @@ class StreamEquivSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val (streamDf, nBatches) =
       withBatches(graft.streaming.StreamSketch.x9StreamQuantile(spark, sf))
-    assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     val stream = rows(streamDf)
     // merge-exactness: histogram counts are additive, so the merged
@@ -1639,7 +1639,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val w17 = java.nio.file.Files.createTempDirectory("graft_growth17_").toString
     val (growth, nBatches) =
       withBatches(graft.streaming.StreamSketch.x17StreamGrowth(spark, sf, Some(w17)))
-    assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     val g = growth.collect()
     assert(g.nonEmpty)
@@ -1655,7 +1655,7 @@ class StreamEquivSpec extends AnyFunSuite {
       "duplicate sketch partials in the store")
     val want = graft.io.Sources.table(spark, sf, "events")
       .select(pmod(col("event_id"),
-        lit(graft.streaming.StreamSketch.SplitFiles)).cast("long").as("b"),
+        lit(graft.streaming.Replay.Waves)).cast("long").as("b"),
         col("event_type"))
       .distinct().collect().map(r => (r.getLong(0), r.getString(1)))
     assert(partials.toSet == want.toSet,
@@ -1696,7 +1696,7 @@ class StreamEquivSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val (streamDf, nBatches) =
       withBatches(graft.streaming.IncrementalExport.p6IncrementalExport(spark, sf))
-    assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     val twin = rows(graft.streaming.IncrementalExport.p6BatchTwin(spark, sf))
     assert(twin.nonEmpty)
@@ -1742,7 +1742,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val resumed = graft.streaming.IncrementalExport
       .p6IncrementalExport(spark, sf, workDir = Some(work))
     val nBatches = Replay.countBatchDirs(s"$work/manifest")
-    assert(nBatches == graft.streaming.StreamSketch.SplitFiles)
+    assert(nBatches == graft.streaming.Replay.Waves)
     assert(rows(resumed) ==
       rows(graft.streaming.IncrementalExport.p6BatchTwin(spark, sf)),
       "resumed export diverged from the from-scratch derivation — the torn state leaked")
@@ -1758,7 +1758,7 @@ class StreamEquivSpec extends AnyFunSuite {
       "histogram serve changed across the vacuum — retention touched the window")
     assert(retired.nonEmpty && nAfter == nBefore - retired.size,
       s"store kept $nAfter of $nBefore partitions but retired ${retired.size}")
-    assert(retired == (0L until (StreamSketch.SplitFiles - StreamSketch.WindowBatches)),
+    assert(retired == (0L until (Replay.Waves - StreamSketch.WindowBatches)),
       s"retired $retired — not the pre-window prefix")
     // the same invariance on the OTHER two store kinds (HLL registers,
     // CMS counters): build, serve (materialized BEFORE the vacuum),
@@ -1788,7 +1788,7 @@ class StreamEquivSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val (streamDf, nBatches) =
       withBatches(graft.streaming.LateLedger.x19LateLedger(spark, sf))
-    assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     val stream = rows(streamDf)
     assert(stream.nonEmpty)
@@ -1832,7 +1832,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val resumed = graft.streaming.LateLedger
       .x19LateLedger(spark, sf, workDir = Some(work))
     val nBatches = Replay.countBatchDirs(s"$work/ledger")
-    assert(nBatches == graft.streaming.StreamSketch.SplitFiles)
+    assert(nBatches == graft.streaming.Replay.Waves)
     assert(rows(resumed) == rows(graft.streaming.LateLedger.x19Batch(spark, sf)),
       "resumed ledger diverged from the closed-form derivation — the torn state leaked")
   }
@@ -1841,7 +1841,7 @@ class StreamEquivSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val (streamDf, nBatches) =
       withBatches(graft.streaming.StreamSketch.x16StreamTopk(spark, sf))
-    assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     val batch = rows(graft.streaming.StreamSketch.x16Batch(spark, sf))
     assert(batch.nonEmpty)
@@ -1870,7 +1870,7 @@ class StreamEquivSpec extends AnyFunSuite {
     // equal the direct aggregation of the membership-rule slices exactly
     val (streamDf, nBatches) =
       withBatches(graft.streaming.StreamSketch.x15StreamDrift(spark, sf))
-    assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     val batch = rows(graft.streaming.StreamSketch.x15Batch(spark, sf))
     assert(batch.nonEmpty)
@@ -1898,12 +1898,12 @@ class StreamEquivSpec extends AnyFunSuite {
     // replay's pinned result.
     val (x8Rev, n8) = withBatches(graft.streaming.StreamSketch
       .x8StreamSketch(spark, sf, negate(col("event_id"))))
-    assert(n8 == graft.streaming.StreamSketch.SplitFiles)
+    assert(n8 == graft.streaming.Replay.Waves)
     assert(rows(x8Rev) == rows(graft.streaming.StreamSketch.x8Batch(spark, sf)),
       "reversed-arrival HLL merge diverged — sketch merge is not order-independent")
     val (x9Rev, n9) = withBatches(graft.streaming.StreamSketch
       .x9StreamQuantile(spark, sf, negate(col("event_id"))))
-    assert(n9 == graft.streaming.StreamSketch.SplitFiles)
+    assert(n9 == graft.streaming.Replay.Waves)
     assert(rows(x9Rev) == rows(graft.streaming.StreamSketch.x9Batch(spark, sf)),
       "reversed-arrival histogram merge diverged — count addition is not order-independent")
   }
@@ -1919,12 +1919,12 @@ class StreamEquivSpec extends AnyFunSuite {
     // batch answers.
     val (d12Rev, nd) = withBatches(graft.streaming.IncrementalDedup
       .d12StreamMinhash(spark, sf, negate(col("doc_id"))))
-    assert(nd == graft.streaming.IncrementalDedup.SplitFiles)
+    assert(nd == graft.streaming.Replay.Waves)
     assert(rows(d12Rev) == rows(graft.ops.DedupOps.d3MinhashLsh(spark, sf)),
       "reversed-arrival d12 diverged from batch d3 — pair emission is order-dependent")
     val (s11Rev, ns) = withBatches(graft.streaming.StreamAnnIngest
       .ingestServe(spark, sf, graft.ops.SimilarityOps.Flat, 1, negate(col("vec_id"))))
-    assert(ns == graft.streaming.StreamAnnIngest.SplitFiles)
+    assert(ns == graft.streaming.Replay.Waves)
     assert(rows(s11Rev) == rows(graft.ops.SimilarityOps.s3AnnIvf(spark, sf)),
       "reversed-arrival s11 diverged from batch s3 — index union is order-dependent")
   }
@@ -1940,7 +1940,7 @@ class StreamEquivSpec extends AnyFunSuite {
     // unordered production feed MUST NOT reuse this gate's plan as-is.
     val (revDf, nBatches) = withBatches(graft.streaming.FullFunnel.p3From(
       graft.io.Sources.table(spark, sf, "documents"), negate(col("doc_id"))))
-    assert(nBatches == graft.streaming.FullFunnel.SplitFiles)
+    assert(nBatches == graft.streaming.Replay.Waves)
     val rev = rows(revDf)
     val p1 = rows(graft.ops.PipelineOps.p1PipelineLedger(spark, sf))
     assert(rev != p1,
@@ -1970,7 +1970,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val planted = docs.unionByName(copy)
     val (ordDf, n1) = withBatches(graft.streaming.StreamFunnel.p2From(planted))
     val (revDf, n2) = withBatches(graft.streaming.StreamFunnel.p2From(planted, negate(col("doc_id"))))
-    assert(n1 == graft.streaming.StreamFunnel.SplitFiles && n2 == n1)
+    assert(n1 == graft.streaming.Replay.Waves && n2 == n1)
     val ord = rows(ordDf)
     val rev = rows(revDf)
     assert(ord != rev,
@@ -1990,7 +1990,7 @@ class StreamEquivSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val (streamDf, nBatches) =
       withBatches(graft.streaming.StreamSketch.x10StreamCms(spark, sf))
-    assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     val stream = rows(streamDf)
     // merge-exactness: counters are additive, so the merged per-batch
@@ -2020,7 +2020,7 @@ class StreamEquivSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val (streamDf, nBatches) =
       withBatches(graft.streaming.StreamSketch.x11StreamWindowQuantile(spark, sf))
-    assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     val stream = rows(streamDf)
     // the pruned-store merge must equal one histogram over exactly the
@@ -2033,8 +2033,8 @@ class StreamEquivSpec extends AnyFunSuite {
     // the window is genuinely a subset: its per-type counts must sum to
     // the window rows exactly and be strictly below the corpus total
     val winRows = Sources.table(spark, sf, "events")
-      .filter(pmod(col("event_id"), lit(graft.streaming.StreamSketch.SplitFiles))
-        >= graft.streaming.StreamSketch.SplitFiles
+      .filter(pmod(col("event_id"), lit(graft.streaming.Replay.Waves))
+        >= graft.streaming.Replay.Waves
           - graft.streaming.StreamSketch.WindowBatches)
       .count()
     val total = Sources.table(spark, sf, "events").count()
@@ -2056,7 +2056,7 @@ class StreamEquivSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val (streamDf, nBatches) =
       withBatches(graft.streaming.StreamSketch.x12StreamWindowDistinct(spark, sf))
-    assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     val stream = rows(streamDf)
     // merge-invariance on the WINDOW: the union of the window's per-batch
@@ -2069,8 +2069,8 @@ class StreamEquivSpec extends AnyFunSuite {
     // declared error pin vs exact distinct over the window slice, plus
     // the additive exact count — and the window must be a real subset
     val win = Sources.table(spark, sf, "events")
-      .filter(pmod(col("event_id"), lit(graft.streaming.StreamSketch.SplitFiles))
-        >= graft.streaming.StreamSketch.SplitFiles
+      .filter(pmod(col("event_id"), lit(graft.streaming.Replay.Waves))
+        >= graft.streaming.Replay.Waves
           - graft.streaming.StreamSketch.WindowBatches)
     val exact = win.groupBy("event_type")
       .agg(countDistinct(col("user_id")).as("exact_users"),
@@ -2099,7 +2099,7 @@ class StreamEquivSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val (streamDf, nBatches) =
       withBatches(graft.streaming.StreamSketch.x13StreamWindowCms(spark, sf))
-    assert(nBatches == graft.streaming.StreamSketch.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     val stream = rows(streamDf)
     // counters are integer sums: the pruned-window merge must equal the
@@ -2113,8 +2113,8 @@ class StreamEquivSpec extends AnyFunSuite {
     // one watched term has fewer window occurrences than corpus ones
     // (the window genuinely restricts)
     val winCounts = Sources.table(spark, sf, "documents")
-      .filter(pmod(col("doc_id"), lit(graft.streaming.StreamSketch.SplitFiles))
-        >= graft.streaming.StreamSketch.SplitFiles
+      .filter(pmod(col("doc_id"), lit(graft.streaming.Replay.Waves))
+        >= graft.streaming.Replay.Waves
           - graft.streaming.StreamSketch.WindowBatches)
       .select(explode(graft.ops.TextOps.tokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))
@@ -2258,7 +2258,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val (stream, nBatches) =
       withBatches(graft.streaming.StreamAnnIngest.ingestServe(spark, sf, graft.ops.SimilarityOps.Hier,
         graft.streaming.StreamAnnIngest.HierGprobe, col("vec_id")))
-    assert(nBatches == graft.streaming.StreamAnnIngest.SplitFiles,
+    assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     val streamRows = rows(stream)
     val batch = rows(graft.ops.SimilarityOps.probe(graft.ops.SimilarityOps.Hier,
@@ -2275,7 +2275,7 @@ class StreamEquivSpec extends AnyFunSuite {
 
   test("x20 stats-store running-max fold: ledger invariant, store bounded, phase-B watermarks real") {
     import org.apache.spark.sql.functions._
-    val m = graft.streaming.StreamSketch.SplitFiles
+    val m = graft.streaming.Replay.Waves
     val (compacted, before, after, end) =
       graft.streaming.LateLedger.x20WithStoreInfo(spark, sf)
     val compactedRows = rows(compacted)
@@ -2299,7 +2299,7 @@ class StreamEquivSpec extends AnyFunSuite {
 
   test("p7 digest-store compaction: manifest invariant, store bounded, cross-phase dedup adjudicated") {
     import org.apache.spark.sql.functions._
-    val m = graft.streaming.StreamSketch.SplitFiles
+    val m = graft.streaming.Replay.Waves
     val (compacted, before, after, end) =
       graft.streaming.IncrementalExport.p7WithStoreInfo(spark, sf)
     val compactedRows = rows(compacted)
@@ -2349,7 +2349,7 @@ class StreamEquivSpec extends AnyFunSuite {
 
   test("p3 mid-stream compaction of all three stores: ledger invariant, stores bounded, cross-phase dups adjudicated") {
     import org.apache.spark.sql.functions._
-    val half = graft.streaming.FullFunnel.SplitFiles / 2
+    val half = graft.streaming.Replay.Waves / 2
     // fixture run: the most store-heavy stream compacts its digest,
     // band, AND shingle stores at the phase boundary — the ledger must
     // be byte-identical to the unphased gate's, and each store's
