@@ -398,7 +398,7 @@ object ScaleCheck {
       "s21_topk_serve_scaled_k" -> (SimilarityOps.s21TopKAssigned(_)))
       .filter { case (name, _) => only.forall(_.contains(name)) }
     if (serves.isEmpty) return Seq.empty
-    val root = java.nio.file.Files.createTempDirectory("graft_s21store_").toString
+    val root = graft.streaming.Replay.workspace("graft_s21store_")
     def prep(tag: String, dir: String, k: Int): String = {
       val path = s"$root/$tag"
       SimilarityOps.flat(k).index(SimilarityOps.normed(spark, dir))

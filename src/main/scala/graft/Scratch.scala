@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Measurement harness for the optimization rounds (not part of the
-  * declared query surface), one mode per first argument: gate timers
-  * (`m15` with its per-batch body times, `m20`, `p3`, or any gate name),
+  * declared query surface), one mode per first argument: a gate timer
+  * (any gate name, default `m15_stream_near_dup`: two noop-sink runs,
+  * each with the per-batch body seconds of every replay it ran),
   * 3-pass noop-sink A/B timing (`benchonly`), full-result md5 identity
   * proofs (`hash`), plan dumps (`explain`, `ledgerplan`, `blendplan`),
   * a duplicate-evaluation audit (`dups`), and a noise-immune Spark
@@ -26,39 +27,9 @@ object Scratch {
       .foreach { q =>
         SparkEntry.queries(q)(spark, sfDir).write.format("noop").mode("overwrite").save()
       }
-    val what = args.headOption.getOrElse("m15")
+    val what = args.headOption.getOrElse("m15_stream_near_dup")
 
     what match {
-      case "m15" =>
-        for (i <- 1 to 2) {
-          val (_, batches) = t(s"m15 replay #$i") {
-            graft.streaming.Replay.recorded(
-              graft.streaming.StreamMediaDedup.m15StreamNearDup(spark, sfDir, 4))
-          }
-          val times = batches.map(_.durationMs.get("addBatch").doubleValue / 1e3)
-          System.err.println("[scratch] m15 batch times: " +
-            times.map(v => f"$v%.3f").mkString(", ") + f" sum=${times.sum}%.3f")
-        }
-        for (i <- 1 to 2) {
-          t(s"m15 full gate #$i") {
-            SparkEntry.queries("m15_stream_near_dup")(spark, sfDir)
-              .write.format("noop").mode("overwrite").save()
-          }
-        }
-      case "m20" =>
-        for (i <- 1 to 2) {
-          t(s"m20 full gate #$i") {
-            SparkEntry.queries("m20_stream_consensus")(spark, sfDir)
-              .write.format("noop").mode("overwrite").save()
-          }
-        }
-      case "p3" =>
-        for (i <- 1 to 2) {
-          t(s"p3 full gate #$i") {
-            SparkEntry.queries("p3_full_funnel")(spark, sfDir)
-              .write.format("noop").mode("overwrite").save()
-          }
-        }
       case "hash" =>
         // result-identity proof harness: md5 over sorted collected rows
         // per gate, written to the path in arg(1); diff two runs to
@@ -145,7 +116,7 @@ object Scratch {
         // held — see LedgerFoldSpec, which pins value-equivalence).
         val outDir = args(1)
         new java.io.File(outDir).mkdirs()
-        val work = java.nio.file.Files.createTempDirectory("graft_ledgerplan_").toString
+        val work = graft.streaming.Replay.workspace("graft_ledgerplan_")
         val docs = graft.io.Sources.table(spark, sfDir, "documents").select("doc_id")
         docs.filter(col("doc_id") % 2 === 0)
           .select(col("doc_id").as("a_id"), (col("doc_id") + 1).as("b_id"),
@@ -213,7 +184,7 @@ object Scratch {
         // verbatim.
         val outDir = args(1)
         new java.io.File(outDir).mkdirs()
-        val work = java.nio.file.Files.createTempDirectory("graft_blendplan_").toString
+        val work = graft.streaming.Replay.workspace("graft_blendplan_")
         graft.io.Sources.table(spark, sfDir, "documents")
           .select(col("source"), (length(col("text")) / 4).cast("long").as("btok"))
           .write.parquet(s"$work/stats")
@@ -279,9 +250,14 @@ object Scratch {
         }
       case q =>
         for (i <- 1 to 2) {
-          t(s"$q #$i") {
-            SparkEntry.queries(q)(spark, sfDir)
-              .write.format("noop").mode("overwrite").save()
+          val (_, batches) = t(s"$q #$i") {
+            graft.streaming.Replay.recorded(SparkEntry.queries(q)(spark, sfDir)
+              .write.format("noop").mode("overwrite").save())
+          }
+          if (batches.nonEmpty) {
+            val times = batches.map(_.durationMs.getOrDefault("addBatch", 0L) / 1e3)
+            System.err.println(s"[scratch] $q #$i batch times: " +
+              times.map(v => f"$v%.3f").mkString(", ") + f" sum=${times.sum}%.3f")
           }
         }
     }

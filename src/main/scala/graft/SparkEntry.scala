@@ -160,7 +160,7 @@ object SparkEntry {
     "m20_stream_consensus" ->
       (graft.streaming.StreamMediaDedup.m20StreamConsensus(_, _)),
     "m21_consensus_delta" ->
-      (graft.streaming.StreamMediaDedup.m21ConsensusDelta(_, _)),
+      (graft.streaming.StreamMediaDedup.m21ConsensusDelta _),
     "p1_pipeline" -> (PipelineOps.p1PipelineLedger _),
     "p2_stream_funnel" -> (graft.streaming.StreamFunnel.p2StreamFunnel _),
     "p3_full_funnel" -> (graft.streaming.FullFunnel.p3StreamFunnel _),

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -54,7 +52,7 @@ object BlendMonitor {
     * it in production) and last ≈ first is the design claim. */
   def p11StreamBlend(spark: SparkSession, dir: String,
                      waves: Int = Replay.Waves): DataFrame = {
-    val work = Files.createTempDirectory("graft_blendmon_").toString
+    val work = Replay.workspace("graft_blendmon_")
     val stats = s"$work/stats"
     val ledger = s"$work/ledger"
     val docs = Sources.table(spark, dir, "documents")
@@ -88,7 +86,7 @@ object BlendMonitor {
     * 1 + batches-since afterwards) and ledger ≡ p11 row-for-row. */
   private[graft] def p12WithStoreInfo(spark: SparkSession, dir: String)
       : (DataFrame, Int, Int, Int) = {
-    val work = Files.createTempDirectory("graft_blendmon12_").toString
+    val work = Replay.workspace("graft_blendmon12_")
     val stats = s"$work/stats"
     val ledger = s"$work/ledger"
     val docs = Sources.table(spark, dir, "documents")

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -80,7 +78,7 @@ object FullFunnel {
   private[graft] def p3From(docs: DataFrame,
       orderExpr: org.apache.spark.sql.Column = col("doc_id")): DataFrame = {
     val spark = docs.sparkSession
-    val work = Files.createTempDirectory("graft_fullfunnel_").toString
+    val work = Replay.workspace("graft_fullfunnel_")
     val stores = prepArtifacts(docs, work)
     // first-arrival must mean min-doc_id: the range waves replay in
     // stamped range order
@@ -134,7 +132,7 @@ object FullFunnel {
     * at stream end), count order (keys, bands, shingles). */
   private[graft] def p3CompactOnDocs(spark: SparkSession, docs: DataFrame)
       : (DataFrame, Seq[Int], Seq[Int], Seq[Int]) = {
-    val work = Files.createTempDirectory("graft_fullfunnel_c_").toString
+    val work = Replay.workspace("graft_fullfunnel_c_")
     val stores = prepArtifacts(docs, work)
     val tracked = Seq(stores.keys, stores.bands, stores.shingles)
     def counts(): Seq[Int] = tracked.map(Replay.countBatchDirs)

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -66,7 +64,7 @@ object IncrementalDedup {
   def d12StreamMinhash(spark: SparkSession, dir: String,
       orderExpr: org.apache.spark.sql.Column = col("doc_id"),
       waves: Int = Replay.Waves): DataFrame = {
-    val work = Files.createTempDirectory("graft_incdedup_").toString
+    val work = Replay.workspace("graft_incdedup_")
     val bandStore = s"$work/bands"
     val shingleStore = s"$work/shingles"
     val pairStore = s"$work/pairs"
@@ -176,7 +174,7 @@ object IncrementalDedup {
     * listing is bounded by (1 + batches since last compaction). */
   private[graft] def d19WithStoreInfo(spark: SparkSession, dir: String)
       : (DataFrame, Int, Int, Int, Long) = {
-    val work = Files.createTempDirectory("graft_bandcompact_").toString
+    val work = Replay.workspace("graft_bandcompact_")
     val bandStore = s"$work/bands"
     val shingleStore = s"$work/shingles"
     val pairStore = s"$work/pairs"

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -87,7 +85,7 @@ object IncrementalExport {
       crashAt: Option[Long] = None,
       workDir: Option[String] = None,
       waves: Int = Replay.Waves): DataFrame = {
-    val work = workDir.getOrElse(Files.createTempDirectory("graft_increxport_").toString)
+    val work = workDir.getOrElse(Replay.workspace("graft_increxport_"))
     val manifest = s"$work/manifest"
     val keys = s"$work/keys"
     Replay.replay(spark, docs, Replay.ByMod("doc_id"), work, waves) {
@@ -139,7 +137,7 @@ object IncrementalExport {
     * compaction included. */
   private[graft] def p7OnDocs(spark: SparkSession, docs: DataFrame)
       : (DataFrame, Int, Int, Int) = {
-    val work = Files.createTempDirectory("graft_increxport7_").toString
+    val work = Replay.workspace("graft_increxport7_")
     val manifest = s"$work/manifest"
     val keys = s"$work/keys"
     var partsBefore = 0

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.io.Sources
 
@@ -60,26 +57,13 @@ object JoinOps {
     * job here is state eviction). State partitions sized to key
     * cardinality, not core count, as in the windowed gates. */
   def q37StreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val session = spark.newSession()
-    session.conf.set("spark.sql.shuffle.partitions", "8")
+    val session = Replay.isolated(spark, Some(8))
     val c = clicks(Sources.stream(session, dir, "events"))
       .withWatermark("click_ts", "10 minutes")
     val p = purchases(Sources.stream(session, dir, "events"))
       .withWatermark("purchase_ts", "10 minutes")
-    val outDir = Files.createTempDirectory("graft_ssj_out_").toString
-    val checkpoint = Files.createTempDirectory("graft_ssj_ckpt_")
-    try {
-      val q = attribution(c, p)
-        .writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpoint.toString)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally Replay.deleteRecursively(checkpoint.toFile)
-    spark.read.parquet(outDir).orderBy("purchase_id", "click_id")
+    Replay.appendParquet(spark, Replay.workspace("graft_ssj_"), attribution(c, p))
+      .orderBy("purchase_id", "click_id")
   }
 
   /** Q38 stream-static enrichment (the reference's core consumer shape,

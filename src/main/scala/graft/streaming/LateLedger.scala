@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -71,7 +69,7 @@ object LateLedger {
   def x19LateLedger(spark: SparkSession, dir: String,
       crashAt: Option[Long] = None,
       workDir: Option[String] = None): DataFrame = {
-    val work = workDir.getOrElse(Files.createTempDirectory("graft_lateledger_").toString)
+    val work = workDir.getOrElse(Replay.workspace("graft_lateledger_"))
     val ledger = s"$work/ledger"
     val stats = s"$work/stats"
     val events = Sources.table(spark, dir, "events")
@@ -164,7 +162,7 @@ object LateLedger {
     * measured gate. */
   private[graft] def x20WithStoreInfo(spark: SparkSession, dir: String)
       : (DataFrame, Int, Int, Int) = {
-    val work = Files.createTempDirectory("graft_lateledger20_").toString
+    val work = Replay.workspace("graft_lateledger20_")
     val ledger = s"$work/ledger"
     val stats = s"$work/stats"
     val events = Sources.table(spark, dir, "events")

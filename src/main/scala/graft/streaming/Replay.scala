@@ -9,7 +9,7 @@ import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.io.{Sinks, Sources}
@@ -29,13 +29,13 @@ import graft.io.{Sinks, Sources}
   * state-partition override never touches the caller's conf and replays
   * can run concurrently — no global lock.
   *
-  * Scale modes: [[complete]] re-emits the whole aggregate each trigger
-  * (fine for small finite aggregates, wrong for unbounded streams);
-  * [[appendFlushed]] is the production shape for windowed aggregations —
-  * watermarked append into a parquet sink, state evicted as the
-  * watermark passes; [[updateMaterialized]] is the production shape for
-  * non-windowed aggregations — per-batch upserts materialized to a keyed
-  * store (the ES-index pattern), last write per key wins.
+  * Sink shapes: [[append]] and [[update]] collect into a memory table
+  * (small finite results); [[appendFlushed]] is the production shape for
+  * windowed aggregations — watermarked append into a parquet sink, state
+  * evicted as the watermark passes; [[updateMaterialized]] is the
+  * production shape for non-windowed aggregations — per-batch upserts
+  * materialized to a keyed store (the ES-index pattern), last write per
+  * key wins.
   *
   * The foreachBatch store gates (d12, s11–s30, p2/p3, x8–x20, …) share
   * one file-replay runner, [[replay]]: [[deal]] writes a fixture as
@@ -43,6 +43,15 @@ import graft.io.{Sinks, Sources}
   * `waves` — each stamped with its wave's arrival time, split into one
   * or two phases and sealed by a `_dealt` marker that a resumed run
   * trusts; [[drain]] then runs each phase one file per micro-batch.
+  *
+  * Every query, sink replay or [[drain]], is started, awaited and
+  * recorded by one AvailableNow runner ([[run]]), and every scratch
+  * directory — a gate's workspace, a sink replay's `out`/`ckpt`/`flush`,
+  * a tool's scratch — is a [[workspace]] under one per-JVM root that a
+  * shutdown hook deletes. A one-shot replay's checkpoint and flush
+  * sentinel go as soon as its query ends; a gate's lazy result frame
+  * reads its workspace until the JVM exits.
+  *
   * Companions: [[recorded]] (the micro-batches a call ran, from Spark's
   * own per-batch progress), [[countBatchDirs]] (how many `batch_id=N`
   * partitions a store holds — a store fact, which a resumed or vacuumed
@@ -53,29 +62,23 @@ object Replay {
 
   private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Run `transform` over a streaming read of `table`, complete-mode.
-    * `statePartitions` caps the stateful shuffle width for the query:
-    * a streaming aggregation's state-store count is fixed at the first
-    * checkpoint, and a handful of result groups doesn't need (or want)
-    * one state store per core — each partition pays file-backed state
-    * I/O per micro-batch. Size it to key cardinality, not core count. */
-  def complete(spark: SparkSession, dir: String, table: String,
-               statePartitions: Option[Int] = None)
-              (transform: DataFrame => DataFrame): DataFrame =
-    run(spark, dir, table, "complete", statePartitions)(transform)
-
   /** Run `transform` over a streaming read of `table`, append-mode
-    * (requires a watermark upstream for stateful ops). */
+    * (requires a watermark upstream for stateful ops). `statePartitions`
+    * caps the stateful shuffle width for the query: a streaming
+    * aggregation's state-store count is fixed at the first checkpoint,
+    * and a handful of result groups doesn't need (or want) one state
+    * store per core — each partition pays file-backed state I/O per
+    * micro-batch. Size it to key cardinality, not core count. */
   def append(spark: SparkSession, dir: String, table: String,
              statePartitions: Option[Int] = None)
             (transform: DataFrame => DataFrame): DataFrame =
-    run(spark, dir, table, "append", statePartitions)(transform)
+    memory(spark, dir, table, "append", statePartitions)(transform)
 
   /** Update-mode replay (mapGroupsWithState and friends). */
   def update(spark: SparkSession, dir: String, table: String,
              statePartitions: Option[Int] = None)
             (transform: DataFrame => DataFrame): DataFrame =
-    run(spark, dir, table, "update", statePartitions)(transform)
+    memory(spark, dir, table, "update", statePartitions)(transform)
 
   /** Event time of the flush sentinel (see [[appendFlushed]]): far past
     * any fixture timestamp, deliberately off any window-size boundary so
@@ -107,28 +110,19 @@ object Replay {
                    (transform: DataFrame => DataFrame): DataFrame = {
     val session = isolated(spark, statePartitions)
     val src = Sources.stream(session, dir, table)
-    val flushRoot = Files.createTempDirectory("graft_flush_")
-    val sentinelDir = s"$flushRoot/flush"
-    writeSentinel(session, src.schema, tsCol, sentinelDir)
-    val sentinel = session.readStream.schema(src.schema).parquet(sentinelDir)
-    val outDir = Files.createTempDirectory("graft_replay_out_").toString
-    val checkpoint = Files.createTempDirectory("graft_ckpt_")
-    try {
-      val q = transform(src.unionByName(sentinel))
-        .writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpoint.toString)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      // only the query reads the sentinel; the result is the sink's files
-      deleteRecursively(checkpoint.toFile)
-      deleteRecursively(flushRoot.toFile)
-    }
-    spark.read.parquet(outDir)
+    val work = workspace("graft_append_")
+    writeSentinel(session, src.schema, tsCol, s"$work/flush")
+    val sentinel = session.readStream.schema(src.schema).parquet(s"$work/flush")
+    appendParquet(spark, work, transform(src.unionByName(sentinel)))
+  }
+
+  /** Append-mode replay of the streaming frame `query` into a parquet
+    * sink at `work/out`, read back as a batch frame. */
+  private[streaming] def appendParquet(spark: SparkSession, work: String,
+                                       query: DataFrame): DataFrame = {
+    drainOnce(work, query.writeStream.format("parquet")
+      .option("path", s"$work/out").outputMode("append"))
+    spark.read.parquet(s"$work/out")
   }
 
   /** Update-mode replay of a *non-windowed* aggregation materialized
@@ -144,20 +138,12 @@ object Replay {
                          statePartitions: Option[Int] = None)
                         (transform: DataFrame => DataFrame): DataFrame = {
     val session = isolated(spark, statePartitions)
-    val outDir = Files.createTempDirectory("graft_upsert_out_").toString
-    val checkpoint = Files.createTempDirectory("graft_ckpt_")
-    try {
-      val q = transform(Sources.stream(session, dir, table))
-        .writeStream
-        .foreachBatch(Sinks.partitionedBatchWrite(outDir, Seq.empty) _)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally deleteRecursively(checkpoint.toFile)
+    val work = workspace("graft_upsert_")
+    drainOnce(work, transform(Sources.stream(session, dir, table)).writeStream
+      .foreachBatch(Sinks.partitionedBatchWrite(s"$work/out", Seq.empty) _)
+      .outputMode("update"))
     val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("batch_id").desc)
-    spark.read.parquet(outDir)
+    spark.read.parquet(s"$work/out")
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn", "batch_id")
@@ -167,7 +153,8 @@ object Replay {
     * are per-replay, never global, so replays run concurrently. The child
     * inherits the builder-time options (extensions, state store provider,
     * timezone) and shares the SparkContext. */
-  private def isolated(spark: SparkSession, statePartitions: Option[Int]): SparkSession = {
+  private[streaming] def isolated(spark: SparkSession,
+                                  statePartitions: Option[Int]): SparkSession = {
     val session = spark.newSession()
     statePartitions.foreach(n =>
       session.conf.set("spark.sql.shuffle.partitions", n.toString))
@@ -202,34 +189,56 @@ object Replay {
     case _ => null
   }
 
-  private def run(spark: SparkSession, dir: String, table: String, mode: String,
-                  statePartitions: Option[Int])
-                 (transform: DataFrame => DataFrame): DataFrame = {
+  /** Memory-sink replay: the result is the session's in-memory table. */
+  private def memory(spark: SparkSession, dir: String, table: String, mode: String,
+                     statePartitions: Option[Int])
+                    (transform: DataFrame => DataFrame): DataFrame = {
     val session = isolated(spark, statePartitions)
     val name = s"graft_replay_${counter.incrementAndGet()}"
-    val checkpoint = Files.createTempDirectory("graft_ckpt_")
-    try {
-      val q = transform(Sources.stream(session, dir, table))
-        .writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", checkpoint.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      // the memory sink holds the result; the drained checkpoint is scratch
-      deleteRecursively(checkpoint.toFile)
-    }
+    drainOnce(workspace("graft_replay_"), transform(Sources.stream(session, dir, table))
+      .writeStream.format("memory").queryName(name).outputMode(mode))
     session.table(name)
   }
 
   /** Recursive delete; an absent path is fine. */
-  private[streaming] def deleteRecursively(f: java.io.File): Unit = {
+  private def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete(): Unit
   }
+
+  /** The per-JVM scratch root, `graft_run_*` under `java.io.tmpdir`:
+    * created on first use, and deleted with everything under it by one
+    * shutdown hook — gates return lazy frames over their workspaces, so
+    * nothing under it can go earlier. */
+  private lazy val root: java.nio.file.Path = {
+    val dir = Files.createTempDirectory("graft_run_")
+    sys.addShutdownHook(deleteRecursively(dir.toFile))
+    dir
+  }
+
+  /** A fresh, empty directory named `prefix*` under the run's scratch
+    * root: every gate workspace, replay sink and tool scratch dir. */
+  private[graft] def workspace(prefix: String): String =
+    Files.createTempDirectory(root, prefix).toString
+
+  /** The AvailableNow runner behind every replay: start `writer`
+    * checkpointed at `ckpt`, wait until the query has drained and
+    * rethrow its failure, then append the batches it ran to the open
+    * [[recorded]] scope. */
+  private def run(writer: DataStreamWriter[Row], ckpt: String): Unit = {
+    val q = writer.option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    Option(record.get).foreach(_ ++= q.recentProgress)
+  }
+
+  /** [[run]] a one-shot replay in workspace `work`, checkpointed at
+    * `work/ckpt`: the checkpoint and the flush sentinel (`work/flush`)
+    * are deleted as soon as the query ends, failed or not — only the
+    * sink's output outlives it. */
+  private def drainOnce(work: String, writer: DataStreamWriter[Row]): Unit =
+    try run(writer, s"$work/ckpt")
+    finally Seq("ckpt", "flush").foreach(d => deleteRecursively(new java.io.File(work, d)))
 
   /** The AvailableNow file replay behind every foreachBatch store gate
     * (the reference consumer's per-batch score-and-index loop,
@@ -243,23 +252,16 @@ object Replay {
     * the query has drained; a `body` failure fails the query and is
     * rethrown here, and a re-run over the same checkpoint redoes only
     * the uncommitted batches — bodies write idempotent `batch_id=N`
-    * overwrites, so a torn write is replaced, never merged. Inside a
-    * [[recorded]] scope on the calling thread, the batches the query
-    * ran are appended to the scope's record. */
+    * overwrites, so a torn write is replaced, never merged. */
   private[graft] def drain(spark: SparkSession, inDir: String, ckpt: String,
                            offset: Long)(body: (DataFrame, Long) => Unit): Unit = {
     val session = spark.newSession()
-    val q = session.readStream
+    run(session.readStream
       .schema(session.read.parquet(inDir).schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(inDir)
       .writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) => body(batch, offset + batchId))
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    Option(record.get).foreach(_ ++= q.recentProgress)
+      .foreachBatch((batch: DataFrame, batchId: Long) => body(batch, offset + batchId)), ckpt)
   }
 
   /** The open [[recorded]] scope of each thread. A plain ThreadLocal,
@@ -268,8 +270,9 @@ object Replay {
   private val record = new ThreadLocal[ArrayBuffer[StreamingQueryProgress]]
 
   /** Run `f` and return, with its result, Spark's progress entry for
-    * every micro-batch the [[drain]] calls on this thread ran, in run
-    * order: `batchId` (the query's own, before the caller's offset),
+    * every micro-batch the replays on this thread ran — [[drain]] and
+    * the sink replays alike — in run order: `batchId` (the query's own,
+    * before a [[drain]] caller's offset),
     * `numInputRows`, and `durationMs` with `addBatch` (the body),
     * `queryPlanning`, `walCommit` and `commitOffsets`. Its size is how
     * many batches the call ran — not how many partitions a store holds

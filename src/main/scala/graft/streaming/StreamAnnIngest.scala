@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -93,7 +91,7 @@ object StreamAnnIngest {
   private[graft] def runIngestStream(spark: SparkSession, dir: String,
       q: Quantizer, orderExpr: Column,
       waves: Int = Replay.Waves): (String, String) = {
-    val work = Files.createTempDirectory("graft_annstream_").toString
+    val work = Replay.workspace("graft_annstream_")
     val all = SimilarityOps.normed(spark, dir)
     val art = s"$work/quantizer"
     val store = s"$work/index"
@@ -263,7 +261,7 @@ object StreamAnnIngest {
     * store path). */
   private def runDeleteStream(spark: SparkSession, dir: String, q: Quantizer)
       : (String, String, String) = {
-    val work = Files.createTempDirectory("graft_annstream_del_").toString
+    val work = Replay.workspace("graft_annstream_del_")
     val all = SimilarityOps.normed(spark, dir)
     val art = s"$work/quantizer"
     val reqPath = s"$work/delete_requests"
@@ -503,7 +501,7 @@ object StreamAnnIngest {
     * path). */
   private def runUpsertStream(spark: SparkSession, dir: String, q: Quantizer)
       : (String, String) = {
-    val work = Files.createTempDirectory("graft_annstream_ups_").toString
+    val work = Replay.workspace("graft_annstream_ups_")
     val splitDir = s"$work/in"
     val all = SimilarityOps.normed(spark, dir)
     val art = s"$work/quantizer"
@@ -801,7 +799,7 @@ object StreamAnnIngest {
     * two sides can never assign under different quantizers. */
   private def runRadiusAlertStream(spark: SparkSession, dir: String,
       q: Quantizer): (DataFrame, () => Array[Long]) = {
-    val work = Files.createTempDirectory("graft_annstream_radius_").toString
+    val work = Replay.workspace("graft_annstream_radius_")
     val all = SimilarityOps.normed(spark, dir)
     val art = s"$work/quantizer"
     val watchPath = s"$work/watchlist"

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -58,7 +56,7 @@ object StreamFunnel {
   private[graft] def p2From(docs: DataFrame,
       orderExpr: org.apache.spark.sql.Column = col("doc_id")): DataFrame = {
     val spark = docs.sparkSession
-    val work = Files.createTempDirectory("graft_funnel_").toString
+    val work = Replay.workspace("graft_funnel_")
     val keyStore = s"$work/keys"
     val labelStore = s"$work/labels"
     // first-arrival must mean min-doc_id: the range waves replay in

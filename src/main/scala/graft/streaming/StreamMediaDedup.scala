@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -187,9 +185,8 @@ object StreamMediaDedup {
     * in DuckDB (both codec chains per wave, channel CASE, shifted
     * self-join), so per-channel conservation and the flip's paired
     * leave+enter are oracle-checked, not just spec-pinned. */
-  def m21ConsensusDelta(spark: SparkSession, dir: String,
-                        waves: Int = Replay.Waves): DataFrame =
-    m20WithInfo(spark, dir, waves)._2
+  def m21ConsensusDelta(spark: SparkSession, dir: String): DataFrame =
+    m20WithInfo(spark, dir)._2
 
   /** (final consensus set, delta ledger) of one consensus replay over
     * `waves` batches — ScaleCheck's m20 batches-axis row doubles
@@ -209,7 +206,7 @@ object StreamMediaDedup {
   private[graft] def runConsensusReplay(spark: SparkSession, docs: DataFrame,
       splitKey: String,
       waves: Int = Replay.Waves): (DataFrame, DataFrame) = {
-    val work = Files.createTempDirectory("graft_mediaconsensus_").toString
+    val work = Replay.workspace("graft_mediaconsensus_")
     val consStore = s"$work/consensus"
     val consLed = s"$work/cons_ledger"
     val times = new java.util.concurrent.ConcurrentLinkedQueue[ConsensusTimes]()
@@ -358,7 +355,7 @@ object StreamMediaDedup {
   private[graft] def m19WithStoreInfo(spark: SparkSession, dir: String)
       : (DataFrame, Int, Int, Int, () => Long) = {
     val half = Replay.Waves / 2
-    val work = Files.createTempDirectory("graft_mediacompact_").toString
+    val work = Replay.workspace("graft_mediacompact_")
     val fpStore = s"$work/fp"
     val curStore = s"$work/cur"
     val ledgerStore = s"$work/ledger"
@@ -430,7 +427,7 @@ object StreamMediaDedup {
       writeLedger: Boolean = true,
       waves: Int = Replay.Waves)
       : (DataFrame, DataFrame) = {
-    val work = Files.createTempDirectory("graft_mediadedup_").toString
+    val work = Replay.workspace("graft_mediadedup_")
     val fpStore = s"$work/fp"
     val curStore = s"$work/cur"
     val ledgerStore = s"$work/ledger"

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -55,7 +53,7 @@ object StreamSampler {
     * instrument prices that term. */
   def p13StreamSample(spark: SparkSession, dir: String,
                       waves: Int = Replay.Waves): DataFrame = {
-    val work = Files.createTempDirectory("graft_samplemon_").toString
+    val work = Replay.workspace("graft_samplemon_")
     val stats = s"$work/stats"
     val ledger = s"$work/ledger"
     val docs = Sources.table(spark, dir, "documents")
@@ -100,7 +98,7 @@ object StreamSampler {
     * buffer stays ≤ set/(sources·buckets) ids. Both per-batch caches
     * are dropped before the next batch. */
   def p14SampleDelta(spark: SparkSession, dir: String): DataFrame = {
-    val work = Files.createTempDirectory("graft_sampledelta_").toString
+    val work = Replay.workspace("graft_sampledelta_")
     val stats = s"$work/stats"
     val ledger = s"$work/ledger"
     val docs = Sources.table(spark, dir, "documents")

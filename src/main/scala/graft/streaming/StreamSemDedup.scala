@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -51,7 +49,7 @@ object StreamSemDedup {
   def d20StreamSemDedup(spark: SparkSession, dir: String,
       orderExpr: org.apache.spark.sql.Column = col("vec_id"),
       waves: Int = Replay.Waves): DataFrame = {
-    val work = Files.createTempDirectory("graft_semstream_").toString
+    val work = Replay.workspace("graft_semstream_")
     val pairStore = s"$work/pairs"
     runStream(spark, dir, work, orderExpr, waves)
     readPairs(spark, pairStore)
@@ -87,7 +85,7 @@ object StreamSemDedup {
   private[graft] def d21WithStoreInfo(spark: SparkSession, dir: String)
       : (DataFrame, Int, Int, Int, () => Long) = {
     val half = Replay.Waves / 2
-    val work = Files.createTempDirectory("graft_semcompact_").toString
+    val work = Replay.workspace("graft_semcompact_")
     val store = s"$work/assigned"
     val pairStore = s"$work/pairs"
     var partsBefore = 0

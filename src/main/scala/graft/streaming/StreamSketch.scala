@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -63,7 +61,7 @@ object StreamSketch {
   def x8StreamSketch(spark: SparkSession, dir: String,
       orderExpr: org.apache.spark.sql.Column = col("event_id"),
       waves: Int = Replay.Waves): DataFrame = {
-    val work = Files.createTempDirectory("graft_sketchstream_").toString
+    val work = Replay.workspace("graft_sketchstream_")
     val store = s"$work/sketches"
     Replay.replay(spark,
       Sources.table(spark, dir, "events").select("event_id", "event_type", "user_id"),
@@ -140,7 +138,7 @@ object StreamSketch {
     * re-sort every value ever seen, per batch. */
   def x9StreamQuantile(spark: SparkSession, dir: String,
       orderExpr: org.apache.spark.sql.Column = col("event_id")): DataFrame = {
-    val work = Files.createTempDirectory("graft_quantstream_").toString
+    val work = Replay.workspace("graft_quantstream_")
     val store = s"$work/hist"
     Replay.replay(spark,
       Sources.table(spark, dir, "events").select("event_id", "event_type", "value"),
@@ -195,7 +193,7 @@ object StreamSketch {
   def x10StreamCms(spark: SparkSession, dir: String,
       orderExpr: org.apache.spark.sql.Column = col("doc_id")): DataFrame = {
     import graft.ops.TextOps
-    val work = Files.createTempDirectory("graft_cmsstream_").toString
+    val work = Replay.workspace("graft_cmsstream_")
     val docs = Sources.table(spark, dir, "documents").select("doc_id", "text")
     // the offline watchlist artifact: written once, read at serve time
     val watchPath = s"$work/watchlist"
@@ -340,7 +338,7 @@ object StreamSketch {
     * the window's raw values per question asked. */
   def x11StreamWindowQuantile(spark: SparkSession, dir: String,
       workDir: Option[String] = None): DataFrame = {
-    val work = workDir.getOrElse(Files.createTempDirectory("graft_winquant_").toString)
+    val work = workDir.getOrElse(Replay.workspace("graft_winquant_"))
     val store = s"$work/hist"
     val events = Sources.table(spark, dir, "events")
       .select("event_id", "event_type", "value")
@@ -416,7 +414,7 @@ object StreamSketch {
     * twin re-shuffles every user_id in the window per question. */
   def x12StreamWindowDistinct(spark: SparkSession, dir: String,
       workDir: Option[String] = None): DataFrame = {
-    val work = workDir.getOrElse(Files.createTempDirectory("graft_windist_").toString)
+    val work = workDir.getOrElse(Replay.workspace("graft_windist_"))
     val store = s"$work/sketches"
     val events = Sources.table(spark, dir, "events")
       .select("event_id", "event_type", "user_id")
@@ -473,7 +471,7 @@ object StreamSketch {
   def x13StreamWindowCms(spark: SparkSession, dir: String,
       workDir: Option[String] = None): DataFrame = {
     import graft.ops.TextOps
-    val work = workDir.getOrElse(Files.createTempDirectory("graft_wincms_").toString)
+    val work = workDir.getOrElse(Replay.workspace("graft_wincms_"))
     val store = s"$work/counters"
     val docs = Sources.table(spark, dir, "documents").select("doc_id", "text")
     // the offline watchlist artifact: whole-corpus heavy hitters
@@ -575,7 +573,7 @@ object StreamSketch {
     * flight, instead of growing with stream lifetime. */
   private[graft] def x18Detail(spark: SparkSession, dir: String)
       : (DataFrame, Array[org.apache.spark.sql.Row], Seq[Long], Int, Int) = {
-    val work = Files.createTempDirectory("graft_retention_").toString
+    val work = Replay.workspace("graft_retention_")
     val store = s"$work/hist"
     // materialize the pre-vacuum serve NOW — a lazy frame would re-read
     // the store after the vacuum and make the invariance check vacuous
@@ -615,8 +613,7 @@ object StreamSketch {
   def x17StreamGrowth(spark: SparkSession, dir: String,
       workDir: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val work = workDir.getOrElse(
-      Files.createTempDirectory("graft_growthstream_").toString)
+    val work = workDir.getOrElse(Replay.workspace("graft_growthstream_"))
     val store = s"$work/sketches"
     val events = Sources.table(spark, dir, "events")
       .select("event_id", "event_type", "user_id")
@@ -685,7 +682,7 @@ object StreamSketch {
     * stream" costs kilobytes per batch — the exact twin re-shuffles
     * every token ever seen, per question. */
   def x16StreamTopk(spark: SparkSession, dir: String): DataFrame = {
-    val work = Files.createTempDirectory("graft_topkstream_").toString
+    val work = Replay.workspace("graft_topkstream_")
     val store = s"$work/counters"
     val cands = s"$work/candidates"
     val docs = Sources.table(spark, dir, "documents").select("doc_id", "text")
@@ -761,7 +758,7 @@ object StreamSketch {
     * addition. The exact twin re-aggregates the full history per
     * question asked. */
   def x15StreamDrift(spark: SparkSession, dir: String): DataFrame = {
-    val work = Files.createTempDirectory("graft_driftstream_").toString
+    val work = Replay.workspace("graft_driftstream_")
     val store = s"$work/moments"
     val events = Sources.table(spark, dir, "events")
       .select("event_id", "event_type", "value")

@@ -1,11 +1,9 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{Continuous, StatefulOps}
+import graft.streaming.{Continuous, Replay, StatefulOps}
 
 /** The long-running shapes: a continuously-triggered pipeline (the
   * reference's 5-second-interval receiver loop, O1/O23) and TTL-evicted
@@ -47,7 +45,7 @@ class ContinuousSpec extends AnyFunSuite {
       .toDF()
       .writeStream.format("memory").queryName("ttl_counts").outputMode("update")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_ttl_ckpt_").toString)
+        Replay.workspace("graft_ttl_ckpt_"))
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
       .start()
     def sevens: Seq[Long] = spark.table("ttl_counts").filter("user_id = 7")
@@ -94,7 +92,7 @@ class ContinuousSpec extends AnyFunSuite {
         .toDF()
         .writeStream.format("memory").queryName(name).outputMode("update")
         .option("checkpointLocation",
-          Files.createTempDirectory(s"graft_${name}_ckpt_").toString)
+          Replay.workspace(s"graft_${name}_ckpt_"))
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
         .start()
       def countsOf(key: Long): Seq[Long] =

@@ -1,13 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.Sources
+import graft.streaming.Replay
 
 /** Source/sink format coverage beyond the fixture parquet: ORC, CSV and
   * JSON round-trips (the formats a 100 TB lake actually mixes), schema
@@ -21,7 +20,7 @@ class FormatSpec extends AnyFunSuite {
   import TestSpark._
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
+    Replay.workspace(prefix) + "/t"
 
   /** events, minus the free-text props column (CSV/JSON round-trip of
     * embedded JSON quoting is a serialization detail, not format
@@ -64,7 +63,7 @@ class FormatSpec extends AnyFunSuite {
     // the 100 TB reality: a pipeline adds a column and the lake holds
     // both generations side by side. mergeSchema must read them as one
     // table with nulls for the missing column, not fail or drop data.
-    val dir = Files.createTempDirectory("graft_evo_").toString
+    val dir = Replay.workspace("graft_evo_")
     val v1 = flat.select("event_id", "event_type")
     val v2 = flat.select(col("event_id"), col("event_type"), col("value"))
       .withColumn("event_id", col("event_id") + 1000000L)
@@ -88,7 +87,7 @@ class FormatSpec extends AnyFunSuite {
     // old ones — x8's store lifecycle (StreamSketch.processBatch), one
     // schema generation later.
     val lgK = graft.streaming.StreamSketch.LgK
-    val store = Files.createTempDirectory("graft_sketch_evo_").toString + "/sketches"
+    val store = Replay.workspace("graft_sketch_evo_") + "/sketches"
     val ev = Sources.table(spark, sf, "events")
       .select(col("event_id"), col("event_type"), col("user_id"), col("value"))
     (0 until 4).foreach { b =>
@@ -137,7 +136,7 @@ class FormatSpec extends AnyFunSuite {
     // the identical answer over the merged two-generation store — the
     // new column rides along, it never perturbs the cell join.
     import graft.ops.SimilarityOps
-    val store = Files.createTempDirectory("graft_ann_evo_").toString + "/index"
+    val store = Replay.workspace("graft_ann_evo_") + "/index"
     val all = SimilarityOps.normed(spark, sf)
     val assigned = SimilarityOps.assignCells(all, SimilarityOps.ivfSeedCentroids(all))
     (0 until 4).foreach { b =>

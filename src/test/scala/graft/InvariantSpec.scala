@@ -711,7 +711,7 @@ class InvariantSpec extends AnyFunSuite {
     // lives in the header) must fingerprint identically end-to-end —
     // build, chunk walk, 64-slot seek decode, mean, banding — and a
     // different-payload doc must not join them at hamming 0
-    val work = java.nio.file.Files.createTempDirectory("graft_m14_").toString
+    val work = graft.streaming.Replay.workspace("graft_m14_")
     import org.apache.spark.sql.functions.lit
     val twinText = "the quick brown fox jumps over the lazy dog again and again"
     val spark0 = spark

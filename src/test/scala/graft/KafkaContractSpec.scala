@@ -1,14 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.StreamPipeline
+import graft.streaming.{Replay, StreamPipeline}
 
 /** Kafka-seam contract test (O5/O7 parity): the spark-sql-kafka connector
   * jar cannot run in this zero-egress image, so the seam is pinned from
@@ -49,11 +47,11 @@ class KafkaContractSpec extends AnyFunSuite {
       .groupBy("label", "event_type")
       .agg(count(lit(1)).as("cnt"))
 
-    val ckpt = Files.createTempDirectory("graft_kafka_ckpt_")
+    val ckpt = Replay.workspace("graft_kafka_ckpt_")
     val q = counts.writeStream
       .format("memory").queryName("kafka_contract")
       .outputMode("complete")
-      .option("checkpointLocation", ckpt.toString)
+      .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()

@@ -34,7 +34,7 @@ class LocalFsEquivSpec extends AnyFunSuite {
   private def raw(fs: RawLocalFileSystem, conf: Configuration): RawLocalFileSystem = {
     fs.initialize(fileUri, conf); fs
   }
-  private def tmp(): String = Files.createTempDirectory("graft_localfs_eq_").toString
+  private def tmp(): String = graft.streaming.Replay.workspace("graft_localfs_eq_")
 
   /** `rwxr-x---`-style mode plus the sticky bit, read from disk. */
   private def mode(p: String): Int =

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.annotation.nowarn
@@ -21,7 +20,7 @@ class LocalFsSpec extends AnyFunSuite {
   import TestSpark._
 
   test("file: resolves to the fork-free classes in parent and child sessions, both APIs") {
-    val dir = new Path(Files.createTempDirectory("graft_localfs_").toUri)
+    val dir = new Path(new java.io.File(Replay.workspace("graft_localfs_")).toURI)
     for (s <- Seq(spark, spark.newSession())) {
       val conf = s.sessionState.newHadoopConf()
       // through Hadoop's FileSystem cache: an earlier stock `file:`
@@ -33,7 +32,7 @@ class LocalFsSpec extends AnyFunSuite {
   }
 
   test("a checkpointed stateful foreachBatch stream starts no chmod/readlink/ls/stat process") {
-    val work = Files.createTempDirectory("graft_localfs_").toString
+    val work = Replay.workspace("graft_localfs_")
     val (in, store, ckpt) = (s"$work/in", s"$work/store", s"$work/ckpt")
     StreamPipeline.toWire(Sources.table(spark, sf, "events")).repartition(3).write.text(in)
     val session = spark.newSession()

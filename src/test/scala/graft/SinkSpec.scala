@@ -1,13 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.{Sinks, Sources}
-import graft.streaming.StreamPipeline
+import graft.streaming.{Replay, StreamPipeline}
 
 /** Sinks + Kafka wiring (O5/O6/O7/O19/O21 analogs). The Kafka connector
   * jar is absent in this zero-egress image, so Kafka coverage is the
@@ -16,7 +14,7 @@ class SinkSpec extends AnyFunSuite {
   import TestSpark._
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    Replay.workspace(prefix)
 
   test("parquetAppend is exactly-once across replays with the same checkpoint") {
     val out = tmp("graft_sink_out_"); val ckpt = tmp("graft_sink_ckpt_")
@@ -289,13 +287,72 @@ class SinkSpec extends AnyFunSuite {
       s"2:${perWave(2)}", s"3:${perWave(3)}"))
   }
 
+  /** Every workspace of the run so far, read off their shared root. */
+  private def workspaces(): Set[java.io.File] =
+    new java.io.File(Replay.workspace("graft_probe_")).getParentFile.listFiles().toSet
+      .filterNot(_.getName.startsWith("graft_probe_"))
+
+  /** The workspaces `f` created. */
+  private def newWorkspaces(f: => Unit): Seq[java.io.File] = {
+    val before = workspaces()
+    f
+    (workspaces() -- before).toSeq
+  }
+
   test("Replay.appendFlushed leaves no flush-sentinel directory behind") {
-    def flushDirs(): Int =
-      Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
-        .map(_.count(_.startsWith("graft_flush_"))).getOrElse(0)
+    // counted across every workspace of the run: q07's own workspace
+    // must exist and hold its sink output, so a count that never sees
+    // q07's sentinel dir cannot pass vacuously
+    def flushDirs(): Int = workspaces().count(w => new java.io.File(w, "flush").exists())
     val before = flushDirs()
-    SparkEntry.queries("q07_tumbling_window")(spark, sf).collect()
-    assert(flushDirs() == before, "q07's replay left its graft_flush_* sentinel dir in the temp dir")
+    val made = newWorkspaces(SparkEntry.queries("q07_tumbling_window")(spark, sf).collect(): Unit)
+    assert(made.size == 1 && new java.io.File(made.head, "out").isDirectory,
+      s"q07 should replay in one workspace holding its sink output: $made")
+    assert(flushDirs() == before, "q07's replay left its flush sentinel dir in its workspace")
+  }
+
+  test("every sink replay is recorded; a failing transform rethrows and leaves no checkpoint") {
+    // q07 (appendFlushed: events + the flush sentinel), q24
+    // (updateMaterialized: events) and q37 (two reads of events) run
+    // through the same runner as the store gates, so a recorded scope
+    // sees their batches and every input row they read
+    val events = Sources.table(spark, sf, "events").count()
+    for ((gate, rows) <- Seq("q07_tumbling_window" -> (events + 1),
+                             "q24_stream_score" -> events,
+                             "q37_stream_join" -> 2 * events)) {
+      val (_, batches) = Replay.recorded(SparkEntry.queries(gate)(spark, sf))
+      assert(batches.nonEmpty, s"$gate recorded no batch")
+      assert(batches.map(_.numInputRows).sum == rows,
+        s"$gate read ${batches.map(_.numInputRows).sum} rows, want $rows")
+    }
+    val boom = udf((id: Long) => { if (id >= 0L) sys.error(s"injected failure at $id"); id })
+    val failing: DataFrame => DataFrame = _.withColumn("boom", boom(col("event_id")))
+    val runners: Seq[(String, () => DataFrame)] = Seq(
+      "appendFlushed" -> (() => Replay.appendFlushed(spark, sf, "events")(failing)),
+      "updateMaterialized" -> (() => Replay.updateMaterialized(spark, sf, "events", Seq("event_id"))(failing)),
+      "append" -> (() => Replay.append(spark, sf, "events")(failing)))
+    for ((name, runner) <- runners) {
+      val made = newWorkspaces(intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        runner()
+      }: Unit)
+      assert(made.size == 1, s"$name: ${made.size} workspaces")
+      val left = made.flatMap(w => Seq("ckpt", "flush").map(new java.io.File(w, _))).filter(_.exists)
+      assert(left.isEmpty, s"$name left $left behind")
+    }
+  }
+
+  test("a workspace and its per-JVM root are deleted when the JVM exits") {
+    val javaBin = ProcessHandle.current().info().command().get()
+    val child = new ProcessBuilder(javaBin, "-Xmx64m",
+        s"-Djava.io.tmpdir=${System.getProperty("java.io.tmpdir")}",
+        "-cp", System.getProperty("java.class.path"), "graft.WorkspaceChild")
+      .redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(child.getInputStream).mkString
+    assert(child.waitFor() == 0, out)
+    val ws = new java.io.File(out.linesIterator.toSeq.last.trim)
+    assert(ws.getParentFile.getName.startsWith("graft_run_"), out)
+    assert(!ws.exists(), s"$ws outlived its JVM")
+    assert(!ws.getParentFile.exists(), s"${ws.getParentFile} outlived its JVM")
   }
 
   test("partitionedAppend writes the ES-analog partitioned layout, replay-safe") {
@@ -493,5 +550,15 @@ object SinkSpec {
     def write(batch: org.apache.spark.sql.DataFrame, batchId: Long): Unit =
       // idempotent on batchId by construction: a retry overwrites its slot
       batchRows.put(batchId, batch.count()): Unit
+  }
+}
+
+/** Makes a workspace with a file in it, prints its path and exits: the
+  * child JVM of SinkSpec's workspace-cleanup case. */
+object WorkspaceChild {
+  def main(args: Array[String]): Unit = {
+    val ws = Replay.workspace("graft_child_")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(ws, "f"), "x")
+    println(ws)
   }
 }

@@ -1,13 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.Sources
 import graft.ops.Windowed
+import graft.streaming.Replay
 
 /** The streaming state backend: graft pins the RocksDB state store
   * provider (Engine.tuned) — keyed state at 100 TB outgrows executor
@@ -32,7 +31,7 @@ class StateStoreSpec extends AnyFunSuite {
   }
 
   test("a stateful replay reports RocksDB-specific state metrics (provider engaged)") {
-    val ckpt = Files.createTempDirectory("graft_rocks_ckpt_")
+    val ckpt = Replay.workspace("graft_rocks_ckpt_")
     val q = Sources.stream(spark, sf, "events")
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "5 minutes"))
@@ -40,7 +39,7 @@ class StateStoreSpec extends AnyFunSuite {
       .writeStream
       .format("noop")
       .outputMode("update")
-      .option("checkpointLocation", ckpt.toString)
+      .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -59,9 +58,9 @@ class StateStoreSpec extends AnyFunSuite {
     // two replays with conflicting statePartitions in flight at once: with
     // the old shared-conf mutation these would race or serialize; with
     // per-replay child sessions both finish and the parent conf is untouched
-    val fa = Future(graft.streaming.Replay.appendFlushed(spark, sf, "events", Some(2))(df =>
+    val fa = Future(Replay.appendFlushed(spark, sf, "events", Some(2))(df =>
       Windowed.tumbling(df.withWatermark("ts", "10 minutes"))).count())
-    val fb = Future(graft.streaming.Replay.appendFlushed(spark, sf, "events", Some(3))(df =>
+    val fb = Future(Replay.appendFlushed(spark, sf, "events", Some(3))(df =>
       Windowed.sliding(df.withWatermark("ts", "10 minutes"))).count())
     val (a, b) = (Await.result(fa, 5.minutes), Await.result(fb, 5.minutes))
     assert(a > 0 && b > 0)

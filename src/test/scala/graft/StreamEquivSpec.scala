@@ -8,7 +8,8 @@ import graft.streaming.{Replay, StreamPipeline}
 
 /** Batch≡stream equivalence (SURVEY.md §5.2#3): the identical transform
   * object runs as a batch DataFrame and as a Structured Streaming replay
-  * (file source, AvailableNow, memory sink); results must agree. */
+  * (file source, AvailableNow, into a memory table, a parquet sink or a
+  * per-batch store); results must agree. */
 class StreamEquivSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -126,7 +127,7 @@ class StreamEquivSpec extends AnyFunSuite {
         .toDF()
         .writeStream.format("memory").queryName(name).outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory(s"graft_${name}_ckpt_").toString)
+          Replay.workspace(s"graft_${name}_ckpt_"))
         .start()
       try {
         // batch 1: the session opener + a watermark pacer
@@ -243,7 +244,7 @@ class StreamEquivSpec extends AnyFunSuite {
   test("compactStore preserves the row set exactly and stays inside the batch prune") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft_compact_").toString
+    val work = Replay.workspace("graft_compact_")
     val store = s"$work/bands"
     // three batch partitions with overlapping keys (compaction must
     // keep duplicates across batches — these are SETS per batch, and
@@ -271,7 +272,7 @@ class StreamEquivSpec extends AnyFunSuite {
   test("a swap killed between its renames self-heals on the next compaction (crash window closed)") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft_swapcrash_").toString
+    val work = Replay.workspace("graft_swapcrash_")
     val store = s"$work/bands"
     (0 until 3).foreach { b =>
       (0 until 20).map(i => (i.toLong + b, i % 4, s"v${i % 5}"))
@@ -643,8 +644,7 @@ class StreamEquivSpec extends AnyFunSuite {
       // marker-gated deployment: gen-0 = the upserted store as-is;
       // gen-1 lands uncommitted (must not leak), then ONE marker create
       // flips the serve
-      val gens = java.nio.file.Files
-        .createTempDirectory("graft_s27s26_").toString + "/gens"
+      val gens = Replay.workspace("graft_s27s26_") + "/gens"
       ops.s17WriteGeneration(liveC, gens, 0)
       val preFlip = rows(ops.s17ServeLatest(spark, gens))
       assert(preFlip == rows(ops.probeAssigned(liveC)),
@@ -1090,7 +1090,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val m = graft.streaming.Replay.Waves
     val docs = Sources.table(spark, sf, "documents").select("doc_id", "text")
     def wave(b: Int) = docs.filter(pmod(col("doc_id"), lit(m.toLong)) === b)
-    val work = java.nio.file.Files.createTempDirectory("graft_mediaredo_").toString
+    val work = Replay.workspace("graft_mediaredo_")
     val (fp, cur, led) = (s"$work/fp", s"$work/cur", s"$work/ledger")
     val fpF = md.ImageFp
     md.processBatch(wave(0), 0L, fp, cur, led, fpF)
@@ -1147,7 +1147,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val docs = Sources.table(spark, sf, "documents")
       .select("doc_id", "lang", "text")
     def wave(b: Int) = docs.filter(pmod(col("doc_id"), lit(m.toLong)) === b)
-    val work = java.nio.file.Files.createTempDirectory("graft_consredo_").toString
+    val work = Replay.workspace("graft_consredo_")
     md.consensusStep(wave(0), 0L, work)
     md.consensusStep(wave(1), 1L, work)
     // torn batch 2: poison consensus pairs, a poison per-channel ledger
@@ -1243,7 +1243,7 @@ class StreamEquivSpec extends AnyFunSuite {
   test("p11 blendBatch heals a crashed swap BEFORE its per-batch write: totals stay full-history") {
     import org.apache.spark.sql.functions._
     val sm = graft.streaming.Replay.Waves
-    val work = java.nio.file.Files.createTempDirectory("graft_blendheal_").toString
+    val work = Replay.workspace("graft_blendheal_")
     val stats = s"$work/stats"
     val ledger = s"$work/ledger"
     val docs = Sources.table(spark, sf, "documents").select("doc_id", "source", "text")
@@ -1636,7 +1636,7 @@ class StreamEquivSpec extends AnyFunSuite {
 
   test("x17 growth curve: telescoping exactness, monotone unions, differences track exact first appearances") {
     import org.apache.spark.sql.functions._
-    val w17 = java.nio.file.Files.createTempDirectory("graft_growth17_").toString
+    val w17 = Replay.workspace("graft_growth17_")
     val (growth, nBatches) =
       withBatches(graft.streaming.StreamSketch.x17StreamGrowth(spark, sf, Some(w17)))
     assert(nBatches == graft.streaming.Replay.Waves,
@@ -1729,7 +1729,7 @@ class StreamEquivSpec extends AnyFunSuite {
     // run redoes the batch from the checkpoint — priorKeys prunes to
     // batch_id < current, so the torn state is invisible to the redo —
     // and must end row-identical to the from-scratch derivation.
-    val work = java.nio.file.Files.createTempDirectory("graft_p6crash_").toString
+    val work = Replay.workspace("graft_p6crash_")
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       graft.streaming.IncrementalExport
         .p6IncrementalExport(spark, sf, crashAt = Some(2L), workDir = Some(work))
@@ -1763,7 +1763,7 @@ class StreamEquivSpec extends AnyFunSuite {
     // the same invariance on the OTHER two store kinds (HLL registers,
     // CMS counters): build, serve (materialized BEFORE the vacuum),
     // vacuum, re-serve — byte-identical
-    val w12 = java.nio.file.Files.createTempDirectory("graft_ret12_").toString
+    val w12 = Replay.workspace("graft_ret12_")
     val served12 = StreamSketch.x12StreamWindowDistinct(spark, sf, Some(w12))
     val n12 = Replay.countBatchDirs(s"$w12/sketches")
     val pre12 = rows(served12)
@@ -1772,7 +1772,7 @@ class StreamEquivSpec extends AnyFunSuite {
     assert(r12.nonEmpty)
     assert(rows(StreamSketch.x12Serve(spark, s"$w12/sketches", n12)) == pre12,
       "HLL windowed serve changed across the vacuum")
-    val w13 = java.nio.file.Files.createTempDirectory("graft_ret13_").toString
+    val w13 = Replay.workspace("graft_ret13_")
     val served13 = StreamSketch.x13StreamWindowCms(spark, sf, Some(w13))
     val n13 = Replay.countBatchDirs(s"$w13/counters")
     val pre13 = rows(served13)
@@ -1819,7 +1819,7 @@ class StreamEquivSpec extends AnyFunSuite {
     // reading the torn stats would compute a stale watermark. The redo
     // recomputes from batch_id < current (torn state invisible) and
     // must end row-identical to the closed-form derivation.
-    val work = java.nio.file.Files.createTempDirectory("graft_x19crash_").toString
+    val work = Replay.workspace("graft_x19crash_")
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       graft.streaming.LateLedger
         .x19LateLedger(spark, sf, crashAt = Some(2L), workDir = Some(work))
@@ -2195,14 +2195,14 @@ class StreamEquivSpec extends AnyFunSuite {
       b.toLong -> late
     }.toMap
     assert(expectedDrops.values.sum == 4L, "fixture must actually plant late rows")
-    val work = java.nio.file.Files.createTempDirectory("graft_wmdrop_").toString
+    val work = Replay.workspace("graft_wmdrop_")
     val inDir = s"$work/in"
     waves.zipWithIndex.foreach { case (mins, b) =>
       val df = spark.createDataFrame(mins.map(m =>
         (b * 100 + m, java.sql.Timestamp.from(t0.plusSeconds(m * 60)))))
         .toDF("event_id", "ts")
       df.coalesce(1).write.mode("append").parquet(inDir)
-      // mtime order IS the replay order contract (runWaveReplay's rule)
+      // mtime order IS the replay order contract (Replay.stampArrival's rule)
       new java.io.File(inDir).listFiles()
         .filter(f => f.getName.startsWith("part-") &&
           f.lastModified() > 1000000000000L + b * 60000L)
