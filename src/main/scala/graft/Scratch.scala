@@ -250,7 +250,7 @@ object Scratch {
         }
       case q =>
         for (i <- 1 to 2) {
-          val (_, batches) = t(s"$q #$i") {
+          val (_, batches, _) = t(s"$q #$i") {
             graft.streaming.Replay.recorded(SparkEntry.queries(q)(spark, sfDir)
               .write.format("noop").mode("overwrite").save())
           }

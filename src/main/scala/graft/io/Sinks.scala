@@ -57,20 +57,14 @@ object Sinks {
       .trigger(Trigger.AvailableNow())
       .start()
 
-  /** Idempotent per-batch writer backing [[partitionedAppend]]: every
-    * micro-batch lands in its own `batch_id=<n>` subdirectory with
-    * overwrite semantics. foreachBatch is natively at-least-once — a
-    * batch that fails after a partial write is re-run on recovery, and a
-    * blind `mode("append")` would duplicate its rows. Overwriting the
-    * batch's own directory makes the re-run idempotent (effectively-once
-    * end to end with the checkpoint), the same move as writing
-    * `_version`-keyed upserts to a real index. Readers discover
-    * `batch_id` as an extra partition column and still prune on the
-    * user partition columns one level down. */
+  /** Idempotent per-batch writer backing [[partitionedAppend]]: each
+    * micro-batch is one batch of the [[Store]] at `path`
+    * ([[Store.put]]), so a batch re-run after a partial write replaces
+    * it — effectively-once end to end with the checkpoint. Readers still
+    * prune on the user partition columns one level down. */
   def partitionedBatchWrite(path: String, partitionCols: Seq[String])
                            (batch: DataFrame, batchId: Long): Unit =
-    batch.write.mode("overwrite").partitionBy(partitionCols: _*)
-      .parquet(s"$path/batch_id=$batchId")
+    new Store(batch.sparkSession, path).put(batchId, batch, partitionCols)
 
   /** Partitioned per-micro-batch materialization (foreachBatch), the
     * ES-index analog: downstream "dashboard" queries prune on the
@@ -96,8 +90,8 @@ object Sinks {
     def write(batch: DataFrame, batchId: Long): Unit
   }
 
-  /** Default index impl: partitioned parquet, idempotent per batch
-    * (the zero-egress stand-in for a real index; same layout as
+  /** Default index impl: a [[Store]], idempotent per batch (the
+    * zero-egress stand-in for a real index; same layout as
     * [[partitionedAppend]]). */
   final class ParquetIndexWriter(path: String, partitionCols: Seq[String])
       extends IndexBatchWriter {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.io.Sources
+import graft.io.{Sources, Store}
 import graft.ops.TextOps
 
 /** p11: the STREAMING member of the mixture family (p8 uniform, p9
@@ -41,7 +41,7 @@ import graft.ops.TextOps
   * the stats listing is bounded by FOLDING shipped partitions into one
   * consolidated row per source — per-source sums are their own
   * sufficient statistic — proven mid-stream as p12
-  * ([[p12WithStoreInfo]] / [[compactBlendStats]]).
+  * ([[p12BlendCompact]]).
   */
 object BlendMonitor {
 
@@ -53,21 +53,20 @@ object BlendMonitor {
   def p11StreamBlend(spark: SparkSession, dir: String,
                      waves: Int = Replay.Waves): DataFrame = {
     val work = Replay.workspace("graft_blendmon_")
-    val stats = s"$work/stats"
-    val ledger = s"$work/ledger"
+    val (stats, ledger) = (Store(spark, s"$work/stats"), Store(spark, s"$work/ledger"))
     val docs = Sources.table(spark, dir, "documents")
       .select("doc_id", "source", "text")
     Replay.replay(spark, docs, Replay.ByMod("doc_id"), work, waves) {
       (batch, batchId) => blendBatch(batch, batchId, stats, ledger)
     }
-    spark.read.parquet(ledger)
+    readLedger(ledger)
+  }
+
+  private def readLedger(ledger: Store): DataFrame =
+    ledger.all
       .select(col("batch_id").cast("long").as("batch_id"), col("source"),
         col("w"), col("tot"), col("budget"))
       .orderBy("batch_id", "source")
-  }
-
-  def p12BlendCompact(spark: SparkSession, dir: String): DataFrame =
-    p12WithStoreInfo(spark, dir)._1
 
   /** p12: p11 with its stats store compacted MID-STREAM — the lifecycle
     * motion the accreting sources × batches store needs on a long-lived
@@ -79,76 +78,42 @@ object BlendMonitor {
     * inside every later `batch_id <= current` prune, and the ledger —
     * every (batch, source) blend row, before AND after the fold — must
     * be byte-identical to p11's: the oracle is p11's SQL verbatim,
-    * because compaction must be query-invisible. The swap rides
-    * [[StreamSketch.swapStore]]'s crash-recoverable retire+promote with
-    * the reader-side heal. StreamEquivSpec pins the partition-count
-    * bounds (half the replay's dirs collapse to one; the listing stays
-    * 1 + batches-since afterwards) and ledger ≡ p11 row-for-row. */
-  private[graft] def p12WithStoreInfo(spark: SparkSession, dir: String)
-      : (DataFrame, Int, Int, Int) = {
+    * because compaction must be query-invisible. The fold rides
+    * [[Store.compact]]'s crash-recoverable retire+promote (x20's move
+    * with sum in place of max: both are their own sufficient
+    * statistic, so the fold IS the store's content). StreamEquivSpec
+    * pins the partition-count bounds (half the replay's dirs collapse
+    * to one; the listing stays 1 + batches-since afterwards) and
+    * ledger ≡ p11 row-for-row. */
+  def p12BlendCompact(spark: SparkSession, dir: String): DataFrame = {
     val work = Replay.workspace("graft_blendmon12_")
-    val stats = s"$work/stats"
-    val ledger = s"$work/ledger"
+    val (stats, ledger) = (Store(spark, s"$work/stats"), Store(spark, s"$work/ledger"))
     val docs = Sources.table(spark, dir, "documents")
       .select("doc_id", "source", "text")
-    var partsBefore = 0
-    var partsAfter = 0
     Replay.replay(spark, docs, Replay.ByMod("doc_id"), work,
-      splitAt = Replay.Waves / 2, midpoint = () => {
-        partsBefore = Replay.countBatchDirs(stats)
-        compactBlendStats(spark, stats)
-        partsAfter = Replay.countBatchDirs(stats)
-      }) {
+      splitAt = Replay.Waves / 2,
+      midpoint = () => stats.compact(
+        _.groupBy("source").agg(sum("btok").as("btok")).coalesce(1))) {
       (batch, batchId) => blendBatch(batch, batchId, stats, ledger)
     }
-    val result = spark.read.parquet(ledger)
-      .select(col("batch_id").cast("long").as("batch_id"), col("source"),
-        col("w"), col("tot"), col("budget"))
-      .orderBy("batch_id", "source")
-    (result, partsBefore, partsAfter, Replay.countBatchDirs(stats))
-  }
-
-  /** Fold the shipped stats partitions into ONE consolidated
-    * `batch_id=-1` row per source — x20's compactStats with sum in
-    * place of max (both are their own sufficient statistic, so the
-    * fold IS the store's content, no row rewrite). Same store-open
-    * heal + dead-tmp clear + crash-recoverable swap as every other
-    * compaction verb. */
-  private[graft] def compactBlendStats(spark: SparkSession, stats: String): Unit = {
-    val tmp = stats + "_compacting"
-    StreamSketch.healRetiredStore(spark, stats)
-    StreamSketch.clearPath(spark, tmp)
-    spark.read.parquet(stats).drop("batch_id")
-      .groupBy("source").agg(sum("btok").as("btok"))
-      .coalesce(1).write.parquet(s"$tmp/batch_id=-1")
-    StreamSketch.swapStore(spark, tmp, stats)
+    readLedger(ledger)
   }
 
   private[graft] def blendBatch(batch: DataFrame, batchId: Long,
-                                stats: String, ledger: String): Unit = {
-    val session = batch.sparkSession
-    // Store-open heal FIRST, before the per-batch write: a crash
-    // between swapStore's renames leaves the full history only at
-    // `_retired`, and writing `batch_id=N` first would recreate the
-    // store as a single-batch partial — turning the heal into a no-op
-    // and letting the next compaction's delete destroy the only full
-    // copy. Same contract as every other store open (IncrementalDedup/
-    // FullFunnel/IncrementalExport/LateLedger readStore).
-    StreamSketch.healRetiredStore(session, stats)
+                                stats: Store, ledger: Store): Unit = {
     // the batch's per-source token totals — a sources-sized partial,
-    // the only thing that ever reads the batch's text
-    batch
+    // the only thing that ever reads the batch's text. The put heals a
+    // crashed swap first, so it can never recreate the store as a
+    // single-batch partial over the full history at `_retired`.
+    val partial = batch
       .select(col("source"), size(TextOps.tokens(col("text"))).cast("long").as("n_tok"))
       .filter(col("n_tok") > 0)
       .groupBy("source").agg(sum("n_tok").as("btok"))
-      .write.mode("overwrite").parquet(s"$stats/batch_id=$batchId")
+    stats.put(batchId, partial)
     // arrived totals THROUGH this batch (<= includes the partial just
     // written — overwrite makes the retry read the same rows), then
     // p9's blend rule over the sources-sized frame
-    blendLedgerFrame(
-      session.read.parquet(stats)
-        .filter(col("batch_id") <= batchId).drop("batch_id"))
-      .write.mode("overwrite").parquet(s"$ledger/batch_id=$batchId")
+    ledger.put(batchId, blendLedgerFrame(stats.upTo(batchId, partial.schema)))
   }
 
   /** One batch's blend-ledger rows from the arrived stats partials:

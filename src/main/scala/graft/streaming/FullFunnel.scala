@@ -3,9 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-import graft.io.Sources
+import graft.io.{Sources, Store}
 import graft.ops.{DedupOps, PipelineOps, TextOps}
 
 /** p3: the WHOLE corpus-prep funnel run ONLINE — p2's head stages plus
@@ -85,7 +85,7 @@ object FullFunnel {
     Replay.replay(spark, docs.select("doc_id", "text", "lang", "source"),
       Replay.ByRange(orderExpr), work)((batch, batchId) =>
       processBatch(batch, batchId, stores))
-    ledger(spark.read.parquet(stores.labels))
+    ledger(stores.labels.all)
   }
 
   /** Materialize the static benchmark-side artifacts the stream consumes
@@ -103,14 +103,10 @@ object FullFunnel {
         s"bloom_filter_agg(xxhash64(g), ${DedupOps.BloomCapacity}L, ${DedupOps.BloomNumBits}L)"
       ).as("bf"))
       .write.parquet(bloomPath)
-    Stores(s"$work/keys", s"$work/bands", s"$work/shingles",
-      s"$work/labels", evalgPath, bloomPath)
+    Stores(Store(spark, s"$work/keys"), Store(spark, s"$work/bands"),
+      Store(spark, s"$work/shingles"), Store(spark, s"$work/labels"),
+      evalgPath, bloomPath)
   }
-
-  private[graft] def p3CompactInfo(spark: SparkSession, dir: String)
-      : (DataFrame, Seq[Int], Seq[Int], Seq[Int]) =
-    p3CompactOnDocs(spark, Sources.table(spark, dir, "documents")
-      .select("doc_id", "text", "lang", "source"))
 
   /** d19's mid-stream compaction proven on p3's funnel — the most
     * store-heavy stream in the repo holds THREE growing full-history
@@ -118,42 +114,34 @@ object FullFunnel {
     * adversarial phased shape at once: replay the first half of the
     * doc_id-ordered arrivals, rewrite ALL THREE stores' shipped
     * partitions into one consolidated `batch_id=-1` partition each
-    * (keyed on that store's join key — norm_key / bv / doc_id — via
-    * [[IncrementalDedup.compactStore]] verbatim), then replay the
+    * (keyed on that store's join key — norm_key / bv / doc_id — d19's
+    * [[Store.compact]] rewrite), then replay the
     * second half against the compacted state. Every phase-B verdict —
     * exact dup, near-dup candidate, Jaccard verify — now reads the
     * consolidated partitions, so a lost digest/band/shingle flips a
     * stage label and diverges the ledger; StreamEquivSpec asserts the
     * ledger is byte-identical to the unphased run's (and, on a planted
     * frame, that cross-phase exact AND near duplicates still drop
-    * through the compacted stores). The LABELS store is never
-    * compacted: it is the output ledger, never re-read by a batch.
-    * Returns (ledger, per-store partition counts before / after /
-    * at stream end), count order (keys, bands, shingles). */
-  private[graft] def p3CompactOnDocs(spark: SparkSession, docs: DataFrame)
-      : (DataFrame, Seq[Int], Seq[Int], Seq[Int]) = {
+    * through the compacted stores), and reads each store's partition
+    * counts from the record. The LABELS store is never compacted: it is
+    * the output ledger, never re-read by a batch. */
+  private[graft] def p3CompactOnDocs(spark: SparkSession, docs: DataFrame): DataFrame = {
     val work = Replay.workspace("graft_fullfunnel_c_")
     val stores = prepArtifacts(docs, work)
-    val tracked = Seq(stores.keys, stores.bands, stores.shingles)
-    def counts(): Seq[Int] = tracked.map(Replay.countBatchDirs)
-    var before = Seq.empty[Int]
-    var after = Seq.empty[Int]
     // two arrival phases (half each): the stream must CONTINUE over the
     // compacted stores, not restart
     Replay.replay(spark, docs.select("doc_id", "text", "lang", "source"),
       Replay.ByRange(col("doc_id")), work, splitAt = Replay.Waves / 2,
       midpoint = () => {
-        before = counts()
-        IncrementalDedup.compactStore(spark, stores.keys, "norm_key")
-        IncrementalDedup.compactStore(spark, stores.bands, "bv")
-        IncrementalDedup.compactStore(spark, stores.shingles, "doc_id")
-        after = counts()
+        stores.keys.compact(_.repartition(col("norm_key")))
+        stores.bands.compact(_.repartition(col("bv")))
+        stores.shingles.compact(_.repartition(col("doc_id")))
       })((batch, batchId) => processBatch(batch, batchId, stores))
-    (ledger(spark.read.parquet(stores.labels)), before, after, counts())
+    ledger(stores.labels.all)
   }
 
-  private case class Stores(keys: String, bands: String, shingles: String,
-                            labels: String, evalg: String, bloom: String)
+  private case class Stores(keys: Store, bands: Store, shingles: Store,
+                            labels: Store, evalg: String, bloom: String)
 
   /** The per-(lang, source) funnel ledger over per-doc stage labels —
     * p1's exact column set, so the two gates are comparable row-for-row. */
@@ -170,13 +158,15 @@ object FullFunnel {
 
   private def processBatch(batch: DataFrame, batchId: Long, st: Stores): Unit = {
     val spark = batch.sparkSession
+    // store reads prune to batches BEFORE this one (retry safety: a
+    // re-run batch must not see its own partial write)
     val flagged = PipelineOps.headFlags(batch).persist()
     val sh = DedupOps.shingles(batch).persist()
     try {
       val elig = flagged.filter(!col("is_eval") && col("q"))
       // exact: first-arrival via the digest set store + batch-local window
       val keySchema = StructType(elig.select("norm_key").schema.fields)
-      val priorKeys = readStore(spark, st.keys, batchId, keySchema)
+      val priorKeys = st.keys.before(batchId, keySchema)
       val exactIds = elig
         .withColumn("min_id", min("doc_id").over(Window.partitionBy("norm_key")))
         .join(priorKeys.select(col("norm_key"), lit(true).as("seen")), Seq("norm_key"), "left")
@@ -185,8 +175,8 @@ object FullFunnel {
       // near: batch bands (later side) × store ∪ own batch, Jaccard-verified
       // against the shingle store — d12's plan, labeling the later doc
       val bands = DedupOps.bandRows(sh)
-      val priorBands = readStore(spark, st.bands, batchId, bands.schema)
-      val priorSh = readStore(spark, st.shingles, batchId, sh.schema)
+      val priorBands = st.bands.before(batchId, bands.schema)
+      val priorSh = st.shingles.before(batchId, sh.schema)
       val cand = bands.as("x")
         .join(priorBands.unionByName(bands).as("y"),
           col("x.bi") === col("y.bi") && col("x.bv") === col("y.bv") &&
@@ -241,28 +231,12 @@ object FullFunnel {
       // while the labels write is still deep in its candidate subplans,
       // so the cache race d12 measured never bites here.
       Replay.fence(
-        () => labeled.write.mode("overwrite")
-          .parquet(s"${st.labels}/batch_id=$batchId"),
-        () => elig.select("norm_key").distinct()
-          .join(priorKeys, Seq("norm_key"), "left_anti")
-          .write.mode("overwrite").parquet(s"${st.keys}/batch_id=$batchId"),
-        () => bands.write.mode("overwrite")
-          .parquet(s"${st.bands}/batch_id=$batchId"),
-        () => sh.write.mode("overwrite")
-          .parquet(s"${st.shingles}/batch_id=$batchId"))
+        () => st.labels.put(batchId, labeled),
+        () => st.keys.put(batchId, elig.select("norm_key").distinct()
+          .join(priorKeys, Seq("norm_key"), "left_anti")),
+        () => st.bands.put(batchId, bands),
+        () => st.shingles.put(batchId, sh))
     } finally { flagged.unpersist(); sh.unpersist(); () }
-  }
-
-  /** Store read pruned to batches BEFORE the current one (retry safety).
-    * Heals the mid-swap crash state first — a missing swap-target store
-    * must never read as empty (see IncrementalDedup.readStore). */
-  private def readStore(spark: SparkSession, path: String, batchId: Long,
-                        schema: StructType): DataFrame = {
-    graft.streaming.StreamSketch.healRetiredStore(spark, path)
-    if (new java.io.File(path).exists())
-      spark.read.parquet(path).filter(col("batch_id") < batchId).drop("batch_id")
-    else
-      spark.createDataFrame(new java.util.ArrayList[Row](), schema)
   }
 
   /** The batch replay of p3's first-arrival semantics — the definition

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
-import graft.io.Sources
+import graft.io.{Sources, Store}
 import graft.ops.DedupOps
 import graft.out.Canonical._
 
@@ -27,10 +26,9 @@ import graft.out.Canonical._
   * Every pair is emitted exactly once — in the micro-batch where its
   * LATER document arrives (band rows are static per doc, so two old
   * docs can never become a new candidate). All three writes are
-  * per-batch-directory overwrites (the [[Sinks.partitionedBatchWrite]]
-  * idempotency move), and store reads prune to `batch_id < current`,
-  * so a replayed batch neither duplicates pairs nor double-counts
-  * shingles in the Jaccard verify.
+  * idempotent [[Store.put]]s and store reads prune to `batch_id <
+  * current`, so a replayed batch neither duplicates pairs nor
+  * double-counts shingles in the Jaccard verify.
   *
   * Scale design: per-batch cost is batch-size signature computation +
   * one equi-join of batch bands against the store (shuffle keyed on
@@ -65,26 +63,36 @@ object IncrementalDedup {
       orderExpr: org.apache.spark.sql.Column = col("doc_id"),
       waves: Int = Replay.Waves): DataFrame = {
     val work = Replay.workspace("graft_incdedup_")
-    val bandStore = s"$work/bands"
-    val shingleStore = s"$work/shingles"
-    val pairStore = s"$work/pairs"
+    val st = Stores(spark, work)
     Replay.replay(spark, Sources.table(spark, dir, "documents").select("doc_id", "text"),
       Replay.ByRange(orderExpr), work, waves)((batch, batchId) =>
-      processBatch(batch, batchId, bandStore, shingleStore, pairStore))
-    spark.read.parquet(pairStore)
-      .select(col("a_id"), col("b_id"), col("jaccard"))
-      .orderBy("a_id", "b_id")
+      processBatch(batch, batchId, st))
+    readPairs(st)
   }
 
-  private def processBatch(batch: DataFrame, batchId: Long,
-                           bandStore: String, shingleStore: String,
-                           pairStore: String): Unit = {
-    val spark = batch.sparkSession
+  /** d12's three stores under `work`: the band and shingle indexes the
+    * candidate join and the verify read, and the emitted-pair ledger. */
+  private final case class Stores(bands: Store, shingles: Store, pairs: Store)
+  private object Stores {
+    def apply(spark: SparkSession, work: String): Stores = Stores(
+      Store(spark, s"$work/bands"), Store(spark, s"$work/shingles"),
+      Store(spark, s"$work/pairs"))
+  }
+
+  private def readPairs(st: Stores): DataFrame =
+    st.pairs.all
+      .select(col("a_id"), col("b_id"), col("jaccard"))
+      .orderBy("a_id", "b_id")
+
+  private def processBatch(batch: DataFrame, batchId: Long, st: Stores): Unit = {
     val sh = DedupOps.shingles(batch).persist()
     try {
       val bands = DedupOps.bandRows(sh)
-      val priorBands = readStore(spark, bandStore, batchId, bands.schema)
-      val priorSh = readStore(spark, shingleStore, batchId, sh.schema)
+      // prune to batches BEFORE this one: a retried batch's own partial
+      // write must not feed its re-run (double-counted shingles would
+      // corrupt the Jaccard)
+      val priorBands = st.bands.before(batchId, bands.schema)
+      val priorSh = st.shingles.before(batchId, sh.schema)
       // candidates need >= 1 batch-side doc: batch bands meet the full
       // band set (prior store ∪ batch) on band value; least/greatest
       // normalizes to a_id < b_id and distinct collapses multi-band hits
@@ -109,37 +117,13 @@ object IncrementalDedup {
       // lock (r18 measured d12 jobs 95→99 from exactly this)
       sh.count(): Unit
       Replay.fence(
-        () => verified.write.mode("overwrite")
-          .parquet(s"$pairStore/batch_id=$batchId"),
-        () => bands.write.mode("overwrite")
-          .parquet(s"$bandStore/batch_id=$batchId"),
-        () => sh.write.mode("overwrite")
-          .parquet(s"$shingleStore/batch_id=$batchId"))
+        () => st.pairs.put(batchId, verified),
+        () => st.bands.put(batchId, bands),
+        () => st.shingles.put(batchId, sh))
     } finally { sh.unpersist(); () }
   }
 
-  /** Read a per-batch-partitioned store, pruned to batches BEFORE the
-    * current one — a retried batch's own partial write must not feed
-    * its re-run (double-counted shingles would corrupt the Jaccard).
-    * Empty before the first batch commits. */
-  private[streaming] def readStore(spark: SparkSession, path: String, batchId: Long,
-                                   schema: StructType): DataFrame = {
-    // every per-batch open of a swap-target store heals the mid-swap
-    // crash state first: without this, a missing store reads as EMPTY
-    // (silently re-admitting every prior duplicate), the batch write
-    // recreates the dir, and the next swap's cleanup would destroy the
-    // only full-history copy at _retired
-    StreamSketch.healRetiredStore(spark, path)
-    if (new java.io.File(path).exists())
-      spark.read.parquet(path).filter(col("batch_id") < batchId).drop("batch_id")
-    else
-      spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-  }
-
   // ---- d19: compaction for the full-history band/shingle stores ------
-
-  def d19BandCompact(spark: SparkSession, dir: String): DataFrame =
-    d19WithStoreInfo(spark, dir)._1
 
   /** d19: partition COMPACTION for d12's band and shingle stores — the
     * lifecycle motion the FULL-HISTORY stores actually need. x18's
@@ -172,55 +156,24 @@ object IncrementalDedup {
     * back key-clustered — the same I/O class as s13's cell rewrite,
     * schedulable per key range at 100 TB; between compactions the
     * listing is bounded by (1 + batches since last compaction). */
-  private[graft] def d19WithStoreInfo(spark: SparkSession, dir: String)
-      : (DataFrame, Int, Int, Int, Long) = {
+  def d19BandCompact(spark: SparkSession, dir: String): DataFrame = {
     val work = Replay.workspace("graft_bandcompact_")
-    val bandStore = s"$work/bands"
-    val shingleStore = s"$work/shingles"
-    val pairStore = s"$work/pairs"
-    var partsBefore = 0
-    var partsAfter = 0
+    val st = Stores(spark, work)
     // two arrival phases (half each): the stream must CONTINUE over a
     // compacted store, not restart
     Replay.replay(spark, Sources.table(spark, dir, "documents").select("doc_id", "text"),
       Replay.ByRange(col("doc_id")), work, splitAt = Replay.Waves / 2,
       midpoint = () => {
-        partsBefore = Replay.countBatchDirs(bandStore)
-        compactStore(spark, bandStore, "bv")
-        compactStore(spark, shingleStore, "doc_id")
-        partsAfter = Replay.countBatchDirs(bandStore)
-      })((batch, batchId) =>
-      processBatch(batch, batchId, bandStore, shingleStore, pairStore))
-    val partsEnd = Replay.countBatchDirs(bandStore)
-    val emitted = Replay.countBatchDirs(pairStore).toLong
-    val result = spark.read.parquet(pairStore)
-      .select(col("a_id"), col("b_id"), col("jaccard"))
-      .orderBy("a_id", "b_id")
-    (result, partsBefore, partsAfter, partsEnd, emitted)
+        st.bands.compact(_.repartition(col("bv")))
+        st.shingles.compact(_.repartition(col("doc_id")))
+      })((batch, batchId) => processBatch(batch, batchId, st))
+    readPairs(st)
   }
 
-  /** Rewrite a batch-partitioned store's shipped partitions into ONE
-    * consolidated `batch_id=-1` partition, repartitioned on `key` (the
-    * store's join key, so the candidate join's scan stays
-    * key-clustered), then swap it in atomically-enough for the
-    * single-writer stream (the stream is quiesced between triggers —
-    * exactly when a production table service would take the store
-    * lock). -1 sorts below every real batch id, so the consolidated
-    * rows remain inside every later `batch_id < current` prune. */
+  /** Fold `store`'s shipped partitions into ONE `batch_id=-1` partition
+    * clustered on `key` (the store's join key, so the candidate join's
+    * scan stays key-clustered) — [[Store.compact]]'s rewrite fold. */
   private[graft] def compactStore(spark: SparkSession, store: String,
-                                  key: String): Unit = {
-    val tmp = store + "_compacting"
-    // store-open seam of the swap's crash contract: a compaction retried
-    // after a crash between swapStore's renames must first restore the
-    // store from _retired (or this read throws on a missing path), and
-    // must clear the dead tmp from the crashed attempt (mode-default
-    // parquet write refuses an existing dir — the retry is idempotent
-    // because tmp is rebuilt from the healed store, never trusted)
-    StreamSketch.healRetiredStore(spark, store)
-    StreamSketch.clearPath(spark, tmp)
-    spark.read.parquet(store).drop("batch_id")
-      .repartition(col(key))
-      .write.parquet(s"$tmp/batch_id=-1")
-    StreamSketch.swapStore(spark, tmp, store)
-  }
+                                  key: String): Unit =
+    Store(spark, store).compact(_.repartition(col(key)))
 }

@@ -3,9 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-import graft.io.Sources
+import graft.io.{Sources, Store}
 import graft.ops.{PipelineOps, TextOps}
 
 /** p6: the INCREMENTAL export — the daily-refresh motion p4/p5 stop
@@ -86,22 +86,18 @@ object IncrementalExport {
       workDir: Option[String] = None,
       waves: Int = Replay.Waves): DataFrame = {
     val work = workDir.getOrElse(Replay.workspace("graft_increxport_"))
-    val manifest = s"$work/manifest"
-    val keys = s"$work/keys"
+    val (keys, manifest) = (Store(spark, s"$work/keys"), Store(spark, s"$work/manifest"))
     Replay.replay(spark, docs, Replay.ByMod("doc_id"), work, waves) {
       (batch, batchId) => processBatch(batch, batchId, keys, manifest, crashAt)
     }
-    readManifest(spark, manifest)
+    readManifest(manifest)
   }
 
-  private def readManifest(spark: SparkSession, manifest: String): DataFrame =
-    spark.read.parquet(manifest)
+  private def readManifest(manifest: Store): DataFrame =
+    manifest.all
       .select(col("batch_id").cast("long").as("batch_id"), col("source"),
         col("shard"), col("n_docs"), col("n_tok"), col("n_seqs"), col("pack_md5"))
       .orderBy("batch_id", "source", "shard")
-
-  def p7ExportCompact(spark: SparkSession, dir: String): DataFrame =
-    p7WithStoreInfo(spark, dir)._1
 
   /** p7: d19's mid-stream compaction applied to p6's digest SET store —
     * the second full-history store family the r11 verdict named (the
@@ -112,7 +108,7 @@ object IncrementalExport {
     * so the shipped `batch_id=N` partitions rewrite into ONE
     * `batch_id=-1` partition repartitioned on `norm_key` — the store's
     * join key, keeping the per-batch anti-join's scan key-clustered —
-    * via d19's compactStore verbatim (shared code, shared swap moves).
+    * d19's [[Store.compact]] rewrite verbatim.
     *
     * Adversarial moment, d19's shape: replay the first half of the
     * document waves, compact the digest store down to one partition,
@@ -129,29 +125,20 @@ object IncrementalExport {
     * writes back key-clustered (32-byte keys, never text — the cheapest
     * store in the pipeline to rewrite); between compactions the listing
     * is bounded by 1 + batches since the last one. */
-  private[graft] def p7WithStoreInfo(spark: SparkSession, dir: String)
-      : (DataFrame, Int, Int, Int) =
+  def p7ExportCompact(spark: SparkSession, dir: String): DataFrame =
     p7OnDocs(spark, exportDocs(spark, dir))
 
   /** The phased run over an explicit frame — [[p6OnDocs]]'s spec seam,
     * compaction included. */
-  private[graft] def p7OnDocs(spark: SparkSession, docs: DataFrame)
-      : (DataFrame, Int, Int, Int) = {
+  private[graft] def p7OnDocs(spark: SparkSession, docs: DataFrame): DataFrame = {
     val work = Replay.workspace("graft_increxport7_")
-    val manifest = s"$work/manifest"
-    val keys = s"$work/keys"
-    var partsBefore = 0
-    var partsAfter = 0
+    val (keys, manifest) = (Store(spark, s"$work/keys"), Store(spark, s"$work/manifest"))
     Replay.replay(spark, docs, Replay.ByMod("doc_id"), work,
-      splitAt = Replay.Waves / 2, midpoint = () => {
-        partsBefore = Replay.countBatchDirs(keys)
-        IncrementalDedup.compactStore(spark, keys, "norm_key")
-        partsAfter = Replay.countBatchDirs(keys)
-      }) {
+      splitAt = Replay.Waves / 2,
+      midpoint = () => keys.compact(_.repartition(col("norm_key")))) {
       (batch, batchId) => processBatch(batch, batchId, keys, manifest, None)
     }
-    (readManifest(spark, manifest), partsBefore, partsAfter,
-      Replay.countBatchDirs(keys))
+    readManifest(manifest)
   }
 
   /** The shared pack stage — p4's curate-then-pack move scoped to a kept
@@ -183,20 +170,12 @@ object IncrementalExport {
   }
 
   private def processBatch(batch: DataFrame, batchId: Long,
-                           keys: String, manifest: String,
+                           keys: Store, manifest: Store,
                            crashAt: Option[Long] = None): Unit = {
-    val spark = batch.sparkSession
     val flagged = PipelineOps.headFlags(batch)
     val elig = flagged.filter(!col("is_eval") && col("q"))
     val keySchema = StructType(elig.select("norm_key").schema.fields)
-    // heal a mid-swap crash before the open — a missing digest store
-    // must never read as empty (first-arrival would re-admit history)
-    StreamSketch.healRetiredStore(spark, keys)
-    val priorKeys =
-      if (new java.io.File(keys).exists())
-        spark.read.parquet(keys).filter(col("batch_id") < batchId).drop("batch_id")
-      else
-        spark.createDataFrame(new java.util.ArrayList[Row](), keySchema)
+    val priorKeys = keys.before(batchId, keySchema)
     // first-arrival-wins: a digest seen in ANY earlier batch drops the
     // doc; within the batch the smallest doc_id keeps (together: the
     // lexicographically smallest (batch, doc_id) — the closed-form rule
@@ -211,15 +190,13 @@ object IncrementalExport {
       .filter(size(col("ts")) > 0)
       .select(col("doc_id"), concat_ws(" ", col("ts")).as("s"),
         size(col("ts")).cast("long").as("n_tok"))
-    packShards(kept, toks)
-      .write.mode("overwrite").parquet(s"$manifest/batch_id=$batchId")
+    manifest.put(batchId, packShards(kept, toks))
     // crash seam: dying HERE leaves the manifest written but the batch's
     // digests unregistered — the torn two-store state the redo must heal
     crashAt.filter(_ == batchId).foreach(b => sys.error(s"injected crash in batch $b"))
     // digest set append: only digests unseen in earlier batches
-    elig.select("norm_key").distinct()
-      .join(priorKeys, Seq("norm_key"), "left_anti")
-      .write.mode("overwrite").parquet(s"$keys/batch_id=$batchId")
+    keys.put(batchId, elig.select("norm_key").distinct()
+      .join(priorKeys, Seq("norm_key"), "left_anti"))
   }
 
   /** The from-scratch twin over the membership rule: kept = the

@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.io.Sources
+import graft.io.{Sources, Store}
 
 /** x19: event-time lateness accounting for the wave-replay family.
   *
@@ -45,7 +46,7 @@ import graft.io.Sources
   * stats rows — but the max is monotone, so a long-lived deployment
   * bounds the stats listing by COMPACTING shipped rows into one
   * running-max partition — shipped and proven mid-stream as x20's
-  * [[compactStats]], which FOLDS the scalars (a running max is its own
+  * max fold ([[x20StatsCompact]]), which FOLDS the scalars (a running max is its own
   * sufficient statistic) where d19/p7 must rewrite rows — not by
   * deleting them; nothing ever re-reads shipped batches. This
   * is how a 1000-executor ingest accounts for stragglers over 100 TB:
@@ -70,51 +71,43 @@ object LateLedger {
       crashAt: Option[Long] = None,
       workDir: Option[String] = None): DataFrame = {
     val work = workDir.getOrElse(Replay.workspace("graft_lateledger_"))
-    val ledger = s"$work/ledger"
-    val stats = s"$work/stats"
+    val (ledger, stats) = (Store(spark, s"$work/ledger"), Store(spark, s"$work/stats"))
     val events = Sources.table(spark, dir, "events")
       .select("event_id", "event_type", "value", "ts")
     Replay.replay(spark, events, Replay.ByMod("event_id"), work) {
       (batch, batchId) => ledgerBatch(batch, batchId, ledger, stats, crashAt)
     }
-    readLedger(spark, ledger)
+    readLedger(ledger)
   }
+
+  /** The stats store's one column: a batch's max event time (micros). */
+  private val StatsSchema = StructType(Seq(StructField("max_tsu", LongType)))
 
   /** The per-batch ledger step — shared verbatim by x19's single-phase
     * replay and x20's phased one, so the guard/fence/two-store-write
     * semantics cannot drift between the gates. */
   private def ledgerBatch(batch: DataFrame, batchId: Long,
-                          ledger: String, stats: String,
+                          ledger: Store, stats: Store,
                           crashAt: Option[Long]): Unit = {
-    val session = batch.sparkSession
     // the watermark at batch START: max event time of PRIOR batches
     // minus the allowed lateness (Spark's update rule — data seen
     // through batch b-1 gates batch b); batch 0 has none
-    // heal a mid-swap crash before the open: a missing stats store
-    // would silently read wm = None and classify every late event
-    // on-time — the exact failure the swap contract exists to prevent
-    StreamSketch.healRetiredStore(session, stats)
-    val wm: Option[Long] =
-      if (!new java.io.File(stats).exists()) None
-      else {
-        val prior = session.read.parquet(stats)
-          .filter(col("batch_id") < batchId)
-          .agg(max("max_tsu")).collect()(0)
-        if (prior.isNullAt(0)) None
-        else Some(prior.getLong(0) - LateDelayMicros)
-      }
+    val wm: Option[Long] = {
+      val prior = stats.before(batchId, StatsSchema).agg(max("max_tsu")).collect()(0)
+      if (prior.isNullAt(0)) None
+      else Some(prior.getLong(0) - LateDelayMicros)
+    }
     val classified = batch
       .withColumn("tsu", unix_micros(col("ts")))
       .withColumn("late",
         wm.map(w => col("tsu") < lit(w)).getOrElse(lit(false)))
-    classified.groupBy("event_type")
+    ledger.put(batchId, classified.groupBy("event_type")
       .agg(
         sum(when(col("late"), 1L).otherwise(0L)).as("n_late"),
         sum(when(!col("late"), 1L).otherwise(0L)).as("n_ontime"),
         // the guard fences the aggregate: only on-time value enters
         sum(when(!col("late"), col("value").cast("decimal(18,4)"))
-          .otherwise(lit(0).cast("decimal(18,4)"))).as("ontime_value_d"))
-      .write.mode("overwrite").parquet(s"$ledger/batch_id=$batchId")
+          .otherwise(lit(0).cast("decimal(18,4)"))).as("ontime_value_d")))
     // crash seam: dying HERE leaves the ledger written but the
     // batch's event-time maximum unregistered — the torn two-store
     // state the redo must heal
@@ -123,19 +116,15 @@ object LateLedger {
     // register the batch's max event time for the NEXT watermark
     // (idempotent per-batch overwrite — a redone batch rewrites the
     // same scalar)
-    classified.agg(max("tsu").as("max_tsu"))
-      .write.mode("overwrite").parquet(s"$stats/batch_id=$batchId")
+    stats.put(batchId, classified.agg(max("tsu").as("max_tsu")))
   }
 
-  private def readLedger(spark: SparkSession, ledger: String): DataFrame =
-    spark.read.parquet(ledger)
+  private def readLedger(ledger: Store): DataFrame =
+    ledger.all
       .select(col("batch_id").cast("long").as("batch_id"), col("event_type"),
         col("n_late"), col("n_ontime"),
         col("ontime_value_d").cast("double").as("ontime_value"))
       .orderBy("batch_id", "event_type")
-
-  def x20StatsCompact(spark: SparkSession, dir: String): DataFrame =
-    x20WithStoreInfo(spark, dir)._1
 
   /** x20: the stats-store lifecycle motion x19's scaladoc names, made
     * real — the watermark source is a running MAX, so unlike d19's
@@ -160,44 +149,18 @@ object LateLedger {
     * between compactions the stats listing is bounded by 1 + batches
     * since the last fold — the claim x19's scaladoc makes, now a
     * measured gate. */
-  private[graft] def x20WithStoreInfo(spark: SparkSession, dir: String)
-      : (DataFrame, Int, Int, Int) = {
+  def x20StatsCompact(spark: SparkSession, dir: String): DataFrame = {
     val work = Replay.workspace("graft_lateledger20_")
-    val ledger = s"$work/ledger"
-    val stats = s"$work/stats"
+    val (ledger, stats) = (Store(spark, s"$work/ledger"), Store(spark, s"$work/stats"))
     val events = Sources.table(spark, dir, "events")
       .select("event_id", "event_type", "value", "ts")
-    var partsBefore = 0
-    var partsAfter = 0
     Replay.replay(spark, events, Replay.ByMod("event_id"), work,
-      splitAt = Replay.Waves / 2, midpoint = () => {
-        partsBefore = Replay.countBatchDirs(stats)
-        compactStats(spark, stats)
-        partsAfter = Replay.countBatchDirs(stats)
-      }) {
+      splitAt = Replay.Waves / 2,
+      midpoint = () => stats.compact(_.agg(max("max_tsu").as("max_tsu")).coalesce(1))) {
       (batch, batchId) => ledgerBatch(batch, batchId, ledger, stats, None)
     }
-    (readLedger(spark, ledger), partsBefore, partsAfter,
-      Replay.countBatchDirs(stats))
+    readLedger(ledger)
   }
-
-  /** Fold the shipped stats partitions into one consolidated
-    * `batch_id=-1` running-max row, then swap it in (the same
-    * crash-recoverable retire+promote move as d19's compactStore —
-    * single writer, stream quiesced between triggers). */
-  private[graft] def compactStats(spark: SparkSession, stats: String): Unit = {
-    val tmp = stats + "_compacting"
-    // same store-open heal + dead-tmp clear as d19's compactStore: a
-    // retry after a mid-swap crash restores the stats from _retired and
-    // rebuilds tmp from the healed store
-    StreamSketch.healRetiredStore(spark, stats)
-    StreamSketch.clearPath(spark, tmp)
-    spark.read.parquet(stats).drop("batch_id")
-      .agg(max("max_tsu").as("max_tsu"))
-      .coalesce(1).write.parquet(s"$tmp/batch_id=-1")
-    StreamSketch.swapStore(spark, tmp, stats)
-  }
-
 
   /** The closed-form batch twin: watermark_b = max event time over
     * earlier waves − delay, derived entirely from the membership rule —

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.io.{Sinks, Sources}
+import graft.io.{Sources, Store}
 
 /** Deterministic streaming replay harness: run any batch-compatible
   * `DataFrame => DataFrame` transform as a Structured Streaming query over
@@ -53,10 +53,9 @@ import graft.io.{Sinks, Sources}
   * reads its workspace until the JVM exits.
   *
   * Companions: [[recorded]] (the micro-batches a call ran, from Spark's
-  * own per-batch progress), [[countBatchDirs]] (how many `batch_id=N`
-  * partitions a store holds — a store fact, which a resumed or vacuumed
-  * run tells apart from the batches it ran) and [[fence]] (overlapped
-  * independent writes).
+  * own per-batch progress, and the [[graft.io.Store]]s it made — the
+  * bodies' state, whose layout and crash contract live there) and
+  * [[fence]] (overlapped independent writes).
   */
 object Replay {
 
@@ -126,24 +125,24 @@ object Replay {
   }
 
   /** Update-mode replay of a *non-windowed* aggregation materialized
-    * through the idempotent per-batch sink ([[Sinks.partitionedBatchWrite]]):
-    * each micro-batch's updated rows land in their own `batch_id`
-    * directory, and the read-back keeps the latest write per key — the
-    * upsert-into-an-index pattern (reference ConsumerESFinal.scala:93)
-    * without a driver-side memory table or complete-mode re-emission.
-    * The result is the final value per key regardless of how the replay
-    * was sliced into batches. */
+    * through an idempotent per-batch [[graft.io.Store]]: each
+    * micro-batch's updated rows are one batch of the store, and the
+    * read-back keeps the latest write per key — the upsert-into-an-index
+    * pattern (reference ConsumerESFinal.scala:93) without a driver-side
+    * memory table or complete-mode re-emission. The result is the final
+    * value per key regardless of how the replay was sliced into batches. */
   def updateMaterialized(spark: SparkSession, dir: String, table: String,
                          keyCols: Seq[String],
                          statePartitions: Option[Int] = None)
                         (transform: DataFrame => DataFrame): DataFrame = {
     val session = isolated(spark, statePartitions)
     val work = workspace("graft_upsert_")
+    val out = Store(spark, s"$work/out")
     drainOnce(work, transform(Sources.stream(session, dir, table)).writeStream
-      .foreachBatch(Sinks.partitionedBatchWrite(s"$work/out", Seq.empty) _)
+      .foreachBatch((batch: DataFrame, batchId: Long) => out.put(batchId, batch))
       .outputMode("update"))
     val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("batch_id").desc)
-    spark.read.parquet(s"$work/out")
+    out.all
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn", "batch_id")
@@ -229,7 +228,7 @@ object Replay {
     val q = writer.option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    Option(record.get).foreach(_ ++= q.recentProgress)
+    Option(record.get).foreach(_.batches ++= q.recentProgress)
   }
 
   /** [[run]] a one-shot replay in workspace `work`, checkpointed at
@@ -247,12 +246,11 @@ object Replay {
     * modification-time order (the order [[deal]] stamps), checkpointed
     * at `ckpt`; `body` receives each batch with its id shifted by
     * `offset`, so a phased run's later phase continues the
-    * stream-lifetime numbering and every `batch_id < current` store
-    * prune stays valid. Returns once
-    * the query has drained; a `body` failure fails the query and is
+    * stream-lifetime numbering its stores prune by. Returns once the
+    * query has drained; a `body` failure fails the query and is
     * rethrown here, and a re-run over the same checkpoint redoes only
-    * the uncommitted batches — bodies write idempotent `batch_id=N`
-    * overwrites, so a torn write is replaced, never merged. */
+    * the uncommitted batches, whose [[graft.io.Store.put]]s replace
+    * their torn writes. */
   private[graft] def drain(spark: SparkSession, inDir: String, ckpt: String,
                            offset: Long)(body: (DataFrame, Long) => Unit): Unit = {
     val session = spark.newSession()
@@ -264,26 +262,39 @@ object Replay {
       .foreachBatch((batch: DataFrame, batchId: Long) => body(batch, offset + batchId)), ckpt)
   }
 
+  /** What one [[recorded]] scope has seen so far. */
+  private final class Record {
+    val batches = ArrayBuffer.empty[StreamingQueryProgress]
+    val stores = ArrayBuffer.empty[Store]
+  }
+
   /** The open [[recorded]] scope of each thread. A plain ThreadLocal,
     * not the inheritable one `scala.util.DynamicVariable` holds: a
     * thread started inside the scope must not record into it. */
-  private val record = new ThreadLocal[ArrayBuffer[StreamingQueryProgress]]
+  private val record = new ThreadLocal[Record]
+
+  /** Add `store` to this thread's open [[recorded]] scope, if any
+    * ([[graft.io.Store.apply]] calls it). */
+  private[graft] def enlist(store: Store): Unit =
+    Option(record.get).foreach(_.stores += store)
 
   /** Run `f` and return, with its result, Spark's progress entry for
     * every micro-batch the replays on this thread ran — [[drain]] and
     * the sink replays alike — in run order: `batchId` (the query's own,
     * before a [[drain]] caller's offset),
     * `numInputRows`, and `durationMs` with `addBatch` (the body),
-    * `queryPlanning`, `walCommit` and `commitOffsets`. Its size is how
-    * many batches the call ran — not how many partitions a store holds
-    * ([[countBatchDirs]]): a resumed run redoes only the torn batches.
-    * A nested scope records for itself alone. Each query keeps its last
+    * `queryPlanning`, `walCommit` and `commitOffsets` — and every
+    * [[graft.io.Store]] made on this thread, in creation order. The
+    * batches are how many the call ran, not how many a store holds
+    * (its `facts`): a resumed run redoes only the torn batches. A nested
+    * scope records for itself alone. Each query keeps its last
     * `spark.sql.streaming.numRecentProgressUpdates` (100) entries. */
-  private[graft] def recorded[T](f: => T): (T, Seq[StreamingQueryProgress]) = {
+  private[graft] def recorded[T](f: => T)
+      : (T, Seq[StreamingQueryProgress], Seq[Store]) = {
     val outer = record.get
-    val batches = ArrayBuffer.empty[StreamingQueryProgress]
-    record.set(batches)
-    try { val r = f; (r, batches.toSeq) }
+    val rec = new Record
+    record.set(rec)
+    try { val r = f; (r, rec.batches.toSeq, rec.stores.toSeq) }
     finally record.set(outer)
   }
 
@@ -366,11 +377,11 @@ object Replay {
     * `work` unless it is dealt already — concurrently with `alongside`,
     * a setup write on disjoint paths, when one is given — then [[drain]]
     * each phase, phase B's batch ids offset by phase A's wave count so
-    * the wave → batch-id mapping (and every `batch_id < current` store
-    * prune) is the single-phase run's. `midpoint` runs between the
-    * phases, while the stream is quiesced — when a production table
-    * service takes the store lock (the compaction gates fold their
-    * stores there). */
+    * the wave → batch-id mapping (and every store prune by batch id)
+    * is the single-phase run's. `midpoint` runs between the phases,
+    * while the stream is quiesced — when a production table service
+    * takes the store lock (the compaction gates call
+    * [[graft.io.Store.compact]] there). */
   private[graft] def replay(spark: SparkSession, src: DataFrame, rule: Deal,
       work: String, waves: Int = Waves, splitAt: Int = Int.MaxValue,
       alongside: Option[() => Unit] = None, midpoint: () => Unit = () => ())
@@ -392,18 +403,6 @@ object Replay {
   private[graft] def stampArrival(f: java.io.File, i: Int): Unit =
     require(f.setLastModified(1000000000000L + i * 60000L),
       s"cannot set mtime on $f; file-replay order would be undefined")
-
-  /** How many `batch_id=N` partitions a store currently holds (0 when
-    * the store does not exist yet). */
-  private[graft] def countBatchDirs(store: String): Int =
-    Option(new java.io.File(store).listFiles())
-      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
-
-  /** Rows per `batch_id=N` partition of the store at `path`, in batch
-    * order — the per-batch evidence the delete and alert specs read. */
-  private[graft] def rowsPerBatch(spark: SparkSession, path: String): Array[Long] =
-    spark.read.parquet(path).groupBy("batch_id").count().orderBy("batch_id")
-      .collect().map(_.getLong(1))
 
   /** Run mutually independent writes (disjoint target paths) concurrently
     * — each is a short stage wave that leaves executors idle at its

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.Store
 import graft.ops.SimilarityOps
 import graft.ops.SimilarityOps.{Flat, Hier, Quantizer, hier, probeAssigned}
 
@@ -47,12 +48,10 @@ object StreamAnnIngest {
     all.select("vec_id", "v", "nrm", "label")
 
   /** The per-batch index append every stream shares: assign the batch
-    * against the artifact at `art`, write it as an idempotent
-    * `batch_id=N` overwrite. */
+    * against the artifact at `art`, put it as batch `batchId`. */
   private def appendAssigned(q: Quantizer, batch: DataFrame, batchId: Long,
-                             art: String, store: String): Unit =
-    q.assign(batch, batch.sparkSession.read.parquet(art))
-      .write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
+                             art: String, store: Store): Unit =
+    store.put(batchId, q.assign(batch, batch.sparkSession.read.parquet(art)))
 
   /** `waves` is the replay's batch count at fixed data — ScaleCheck's
     * `s11_batches_axis` doubles it: ingest's per-batch work is a
@@ -78,23 +77,22 @@ object StreamAnnIngest {
       q: Quantizer, n: Int, orderExpr: Column,
       waves: Int = Replay.Waves): DataFrame = {
     val (store, art) = runIngestStream(spark, dir, q, orderExpr, waves)
-    SimilarityOps.serve(q, spark.read.parquet(store).drop("batch_id"),
-      spark.read.parquet(art), n)
+    SimilarityOps.serve(q, store.all.drop("batch_id"), spark.read.parquet(art), n)
   }
 
   /** The ingest stream under quantizer `q`, shared by s11/s15 (flat)
-    * and s23/s24 (hier): returns (index store path, quantizer artifact
+    * and s23/s24 (hier): returns (index store, quantizer artifact
     * path). Any artifact `q` writes plugs in — the batches
     * only ever read the written file (StreamEquivSpec's s23 × s26 case
     * streams under `Hier.retrained` and matches
     * batch s26: ingest → retrain → re-ingest). */
   private[graft] def runIngestStream(spark: SparkSession, dir: String,
       q: Quantizer, orderExpr: Column,
-      waves: Int = Replay.Waves): (String, String) = {
+      waves: Int = Replay.Waves): (Store, String) = {
     val work = Replay.workspace("graft_annstream_")
     val all = SimilarityOps.normed(spark, dir)
     val art = s"$work/quantizer"
-    val store = s"$work/index"
+    val store = Store(spark, s"$work/index")
     // the quantizer build is independent of the deal (disjoint paths,
     // both read only the source table) — overlap them (§2.6) so it
     // back-fills the split write's task tail
@@ -165,8 +163,10 @@ object StreamAnnIngest {
     * that read the store directly (the bulk serve's stored-assignment
     * production state). */
   private[graft] def s23StoreAndCodebook(spark: SparkSession, dir: String)
-      : (String, String) =
-    runIngestStream(spark, dir, Hier, col("vec_id"))
+      : (String, String) = {
+    val (store, art) = runIngestStream(spark, dir, Hier, col("vec_id"))
+    (store.path, art)
+  }
 
   /** The hier-ingest stream at an explicit (k, sub) — ScaleCheck's
     * scaled-k ingest seam (k ∝ corpus, the deployment rule): returns
@@ -213,9 +213,6 @@ object StreamAnnIngest {
     all.filter(col("vec_id") % 10 === 7 && col("label") === 0)
       .select("vec_id")
 
-  def s12StreamAnnDelete(spark: SparkSession, dir: String): DataFrame =
-    s12WithInfo(spark, dir)._1
-
   /** The delete rule's Spark-side predicate, shared with the batch twin
     * in StreamEquivSpec (the oracle mirrors it in SQL). */
   private[graft] def survivorFilter(df: DataFrame): DataFrame =
@@ -242,31 +239,25 @@ object StreamAnnIngest {
     * anti-join keys on (cell, vec_id) — tombstones carry their cell —
     * and at 100 TB rides the same cell-bucketed layout as the index
     * with zero exchanges (LayoutSpec's s12 case). */
-  private[graft] def s12WithInfo(spark: SparkSession, dir: String): (DataFrame, () => Array[Long]) = {
+  def s12StreamAnnDelete(spark: SparkSession, dir: String): DataFrame = {
     val (_, store, tombs) = runDeleteStream(spark, dir, Flat)
-    // test seam, LAZY (guide §1.2 — the gate's declared output is the
-    // probe; this diagnostic ran one extra job inside every timed gate
-    // invocation before): tombstones registered per drain batch, in
-    // batch order — >1 non-empty batch proves requests stayed pending
-    // until their vector arrived (the out-of-order case)
-    (probeAssigned(liveRows(spark, store, tombs)),
-      () => Replay.rowsPerBatch(spark, tombs))
+    probeAssigned(liveRows(store, tombs))
   }
 
   /** The ingest-with-deletes stream under quantizer `q` — s12/s13/s14
     * (flat) and s25 (hier): the standing request ledger drains per
     * batch after the batch's index append ([[drainDeleteLedger]], which
     * reads only the store's cell column — why the quantizer swap is
-    * invisible to it). Returns (work root, index store path, tombstone
-    * store path). */
+    * invisible to it). Returns (work root, index store, tombstone
+    * store). */
   private def runDeleteStream(spark: SparkSession, dir: String, q: Quantizer)
-      : (String, String, String) = {
+      : (String, Store, Store) = {
     val work = Replay.workspace("graft_annstream_del_")
     val all = SimilarityOps.normed(spark, dir)
     val art = s"$work/quantizer"
     val reqPath = s"$work/delete_requests"
-    val store = s"$work/index"
-    val tombs = s"$work/tombstones"
+    val store = Store(spark, s"$work/index")
+    val tombs = Store(spark, s"$work/tombstones")
     // three independent setup writes (disjoint paths, source-table
     // reads only): overlap them (§2.6)
     Replay.replay(spark, arrivals(all), Replay.ByRange(col("vec_id")), work,
@@ -289,9 +280,9 @@ object StreamAnnIngest {
     * `spark.sql.requireAllClusterKeysForCoPartition=false`, which is
     * semantically sound here: HashPartitioning(cell) clusters every
     * (cell, vec_id) group). */
-  private def liveRows(spark: SparkSession, store: String, tombs: String): DataFrame =
-    spark.read.parquet(store).drop("batch_id")
-      .join(spark.read.parquet(tombs).drop("batch_id").select("cell", "vec_id"),
+  private def liveRows(store: Store, tombs: Store): DataFrame =
+    store.all.drop("batch_id")
+      .join(tombs.all.drop("batch_id").select("cell", "vec_id"),
         Seq("cell", "vec_id"), "left_anti")
 
   /** The compaction rewrite (s13, and the s14/s16/s25 variants): the
@@ -303,7 +294,7 @@ object StreamAnnIngest {
   }
 
   def s13AnnCompact(spark: SparkSession, dir: String): DataFrame =
-    s13WithStoreInfo(spark, dir)._1
+    s13WithEvidence(spark, dir)._1
 
   /** s13: COMPACTION retires s12's tombstones — the last maintenance
     * verb of the index lifecycle (ingest s11, delete s12, compact s13).
@@ -330,13 +321,12 @@ object StreamAnnIngest {
     * `bucketBy(cell)` — LayoutSpec's s13 case proves on that written
     * layout that the post-compaction probe is exchange-free AND
     * anti-join-free. */
-  private[graft] def s13WithStoreInfo(spark: SparkSession, dir: String): (DataFrame, () => Long, () => Long) = {
+  private[graft] def s13WithEvidence(spark: SparkSession, dir: String): (DataFrame, () => Long) = {
     val (work, store, tombs) = runDeleteStream(spark, dir, Flat)
-    val comp = compact(liveRows(spark, store, tombs), s"$work/compacted")
-    // store/tombstone counts are spec-only diagnostics — lazy, so the
+    val comp = compact(liveRows(store, tombs), s"$work/compacted")
+    // the compacted row count is a spec-only diagnostic — lazy, so the
     // gate's timed path pays the rewrite + probe and nothing else
-    (probeAssigned(comp), () => comp.count(),
-      () => spark.read.parquet(tombs).count())
+    (probeAssigned(comp), () => comp.count())
   }
 
   // ---- s16: streaming upserts (update = tombstone old + insert new) --
@@ -360,7 +350,7 @@ object StreamAnnIngest {
       .select("vec_id", "v", "nrm", "label")
 
   def s16StreamAnnUpsert(spark: SparkSession, dir: String): DataFrame =
-    s16WithInfo(spark, dir)._1
+    s16WithEvidence(spark, dir)._1
 
   /** s16: UPDATES complete the verb set s11's scaladoc promised
     * ("deletes/updates would ride a tombstone column") — ingest s11,
@@ -399,29 +389,26 @@ object StreamAnnIngest {
     * bucketed layout (HashPartitioning(cell) clusters every
     * (cell, vec_id, batch_id) group — trailing keys change no
     * exchange structure). */
-  private[graft] def s16WithInfo(spark: SparkSession, dir: String)
-      : (DataFrame, () => Long, () => Long, () => Long) = {
+  private[graft] def s16WithEvidence(spark: SparkSession, dir: String)
+      : (DataFrame, () => Long, () => Long) = {
     val (store, tombs) = runUpsertStream(spark, dir, Flat)
-    upsertProbeInfo(spark, store, tombs)
+    upsertProbeEvidence(store, tombs)
   }
 
   /** The latest-version merge + test seams shared by the flat (s16) and
-    * hier (s27) upsert gates: tombstones registered, and the update
-    * wave produced BOTH same-cell and cross-cell replacements (the
-    * 3-key precision and the cell-move path are each exercised). The
-    * new cell is read from the SURVIVING entry — the live view itself. */
-  private def upsertProbeInfo(spark: SparkSession, store: String,
-                              tombs: String)
-      : (DataFrame, () => Long, () => Long, () => Long) = {
-    val live = s16LiveRows(spark, store, tombs)
-    val tombRows = spark.read.parquet(tombs)
-      .select(col("vec_id"), col("cell").as("old_cell"))
+    * hier (s27) upsert gates: the update wave produced BOTH same-cell
+    * and cross-cell replacements (the 3-key precision and the cell-move
+    * path are each exercised). The new cell is read from the SURVIVING
+    * entry — the live view itself. */
+  private def upsertProbeEvidence(store: Store, tombs: Store)
+      : (DataFrame, () => Long, () => Long) = {
+    val live = s16LiveRows(store, tombs)
+    val tombRows = tombs.all.select(col("vec_id"), col("cell").as("old_cell"))
     val newCells = live.select(col("vec_id"), col("cell").as("new_cell"))
     val moved = tombRows.join(newCells, Seq("vec_id"))
     // same-cell / cross-cell replacement evidence is spec-only — lazy,
-    // so the timed gate path no longer runs the moved-join + 3 counts
+    // so the timed gate path runs neither the moved-join nor its counts
     (probeAssigned(live.drop("batch_id")),
-      () => tombRows.count(),
       () => moved.filter(col("old_cell") === col("new_cell")).count(),
       () => moved.filter(col("old_cell") =!= col("new_cell")).count())
   }
@@ -429,7 +416,7 @@ object StreamAnnIngest {
   // ---- s27: upserts PROVEN on the hier-built store --------------------
 
   def s27HierUpsert(spark: SparkSession, dir: String): DataFrame =
-    s27WithInfo(spark, dir)._1
+    s27WithEvidence(spark, dir)._1
 
   /** s27: the LAST lifecycle verb proven on the hier store — s25 proved
     * delete + compact, s24 multiprobe, s26 retrain; upsert completes
@@ -451,10 +438,10 @@ object StreamAnnIngest {
     * with s22's two-level chain. Scale: s16's exactly — update-sized
     * tombstones, key-pruned drains, the 3-key merge on the same
     * cell-bucketed layout — with per-batch assignment at 2√k dots. */
-  private[graft] def s27WithInfo(spark: SparkSession, dir: String)
-      : (DataFrame, () => Long, () => Long, () => Long) = {
+  private[graft] def s27WithEvidence(spark: SparkSession, dir: String)
+      : (DataFrame, () => Long, () => Long) = {
     val (store, tombs) = runUpsertStream(spark, dir, Hier)
-    upsertProbeInfo(spark, store, tombs)
+    upsertProbeEvidence(store, tombs)
   }
 
   /** s27's upsert run with the MERGED store exposed — the s27 × s26
@@ -466,15 +453,15 @@ object StreamAnnIngest {
     * updated corpus. */
   private[graft] def s27LiveRows(spark: SparkSession, dir: String): DataFrame = {
     val (store, tombs) = runUpsertStream(spark, dir, Hier)
-    s16LiveRows(spark, store, tombs).drop("batch_id")
+    s16LiveRows(store, tombs).drop("batch_id")
   }
 
   /** s16's merge, keyed on the victim's full physical address
     * (cell, vec_id, batch_id) — keeps batch_id so a compaction caller
     * can inspect survivors; drop it before probing. */
-  private def s16LiveRows(spark: SparkSession, store: String, tombs: String): DataFrame =
-    spark.read.parquet(store)
-      .join(spark.read.parquet(tombs).drop("batch_id")
+  private def s16LiveRows(store: Store, tombs: Store): DataFrame =
+    store.all
+      .join(tombs.all.drop("batch_id")
           .withColumnRenamed("victim_batch", "batch_id"),
         Seq("cell", "vec_id", "batch_id"), "left_anti")
 
@@ -487,8 +474,8 @@ object StreamAnnIngest {
   private[graft] def s16CompactedInfo(spark: SparkSession, dir: String)
       : (DataFrame, Long, Long) = {
     val (store, tombs) = runUpsertStream(spark, dir, Flat)
-    val work = new java.io.File(store).getParent
-    val comp = compact(s16LiveRows(spark, store, tombs).drop("batch_id"),
+    val work = new java.io.File(store.path).getParent
+    val comp = compact(s16LiveRows(store, tombs).drop("batch_id"),
       s"$work/compacted")
     val nDupIds = comp.groupBy("vec_id").count().filter(col("count") > 1).count()
     (probeAssigned(comp), comp.count(), nDupIds)
@@ -497,10 +484,9 @@ object StreamAnnIngest {
   /** s16's upsert stream under quantizer `q`, shared by the flat (s16,
     * its compaction seam) and hier (s27) gates — everything but the
     * quantizer, including the 3-key victim tombstone drain, is
-    * quantizer-agnostic. Returns (index store path, tombstone store
-    * path). */
+    * quantizer-agnostic. Returns (index store, tombstone store). */
   private def runUpsertStream(spark: SparkSession, dir: String, q: Quantizer)
-      : (String, String) = {
+      : (Store, Store) = {
     val work = Replay.workspace("graft_annstream_ups_")
     val splitDir = s"$work/in"
     val all = SimilarityOps.normed(spark, dir)
@@ -523,8 +509,8 @@ object StreamAnnIngest {
           .foreach(Replay.stampArrival(_, Replay.Waves))
       },
       () => q.write(all, art))
-    val store = s"$work/index"
-    val tombs = s"$work/tombstones"
+    val store = Store(spark, s"$work/index")
+    val tombs = Store(spark, s"$work/tombstones")
     // dealt above: the replay only drains
     Replay.replay(spark, arrivals(all), rule, work) { (batch, batchId) =>
       appendAssigned(q, batch, batchId, art, store)
@@ -540,21 +526,14 @@ object StreamAnnIngest {
     * batch's own append is excluded, and a retried batch cannot see its
     * own partial tombstone write either). */
   private def tombstonePriorVersions(batch: DataFrame, batchId: Long,
-                                     store: String, tombs: String): Unit = {
-    val spark = batch.sparkSession
-    val prior =
-      if (new java.io.File(tombs).exists())
-        spark.read.parquet(tombs).filter(col("batch_id") < batchId)
-          .select("cell", "vec_id", "victim_batch")
-      else null
-    val victims0 = spark.read.parquet(store)
+                                     store: Store, tombs: Store): Unit = {
+    val victims = store.all
       .filter(col("batch_id") < batchId)
       .join(batch.select("vec_id"), Seq("vec_id"), "left_semi")
       .select(col("cell"), col("vec_id"), col("batch_id").as("victim_batch"))
-    val victims =
-      if (prior == null) victims0
-      else victims0.join(prior, Seq("cell", "vec_id", "victim_batch"), "left_anti")
-    victims.write.mode("overwrite").parquet(s"$tombs/batch_id=$batchId")
+    val prior = tombs.before(batchId, victims.schema)
+      .select("cell", "vec_id", "victim_batch")
+    tombs.put(batchId, victims.join(prior, Seq("cell", "vec_id", "victim_batch"), "left_anti"))
   }
 
   // ---- s14: partial compaction while serving (mixed-state probe) ----
@@ -620,22 +599,22 @@ object StreamAnnIngest {
     * remainder merge read only the cell column), so the hier delete
     * stream composes in directly (the StreamEquivSpec s14 × s25 pin). */
   private[graft] def partialCompactStateFrom(spark: SparkSession, work: String,
-                                             store: String, tombs: String)
+                                             store: Store, tombs: Store)
       : (String, DataFrame, DataFrame, () => Long, () => Long) = {
     // the partial rewrite: ONLY the subset's cells, survivors only —
     // cell-local, the uncompacted cells' files are never read
-    val comp = compact(liveRows(spark, store, tombs).filter(inCompactedSubset(col("cell"))),
+    val comp = compact(liveRows(store, tombs).filter(inCompactedSubset(col("cell"))),
       s"$work/compacted_subset")
     // the still-serving remainder: s12's merge, restricted to its cells
-    val uncompRows = spark.read.parquet(store).drop("batch_id")
+    val uncompRows = store.all.drop("batch_id")
       .filter(!inCompactedSubset(col("cell")))
-    val uncompTombs = spark.read.parquet(tombs).drop("batch_id")
+    val uncompTombs = tombs.all.drop("batch_id")
       .filter(!inCompactedSubset(col("cell"))).select("cell", "vec_id")
     val uncomp = uncompRows.join(uncompTombs, Seq("cell", "vec_id"), "left_anti")
     // test seams, LAZY: tombstones retired by the partial rewrite vs
     // still merged at query time — both must be nonzero for a genuinely
     // mixed-state run; the timed gate path never runs these counts
-    val tombsByCell = spark.read.parquet(tombs)
+    val tombsByCell = tombs.all
     (work, comp, uncomp,
       () => tombsByCell.filter(inCompactedSubset(col("cell"))).count(),
       () => tombsByCell.filter(!inCompactedSubset(col("cell"))).count())
@@ -674,25 +653,20 @@ object StreamAnnIngest {
     * the store's cell column), shared by the flat (s12) and hier (s25)
     * delete streams. */
   private def drainDeleteLedger(spark: SparkSession, batchId: Long,
-                                reqPath: String, store: String,
-                                tombs: String): Unit = {
-    val indexed = spark.read.parquet(store)
+                                reqPath: String, store: Store,
+                                tombs: Store): Unit = {
+    val indexed = store.all
       .filter(col("batch_id") <= batchId).select("vec_id", "cell")
-    val prior =
-      if (new java.io.File(tombs).exists())
-        spark.read.parquet(tombs).filter(col("batch_id") < batchId)
-          .select("vec_id")
-      else indexed.select("vec_id").limit(0)
-    spark.read.parquet(reqPath)
+    val prior = tombs.before(batchId, indexed.select("vec_id").schema).select("vec_id")
+    tombs.put(batchId, spark.read.parquet(reqPath)
       .join(indexed, Seq("vec_id"))
-      .join(prior, Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$tombs/batch_id=$batchId")
+      .join(prior, Seq("vec_id"), "left_anti"))
   }
 
   // ---- s25: delete + compact PROVEN on the hier-built store ----------
 
   def s25HierDeleteCompact(spark: SparkSession, dir: String): DataFrame =
-    s25WithInfo(spark, dir)._1
+    s25WithEvidence(spark, dir)._1
 
   /** s25: the index-lifecycle verbs run against the HIER-ingested store
     * — s23's scaladoc claims the store layout is byte-compatible so
@@ -718,15 +692,13 @@ object StreamAnnIngest {
     * stores, compaction is cell-local, and the quantizer swap changes
     * only the per-batch assignment cost (k → G + sub ≈ 2√k dots per
     * vector, s23's saving, now carried through the whole lifecycle). */
-  private[graft] def s25WithInfo(spark: SparkSession, dir: String)
-      : (DataFrame, () => Array[Long], () => Long, () => Long) = {
+  private[graft] def s25WithEvidence(spark: SparkSession, dir: String)
+      : (DataFrame, () => Long) = {
     val (work, store, tombs) = runDeleteStream(spark, dir, Hier)
-    val comp = compact(liveRows(spark, store, tombs), s"$work/compacted")
-    // drain/count diagnostics are spec-only — lazy (guide §1.2), so the
+    val comp = compact(liveRows(store, tombs), s"$work/compacted")
+    // the compacted row count is spec-only — lazy (guide §1.2), so the
     // timed gate path pays the rewrite + probe and nothing else
-    (probeAssigned(comp), () => Replay.rowsPerBatch(spark, tombs),
-      () => comp.count(),
-      () => spark.read.parquet(tombs).count())
+    (probeAssigned(comp), () => comp.count())
   }
 
   /** The s14 × s25 composition seam: the mixed partial-compaction state
@@ -745,8 +717,6 @@ object StreamAnnIngest {
 
   // ---- s20: streaming radius alerts (the watchlist match-on-ingest) --
 
-  def s20StreamRadiusAlert(spark: SparkSession, dir: String): DataFrame =
-    s20WithInfo(spark, dir)._1
 
   /** s20: s19's radius read turned into the ALERT-ON-INGEST motion — the
     * content-flagging / dedup-on-arrival read a production pipeline
@@ -771,13 +741,11 @@ object StreamAnnIngest {
     * No ordering precondition: each arrival is checked independently
     * against the static watchlist, so the alert SET is replay-order
     * invariant (same class as s11's set-union index). */
-  private[graft] def s20WithInfo(spark: SparkSession, dir: String): (DataFrame, () => Array[Long]) =
+  def s20StreamRadiusAlert(spark: SparkSession, dir: String): DataFrame =
     runRadiusAlertStream(spark, dir, Flat)
 
   // ---- s30: the alert stream under the hier quantizer -----------------
 
-  def s30HierRadiusAlert(spark: SparkSession, dir: String): DataFrame =
-    s30WithInfo(spark, dir)._1
 
   /** s30: s20's alert-on-ingest with the quantizer artifact swapped to
     * the TWO-LEVEL codebook — the streaming alert verb proven on the
@@ -790,7 +758,7 @@ object StreamAnnIngest {
     * verb). The union of alert batches must equal batch s29, so the
     * oracle is s29's SQL string verbatim (the shared-string move s20
     * makes with s19, lifted to the hier chain). */
-  private[graft] def s30WithInfo(spark: SparkSession, dir: String): (DataFrame, () => Array[Long]) =
+  def s30HierRadiusAlert(spark: SparkSession, dir: String): DataFrame =
     runRadiusAlertStream(spark, dir, Hier)
 
   /** The alert-on-ingest scaffold under quantizer `q`: s20 plugs the
@@ -798,12 +766,12 @@ object StreamAnnIngest {
     * the one-time watchlist build and every per-batch arrival, so the
     * two sides can never assign under different quantizers. */
   private def runRadiusAlertStream(spark: SparkSession, dir: String,
-      q: Quantizer): (DataFrame, () => Array[Long]) = {
+      q: Quantizer): DataFrame = {
     val work = Replay.workspace("graft_annstream_radius_")
     val all = SimilarityOps.normed(spark, dir)
     val art = s"$work/quantizer"
     val watchPath = s"$work/watchlist"
-    val alerts = s"$work/alerts"
+    val alerts = Store(spark, s"$work/alerts")
     // two independent setup CHAINS (the watchlist must follow the
     // quantizer it assigns under; the deal needs neither): overlap
     // them (§2.6). Per batch: the arrivals' cells, then s19's radius
@@ -818,13 +786,11 @@ object StreamAnnIngest {
           .coalesce(1).write.parquet(watchPath)
       })) { (batch, batchId) =>
       val read = batch.sparkSession.read
-      SimilarityOps.withinRadius(q.assign(batch, read.parquet(art)), read.parquet(watchPath))
-        .write.mode("overwrite").parquet(s"$alerts/batch_id=$batchId")
+      alerts.put(batchId,
+        SimilarityOps.withinRadius(q.assign(batch, read.parquet(art)), read.parquet(watchPath)))
     }
-    val result = spark.read.parquet(alerts)
+    alerts.all
       .select(col("q_id"), col("n_id"), graft.out.Canonical.r4(col("c")).as("cos_sim"))
       .orderBy("q_id", "n_id")
-    // test seam, LAZY: alerts raised per arrival batch, in batch order
-    (result, () => Replay.rowsPerBatch(spark, alerts))
   }
 }

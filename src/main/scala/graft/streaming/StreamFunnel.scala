@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.io.Sources
+import graft.io.{Sources, Store}
 import graft.ops.PipelineOps
 
 /** p2: the corpus-prep funnel head run ONLINE — the streaming form of
@@ -57,14 +57,14 @@ object StreamFunnel {
       orderExpr: org.apache.spark.sql.Column = col("doc_id")): DataFrame = {
     val spark = docs.sparkSession
     val work = Replay.workspace("graft_funnel_")
-    val keyStore = s"$work/keys"
-    val labelStore = s"$work/labels"
+    val keyStore = Store(spark, s"$work/keys")
+    val labelStore = Store(spark, s"$work/labels")
     // first-arrival must mean min-doc_id: the range waves replay in
     // stamped range order
     Replay.replay(spark, docs.select("doc_id", "text", "lang", "source"),
       Replay.ByRange(orderExpr), work)((batch, batchId) =>
       processBatch(batch, batchId, keyStore, labelStore))
-    spark.read.parquet(labelStore)
+    labelStore.all
       .groupBy("lang", "source")
       .agg(
         count(lit(1)).as("n_docs"),
@@ -77,13 +77,14 @@ object StreamFunnel {
   }
 
   private def processBatch(batch: DataFrame, batchId: Long,
-                           keyStore: String, labelStore: String): Unit = {
-    val spark = batch.sparkSession
+                           keyStore: Store, labelStore: Store): Unit = {
     val flagged = PipelineOps.headFlags(batch).persist()
     try {
       val elig = flagged.filter(!col("is_eval") && col("q"))
       val keySchema = StructType(elig.select("norm_key").schema.fields)
-      val prior = readStore(spark, keyStore, batchId, keySchema)
+      // batches BEFORE this one (retry safety — a re-run batch must not
+      // see its own partial write)
+      val prior = keyStore.before(batchId, keySchema)
       val staged = elig
         .withColumn("min_id", min("doc_id").over(Window.partitionBy("norm_key")))
         .join(prior.select(col("norm_key"), lit(true).as("seen")), Seq("norm_key"), "left")
@@ -109,20 +110,9 @@ object StreamFunnel {
       // r19: jobs and wall both unchanged with one; the keys write
       // materializes `flagged` before the labels write needs it)
       Replay.fence(
-        () => labeled.write.mode("overwrite")
-          .parquet(s"$labelStore/batch_id=$batchId"),
-        () => elig.select("norm_key").distinct()
-          .join(prior, Seq("norm_key"), "left_anti")
-          .write.mode("overwrite").parquet(s"$keyStore/batch_id=$batchId"))
+        () => labelStore.put(batchId, labeled),
+        () => keyStore.put(batchId, elig.select("norm_key").distinct()
+          .join(prior, Seq("norm_key"), "left_anti")))
     } finally { flagged.unpersist(); () }
   }
-
-  /** Store read pruned to batches BEFORE the current one (retry safety —
-    * a re-run batch must not see its own partial write). */
-  private def readStore(spark: SparkSession, path: String, batchId: Long,
-                        schema: StructType): DataFrame =
-    if (new java.io.File(path).exists())
-      spark.read.parquet(path).filter(col("batch_id") < batchId).drop("batch_id")
-    else
-      spark.createDataFrame(new java.util.ArrayList[Row](), schema)
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.Sources
+import graft.io.{Sources, Store}
 import graft.ops.MultimodalOps
 
 /** m15/m16/m18/m19: the STREAMING members of the multimodal near-dup
@@ -143,7 +143,7 @@ object StreamMediaDedup {
   }
 
   def m19MediaCompact(spark: SparkSession, dir: String): DataFrame =
-    m19WithStoreInfo(spark, dir)._1
+    m19WithEvidence(spark, dir)._1
 
   /** m20: STREAMING cross-codec consensus — m17's twin on the replay
     * axis, closing the multimodal matrix's last open cell (m13/m14
@@ -207,13 +207,12 @@ object StreamMediaDedup {
       splitKey: String,
       waves: Int = Replay.Waves): (DataFrame, DataFrame) = {
     val work = Replay.workspace("graft_mediaconsensus_")
-    val consStore = s"$work/consensus"
-    val consLed = s"$work/cons_ledger"
+    val cs = Consensus.under(spark, work)
     val times = new java.util.concurrent.ConcurrentLinkedQueue[ConsensusTimes]()
     Replay.replay(spark, docs, Replay.ByMod(splitKey), work, waves) {
-      (batch, batchId) => consensusStep(batch, batchId, work, times.add(_))
+      (batch, batchId) => consensusStep(batch, batchId, cs, times.add(_))
     }
-    val n = Replay.countBatchDirs(consStore)
+    val n = cs.pairs.batches.size
     // the §4.2b decomposition record: summed per-chain vs step wall —
     // excess of Σ step over Σ (max(img, aud) + cons) is the residual
     // the chains' overlap does NOT recover on one local JVM
@@ -224,12 +223,11 @@ object StreamMediaDedup {
         f"[m20] chains img=${ts.map(_.img).sum}%.2f aud=${ts.map(_.aud).sum}%.2f " +
           f"cons=${ts.map(_.cons).sum}%.2f ideal=${ts.map(t => math.max(t.img, t.aud) + t.cons).sum}%.2f s")
     }
-    val result = spark.read.parquet(consStore)
-      .filter(col("batch_id") === (n - 1).toLong)
+    val result = cs.pairs.at(n - 1L)
       .select(col("a_id"), col("b_id"), col("channel"),
         col("img_hamming"), col("aud_hamming"))
       .orderBy("a_id", "b_id")
-    val ledger = spark.read.parquet(consLed)
+    val ledger = cs.ledger.all
       .select(col("batch_id").cast("long").as("batch_id"), col("channel"),
         col("n_pairs"), col("n_added"), col("n_retracted"))
       .orderBy("batch_id", "channel")
@@ -242,11 +240,9 @@ object StreamMediaDedup {
     * consensus for the ledger — output-sized work throughout, and
     * idempotent under batch retry (every read is of committed data;
     * both writes overwrite their own `batch_id=N` directory). */
-  private def consensusBatch(session: SparkSession, batchId: Long,
-      imgCur: String, audCur: String, consStore: String,
-      consLed: String): Unit = {
-    def curOf(path: String, ham: String): DataFrame =
-      session.read.parquet(s"$path/batch_id=$batchId")
+  private def consensusBatch(batchId: Long, cs: Consensus): Unit = {
+    def curOf(chain: Chain, ham: String): DataFrame =
+      chain.cur.at(batchId)
         .select(col("a_id"), col("b_id"), col("hamming").as(ham))
     // channel-tagged merge of the two pair SETS as union + one
     // aggregation instead of a full-outer join (the m16 ledger move:
@@ -254,9 +250,9 @@ object StreamMediaDedup {
     // one hash exchange; each side holds ≤ 1 row per pair, so the
     // max-fold reconstructs exactly the joined (img, aud) hamming pair,
     // nulls where a side is absent)
-    curOf(imgCur, "img_hamming")
+    cs.pairs.put(batchId, curOf(cs.img, "img_hamming")
       .withColumn("aud_hamming", lit(null).cast("long"))
-      .unionByName(curOf(audCur, "aud_hamming")
+      .unionByName(curOf(cs.aud, "aud_hamming")
         .withColumn("img_hamming", lit(null).cast("long")))
       .groupBy("a_id", "b_id")
       .agg(max("img_hamming").as("img_hamming"),
@@ -266,18 +262,16 @@ object StreamMediaDedup {
           .when(col("img_hamming").isNotNull, "image")
           .otherwise("audio").as("channel"),
         coalesce(col("img_hamming"), lit(-1L)).as("img_hamming"),
-        coalesce(col("aud_hamming"), lit(-1L)).as("aud_hamming"))
-      .write.mode("overwrite").parquet(s"$consStore/batch_id=$batchId")
-    val cur = session.read.parquet(s"$consStore/batch_id=$batchId")
+        coalesce(col("aud_hamming"), lit(-1L)).as("aud_hamming")))
+    val cur = cs.pairs.at(batchId)
       .select(col("a_id"), col("b_id"), col("channel").as("now_ch"))
     val prev =
       if (batchId == 0)
         cur.filter(lit(false)).select(col("a_id"), col("b_id"),
           col("now_ch").as("was_ch"))
-      else session.read.parquet(s"$consStore/batch_id=${batchId - 1}")
+      else cs.pairs.at(batchId - 1)
         .select(col("a_id"), col("b_id"), col("channel").as("was_ch"))
-    consensusLedgerFrame(cur, prev)
-      .write.mode("overwrite").parquet(s"$consLed/batch_id=$batchId")
+    cs.ledger.put(batchId, consensusLedgerFrame(cur, prev))
   }
 
   /** The per-channel delta ledger row set for one consensus batch:
@@ -352,28 +346,17 @@ object StreamMediaDedup {
     * and writes it back key-clustered (s13/d19's I/O class),
     * schedulable per key range at 100 TB; between compactions every
     * per-batch store listing is bounded by 1 + batches-since-fold. */
-  private[graft] def m19WithStoreInfo(spark: SparkSession, dir: String)
-      : (DataFrame, Int, Int, Int, () => Long) = {
-    val half = Replay.Waves / 2
+  private[graft] def m19WithEvidence(spark: SparkSession, dir: String)
+      : (DataFrame, () => Long) = {
     val work = Replay.workspace("graft_mediacompact_")
-    val fpStore = s"$work/fp"
-    val curStore = s"$work/cur"
-    val ledgerStore = s"$work/ledger"
-    var partsBefore = 0
-    var partsAfter = 0
+    // m19's declared output is the final pair set; the change feed is
+    // m16's product — no ledger, per the m15 rule
+    val ch = Chain.under(spark, work, withLedger = false)
     Replay.replay(spark, docsOf(spark, dir), Replay.ByMod("doc_id"), work,
-      splitAt = half, midpoint = () => {
-        partsBefore = Replay.countBatchDirs(fpStore)
-        IncrementalDedup.compactStore(spark, fpStore, "media_id")
-        partsAfter = Replay.countBatchDirs(fpStore)
-      }) { (batch, batchId) =>
-      // m19's declared output is the final pair set; the change feed is
-      // m16's product — writeLedger=false per the m15 rule
-      processBatch(batch, batchId, fpStore, curStore, ledgerStore, ImageFp,
-        writeLedger = false)
+      splitAt = Replay.Waves / 2,
+      midpoint = () => ch.fp.compact(_.repartition(col("media_id")))) {
+      (batch, batchId) => processBatch(batch, batchId, ch, ImageFp)
     }
-    val n = Replay.countBatchDirs(curStore)
-    val partsEnd = Replay.countBatchDirs(fpStore)
     // cross-phase proof rows: final pairs with EXACTLY ONE side whose
     // fingerprint lives only in the consolidated batch_id=-1 partition
     // — that side could only have met the candidate join through the
@@ -383,10 +366,8 @@ object StreamMediaDedup {
     // zero on a fixture where every cross-phase pair happens to put the
     // phase-B member first. One narrow id read + four semi/anti joins
     // over the output-sized final set.
-    val consolidated = spark.read.parquet(fpStore)
-      .filter(col("batch_id") === -1).select(col("media_id"))
-    val finalPairs = spark.read.parquet(curStore)
-      .filter(col("batch_id") === (n - 1).toLong)
+    val consolidated = ch.fp.at(-1).select(col("media_id"))
+    val finalPairs = ch.cur.at(ch.cur.batches.size - 1L)
       .select(col("a_id"), col("b_id"), col("hamming"))
     val consA = consolidated.select(col("media_id").as("a_id"))
     val consB = consolidated.select(col("media_id").as("b_id"))
@@ -401,9 +382,33 @@ object StreamMediaDedup {
         .join(consA, Seq("a_id"), "left_anti")
         .select("a_id", "b_id", "hamming"))
       .count()
-    (finalPairs.orderBy("a_id", "b_id"), partsBefore, partsAfter, partsEnd, crossPhase)
+    (finalPairs.orderBy("a_id", "b_id"), crossPhase)
   }
 
+  /** One codec chain's stores under `work`: the fingerprint index, the
+    * materialized pair set per batch, and — when a gate reads the change
+    * feed — its ledger. */
+  private[graft] final case class Chain(fp: Store, cur: Store, ledger: Option[Store])
+
+  private[graft] object Chain {
+    def under(spark: SparkSession, work: String, prefix: String = "",
+              withLedger: Boolean): Chain =
+      Chain(Store(spark, s"$work/${prefix}fp"), Store(spark, s"$work/${prefix}cur"),
+        if (withLedger) Some(Store(spark, s"$work/${prefix}ledger")) else None)
+  }
+
+  /** m20's stores under `work`: both codec chains (no per-codec ledger —
+    * the consensus ledger is its own diff), the channel-tagged pair set
+    * per batch, and its per-channel ledger. */
+  private[graft] final case class Consensus(img: Chain, aud: Chain,
+                                            pairs: Store, ledger: Store)
+
+  private[graft] object Consensus {
+    def under(spark: SparkSession, work: String): Consensus = Consensus(
+      Chain.under(spark, work, "img_", withLedger = false),
+      Chain.under(spark, work, "aud_", withLedger = false),
+      Store(spark, s"$work/consensus"), Store(spark, s"$work/cons_ledger"))
+  }
 
   private def docsOf(spark: SparkSession, dir: String): DataFrame =
     Sources.table(spark, dir, "documents").select("doc_id", "text")
@@ -428,25 +433,18 @@ object StreamMediaDedup {
       waves: Int = Replay.Waves)
       : (DataFrame, DataFrame) = {
     val work = Replay.workspace("graft_mediadedup_")
-    val fpStore = s"$work/fp"
-    val curStore = s"$work/cur"
-    val ledgerStore = s"$work/ledger"
+    val ch = Chain.under(spark, work, withLedger = writeLedger)
     Replay.replay(spark, docs, Replay.ByMod(splitKey), work, waves) {
-      (batch, batchId) =>
-        processBatch(batch, batchId, fpStore, curStore, ledgerStore, fpFrom,
-          writeLedger)
+      (batch, batchId) => processBatch(batch, batchId, ch, fpFrom)
     }
-    val n = Replay.countBatchDirs(curStore)
-    val pairs = spark.read.parquet(curStore)
-      .filter(col("batch_id") === (n - 1).toLong)
+    val pairs = ch.cur.at(ch.cur.batches.size - 1L)
       .select(col("a_id"), col("b_id"), col("hamming"))
       .orderBy("a_id", "b_id")
-    val ledger =
-      if (!writeLedger) null
-      else spark.read.parquet(ledgerStore)
+    val ledger = ch.ledger.map(_.all
         .select(col("batch_id").cast("long").as("batch_id"), col("n_pairs"),
           col("n_added"), col("n_retracted"), col("add_md5"), col("rm_md5"))
-        .orderBy("batch_id")
+        .orderBy("batch_id"))
+      .orNull
     (pairs, ledger)
   }
 
@@ -479,34 +477,30 @@ object StreamMediaDedup {
     * audio job could keep writing the aud-side `batch_id=N` directories
     * while the failed micro-batch's RETRY overwrites those same
     * directories, racing the documented retried-batch idempotence. */
-  private[graft] def consensusStep(batch: DataFrame, batchId: Long, work: String,
+  private[graft] def consensusStep(batch: DataFrame, batchId: Long, cs: Consensus,
       onTimes: ConsensusTimes => Unit = _ => ()): Unit = {
     @volatile var imgSec = 0.0
     @volatile var audSec = 0.0
-    // writeLedger=false on both chains: the per-codec change-feed
-    // ledgers were never part of m20/m21's declared outputs (the
-    // consensus ledger is consensusBatch's own committed-set diff), so
-    // each chain sheds one full-outer + digest fold + store write per
-    // batch (§4.2b measured the chains themselves as the step's
-    // dominant term, ~8.5 s of wall each at sf0.1 vs ~3 s consensus).
+    // no ledger on either chain: the per-codec change-feed ledgers
+    // were never part of m20/m21's declared outputs (the consensus
+    // ledger is consensusBatch's own committed-set diff), so each chain
+    // sheds one full-outer + digest fold + store write per batch
+    // (§4.2b measured the chains themselves as the step's dominant
+    // term, ~8.5 s of wall each at sf0.1 vs ~3 s consensus).
     // Image first: its failure is the one surfaced when both fail.
     Replay.fence(
       () => {
         val t0 = System.nanoTime()
-        processBatch(batch, batchId, s"$work/img_fp", s"$work/img_cur",
-          s"$work/img_ledger", ImageFp, writeLedger = false)
+        processBatch(batch, batchId, cs.img, ImageFp)
         imgSec = (System.nanoTime() - t0) / 1e9
       },
       () => {
         val t0 = System.nanoTime()
-        processBatch(batch, batchId, s"$work/aud_fp",
-          s"$work/aud_cur", s"$work/aud_ledger",
-          d => MultimodalOps.whashBandsFrom(d), writeLedger = false)
+        processBatch(batch, batchId, cs.aud, d => MultimodalOps.whashBandsFrom(d))
         audSec = (System.nanoTime() - t0) / 1e9
       })
     val tC0 = System.nanoTime()
-    consensusBatch(batch.sparkSession, batchId, s"$work/img_cur",
-      s"$work/aud_cur", s"$work/consensus", s"$work/cons_ledger")
+    consensusBatch(batchId, cs)
     onTimes(ConsensusTimes(imgSec, audSec, (System.nanoTime() - tC0) / 1e9))
   }
 
@@ -517,24 +511,16 @@ object StreamMediaDedup {
     * fpFrom default here by design: the image default lives only on
     * [[runReplay]] (via [[ImageFp]]), so a direct batch driver must say
     * which codec chain it is testing. */
-  private[graft] def processBatch(batch: DataFrame, batchId: Long, fpStore: String,
-                           curStore: String, ledgerStore: String,
-                           fpFrom: DataFrame => DataFrame,
-                           writeLedger: Boolean = true)
-      : Unit = {
+  private[graft] def processBatch(batch: DataFrame, batchId: Long, ch: Chain,
+                                  fpFrom: DataFrame => DataFrame): Unit = {
     val session = batch.sparkSession
     val cap = MultimodalOps.AHashDfMax
-    // heal the swap-target store before this batch's write recreates
-    // its directory: a write landing in a mid-swap crash state (live
-    // dir absent, only copy at _retired) would otherwise mask the
-    // crash, and the next fold's cleanup would destroy the full history
-    StreamSketch.healRetiredStore(session, fpStore)
     // the ONLY read of the batch's media bytes: the real codec map,
     // once per object, narrow fingerprint rows out; the committed
     // partition is re-read below so a retried batch converges on what
-    // the store holds, not on a re-decode
-    fpFrom(batch)
-      .write.mode("overwrite").parquet(s"$fpStore/batch_id=$batchId")
+    // the store holds, not on a re-decode. The put heals a mid-swap
+    // crash state first, so this write never masks it.
+    ch.fp.put(batchId, fpFrom(batch))
     // arrived fingerprints: committed prior batches + this batch's
     // overwritten partition (includes the consolidated batch_id=-1
     // partition after an m19 fold), read once with a batch-membership
@@ -545,8 +531,7 @@ object StreamMediaDedup {
     // materialization barrier costs more than the narrow scans it
     // saves). Same-host A/B of this restructure: m15/m16/m18/m19
     // minima −11…−20% at sf0.1.
-    val stored = session.read.parquet(fpStore)
-      .filter(col("batch_id") <= batchId)
+    val stored = ch.fp.all.filter(col("batch_id") <= batchId)
     val (arrived, bandsAll, bandsB, dfBatch) = storeFrames(stored, batchId)
     val prev =
       if (batchId == 0)
@@ -556,8 +541,7 @@ object StreamMediaDedup {
             org.apache.spark.sql.types.StructField("a_id", org.apache.spark.sql.types.LongType),
             org.apache.spark.sql.types.StructField("b_id", org.apache.spark.sql.types.LongType),
             org.apache.spark.sql.types.StructField("hamming", org.apache.spark.sql.types.LongType))))
-      else session.read.parquet(s"$curStore/batch_id=${batchId - 1}")
-        .select("a_id", "b_id", "hamming")
+      else ch.cur.at(batchId - 1).select("a_id", "b_id", "hamming")
     val okBatch = dfBatch.filter(col("df") <= cap).select("bi", "bv")
     val crossed = dfBatch
       .filter(col("df") > cap && col("df") - col("delta") <= cap)
@@ -613,22 +597,18 @@ object StreamMediaDedup {
     // the new materialized set: committed previous − retracted +
     // added (added is disjoint from prev — every added pair has a
     // batch-side member, and batch ids are new arrivals)
-    kept.unionByName(added)
-      .write.mode("overwrite").parquet(s"$curStore/batch_id=$batchId")
+    ch.cur.put(batchId, kept.unionByName(added))
     // the ledger diffs the two COMMITTED materialized sets — an
     // output-sized audit of the incremental derivation (the fresh
     // write read back, never the lazy plan re-run), identical to the
     // pre-incremental contract so m16's closed-form oracle is unchanged.
-    // Skipped entirely when the caller never reads the change feed
-    // (writeLedger=false — m15/m18/m19's pair-set gates and m20/m21's
-    // per-codec chains, whose consensus ledger is consensusBatch's own
-    // diff): one full-outer + two-level digest fold + one store write
-    // per batch that no declared output consumes.
-    if (!writeLedger) return
-    val cur = session.read.parquet(s"$curStore/batch_id=$batchId")
-      .select("a_id", "b_id", "hamming")
-    ledgerFrame(cur, prev)
-      .write.mode("overwrite").parquet(s"$ledgerStore/batch_id=$batchId")
+    // Skipped entirely when the chain has no ledger (m15/m18/m19's
+    // pair-set gates and m20/m21's per-codec chains, whose consensus
+    // ledger is consensusBatch's own diff): one full-outer + two-level
+    // digest fold + one store write per batch that no declared output
+    // consumes.
+    ch.ledger.foreach(_.put(batchId,
+      ledgerFrame(ch.cur.at(batchId).select("a_id", "b_id", "hamming"), prev)))
   }
 
   /** The change-feed ledger row for one batch: diff of the two

@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-import graft.io.Sources
+import graft.io.{Sources, Store}
 import graft.ops.{PipelineOps, TextOps}
 
 /** p13: the streaming member of the SAMPLING family — where p11/p12
@@ -54,14 +55,13 @@ object StreamSampler {
   def p13StreamSample(spark: SparkSession, dir: String,
                       waves: Int = Replay.Waves): DataFrame = {
     val work = Replay.workspace("graft_samplemon_")
-    val stats = s"$work/stats"
-    val ledger = s"$work/ledger"
+    val (stats, ledger) = (Store(spark, s"$work/stats"), Store(spark, s"$work/ledger"))
     val docs = Sources.table(spark, dir, "documents")
       .select("doc_id", "source", "text")
     Replay.replay(spark, docs, Replay.ByMod("doc_id"), work, waves) {
       (batch, batchId) => sampleBatch(batch, batchId, stats, ledger)
     }
-    spark.read.parquet(ledger)
+    ledger.all
       .select(col("batch_id").cast("long").as("batch_id"), col("source"),
         col("w"), col("budget"), col("n_docs"), col("n_tok"),
         col("n_docs_sampled"), col("n_tok_sampled"), col("sample_md5"))
@@ -99,43 +99,44 @@ object StreamSampler {
     * are dropped before the next batch. */
   def p14SampleDelta(spark: SparkSession, dir: String): DataFrame = {
     val work = Replay.workspace("graft_sampledelta_")
-    val stats = s"$work/stats"
-    val ledger = s"$work/ledger"
+    val st = DeltaStores(Store(spark, s"$work/stats"), Store(spark, s"$work/stats_kept"),
+      Store(spark, s"$work/ledger"))
     val docs = Sources.table(spark, dir, "documents")
       .select("doc_id", "source", "text")
     Replay.replay(spark, docs, Replay.ByMod("doc_id"), work) {
-      (batch, batchId) => deltaBatch(batch, batchId, stats, ledger)
+      (batch, batchId) => deltaBatch(batch, batchId, st)
     }
-    spark.read.parquet(ledger)
+    st.ledger.all
       .select(col("batch_id").cast("long").as("batch_id"), col("source"),
         col("n_kept"), col("n_added"), col("n_evicted"),
         col("added_md5"), col("evicted_md5"))
       .orderBy("batch_id", "source")
   }
 
-  /** The kept rows (doc_id, source, u, bucket) of the blend over the
-    * arrived corpus through batch `upTo`, plus the cached stats handle
-    * to drop after use. */
-  private def keptAt(session: SparkSession, stats: String, upTo: Long)
-      : (DataFrame, DataFrame) = {
-    val arrived = session.read.parquet(stats)
-      .filter(col("batch_id") <= upTo)
-      .select("doc_id", "source", "n_tok")
-    val (cum, cached) = PipelineOps.sampleKeepFrameCached(
-      arrived, TextOps.sourceWeight(col("source")))
-    (cum.filter(col("keep")).select("doc_id", "source", "u", "bucket"),
-      cached)
-  }
+  /** p14's stores: the narrow arrival stats, each batch's committed
+    * kept set, and the change-feed ledger. */
+  private final case class DeltaStores(stats: Store, kept: Store, ledger: Store)
 
-  private def deltaBatch(batch: DataFrame, batchId: Long,
-                         stats: String, ledger: String): Unit = {
-    val session = batch.sparkSession
-    StreamSketch.healRetiredStore(session, stats)
+  /** The batch's narrow stats row per document — the only thing that
+    * reads its text. */
+  private def narrowStats(batch: DataFrame): DataFrame =
     batch
       .select(col("doc_id"), col("source"),
         size(TextOps.tokens(col("text"))).cast("long").as("n_tok"))
       .filter(col("n_tok") > 0)
-      .write.mode("overwrite").parquet(s"$stats/batch_id=$batchId")
+
+  /** The arrived narrow stats through batch `b`, then p9's keep rule
+    * over them: (cumulative frame, cached stats handle to drop after
+    * use). */
+  private def keepRuleAt(stats: Store, b: Long, schema: StructType)
+      : (DataFrame, DataFrame) =
+    PipelineOps.sampleKeepFrameCached(
+      stats.upTo(b, schema).select("doc_id", "source", "n_tok"),
+      TextOps.sourceWeight(col("source")))
+
+  private def deltaBatch(batch: DataFrame, batchId: Long, st: DeltaStores): Unit = {
+    val partial = narrowStats(batch)
+    st.stats.put(batchId, partial)
     // kept(b) is derived ONCE per batch and committed to a per-batch
     // kept store; the diff's prev side reads the COMMITTED kept(b−1)
     // instead of re-deriving it from the stats store — the previous
@@ -150,18 +151,18 @@ object StreamSampler {
     // partitions are vacuumable in production (x18's window rule) —
     // the store adds no corpus-lifetime growth beyond the stats store
     // it sits next to.
-    val keptStore = s"${stats}_kept"
-    val nowPair = keptAt(session, stats, batchId)
+    val (cum, cached) = keepRuleAt(st.stats, batchId, partial.schema)
     try {
-      nowPair._1.write.mode("overwrite").parquet(s"$keptStore/batch_id=$batchId")
-    } finally { nowPair._2.unpersist(); () }
-    val committed = session.read.parquet(s"$keptStore/batch_id=$batchId")
+      st.kept.put(batchId,
+        cum.filter(col("keep")).select("doc_id", "source", "u", "bucket"))
+    } finally { cached.unpersist(); () }
+    val committed = st.kept.at(batchId)
     locally {
       val now = committed.select(col("doc_id"), col("source").as("n_src"),
         col("u").as("n_u"), col("bucket").as("n_b"))
       val prev = (if (batchId == 0)
           committed.filter(lit(false))
-        else session.read.parquet(s"$keptStore/batch_id=${batchId - 1}"))
+        else st.kept.at(batchId - 1))
         .select(col("doc_id"), col("source").as("p_src"),
           col("u").as("p_u"), col("bucket").as("p_b"))
       // a doc's (source, u, bucket) are functions of doc_id, invariant
@@ -188,7 +189,7 @@ object StreamSampler {
         md5(concat_ws(",", transform(
           array_sort(collect_list(when(evicted, struct(col("u"), col("doc_id"))))),
           x => x.getField("doc_id").cast("string")))).as("ev_sub"))
-      perBucket.groupBy("source").agg(
+      st.ledger.put(batchId, perBucket.groupBy("source").agg(
           sum("b_kept").as("n_kept"),
           sum("b_added").as("n_added"),
           sum("b_evicted").as("n_evicted"),
@@ -201,34 +202,18 @@ object StreamSampler {
             md5(concat_ws(",", transform(
               array_sort(collect_list(when(col("b_evicted") > 0,
                 struct(col("bucket"), col("ev_sub"))))),
-              x => x.getField("ev_sub"))))).as("evicted_md5"))
-        .write.mode("overwrite").parquet(s"$ledger/batch_id=$batchId")
+              x => x.getField("ev_sub"))))).as("evicted_md5")))
     }
   }
 
   private def sampleBatch(batch: DataFrame, batchId: Long,
-                          stats: String, ledger: String): Unit = {
-    val session = batch.sparkSession
-    // store-open heal FIRST, before the per-batch write (the p11/p12
-    // contract: a crashed swap's only full-history copy must be
-    // promoted back before a fresh partial could mask it)
-    StreamSketch.healRetiredStore(session, stats)
-    // the batch's narrow stats — the only thing that reads its text
-    batch
-      .select(col("doc_id"), col("source"),
-        size(TextOps.tokens(col("text"))).cast("long").as("n_tok"))
-      .filter(col("n_tok") > 0)
-      .write.mode("overwrite").parquet(s"$stats/batch_id=$batchId")
+                          stats: Store, ledger: Store): Unit = {
+    val partial = narrowStats(batch)
+    stats.put(batchId, partial)
     // re-derive the blend over the ARRIVED corpus: p9's keep rule and
     // ledger digest, verbatim, over the batch-pruned narrow store
-    val arrived = session.read.parquet(stats)
-      .filter(col("batch_id") <= batchId)
-      .select("doc_id", "source", "n_tok")
-    val (cum, cached) = PipelineOps.sampleKeepFrameCached(
-      arrived, TextOps.sourceWeight(col("source")))
-    try {
-      PipelineOps.sampleLedger(cum)
-        .write.mode("overwrite").parquet(s"$ledger/batch_id=$batchId")
-    } finally { cached.unpersist(); () }
+    val (cum, cached) = keepRuleAt(stats, batchId, partial.schema)
+    try ledger.put(batchId, PipelineOps.sampleLedger(cum))
+    finally { cached.unpersist(); () }
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.Store
 import graft.ops.SimilarityOps
 import graft.out.Canonical._
 
@@ -50,13 +51,13 @@ object StreamSemDedup {
       orderExpr: org.apache.spark.sql.Column = col("vec_id"),
       waves: Int = Replay.Waves): DataFrame = {
     val work = Replay.workspace("graft_semstream_")
-    val pairStore = s"$work/pairs"
-    runStream(spark, dir, work, orderExpr, waves)
-    readPairs(spark, pairStore)
+    val pairs = Store(spark, s"$work/pairs")
+    runStream(spark, dir, work, Store(spark, s"$work/assigned"), pairs, orderExpr, waves)
+    readPairs(pairs)
   }
 
   def d21SemCompact(spark: SparkSession, dir: String): DataFrame =
-    d21WithStoreInfo(spark, dir)._1
+    d21WithEvidence(spark, dir)._1
 
   /** d21: d19's mid-stream store compaction proven on the SEMANTIC
     * family's store — d20's assigned-vector store accretes one
@@ -82,22 +83,16 @@ object StreamSemDedup {
     * shipped before the fold, one after — are exactly the rows that
     * prove the consolidated partition feeds the candidate join
     * unchanged. */
-  private[graft] def d21WithStoreInfo(spark: SparkSession, dir: String)
-      : (DataFrame, Int, Int, Int, () => Long) = {
+  private[graft] def d21WithEvidence(spark: SparkSession, dir: String)
+      : (DataFrame, () => Long) = {
     val half = Replay.Waves / 2
     val work = Replay.workspace("graft_semcompact_")
-    val store = s"$work/assigned"
-    val pairStore = s"$work/pairs"
-    var partsBefore = 0
-    var partsAfter = 0
+    val store = Store(spark, s"$work/assigned")
+    val pairs = Store(spark, s"$work/pairs")
     // two arrival phases: the stream must CONTINUE over a compacted
     // store, not restart (d19's shape)
-    runStream(spark, dir, work, col("vec_id"), splitAt = half, midpoint = () => {
-      partsBefore = Replay.countBatchDirs(store)
-      IncrementalDedup.compactStore(spark, store, "cell")
-      partsAfter = Replay.countBatchDirs(store)
-    })
-    val partsEnd = Replay.countBatchDirs(store)
+    runStream(spark, dir, work, store, pairs, col("vec_id"), splitAt = half,
+      midpoint = () => store.compact(_.repartition(col("cell"))))
     // CROSS-PHASE pairs — emitted in a phase-B batch with the earlier
     // side living ONLY in the consolidated `batch_id=-1` partition:
     // the rows that prove the swapped store feeds the candidate join
@@ -107,14 +102,12 @@ object StreamSemDedup {
     // could only have matched through the swap). Two tiny counts over
     // the output-sized pair store + a semi-join against the narrow
     // consolidated ids.
-    val phaseA = spark.read.parquet(store)
-      .filter(col("batch_id") === -1).select(col("vec_id").as("a_id"))
+    val phaseA = store.at(-1).select(col("vec_id").as("a_id"))
     // LAZY (guide §1.2, the m19 rule): spec-only cross-phase evidence,
     // out of the timed gate path
-    val crossPhase = () => spark.read.parquet(pairStore)
-      .filter(col("batch_id") >= half)
+    val crossPhase = () => pairs.window(half)
       .join(phaseA, Seq("a_id"), "left_semi").count()
-    (readPairs(spark, pairStore), partsBefore, partsAfter, partsEnd, crossPhase)
+    (readPairs(pairs), crossPhase)
   }
 
   /** The semantic-dedup replay under `work` — shared by the
@@ -125,6 +118,7 @@ object StreamSemDedup {
     * so the two overlap, §2.6), then stream the waves into
     * `work/assigned` and `work/pairs`. */
   private def runStream(spark: SparkSession, dir: String, work: String,
+      store: Store, pairs: Store,
       orderExpr: org.apache.spark.sql.Column, waves: Int = Replay.Waves,
       splitAt: Int = Int.MaxValue, midpoint: () => Unit = () => ()): Unit = {
     val all = SimilarityOps.normed(spark, dir)
@@ -132,17 +126,17 @@ object StreamSemDedup {
     Replay.replay(spark, StreamAnnIngest.arrivals(all), Replay.ByRange(orderExpr),
       work, waves, splitAt, Some(() => SimilarityOps.Hier.write(all, cbPath)),
       midpoint)((batch, batchId) =>
-      processBatch(batch, batchId, cbPath, s"$work/assigned", s"$work/pairs"))
+      processBatch(batch, batchId, cbPath, store, pairs))
   }
 
-  private def readPairs(spark: SparkSession, pairStore: String): DataFrame =
-    spark.read.parquet(pairStore)
+  private def readPairs(pairs: Store): DataFrame =
+    pairs.all
       .select(col("a_id"), col("b_id"), col("cos_sim"), col("victim"))
       .orderBy("a_id", "b_id")
 
   private def processBatch(batch: DataFrame, batchId: Long,
-                           cbPath: String, store: String,
-                           pairStore: String): Unit = {
+                           cbPath: String, store: Store,
+                           pairs: Store): Unit = {
     val spark = batch.sparkSession
     // batch-size × 2√k assignment against the static codebook; ccos
     // (the centroid cosine) rides along — it IS the victim signal
@@ -150,7 +144,7 @@ object StreamSemDedup {
       .select("vec_id", "v", "nrm", "cell", "ccos")
       .persist()
     try {
-      val prior = IncrementalDedup.readStore(spark, store, batchId, asn.schema)
+      val prior = store.before(batchId, asn.schema)
       val seen = prior.unionByName(asn)
       // new candidates = within-cell id pairs with >= 1 batch-side
       // member; least/greatest normalizes, distinct collapses the
@@ -180,10 +174,8 @@ object StreamSemDedup {
       // partition computes under the cache lock)
       asn.count(): Unit
       Replay.fence(
-        () => pairsOut.write.mode("overwrite")
-          .parquet(s"$pairStore/batch_id=$batchId"),
-        () => asn.write.mode("overwrite")
-          .parquet(s"$store/batch_id=$batchId"))
+        () => pairs.put(batchId, pairsOut),
+        () => store.put(batchId, asn))
     } finally { asn.unpersist(); () }
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.Sources
+import graft.io.{Sources, Store}
 
 /** x8: mergeable sketches across micro-batches — the streaming form of
   * x5's approximate aggregates, and the production motion behind
@@ -62,12 +62,12 @@ object StreamSketch {
       orderExpr: org.apache.spark.sql.Column = col("event_id"),
       waves: Int = Replay.Waves): DataFrame = {
     val work = Replay.workspace("graft_sketchstream_")
-    val store = s"$work/sketches"
+    val store = Store(spark, s"$work/sketches")
     Replay.replay(spark,
       Sources.table(spark, dir, "events").select("event_id", "event_type", "user_id"),
       Replay.ByRange(orderExpr), work, waves)((batch, batchId) =>
       processBatch(batch, batchId, store))
-    spark.read.parquet(store).drop("batch_id")
+    store.all.drop("batch_id")
       .groupBy("event_type")
       .agg(
         expr("hll_sketch_estimate(hll_union_agg(sk, false))").as("approx_users"),
@@ -88,12 +88,11 @@ object StreamSketch {
       .orderBy("event_type")
 
   private def processBatch(batch: DataFrame, batchId: Long,
-                           store: String): Unit =
-    batch.groupBy("event_type")
+                           store: Store): Unit =
+    store.put(batchId, batch.groupBy("event_type")
       .agg(
         expr(s"hll_sketch_agg(user_id, $LgK)").as("sk"),
-        count(lit(1)).as("n_events"))
-      .write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
+        count(lit(1)).as("n_events")))
 
   // ---- x9: mergeable quantile histograms across micro-batches ----
 
@@ -139,23 +138,18 @@ object StreamSketch {
   def x9StreamQuantile(spark: SparkSession, dir: String,
       orderExpr: org.apache.spark.sql.Column = col("event_id")): DataFrame = {
     val work = Replay.workspace("graft_quantstream_")
-    val store = s"$work/hist"
+    val store = Store(spark, s"$work/hist")
     Replay.replay(spark,
       Sources.table(spark, dir, "events").select("event_id", "event_type", "value"),
       Replay.ByRange(orderExpr), work)((batch, batchId) =>
-      batch.groupBy(col("event_type"), bucket(col("value")).as("b"))
-        .agg(count(lit(1)).as("cnt"))
-        .write.mode("overwrite").parquet(s"$store/batch_id=$batchId"))
-    quantilesFromHistogram(spark.read.parquet(store).drop("batch_id"))
+      store.put(batchId, histogram(batch)))
+    quantilesFromHistogram(store.all.drop("batch_id"))
   }
 
   /** The batch twin: the whole table pushed through one histogram —
     * equal to the merged stream result EXACTLY (counts are additive). */
   private[graft] def x9Batch(spark: SparkSession, dir: String): DataFrame =
-    quantilesFromHistogram(
-      Sources.table(spark, dir, "events")
-        .groupBy(col("event_type"), bucket(col("value")).as("b"))
-        .agg(count(lit(1)).as("cnt")))
+    quantilesFromHistogram(histogram(Sources.table(spark, dir, "events")))
 
   // ---- x10: mergeable count-min counters across micro-batches ----
 
@@ -201,11 +195,10 @@ object StreamSketch {
       .groupBy("token").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("token")).limit(WatchK)
       .select("token").coalesce(1).write.parquet(watchPath)
-    val store = s"$work/counters"
+    val store = Store(spark, s"$work/counters")
     Replay.replay(spark, docs, Replay.ByRange(orderExpr), work)((batch, batchId) =>
-      cmsPartial(batch)
-        .write.mode("overwrite").parquet(s"$store/batch_id=$batchId"))
-    val merged = spark.read.parquet(store).drop("batch_id")
+      store.put(batchId, cmsPartial(batch)))
+    val merged = store.all.drop("batch_id")
       .groupBy("r", "bucket").agg(sum("c").as("c"))
     watchEstimates(spark.read.parquet(watchPath), merged)
   }
@@ -257,60 +250,6 @@ object StreamSketch {
   /** x11's serve window: the LAST [[WindowBatches]] micro-batches. */
   val WindowBatches = 2
 
-  /** Crash-recoverable store swap shared by the compaction verbs
-    * (d19/p7's [[IncrementalDedup.compactStore]], x20's
-    * [[LateLedger.compactStats]]): retire the live store aside, promote
-    * the consolidated tmp dir, then drop the retired copy. Both renames
-    * are require-checked, and a crash between them leaves the data
-    * recoverable at `_retired` — unlike the delete-then-rename shape,
-    * where a failed promote silently loses the store (a missing stats
-    * store would read every later watermark as None and collapse n_late
-    * to 0 until the oracle caught it). The window is SELF-HEALING:
-    * [[healRetiredStore]] runs first, both here (a retried swap after
-    * the crash) and at the compaction verbs' store-open seams, so the
-    * crash state never needs a manual promotion — and `_retired` debris
-    * from a COMPLETED prior swap is only dropped after confirming the
-    * live store exists, so a heal-worthy copy can never be deleted. */
-  private[graft] def swapStore(spark: SparkSession, tmp: String,
-                                   store: String): Unit = {
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val fs = p(store).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val retired = p(store + "_retired")
-    healRetiredStore(spark, store)
-    require(fs.exists(p(store)),
-      s"compact: $store missing and no _retired copy to recover — " +
-        "store was never written or was lost outside the swap protocol")
-    fs.delete(retired, true)
-    require(fs.rename(p(store), retired), s"compact: cannot retire $store")
-    require(fs.rename(p(tmp), p(store)), s"compact: cannot promote $tmp")
-    fs.delete(retired, true): Unit
-  }
-
-  /** Reader-side half of [[swapStore]]'s crash contract: a crash
-    * between the two renames leaves the live store ABSENT with the only
-    * copy at `_retired`, so any store open must first check for that
-    * state and heal it (one rename back — the promotion the crashed
-    * swap never reached is simply retried by the next compaction).
-    * A no-op in every other state: store present (normal, or a crash
-    * AFTER promote left stale `_retired` debris that the next swap
-    * clears) or neither path present (store never written). */
-  private[graft] def healRetiredStore(spark: SparkSession, store: String): Unit = {
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val fs = p(store).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val retired = p(store + "_retired")
-    if (!fs.exists(p(store)) && fs.exists(retired))
-      require(fs.rename(retired, p(store)),
-        s"recover: cannot restore $store from $retired")
-  }
-
-  /** Drop a path if present (recursive) — the compaction verbs clear a
-    * crashed attempt's dead `_compacting` tmp with this before
-    * rebuilding it from the healed store. */
-  private[streaming] def clearPath(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true): Unit
-  }
-
   /** x11: the claim x8/x9/x10 all make in prose — "any window of batches
     * merges after the fact at interactive cost" — converted into an
     * oracle-checked gate: per-type p50/p90 over ONLY the last
@@ -339,17 +278,13 @@ object StreamSketch {
   def x11StreamWindowQuantile(spark: SparkSession, dir: String,
       workDir: Option[String] = None): DataFrame = {
     val work = workDir.getOrElse(Replay.workspace("graft_winquant_"))
-    val store = s"$work/hist"
+    val store = Store(spark, s"$work/hist")
     val events = Sources.table(spark, dir, "events")
       .select("event_id", "event_type", "value")
     Replay.replay(spark, events, Replay.ByMod("event_id"), work) {
-      (batch, batchId) =>
-        batch.groupBy(col("event_type"), bucket(col("value")).as("b"))
-          .agg(count(lit(1)).as("cnt"))
-          .write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
+      (batch, batchId) => store.put(batchId, histogram(batch))
     }
-    val nBatches = Replay.countBatchDirs(store)
-    x11Serve(spark, store, nBatches)
+    x11Serve(spark, store.path, store.batches.size)
   }
 
   /** The windowed quantile serve as a standalone read over the histogram
@@ -357,20 +292,19 @@ object StreamSketch {
     * quantiles. Extracted so the retention gate (x18) can prove the
     * serve is unchanged by vacuuming everything OUTSIDE the window. */
   private[graft] def x11Serve(spark: SparkSession, store: String, nBatches: Int): DataFrame =
-    quantilesFromHistogram(
-      spark.read.parquet(store)
-        .filter(col("batch_id") >= nBatches - WindowBatches)
-        .drop("batch_id"))
+    quantilesFromHistogram(Store(spark, store).window(nBatches - WindowBatches))
 
   /** The batch twin: the window's rows (named by the membership rule)
     * pushed through one histogram — equal to the pruned-store serve
     * EXACTLY (counts are additive). */
   private[graft] def x11Batch(spark: SparkSession, dir: String): DataFrame =
-    quantilesFromHistogram(
-      Sources.table(spark, dir, "events")
-        .filter(pmod(col("event_id"), lit(Replay.Waves)) >= Replay.Waves - WindowBatches)
-        .groupBy(col("event_type"), bucket(col("value")).as("b"))
-        .agg(count(lit(1)).as("cnt")))
+    quantilesFromHistogram(histogram(Sources.table(spark, dir, "events")
+      .filter(pmod(col("event_id"), lit(Replay.Waves)) >= Replay.Waves - WindowBatches)))
+
+  /** One batch's histogram partial: (event_type, bucket, count). */
+  private def histogram(batch: DataFrame): DataFrame =
+    batch.groupBy(col("event_type"), bucket(col("value")).as("b"))
+      .agg(count(lit(1)).as("cnt"))
 
   /** Equi-width bucket id in 1..[[Buckets]]; the floor argument's width
     * is binary-exact so boundary values bucket identically in DuckDB. */
@@ -415,22 +349,19 @@ object StreamSketch {
   def x12StreamWindowDistinct(spark: SparkSession, dir: String,
       workDir: Option[String] = None): DataFrame = {
     val work = workDir.getOrElse(Replay.workspace("graft_windist_"))
-    val store = s"$work/sketches"
+    val store = Store(spark, s"$work/sketches")
     val events = Sources.table(spark, dir, "events")
       .select("event_id", "event_type", "user_id")
     Replay.replay(spark, events, Replay.ByMod("event_id"), work) {
       (batch, batchId) => processBatch(batch, batchId, store)
     }
-    val nBatches = Replay.countBatchDirs(store)
-    x12Serve(spark, store, nBatches)
+    x12Serve(spark, store.path, store.batches.size)
   }
 
   /** The windowed distinct serve as a standalone read over the HLL
     * sketch store (x18's vacuum-invariance seam, like [[x11Serve]]). */
   private[graft] def x12Serve(spark: SparkSession, store: String, nBatches: Int): DataFrame =
-    spark.read.parquet(store)
-      .filter(col("batch_id") >= nBatches - WindowBatches)
-      .drop("batch_id")
+    Store(spark, store).window(nBatches - WindowBatches)
       .groupBy("event_type")
       .agg(
         expr("hll_sketch_estimate(hll_union_agg(sk, false))").as("approx_users"),
@@ -472,7 +403,7 @@ object StreamSketch {
       workDir: Option[String] = None): DataFrame = {
     import graft.ops.TextOps
     val work = workDir.getOrElse(Replay.workspace("graft_wincms_"))
-    val store = s"$work/counters"
+    val store = Store(spark, s"$work/counters")
     val docs = Sources.table(spark, dir, "documents").select("doc_id", "text")
     // the offline watchlist artifact: whole-corpus heavy hitters
     val watchPath = s"$work/watchlist"
@@ -481,12 +412,9 @@ object StreamSketch {
       .orderBy(col("cnt").desc, col("token")).limit(WatchK)
       .select("token").coalesce(1).write.parquet(watchPath)
     Replay.replay(spark, docs, Replay.ByMod("doc_id"), work) {
-      (batch, batchId) =>
-        cmsPartial(batch)
-          .write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
+      (batch, batchId) => store.put(batchId, cmsPartial(batch))
     }
-    val nBatches = Replay.countBatchDirs(store)
-    x13Serve(spark, store, watchPath, nBatches)
+    x13Serve(spark, store.path, watchPath, store.batches.size)
   }
 
   /** The windowed CMS serve as a standalone read (x18's vacuum seam).
@@ -496,9 +424,7 @@ object StreamSketch {
     * vacuum didn't touch. */
   private[graft] def x13Serve(spark: SparkSession, countersStore: String,
                               watchStore: String, nBatches: Int): DataFrame = {
-    val merged = spark.read.parquet(countersStore)
-      .filter(col("batch_id") >= nBatches - WindowBatches)
-      .drop("batch_id")
+    val merged = Store(spark, countersStore).window(nBatches - WindowBatches)
       .groupBy("r", "bucket").agg(sum("c").as("c"))
     watchEstimates(spark.read.parquet(watchStore), merged)
   }
@@ -518,38 +444,6 @@ object StreamSketch {
   }
 
   // ---- x18: windowed retention for the batch-partitioned stores ------
-
-  /** Retire every `batch_id=N` partition below `keepFrom` from a
-    * batch-partitioned partials store. The s17-vacuum rule applied to
-    * the WINDOWED-SERVE stream stores (x8–x17's sketch partials):
-    * without retention, every per-batch append grows the store for the
-    * stream's whole lifetime, even though a windowed serve
-    * (x11/x12/x13) only ever prunes to the last [[WindowBatches]]
-    * partitions — at 100 TB the store becomes an unbounded directory
-    * listing the serve pays for and never reads. Deletion is per whole
-    * partition directory (the unit the serve prunes by), so a vacuum
-    * can never split a batch: a serve sees each batch's partial either
-    * complete or not at all, and anything ≥ `keepFrom` is untouched —
-    * which is exactly why the windowed serve is byte-identical before
-    * and after (StreamEquivSpec proves it on all three store kinds).
-    * NOT applicable to the full-history digest/band stores (p2/p3/p6's
-    * digests, d12's bands): first-arrival dedup reads ALL prior
-    * batches, so window-vacuuming them would re-admit revived
-    * duplicates — their lifecycle motion is partition COMPACTION
-    * (many `batch_id=N` dirs rewritten into one consolidated
-    * partition, s13's move; d19 implements and proves it).
-    * Returns the retired batch ids. */
-  private[graft] def vacuumBatches(spark: SparkSession, store: String,
-                                   keepFrom: Long): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(store)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val re = "batch_id=(\\d+)".r
-    val old = fs.listStatus(p).map(_.getPath.getName)
-      .collect { case re(b) if b.toLong < keepFrom => b.toLong }.sorted.toSeq
-    old.foreach(b =>
-      fs.delete(new org.apache.hadoop.fs.Path(store, s"batch_id=$b"), true))
-    old
-  }
 
   def x18RetentionVacuum(spark: SparkSession, dir: String): DataFrame =
     x18Detail(spark, dir)._1
@@ -574,14 +468,14 @@ object StreamSketch {
   private[graft] def x18Detail(spark: SparkSession, dir: String)
       : (DataFrame, Array[org.apache.spark.sql.Row], Seq[Long], Int, Int) = {
     val work = Replay.workspace("graft_retention_")
-    val store = s"$work/hist"
     // materialize the pre-vacuum serve NOW — a lazy frame would re-read
     // the store after the vacuum and make the invariance check vacuous
     val beforeRows = x11StreamWindowQuantile(spark, dir, Some(work)).collect()
-    val partsBefore = Replay.countBatchDirs(store)
-    val retired = vacuumBatches(spark, store, partsBefore - WindowBatches)
-    val after = x11Serve(spark, store, partsBefore)
-    (after, beforeRows, retired, partsBefore, Replay.countBatchDirs(store))
+    val store = Store(spark, s"$work/hist")
+    val partsBefore = store.batches.size
+    val retired = store.retireBelow(partsBefore - WindowBatches)
+    val after = x11Serve(spark, store.path, partsBefore)
+    (after, beforeRows, retired, partsBefore, store.batches.size)
   }
 
 
@@ -614,13 +508,13 @@ object StreamSketch {
       workDir: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val work = workDir.getOrElse(Replay.workspace("graft_growthstream_"))
-    val store = s"$work/sketches"
+    val store = Store(spark, s"$work/sketches")
     val events = Sources.table(spark, dir, "events")
       .select("event_id", "event_type", "user_id")
     Replay.replay(spark, events, Replay.ByMod("event_id"), work) {
       (batch, batchId) => processBatch(batch, batchId, store)
     }
-    val partials = spark.read.parquet(store)
+    val partials = store.all
     // triangle join: every batch b meets all partials with batch_id ≤ b
     // — store-sized × batch-count rows, kilobytes total
     val ids = partials.select(col("batch_id").as("b")).distinct()
@@ -683,23 +577,21 @@ object StreamSketch {
     * every token ever seen, per question. */
   def x16StreamTopk(spark: SparkSession, dir: String): DataFrame = {
     val work = Replay.workspace("graft_topkstream_")
-    val store = s"$work/counters"
-    val cands = s"$work/candidates"
+    val store = Store(spark, s"$work/counters")
+    val cands = Store(spark, s"$work/candidates")
     val docs = Sources.table(spark, dir, "documents").select("doc_id", "text")
     Replay.replay(spark, docs, Replay.ByMod("doc_id"), work) {
       (batch, batchId) =>
         import graft.ops.TextOps
-        cmsPartial(batch)
-          .write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
-        batch.select(explode(TextOps.tokens(col("text"))).as("token"))
+        store.put(batchId, cmsPartial(batch))
+        cands.put(batchId, batch.select(explode(TextOps.tokens(col("text"))).as("token"))
           .groupBy("token").agg(count(lit(1)).as("cnt"))
           .orderBy(col("cnt").desc, col("token")).limit(WatchK)
-          .select("token")
-          .write.mode("overwrite").parquet(s"$cands/batch_id=$batchId")
+          .select("token"))
     }
-    val merged = spark.read.parquet(store).drop("batch_id")
+    val merged = store.all.drop("batch_id")
       .groupBy("r", "bucket").agg(sum("c").as("c"))
-    val candidates = spark.read.parquet(cands).select("token").distinct()
+    val candidates = cands.all.select("token").distinct()
     watchEstimates(candidates, merged)
       .orderBy(col("cms_est").desc, col("token")).limit(WatchK)
   }
@@ -759,16 +651,13 @@ object StreamSketch {
     * question asked. */
   def x15StreamDrift(spark: SparkSession, dir: String): DataFrame = {
     val work = Replay.workspace("graft_driftstream_")
-    val store = s"$work/moments"
+    val store = Store(spark, s"$work/moments")
     val events = Sources.table(spark, dir, "events")
       .select("event_id", "event_type", "value")
     Replay.replay(spark, events, Replay.ByMod("event_id"), work) {
-      (batch, batchId) =>
-        momentPartial(batch)
-          .write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
+      (batch, batchId) => store.put(batchId, momentPartial(batch))
     }
-    val nBatches = Replay.countBatchDirs(store)
-    driftFromMoments(spark.read.parquet(store), nBatches - 1)
+    driftFromMoments(store.all, store.batches.size - 1)
   }
 
   /** The batch twin: the latest/prior slices named by the membership

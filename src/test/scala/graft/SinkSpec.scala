@@ -134,9 +134,9 @@ class SinkSpec extends AnyFunSuite {
       replay(crashed, Some(k))
     }
     // the failed batch's write landed before the throw: a torn batch_id=k
-    assert(Replay.countBatchDirs(s"$crashed/st") == k + 1)
+    assert(graft.io.Store(spark, s"$crashed/st").batches.size == k + 1)
     replay(crashed, None)
-    assert(Replay.countBatchDirs(s"$crashed/st") == n)
+    assert(graft.io.Store(spark, s"$crashed/st").batches.size == n)
     def store(work: String) = rows(spark.read.parquet(s"$work/st")
       .select("batch_id", "event_type", "cnt").orderBy("batch_id", "event_type"))
     assert(store(crashed) == store(clean),
@@ -165,37 +165,37 @@ class SinkSpec extends AnyFunSuite {
       }
     val whole = tmp("graft_rec_")
     prepared(whole, "in", events, 4)
-    val ((), ran) = Replay.recorded(drain(whole, "in", 0L))
+    val ((), ran, _) = Replay.recorded(drain(whole, "in", 0L))
     assert(ran.map(_.batchId) == (0L until 4L))
     assert(ran.forall(_.durationMs.containsKey("addBatch")))
     assert(ran.map(_.numInputRows).sum == events.count())
-    assert(ran.size == Replay.countBatchDirs(s"$whole/st"))
+    assert(ran.size == graft.io.Store(spark, s"$whole/st").batches.size)
     // a phased run (two queries, the second's bodies offset by 2): the
     // record appends both, the second phase under its own query's ids
     val phased = tmp("graft_rec_")
     prepared(phased, "inA", events.filter(col("event_id") % 2 === 0), 2)
     prepared(phased, "inB", events.filter(col("event_id") % 2 =!= 0), 2)
-    val ((), phases) = Replay.recorded {
+    val ((), phases, _) = Replay.recorded {
       drain(phased, "inA", 0L)
       drain(phased, "inB", 2L)
     }
     assert(phases.map(_.batchId) == Seq(0L, 1L, 0L, 1L))
     assert(phases.map(_.id).distinct.size == 2 && phases(1).id != phases(2).id)
-    assert(phases.size == Replay.countBatchDirs(s"$phased/st"))
+    assert(phases.size == graft.io.Store(spark, s"$phased/st").batches.size)
     // a drain another thread runs while the scope is open is its own
     val other = tmp("graft_rec_")
     prepared(other, "in", events, 4)
-    val ((), seen) = Replay.recorded {
+    val ((), seen, _) = Replay.recorded {
       val t = new Thread(() => drain(other, "in", 0L))
       t.start(); t.join()
     }
     assert(seen.isEmpty, s"another thread's drain leaked ${seen.size} entries into the scope")
-    assert(Replay.countBatchDirs(s"$other/st") == 4, "the other thread's drain did not run")
+    assert(graft.io.Store(spark, s"$other/st").batches.size == 4, "the other thread's drain did not run")
     // outside any scope a drain runs and records nothing
     val bare = tmp("graft_rec_")
     prepared(bare, "in", events, 4)
     drain(bare, "in", 0L)
-    assert(Replay.countBatchDirs(s"$bare/st") == 4)
+    assert(graft.io.Store(spark, s"$bare/st").batches.size == 4)
     assert(Replay.recorded(())._2.isEmpty)
     // a failed drain rethrows through the scope
     val failed = tmp("graft_rec_")
@@ -203,6 +203,73 @@ class SinkSpec extends AnyFunSuite {
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       Replay.recorded(drain(failed, "in", 0L, crashAt = Some(1L)))
     }
+  }
+
+  test("Replay.recorded: the stores a call made, with facts that match the disk; put is one job") {
+    // a gate makes its Store on the caller's thread and only its
+    // foreachBatch body (the stream thread) writes it: the store is in
+    // the caller's scope, its facts read what is on disk, a compaction
+    // records its partition counts, a store made on another thread or
+    // outside any scope records nothing, and a put runs exactly one
+    // Spark job
+    import graft.io.Store
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (_, ran, stores) =
+      Replay.recorded(graft.streaming.StreamSketch.x9StreamQuantile(spark, sf))
+    assert(stores.map(_.name) == Seq("hist"), s"recorded stores: ${stores.map(_.path)}")
+    val st = stores.head
+    def onDisk(): Seq[String] = new java.io.File(st.path).list().toSeq
+      .filter(_.startsWith("batch_id=")).sorted
+    val facts = st.facts
+    assert(ran.size == Replay.Waves)
+    assert(facts.batches == (0L until ran.size))
+    assert(onDisk() == facts.batches.map(b => s"batch_id=$b"))
+    assert(facts.rows.keys.toSeq == facts.batches)
+    facts.rows.foreach { case (b, n) =>
+      assert(spark.read.parquet(s"${st.path}/batch_id=$b").count() == n, s"batch $b")
+    }
+    assert(facts.compactions.isEmpty)
+    def total() = st.all.agg(sum("cnt")).collect()(0).getLong(0)
+    val before = total()
+    st.compact(_.groupBy("event_type", "b").agg(sum("cnt").as("cnt")))
+    assert(st.facts.compactions == Seq((ran.size, 1)))
+    assert(st.facts.batches == Seq(-1L) && onDisk() == Seq("batch_id=-1"))
+    assert(total() == before, "the sum fold changed the histogram's total")
+    // outside the scope's thread: nothing recorded
+    val ((), _, none) = Replay.recorded {
+      val t = new Thread(() => { Store(spark, s"${tmp("graft_store_")}/t"); () })
+      t.start(); t.join()
+    }
+    assert(none.isEmpty, s"another thread's store leaked into the scope: ${none.map(_.path)}")
+    // put is one write job: no listing, count or facts per batch
+    val outside = Store(spark, s"${tmp("graft_store_")}/s")
+    val putJobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some("graft_store_put") => putJobs.incrementAndGet(): Unit
+          case Some("graft_store_marker") => marker.countDown()
+          case _ => ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup("graft_store_put", "Store.put")
+      // made outside any scope: a put inside one does not record it
+      val ((), _, later) = Replay.recorded(outside.put(7L, spark.range(10).toDF("x")))
+      assert(later.isEmpty, s"a put recorded its store: ${later.map(_.path)}")
+      // listener events arrive in order: once the marker job is seen,
+      // every job the put started has been counted
+      spark.sparkContext.setJobGroup("graft_store_marker", "marker")
+      spark.range(1).count(): Unit
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(putJobs.get == 1, s"Store.put ran ${putJobs.get} Spark jobs")
+    assert(outside.facts.batches == Seq(7L))
   }
 
   test("Replay.deal: one stamped file per wave, phases split at splitAt, _dealt last and trusted") {
@@ -320,7 +387,7 @@ class SinkSpec extends AnyFunSuite {
     for ((gate, rows) <- Seq("q07_tumbling_window" -> (events + 1),
                              "q24_stream_score" -> events,
                              "q37_stream_join" -> 2 * events)) {
-      val (_, batches) = Replay.recorded(SparkEntry.queries(gate)(spark, sf))
+      val (_, batches, _) = Replay.recorded(SparkEntry.queries(gate)(spark, sf))
       assert(batches.nonEmpty, s"$gate recorded no batch")
       assert(batches.map(_.numInputRows).sum == rows,
         s"$gate read ${batches.map(_.numInputRows).sum} rows, want $rows")

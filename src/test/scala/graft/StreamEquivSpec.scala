@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.io.Sources
+import graft.io.{Sources, Store}
 import graft.ops.Windowed
 import graft.streaming.{Replay, StreamPipeline}
 
@@ -15,8 +15,23 @@ class StreamEquivSpec extends AnyFunSuite {
 
   /** `f`'s result and the number of micro-batches its replays ran. */
   private def withBatches[T](f: => T): (T, Int) = {
-    val (r, batches) = Replay.recorded(f)
+    val (r, batches, _) = Replay.recorded(f)
     (r, batches.size)
+  }
+
+  /** `f`'s result, its micro-batch count, and the stores it made, by
+    * name. */
+  private def withStores[T](f: => T): (T, Int, Map[String, Store]) = {
+    val (r, batches, stores) = Replay.recorded(f)
+    (r, batches.size, stores.map(s => s.name -> s).toMap)
+  }
+
+  /** A store's one compaction — partitions (before, after) — and its
+    * partition count at the end. */
+  private def compaction(store: Store): (Int, Int, Int) = {
+    val facts = store.facts
+    val Seq((before, after)) = facts.compactions
+    (before, after, facts.batches.size)
   }
 
   test("q07 tumbling window: batch twin ≡ streaming gate entry") {
@@ -224,8 +239,10 @@ class StreamEquivSpec extends AnyFunSuite {
 
   test("d19 band-store compaction: mid-stream swap invisible to first-arrival joins, partitions bounded") {
     val half = graft.streaming.Replay.Waves / 2
-    val (result, before, after, end, emitted) =
-      graft.streaming.IncrementalDedup.d19WithStoreInfo(spark, sf)
+    val (result, _, stores) =
+      withStores(graft.streaming.IncrementalDedup.d19BandCompact(spark, sf))
+    val (before, after, end) = compaction(stores("bands"))
+    val emitted = stores("pairs").facts.batches.size.toLong
     // the compaction genuinely consolidated: half the replay's batch
     // dirs collapse to ONE partition, and the listing stays bounded at
     // 1 + batches-since-compaction afterwards
@@ -257,7 +274,7 @@ class StreamEquivSpec extends AnyFunSuite {
     def snapshot() = rows(spark.read.parquet(store).drop("batch_id")
       .orderBy("doc_id", "bi", "bv"))
     val pre = snapshot()
-    graft.streaming.IncrementalDedup.compactStore(spark, store, "bv")
+    Store(spark, store).compact(_.repartition(col("bv")))
     val dirs = new java.io.File(store).listFiles()
       .filter(_.getName.startsWith("batch_id=")).map(_.getName)
     assert(dirs.toSeq == Seq("batch_id=-1"), s"store dirs after compaction: ${dirs.toSeq}")
@@ -293,19 +310,19 @@ class StreamEquivSpec extends AnyFunSuite {
       "fixture: could not simulate the crash state")
     // a bare read of the crash state heals it — the reader-side guard,
     // independent of any compaction being retried
-    graft.streaming.StreamSketch.healRetiredStore(spark, store)
+    Store(spark, store).heal(): Unit
     assert(snapshot() == pre, "healed store lost rows")
     assert(!retired.exists, "heal left the store duplicated at _retired")
     // heal is a no-op on a healthy store (idempotent — a second call
     // must not touch anything)
-    graft.streaming.StreamSketch.healRetiredStore(spark, store)
+    Store(spark, store).heal(): Unit
     assert(snapshot() == pre)
     // re-crash, then prove the RETRIED COMPACTION heals end to end:
     // restore from _retired, clear the dead tmp, rebuild, complete the
     // swap — no manual promotion anywhere
     assert(new java.io.File(store).renameTo(retired),
       "fixture: could not re-simulate the crash state")
-    graft.streaming.IncrementalDedup.compactStore(spark, store, "bv")
+    Store(spark, store).compact(_.repartition(col("bv")))
     assert(snapshot() == pre, "retried compaction changed the row multiset")
     val dirs = new java.io.File(store).listFiles()
       .filter(_.getName.startsWith("batch_id=")).map(_.getName)
@@ -320,7 +337,7 @@ class StreamEquivSpec extends AnyFunSuite {
     Seq((1L, 1, "v1")).toDF("doc_id", "bi", "bv")
       .write.parquet(s"${ghost}_compacting/batch_id=-1")
     val err = intercept[IllegalArgumentException] {
-      graft.streaming.StreamSketch.swapStore(spark, s"${ghost}_compacting", ghost)
+      Store(spark, ghost).compact(identity)
     }
     assert(err.getMessage.contains("no _retired copy to recover"),
       s"swap on a missing store failed without the recovery instruction: ${err.getMessage}")
@@ -357,9 +374,9 @@ class StreamEquivSpec extends AnyFunSuite {
 
   test("s20 streaming radius alerts: per-arrival alert union ≡ batch s19, raised incrementally") {
     val batch = rows(graft.ops.SimilarityOps.s19AnnRadius(spark, sf))
-    val ((streamDf, perBatchF), nBatches) =
-      withBatches(graft.streaming.StreamAnnIngest.s20WithInfo(spark, sf))
-    val perBatch = perBatchF()
+    val (streamDf, nBatches, stores) =
+      withStores(graft.streaming.StreamAnnIngest.s20StreamRadiusAlert(spark, sf))
+    val perBatch = stores("alerts").facts.rows.values.toArray
     assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(batch.nonEmpty)
@@ -382,9 +399,9 @@ class StreamEquivSpec extends AnyFunSuite {
     // cells must genuinely differ from the flat ones somewhere (else
     // the quantizer seam is vacuous on this fixture)
     val batch = rows(graft.ops.SimilarityOps.s29HierRadius(spark, sf))
-    val ((streamDf, perBatchF), nBatches) =
-      withBatches(graft.streaming.StreamAnnIngest.s30WithInfo(spark, sf))
-    val perBatch = perBatchF()
+    val (streamDf, nBatches, stores) =
+      withStores(graft.streaming.StreamAnnIngest.s30HierRadiusAlert(spark, sf))
+    val perBatch = stores("alerts").facts.rows.values.toArray
     assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     assert(batch.nonEmpty)
@@ -434,9 +451,9 @@ class StreamEquivSpec extends AnyFunSuite {
     val survivors = graft.streaming.StreamAnnIngest.survivorFilter(
       all.select("vec_id", "v", "nrm", "label"))
     val batch = rows(ops.probeAssigned(ops.assignCells(survivors, seeds)))
-    val ((streamDf, drainsF), nBatches) =
-      withBatches(graft.streaming.StreamAnnIngest.s12WithInfo(spark, sf))
-    val drains = drainsF()
+    val (streamDf, nBatches, stores) =
+      withStores(graft.streaming.StreamAnnIngest.s12StreamAnnDelete(spark, sf))
+    val drains = stores("tombstones").facts.rows.values.toArray
     assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     // the ledger drains per batch: requests for not-yet-arrived vectors
@@ -457,9 +474,9 @@ class StreamEquivSpec extends AnyFunSuite {
     val survivors = graft.streaming.StreamAnnIngest.survivorFilter(
       all.select("vec_id", "v", "nrm", "label"))
     val batch = rows(ops.probeAssigned(ops.assignCells(survivors, seeds)))
-    val (compDf, nLiveF, nDroppedF) =
-      graft.streaming.StreamAnnIngest.s13WithStoreInfo(spark, sf)
-    val (nLive, nDropped) = (nLiveF(), nDroppedF())
+    val ((compDf, nLiveF), _, stores) =
+      withStores(graft.streaming.StreamAnnIngest.s13WithEvidence(spark, sf))
+    val (nLive, nDropped) = (nLiveF(), stores("tombstones").facts.rows.values.sum)
     // compaction actually dropped the tombstoned rows from the store
     assert(nDropped > 0, "no tombstones were registered — vacuous compaction")
     assert(nLive == survivors.count(),
@@ -488,9 +505,10 @@ class StreamEquivSpec extends AnyFunSuite {
       all.select("vec_id", "v", "nrm", "label"))
     val batch = rows(ops.probeAssigned(
       ops.hierAssignCells(survivors, ops.ivfSeedCentroids(all), ops.HierSub)))
-    val ((compDf, drainsF, nLiveF, nDroppedF), nBatches) =
-      withBatches(graft.streaming.StreamAnnIngest.s25WithInfo(spark, sf))
-    val (drains, nLive, nDropped) = (drainsF(), nLiveF(), nDroppedF())
+    val ((compDf, nLiveF), nBatches, stores) =
+      withStores(graft.streaming.StreamAnnIngest.s25WithEvidence(spark, sf))
+    val tombs = stores("tombstones").facts.rows.values
+    val (drains, nLive, nDropped) = (tombs.toArray, nLiveF(), tombs.sum)
     assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
     // the ledger drains across batches (the out-of-order pending path)
@@ -528,9 +546,10 @@ class StreamEquivSpec extends AnyFunSuite {
           .otherwise(col("v")))
       .withColumn("nrm", sqrt(ops.dot(col("v"), col("v"))))
     val batch = rows(ops.probeAssigned(ops.assignCells(updated, seeds)))
-    val ((streamDf, nTombsF, nSameF, nMovedF), nBatches) =
-      withBatches(graft.streaming.StreamAnnIngest.s16WithInfo(spark, sf))
-    val (nTombs, nSame, nMoved) = (nTombsF(), nSameF(), nMovedF())
+    val ((streamDf, nSameF, nMovedF), nBatches, stores) =
+      withStores(graft.streaming.StreamAnnIngest.s16WithEvidence(spark, sf))
+    val (nTombs, nSame, nMoved) =
+      (stores("tombstones").facts.rows.values.sum, nSameF(), nMovedF())
     // 4 corpus batches + the update wave
     assert(nBatches == graft.streaming.Replay.Waves + 1,
       s"replay ran $nBatches micro-batches — expected corpus batches + update wave")
@@ -564,9 +583,10 @@ class StreamEquivSpec extends AnyFunSuite {
       .withColumn("nrm", sqrt(ops.dot(col("v"), col("v"))))
     val batch = rows(ops.probeAssigned(
       ops.hierAssignCells(updated, ops.ivfSeedCentroids(all), ops.HierSub)))
-    val ((streamDf, nTombsF, nSameF, nMovedF), nBatches) =
-      withBatches(graft.streaming.StreamAnnIngest.s27WithInfo(spark, sf))
-    val (nTombs, nSame, nMoved) = (nTombsF(), nSameF(), nMovedF())
+    val ((streamDf, nSameF, nMovedF), nBatches, stores) =
+      withStores(graft.streaming.StreamAnnIngest.s27WithEvidence(spark, sf))
+    val (nTombs, nSame, nMoved) =
+      (stores("tombstones").facts.rows.values.sum, nSameF(), nMovedF())
     assert(nBatches == graft.streaming.Replay.Waves + 1,
       s"replay ran $nBatches micro-batches — expected corpus batches + update wave")
     assert(nTombs > 0, "no prior entries were tombstoned — vacuous upsert run")
@@ -615,8 +635,7 @@ class StreamEquivSpec extends AnyFunSuite {
         ops.Hier.retrained, col("vec_id")))
     assert(nBatches == graft.streaming.Replay.Waves,
       s"replay ran $nBatches micro-batches — not incremental")
-    val served = rows(ops.probeAssigned(
-      spark.read.parquet(store).drop("batch_id")))
+    val served = rows(ops.probeAssigned(store.all.drop("batch_id")))
     assert(expect.nonEmpty)
     assert(served == expect,
       "stream ingest under the retrained codebook diverged from batch s26")
@@ -712,8 +731,9 @@ class StreamEquivSpec extends AnyFunSuite {
 
   test("p12 blend-stats compaction: mid-stream sum fold invisible to the ledger, partitions bounded") {
     val half = graft.streaming.Replay.Waves / 2
-    val ((df, before, after, end), nBatches) =
-      withBatches(graft.streaming.BlendMonitor.p12WithStoreInfo(spark, sf))
+    val (df, nBatches, stores) =
+      withStores(graft.streaming.BlendMonitor.p12BlendCompact(spark, sf))
+    val (before, after, end) = compaction(stores("stats"))
     assert(nBatches == graft.streaming.Replay.Waves,
       s"phased replay ran $nBatches micro-batches")
     // the fold genuinely consolidated: half the replay's stats dirs
@@ -787,8 +807,9 @@ class StreamEquivSpec extends AnyFunSuite {
     // genuinely consolidate (half the waves → 1) and stay bounded at
     // 1 + batches-since after
     val half = graft.streaming.Replay.Waves / 2
-    val (result, before, after, end, crossPhaseF) =
-      graft.streaming.StreamSemDedup.d21WithStoreInfo(spark, sf)
+    val ((result, crossPhaseF), _, stores) =
+      withStores(graft.streaming.StreamSemDedup.d21WithEvidence(spark, sf))
+    val (before, after, end) = compaction(stores("assigned"))
     val crossPhase = crossPhaseF()
     assert(before == half, s"phase A shipped $before store partitions, expected $half")
     assert(after == 1, s"compaction left $after partitions, expected 1")
@@ -946,8 +967,9 @@ class StreamEquivSpec extends AnyFunSuite {
     // must genuinely consolidate (half the waves → 1) and stay bounded
     // at 1 + batches-since after
     val half = graft.streaming.Replay.Waves / 2
-    val (result, before, after, end, crossPhaseF) =
-      graft.streaming.StreamMediaDedup.m19WithStoreInfo(spark, sf)
+    val ((result, crossPhaseF), _, stores) =
+      withStores(graft.streaming.StreamMediaDedup.m19WithEvidence(spark, sf))
+    val (before, after, end) = compaction(stores("fp"))
     val crossPhase = crossPhaseF()
     assert(before == half, s"phase A shipped $before store partitions, expected $half")
     assert(after == 1, s"compaction left $after partitions, expected 1")
@@ -1092,9 +1114,10 @@ class StreamEquivSpec extends AnyFunSuite {
     def wave(b: Int) = docs.filter(pmod(col("doc_id"), lit(m.toLong)) === b)
     val work = Replay.workspace("graft_mediaredo_")
     val (fp, cur, led) = (s"$work/fp", s"$work/cur", s"$work/ledger")
+    val chain = md.Chain(Store(spark, fp), Store(spark, cur), Some(Store(spark, led)))
     val fpF = md.ImageFp
-    md.processBatch(wave(0), 0L, fp, cur, led, fpF)
-    md.processBatch(wave(1), 1L, fp, cur, led, fpF)
+    md.processBatch(wave(0), 0L, chain, fpF)
+    md.processBatch(wave(1), 1L, chain, fpF)
     // torn batch 2: poison pair rows + a poison ledger row got down
     // before the crash
     spark.range(1).select(lit(-7L).as("a_id"), lit(-3L).as("b_id"), lit(0L).as("hamming"))
@@ -1102,15 +1125,15 @@ class StreamEquivSpec extends AnyFunSuite {
     spark.range(1).select(lit(999L).as("n_pairs"), lit(999L).as("n_added"),
         lit(999L).as("n_retracted"), lit("poison").as("add_md5"), lit("poison").as("rm_md5"))
       .write.mode("overwrite").parquet(s"$led/batch_id=2")
-    md.processBatch(wave(2), 2L, fp, cur, led, fpF) // the redo
-    md.processBatch(wave(3), 3L, fp, cur, led, fpF)
+    md.processBatch(wave(2), 2L, chain, fpF) // the redo
+    md.processBatch(wave(3), 3L, chain, fpF)
     // (c) retry of a COMMITTED batch: ledger row byte-identical after
     def readLedger() = spark.read.parquet(led)
       .select(col("batch_id").cast("long").as("batch_id"), col("n_pairs"),
         col("n_added"), col("n_retracted"), col("add_md5"), col("rm_md5"))
       .orderBy("batch_id").collect().toSeq
     val ledgerBefore = readLedger()
-    md.processBatch(wave(2), 2L, fp, cur, led, fpF)
+    md.processBatch(wave(2), 2L, chain, fpF)
     val ledgerAfter = readLedger()
     assert(ledgerAfter == ledgerBefore, "retrying a committed batch changed the ledger")
     // no poison anywhere; final set ≡ the batch chain; conservation holds
@@ -1148,8 +1171,9 @@ class StreamEquivSpec extends AnyFunSuite {
       .select("doc_id", "lang", "text")
     def wave(b: Int) = docs.filter(pmod(col("doc_id"), lit(m.toLong)) === b)
     val work = Replay.workspace("graft_consredo_")
-    md.consensusStep(wave(0), 0L, work)
-    md.consensusStep(wave(1), 1L, work)
+    val cs = md.Consensus.under(spark, work)
+    md.consensusStep(wave(0), 0L, cs)
+    md.consensusStep(wave(1), 1L, cs)
     // torn batch 2: poison consensus pairs, a poison per-channel ledger
     // row, and a torn image-chain materialized set all got down before
     // the crash — the redo must leave no trace of any of them
@@ -1163,8 +1187,8 @@ class StreamEquivSpec extends AnyFunSuite {
     spark.range(1).select(lit(-7L).as("a_id"), lit(-3L).as("b_id"),
         lit(0L).as("hamming"))
       .write.mode("overwrite").parquet(s"$work/img_cur/batch_id=2")
-    md.consensusStep(wave(2), 2L, work) // the redo
-    (3 until m).foreach(b => md.consensusStep(wave(b), b.toLong, work))
+    md.consensusStep(wave(2), 2L, cs) // the redo
+    (3 until m).foreach(b => md.consensusStep(wave(b), b.toLong, cs))
     def readLedger() = spark.read.parquet(s"$work/cons_ledger")
       .select(col("batch_id").cast("long").as("batch_id"), col("channel"),
         col("n_pairs"), col("n_added"), col("n_retracted"))
@@ -1173,7 +1197,7 @@ class StreamEquivSpec extends AnyFunSuite {
     // chains re-derive from the store pruned to batch_id <= 2, the
     // consensus re-diffs against committed batch 1)
     val ledgerBefore = readLedger()
-    md.consensusStep(wave(2), 2L, work)
+    md.consensusStep(wave(2), 2L, cs)
     val ledgerAfter = readLedger()
     assert(ledgerAfter == ledgerBefore,
       "retrying a committed consensus batch changed the ledger")
@@ -1248,8 +1272,9 @@ class StreamEquivSpec extends AnyFunSuite {
     val ledger = s"$work/ledger"
     val docs = Sources.table(spark, sf, "documents").select("doc_id", "source", "text")
     def wave(b: Int) = docs.filter(col("doc_id") % sm === b)
-    graft.streaming.BlendMonitor.blendBatch(wave(0), 0L, stats, ledger)
-    graft.streaming.BlendMonitor.blendBatch(wave(1), 1L, stats, ledger)
+    val (statsStore, ledgerStore) = (Store(spark, stats), Store(spark, ledger))
+    graft.streaming.BlendMonitor.blendBatch(wave(0), 0L, statsStore, ledgerStore)
+    graft.streaming.BlendMonitor.blendBatch(wave(1), 1L, statsStore, ledgerStore)
     // simulate the crash window between swapStore's renames: the live
     // stats store is absent, the only full-history copy sits at _retired
     val fs = new org.apache.hadoop.fs.Path(stats)
@@ -1258,7 +1283,7 @@ class StreamEquivSpec extends AnyFunSuite {
       new org.apache.hadoop.fs.Path(stats + "_retired")))
     // the NEXT batch must heal first — writing batch_id=2 into a fresh
     // store before the heal would collapse totals to one batch's partial
-    graft.streaming.BlendMonitor.blendBatch(wave(2), 2L, stats, ledger)
+    graft.streaming.BlendMonitor.blendBatch(wave(2), 2L, statsStore, ledgerStore)
     val expected = docs.filter(col("doc_id") % sm <= 2)
       .select(col("source"), size(graft.ops.TextOps.tokens(col("text"))).cast("long").as("n_tok"))
       .filter(col("n_tok") > 0)
@@ -1741,7 +1766,7 @@ class StreamEquivSpec extends AnyFunSuite {
       "keys for the dying batch exist — the crash seam is after both writes")
     val resumed = graft.streaming.IncrementalExport
       .p6IncrementalExport(spark, sf, workDir = Some(work))
-    val nBatches = Replay.countBatchDirs(s"$work/manifest")
+    val nBatches = Store(spark, s"$work/manifest").batches.size
     assert(nBatches == graft.streaming.Replay.Waves)
     assert(rows(resumed) ==
       rows(graft.streaming.IncrementalExport.p6BatchTwin(spark, sf)),
@@ -1765,19 +1790,17 @@ class StreamEquivSpec extends AnyFunSuite {
     // vacuum, re-serve — byte-identical
     val w12 = Replay.workspace("graft_ret12_")
     val served12 = StreamSketch.x12StreamWindowDistinct(spark, sf, Some(w12))
-    val n12 = Replay.countBatchDirs(s"$w12/sketches")
+    val n12 = Store(spark, s"$w12/sketches").batches.size
     val pre12 = rows(served12)
-    val r12 = StreamSketch.vacuumBatches(spark, s"$w12/sketches",
-      n12 - StreamSketch.WindowBatches)
+    val r12 = Store(spark, s"$w12/sketches").retireBelow(n12 - StreamSketch.WindowBatches)
     assert(r12.nonEmpty)
     assert(rows(StreamSketch.x12Serve(spark, s"$w12/sketches", n12)) == pre12,
       "HLL windowed serve changed across the vacuum")
     val w13 = Replay.workspace("graft_ret13_")
     val served13 = StreamSketch.x13StreamWindowCms(spark, sf, Some(w13))
-    val n13 = Replay.countBatchDirs(s"$w13/counters")
+    val n13 = Store(spark, s"$w13/counters").batches.size
     val pre13 = rows(served13)
-    val r13 = StreamSketch.vacuumBatches(spark, s"$w13/counters",
-      n13 - StreamSketch.WindowBatches)
+    val r13 = Store(spark, s"$w13/counters").retireBelow(n13 - StreamSketch.WindowBatches)
     assert(r13.nonEmpty)
     assert(rows(StreamSketch.x13Serve(spark, s"$w13/counters",
       s"$w13/watchlist", n13)) == pre13,
@@ -1831,7 +1854,7 @@ class StreamEquivSpec extends AnyFunSuite {
       "stats for the dying batch exist — the crash seam is after both writes")
     val resumed = graft.streaming.LateLedger
       .x19LateLedger(spark, sf, workDir = Some(work))
-    val nBatches = Replay.countBatchDirs(s"$work/ledger")
+    val nBatches = Store(spark, s"$work/ledger").batches.size
     assert(nBatches == graft.streaming.Replay.Waves)
     assert(rows(resumed) == rows(graft.streaming.LateLedger.x19Batch(spark, sf)),
       "resumed ledger diverged from the closed-form derivation — the torn state leaked")
@@ -2276,8 +2299,9 @@ class StreamEquivSpec extends AnyFunSuite {
   test("x20 stats-store running-max fold: ledger invariant, store bounded, phase-B watermarks real") {
     import org.apache.spark.sql.functions._
     val m = graft.streaming.Replay.Waves
-    val (compacted, before, after, end) =
-      graft.streaming.LateLedger.x20WithStoreInfo(spark, sf)
+    val (compacted, _, stores) =
+      withStores(graft.streaming.LateLedger.x20StatsCompact(spark, sf))
+    val (before, after, end) = compaction(stores("stats"))
     val compactedRows = rows(compacted)
     // the fold is invisible to the ledger: byte-identical to x19's
     val plain = rows(graft.streaming.LateLedger.x19LateLedger(spark, sf))
@@ -2300,8 +2324,9 @@ class StreamEquivSpec extends AnyFunSuite {
   test("p7 digest-store compaction: manifest invariant, store bounded, cross-phase dedup adjudicated") {
     import org.apache.spark.sql.functions._
     val m = graft.streaming.Replay.Waves
-    val (compacted, before, after, end) =
-      graft.streaming.IncrementalExport.p7WithStoreInfo(spark, sf)
+    val (compacted, _, stores) =
+      withStores(graft.streaming.IncrementalExport.p7ExportCompact(spark, sf))
+    val (before, after, end) = compaction(stores("keys"))
     val compactedRows = rows(compacted)
     // the swap is invisible to the export: manifest (digests included)
     // byte-identical to p6's
@@ -2337,7 +2362,7 @@ class StreamEquivSpec extends AnyFunSuite {
       (1 to 8).map(i => (i.toLong, if (i == 6) qTexts(0) else qTexts(i - 1),
         "en", s"src${i % 3}")))
       .toDF("doc_id", "text", "lang", "source")
-    val (pm, _, _, _) = graft.streaming.IncrementalExport.p7OnDocs(spark, planted)
+    val pm = graft.streaming.IncrementalExport.p7OnDocs(spark, planted)
     val keptDocs = pm.agg(sum("n_docs")).collect()(0).getLong(0)
     assert(keptDocs == 7L,
       s"planted cross-phase duplicate was not dropped through the compacted store ($keptDocs kept)")
@@ -2354,8 +2379,11 @@ class StreamEquivSpec extends AnyFunSuite {
     // band, AND shingle stores at the phase boundary — the ledger must
     // be byte-identical to the unphased gate's, and each store's
     // listing must collapse to one partition then stay bounded
-    val (compacted, before, after, end) =
-      graft.streaming.FullFunnel.p3CompactInfo(spark, sf)
+    val (compacted, _, stores) =
+      withStores(graft.streaming.FullFunnel.p3CompactOnDocs(spark,
+        Sources.table(spark, sf, "documents").select("doc_id", "text", "lang", "source")))
+    val counts = Seq("keys", "bands", "shingles").map(n => compaction(stores(n)))
+    val (before, after, end) = (counts.map(_._1), counts.map(_._2), counts.map(_._3))
     val plain = rows(graft.streaming.FullFunnel.p3StreamFunnel(spark, sf))
     assert(rows(compacted) == plain,
       "three-store compaction changed the funnel ledger")
@@ -2411,7 +2439,7 @@ class StreamEquivSpec extends AnyFunSuite {
         graft.ops.DedupOps.shingles(planted))
       .filter(col("jac") >= 0.7)
     assert(ver.count() == 1, "planted truncation failed to verify at J >= 0.7")
-    val (pm, _, _, _) = graft.streaming.FullFunnel.p3CompactOnDocs(spark, planted)
+    val pm = graft.streaming.FullFunnel.p3CompactOnDocs(spark, planted)
     // phase-B verdicts decided by the consolidated partitions: the twin
     // drops as exact (digest store), the truncation as near (band +
     // shingle stores) — a compaction that lost any store's rows would
