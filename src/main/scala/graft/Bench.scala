@@ -2,9 +2,9 @@ package graft
 
 
 /** Benchmark main: runs every declared query against
-  * `SPARK_GRAFT_SF_DIR`, forcing full execution through a noop sink
-  * (count() would let Catalyst prune sorts/projections and under-report).
-  * Prints ONE JSON line with per-query wall seconds.
+  * `SPARK_GRAFT_SF_DIR` through the gate runner ([[Scratch.timed]]: a
+  * full execution into the noop sink) after its warm-up, and prints ONE
+  * JSON line with per-query wall seconds.
   *
   * Noise armor: each query is sampled `Passes` times and the reported
   * figure is the per-query MEDIAN. Samples are taken round-robin (full
@@ -23,15 +23,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Engine.local()
-    // Untimed warmup (BASELINE.md methodology: warm session): first
-    // executions pay codegen/JIT and datasource init, which otherwise
-    // land on whatever query sorts first. One cheap query per table
-    // family warms each scan + expression path over the bench SF dir.
-    Seq("q12_pricing_summary", "q03_class_share", "t3_token_count", "s2_ann_bucket")
-      .foreach { q =>
-        try SparkEntry.queries(q)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] warmup $q failed: ${e.getMessage}") }
-      }
+    Scratch.warm(spark, sfDir)
     // SPARK_GRAFT_BENCH_ONLY=q1,q2 narrows the run for fast perf-tuning
     // loops; unset = full suite (the driver's mode)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -40,16 +32,11 @@ object Bench {
       .filter(n => only.forall(_.contains(n)))
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    for (pass <- 1 to Passes; name <- names if !failed.contains(name)) {
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        samples(name) = ((System.nanoTime() - t0) / 1e9) :: samples.getOrElse(name, Nil)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed on pass $pass: ${e.getMessage}")
-        failed += name
-        samples.remove(name): Unit
-      }
+    for (pass <- 1 to Passes) {
+      Scratch.each(names.filterNot(failed), n => s"[bench] $n failed on pass $pass") { n =>
+        val (sec, _) = Scratch.timed(SparkEntry.queries(n)(spark, sfDir))
+        samples(n) = sec :: samples.getOrElse(n, Nil)
+      }.foreach { case (n, _) => failed += n; samples.remove(n): Unit }
     }
     def median(xs: List[Double]): Double = {
       val s = xs.sorted

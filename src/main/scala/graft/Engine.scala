@@ -71,7 +71,7 @@ object Engine {
       graft.io.Sources.table(spark, dir, n).createOrReplaceTempView(n)
     }
 
-  /** Local session for the mains (Bench, Verify, RunOne, Plans, Scratch,
+  /** Local session for the mains (Bench, Verify, Scratch,
     * ScaleCheck). One JVM with `SPARK_GRAFT_CPUS` executor threads —
     * the host's cores, capped at 32, when unset. */
   def local(appName: String = "graft"): SparkSession = {

@@ -419,7 +419,7 @@ object ScaleCheck {
     timeOf(() => SparkEntry.queries(name)(spark, dir))
 
   private def timeOf(mk: () => DataFrame): Double =
-    (1 to 2).map(_ => oneRun(mk)).min
+    (1 to 2).map(_ => Scratch.timed(mk())._1).min
 
   /** Median of 5 samples where each SAMPLE is a 3-execution block (wall
     * / 3): the scaled-k queries run ~0.5–4 s, where single-execution
@@ -427,13 +427,7 @@ object ScaleCheck {
     * r10 finding); a ~3× longer timed unit amortizes the noise floor
     * without needing a bigger fixture. */
   private def medianOf5(mk: () => DataFrame): Double =
-    (1 to 5).map(_ => (1 to 3).map(_ => oneRun(mk)).sum / 3).sorted.apply(2)
-
-  private def oneRun(mk: () => DataFrame): Double = {
-    val t0 = System.nanoTime()
-    mk().write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
-  }
+    (1 to 5).map(_ => (1 to 3).map(_ => Scratch.timed(mk())._1).sum / 3).sorted.apply(2)
 
   private def generate(spark: SparkSession, base: String, out: String): Unit = {
     new java.io.File(out).mkdirs()

@@ -50,7 +50,8 @@ import graft.io.{Sources, Store}
   * a tool's scratch — is a [[workspace]] under one per-JVM root that a
   * shutdown hook deletes. A one-shot replay's checkpoint and flush
   * sentinel go as soon as its query ends; a gate's lazy result frame
-  * reads its workspace until the JVM exits.
+  * reads its workspace until the JVM exits, or, when the gate was
+  * called inside [[scoped]], until that call returns.
   *
   * Companions: [[recorded]] (the micro-batches a call ran, from Spark's
   * own per-batch progress, and the [[graft.io.Store]]s it made — the
@@ -208,7 +209,8 @@ object Replay {
   /** The per-JVM scratch root, `graft_run_*` under `java.io.tmpdir`:
     * created on first use, and deleted with everything under it by one
     * shutdown hook — gates return lazy frames over their workspaces, so
-    * nothing under it can go earlier. */
+    * only a [[scoped]] caller, which materializes them, deletes one
+    * earlier. */
   private lazy val root: java.nio.file.Path = {
     val dir = Files.createTempDirectory("graft_run_")
     sys.addShutdownHook(deleteRecursively(dir.toFile))
@@ -216,9 +218,32 @@ object Replay {
   }
 
   /** A fresh, empty directory named `prefix*` under the run's scratch
-    * root: every gate workspace, replay sink and tool scratch dir. */
-  private[graft] def workspace(prefix: String): String =
-    Files.createTempDirectory(root, prefix).toString
+    * root: every gate workspace, replay sink and tool scratch dir. It
+    * belongs to this thread's open [[scoped]] call, if any. */
+  private[graft] def workspace(prefix: String): String = {
+    val dir = Files.createTempDirectory(root, prefix).toString
+    Option(scope.get).foreach(_ += dir)
+    dir
+  }
+
+  /** The workspaces made by this thread's open [[scoped]] call. */
+  private val scope = new ThreadLocal[ArrayBuffer[String]]
+
+  /** Run `f`, then delete every [[workspace]] made on this thread while
+    * it ran, failed or not. `f` must materialize whatever it needs of a
+    * gate's frame: the frame reads the deleted workspaces afterwards.
+    * Workspaces made outside any scope, or on another thread, stay
+    * until the JVM exits. A nested scope deletes its own. */
+  private[graft] def scoped[T](f: => T): T = {
+    val outer = scope.get
+    val made = ArrayBuffer.empty[String]
+    scope.set(made)
+    try f
+    finally {
+      scope.set(outer)
+      made.foreach(d => deleteRecursively(new java.io.File(d)))
+    }
+  }
 
   /** The AvailableNow runner behind every replay: start `writer`
     * checkpointed at `ckpt`, wait until the query has drained and

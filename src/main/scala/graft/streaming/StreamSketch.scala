@@ -275,24 +275,28 @@ object StreamSketch {
     * size AND of total stream length (older partials are partition-pruned
     * by `batch_id`, never deserialized) — where the exact twin re-sorts
     * the window's raw values per question asked. */
-  def x11StreamWindowQuantile(spark: SparkSession, dir: String,
-      workDir: Option[String] = None): DataFrame = {
-    val work = workDir.getOrElse(Replay.workspace("graft_winquant_"))
+  def x11StreamWindowQuantile(spark: SparkSession, dir: String): DataFrame = {
+    val store = x11Histograms(spark, dir, Replay.workspace("graft_winquant_"))
+    x11Serve(spark, store, store.batches.size)
+  }
+
+  /** x11's replay: the per-batch histogram store under `work`. */
+  private def x11Histograms(spark: SparkSession, dir: String, work: String): Store = {
     val store = Store(spark, s"$work/hist")
     val events = Sources.table(spark, dir, "events")
       .select("event_id", "event_type", "value")
     Replay.replay(spark, events, Replay.ByMod("event_id"), work) {
       (batch, batchId) => store.put(batchId, histogram(batch))
     }
-    x11Serve(spark, store.path, store.batches.size)
+    store
   }
 
   /** The windowed quantile serve as a standalone read over the histogram
     * store — partition-prune to the window's batch_ids, merge, read
     * quantiles. Extracted so the retention gate (x18) can prove the
     * serve is unchanged by vacuuming everything OUTSIDE the window. */
-  private[graft] def x11Serve(spark: SparkSession, store: String, nBatches: Int): DataFrame =
-    quantilesFromHistogram(Store(spark, store).window(nBatches - WindowBatches))
+  private[graft] def x11Serve(spark: SparkSession, store: Store, nBatches: Int): DataFrame =
+    quantilesFromHistogram(store.window(nBatches - WindowBatches))
 
   /** The batch twin: the window's rows (named by the membership rule)
     * pushed through one histogram — equal to the pruned-store serve
@@ -355,13 +359,13 @@ object StreamSketch {
     Replay.replay(spark, events, Replay.ByMod("event_id"), work) {
       (batch, batchId) => processBatch(batch, batchId, store)
     }
-    x12Serve(spark, store.path, store.batches.size)
+    x12Serve(spark, store, store.batches.size)
   }
 
   /** The windowed distinct serve as a standalone read over the HLL
     * sketch store (x18's vacuum-invariance seam, like [[x11Serve]]). */
-  private[graft] def x12Serve(spark: SparkSession, store: String, nBatches: Int): DataFrame =
-    Store(spark, store).window(nBatches - WindowBatches)
+  private[graft] def x12Serve(spark: SparkSession, store: Store, nBatches: Int): DataFrame =
+    store.window(nBatches - WindowBatches)
       .groupBy("event_type")
       .agg(
         expr("hll_sketch_estimate(hll_union_agg(sk, false))").as("approx_users"),
@@ -414,17 +418,17 @@ object StreamSketch {
     Replay.replay(spark, docs, Replay.ByMod("doc_id"), work) {
       (batch, batchId) => store.put(batchId, cmsPartial(batch))
     }
-    x13Serve(spark, store.path, watchPath, store.batches.size)
+    x13Serve(spark, store, watchPath, store.batches.size)
   }
 
   /** The windowed CMS serve as a standalone read (x18's vacuum seam).
-    * Takes the two store paths EXPLICITLY — the same seam signature as
-    * [[x11Serve]]/[[x12Serve]] (store path in, serve out), so a
-    * vacuum-invariance caller can never silently re-derive a path the
-    * vacuum didn't touch. */
-  private[graft] def x13Serve(spark: SparkSession, countersStore: String,
+    * Takes the counter store and the watchlist path EXPLICITLY — the same
+    * seam signature as [[x11Serve]]/[[x12Serve]] (store in, serve out),
+    * so a vacuum-invariance caller can never silently re-derive a path
+    * the vacuum didn't touch. */
+  private[graft] def x13Serve(spark: SparkSession, counters: Store,
                               watchStore: String, nBatches: Int): DataFrame = {
-    val merged = Store(spark, countersStore).window(nBatches - WindowBatches)
+    val merged = counters.window(nBatches - WindowBatches)
       .groupBy("r", "bucket").agg(sum("c").as("c"))
     watchEstimates(spark.read.parquet(watchStore), merged)
   }
@@ -467,14 +471,13 @@ object StreamSketch {
     * flight, instead of growing with stream lifetime. */
   private[graft] def x18Detail(spark: SparkSession, dir: String)
       : (DataFrame, Array[org.apache.spark.sql.Row], Seq[Long], Int, Int) = {
-    val work = Replay.workspace("graft_retention_")
+    val store = x11Histograms(spark, dir, Replay.workspace("graft_retention_"))
+    val partsBefore = store.batches.size
     // materialize the pre-vacuum serve NOW — a lazy frame would re-read
     // the store after the vacuum and make the invariance check vacuous
-    val beforeRows = x11StreamWindowQuantile(spark, dir, Some(work)).collect()
-    val store = Store(spark, s"$work/hist")
-    val partsBefore = store.batches.size
+    val beforeRows = x11Serve(spark, store, partsBefore).collect()
     val retired = store.retireBelow(partsBefore - WindowBatches)
-    val after = x11Serve(spark, store.path, partsBefore)
+    val after = x11Serve(spark, store, partsBefore)
     (after, beforeRows, retired, partsBefore, store.batches.size)
   }
 

@@ -235,6 +235,11 @@ class SinkSpec extends AnyFunSuite {
     assert(st.facts.compactions == Seq((ran.size, 1)))
     assert(st.facts.batches == Seq(-1L) && onDisk() == Seq("batch_id=-1"))
     assert(total() == before, "the sum fold changed the histogram's total")
+    // a gate that serves its own store records it once
+    val (_, _, x18) =
+      Replay.recorded(graft.streaming.StreamSketch.x18RetentionVacuum(spark, sf))
+    assert(x18.nonEmpty && x18.map(_.path).distinct == x18.map(_.path),
+      s"x18 recorded a store twice: ${x18.map(_.path)}")
     // outside the scope's thread: nothing recorded
     val ((), _, none) = Replay.recorded {
       val t = new Thread(() => { Store(spark, s"${tmp("graft_store_")}/t"); () })

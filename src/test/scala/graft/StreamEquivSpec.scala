@@ -1794,7 +1794,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val pre12 = rows(served12)
     val r12 = Store(spark, s"$w12/sketches").retireBelow(n12 - StreamSketch.WindowBatches)
     assert(r12.nonEmpty)
-    assert(rows(StreamSketch.x12Serve(spark, s"$w12/sketches", n12)) == pre12,
+    assert(rows(StreamSketch.x12Serve(spark, Store(spark, s"$w12/sketches"), n12)) == pre12,
       "HLL windowed serve changed across the vacuum")
     val w13 = Replay.workspace("graft_ret13_")
     val served13 = StreamSketch.x13StreamWindowCms(spark, sf, Some(w13))
@@ -1802,7 +1802,7 @@ class StreamEquivSpec extends AnyFunSuite {
     val pre13 = rows(served13)
     val r13 = Store(spark, s"$w13/counters").retireBelow(n13 - StreamSketch.WindowBatches)
     assert(r13.nonEmpty)
-    assert(rows(StreamSketch.x13Serve(spark, s"$w13/counters",
+    assert(rows(StreamSketch.x13Serve(spark, Store(spark, s"$w13/counters"),
       s"$w13/watchlist", n13)) == pre13,
       "CMS windowed serve changed across the vacuum")
   }
